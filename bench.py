@@ -293,28 +293,38 @@ class _ControlProc:
             cwd=cwd, env=env, stdin=subprocess.PIPE,
             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
         )
+        # bytes read from the runner's stdout but not yet split into
+        # lines; stdout is read from its fd only, never via the stream
+        self._pending = b""
         self._expect("CTRLREADY", timeout=300)
 
     def _expect(self, prefix: str, timeout: float) -> str:
         import select
 
         deadline = time.monotonic() + timeout
+        fd = self.proc.stdout.fileno()
         while True:
+            # drain every complete line read so far before waiting
+            # again: select() only sees the pipe, so a result line that
+            # arrived in the same chunk as a noise line would otherwise
+            # wait for the deadline
+            while b"\n" in self._pending:
+                raw, self._pending = self._pending.split(b"\n", 1)
+                line = raw.decode("utf-8", "replace") + "\n"
+                if line.startswith(prefix):
+                    return line
             remain = deadline - time.monotonic()
             if remain <= 0:
                 raise RuntimeError(f"control runner timed out ({prefix})")
-            ready, _, _ = select.select(
-                [self.proc.stdout], [], [], min(remain, 5.0)
-            )
+            ready, _, _ = select.select([fd], [], [], min(remain, 5.0))
             if not ready:
                 if self.proc.poll() is not None:
                     raise RuntimeError("control runner exited early")
                 continue
-            line = self.proc.stdout.readline()
-            if not line:
+            chunk = os.read(fd, 1 << 16)
+            if not chunk:
                 raise RuntimeError("control runner closed stdout")
-            if line.startswith(prefix):
-                return line
+            self._pending += chunk
 
     def request(self, names: list[str], reps: int) -> dict:
         self.proc.stdin.write(json.dumps({"names": names, "reps": reps}) + "\n")

@@ -45,10 +45,18 @@ from __future__ import annotations
 
 import os
 import struct
-import uuid
 from typing import Any
 
 from daskberg_spark.iceberg.puffin import write_puffin
+from daskberg_spark.iceberg.statsblobs import (
+    _norm,
+    consolidate_entries,
+    publish,
+    puffin_path,
+    raw_read,
+    same_snapshot_type,
+    stats_entry,
+)
 from daskberg_spark.iceberg.xxhash import BLOOM_SEEDS, spark_xxhash64_chain
 
 BLOOM_BLOB_TYPE = "daskberg-bloom-v1"
@@ -107,19 +115,6 @@ def _blob_meta(
         "snapshot-id": snapshot_id,
         "sequence-number": seq,
         "properties": props,
-    }
-
-
-def _stats_entry(path: str, metas: list[dict], snapshot_id: int) -> dict:
-    size = os.path.getsize(path)
-    return {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size
-        - 4
-        - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
     }
 
 
@@ -221,37 +216,10 @@ def write_file_blooms(
     scan_paths = set().union(*targets.values())
     if not scan_paths:
         return None
-    from pyspark.sql import types as T
-
-    from daskberg_spark.iceberg.conversions import schema_to_struct
-    from daskberg_spark.iceberg.scan import _read_file_groups
-
-    scan_struct = T.StructType(
-        [
-            f
-            for f in schema_to_struct(t.schema).fields
-            if f.name in columns
-        ]
-    )
     scan_files = [f for f in live if f["file_path"] in scan_paths]
     # one-scan maintenance (r14): a SharedStatsScan serves the already-
-    # read cached frame; None falls back to a direct read
-    df = (
-        scan_source.raw_frame(scan_files, set(columns))
-        if scan_source is not None
-        else None
-    )
-    if df is None:
-        df = _read_file_groups(
-            # only __file is consumed — file-tagging alone keeps ORC on
-            # the native vectorized reader (no per-row positions here)
-            t,
-            spark,
-            scan_files,
-            scan_struct,
-            tag_position=False,
-            tag_file=True,
-        )
+    # read cached frame; None falls back to a direct, file-tagged read
+    df = raw_read(t, spark, scan_files, set(columns), scan_source)
     legs = []
     for c in columns:
         if not targets[c]:
@@ -357,38 +325,21 @@ def write_file_blooms(
         discr = (
             f"blooms{snapshot_id}{blob_type}{sorted(columns)}{sorted(words)}"
         )
-        name = (
-            f"blooms-{snapshot_id}-"
-            f"{uuid.uuid5(uuid.NAMESPACE_URL, discr).hex[:8]}"
-            ".puffin"
-        )
-        path = f"{writer.path}/metadata/{name}"
-        metas = write_puffin(path, blobs)
-        entries = [_stats_entry(path, metas, snapshot_id)]
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        if file_subset is None:
-            # full rebuild replaces prior SAME-TYPE bloom entries for
-            # this snapshot (NDV stats, the other bloom flavor, and any
-            # other statistics files coexist untouched)
-            writer.statistics = [
-                e
-                for e in writer.statistics
-                if not (
-                    e["snapshot-id"] == snapshot_id
-                    and any(
-                        b.get("type") == blob_type
-                        for b in e.get("blob-metadata", [])
-                    )
-                )
-            ] + entries
-        else:
-            # incremental: prior blobs stay live, the new entries only
-            # add the newly-indexed files (probe reads all entries)
-            writer.statistics = list(writer.statistics) + entries
-        writer.version += 1
-        writer._write_metadata()
+        path = puffin_path(writer, "blooms", snapshot_id, discr)
+        entries = [stats_entry(path, write_puffin(path, blobs), snapshot_id)]
+    # a full rebuild replaces prior SAME-TYPE bloom entries for this
+    # snapshot (NDV stats, the other bloom flavor, and any other
+    # statistics files coexist untouched); incremental builds append —
+    # prior blobs stay live, the probe reads all entries
+    publish(
+        writer,
+        entries,
+        replaces=(
+            None
+            if file_subset is not None
+            else same_snapshot_type(snapshot_id, blob_type)
+        ),
+    )
     return entries[-1]["statistics-path"]
 
 
@@ -502,14 +453,8 @@ def _sharded_blob_commit(
             )
             for r in sorted(by_path[path], key=lambda r: r.offset)
         ]
-        entries.append(_stats_entry(path, metas, snapshot_id))
+        entries.append(stats_entry(path, metas, snapshot_id))
     return entries
-
-
-def _norm(p: str) -> str:
-    from daskberg_spark.iceberg.scan import _norm_scan_path
-
-    return _norm_scan_path(p)
 
 
 class _BloomProbe:
@@ -688,14 +633,6 @@ def token_prune_files(
     ]
 
 
-# an incremental refresh appends one entry per run; past this many the
-# refresh rewrites ONE consolidated live-files entry per flavor —
-# bounding the statistics list and the probe's footer walk at O(live
-# files) instead of O(all refreshes ever) (r12, mirroring the colsum /
-# quantile-partials consolidation)
-BLOOM_CONSOLIDATE_AFTER = 8
-
-
 def consolidate_file_blooms(writer, t) -> bool:
     """Repack the accumulated bloom entries (both flavors) into ONE
     statistics entry holding only LIVE files' blobs, later-entry-wins
@@ -703,8 +640,6 @@ def consolidate_file_blooms(writer, t) -> bool:
     are copied verbatim — the filters describe immutable files, so no
     rebuild or rehash happens.  Returns True when a rewrite happened
     (metadata committed here)."""
-    from daskberg_spark.iceberg.statsblobs import consolidate_entries
-
     flavors = (BLOOM_BLOB_TYPE, TOKEN_BLOOM_BLOB_TYPE)
 
     def build(snapshot_id: int, seq: int) -> list[dict]:
@@ -738,7 +673,6 @@ def consolidate_file_blooms(writer, t) -> bool:
         flavors,
         build,
         "blooms",
-        threshold=BLOOM_CONSOLIDATE_AFTER,
     )
 
 
@@ -749,7 +683,7 @@ def refresh_file_blooms(writer, spark, scan_source=None) -> str | None:
     session is given).  Indexed columns and their (m_bits, seeds) come
     from the existing blobs; returns the new statistics file path, or
     None when the table has no bloom index or nothing is missing.
-    Past ``BLOOM_CONSOLIDATE_AFTER`` accumulated entries the refresh
+    Past ``statsblobs.CONSOLIDATE_AFTER`` accumulated entries the refresh
     first repacks one consolidated live-files entry."""
     from daskberg_spark.iceberg.metadata import IcebergTable
 
@@ -806,9 +740,9 @@ def refresh_file_blooms(writer, spark, scan_source=None) -> str | None:
 
 def plan_bloom_refresh_scan(writer, t):
     """Metadata-only scan plan for the NEXT ``refresh_file_blooms``:
-    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the bloom half
-    of ``maintain()``'s one-scan statistics pass (r14,
-    ``onepass.plan_shared_stats_scan``).  Blooms index RAW file
+    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the bloom row of
+    the ``statsblobs.stats_families`` table that
+    ``onepass.plan_shared_stats_scan`` composes.  Blooms index RAW file
     contents, so the dirty set is always empty.  Advisory only: a
     stale plan changes shared-cache membership, never answers."""
     id_to_name = {f.field_id: n for n, f in t.fields.items()}

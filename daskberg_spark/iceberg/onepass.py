@@ -32,13 +32,17 @@ truth:
   subset): a delete-dirtied file's raw partial cannot be trusted, so
   its re-read must be delete-aware.
 
-Planning is ADVISORY: each family contributes its next refresh's
-(paths, columns) via a metadata-only ``plan_*_refresh_scan`` helper in
-its own module; a stale or incomplete plan only changes what the
-shared cache holds — every builder falls back to its own direct read
-for anything the cache can't serve (``raw_frame``/``dirty_frame``
-return None), never to a wrong answer.  The served/fallback census is
-reported so tests can hard-assert the one-scan shape.
+Planning walks the family table (``statsblobs.stats_families``) — the
+same table, and the same ``statsblobs.gate_open`` opt-in/head gate,
+that ``maintain()`` runs the refreshes from, so the two can never
+disagree about which family runs.  Each open family's row contributes
+its next refresh's (paths, columns) from a metadata-only plan
+function.  Planning is still ADVISORY: a stale or incomplete plan only
+changes what the shared cache holds — every builder falls back to its
+own direct read for anything the cache can't serve
+(``raw_frame``/``dirty_frame``/``current_frame`` return None), never
+to a wrong answer.  The served/fallback census is reported so tests
+can hard-assert the one-scan shape.
 
 The reference engine is a read-only client with no statistics
 maintenance at all (``/root/reference/README.md:92-98`` lists "any
@@ -77,14 +81,9 @@ class SharedStatsScan:
         clean_paths: set[str] | None = None,
     ) -> None:
         from pyspark import StorageLevel
-        from pyspark.sql import types as T
 
-        from daskberg_spark.iceberg.conversions import schema_to_struct
-        from daskberg_spark.iceberg.scan import (
-            _norm_scan_path,
-            _read_file_groups,
-            to_df,
-        )
+        from daskberg_spark.iceberg.scan import _norm_scan_path, to_df
+        from daskberg_spark.iceberg.statsblobs import raw_read
 
         self._raw_paths = frozenset(
             _norm_scan_path(f["file_path"]) for f in raw_files
@@ -92,21 +91,9 @@ class SharedStatsScan:
         self._raw_cols = frozenset(raw_columns)
         self._raw = None
         if raw_files and raw_columns:
-            struct = T.StructType(
-                [
-                    f
-                    for f in schema_to_struct(table.schema).fields
-                    if f.name in self._raw_cols
-                ]
+            self._raw = raw_read(table, spark, raw_files, self._raw_cols).persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-            self._raw = _read_file_groups(
-                table,
-                spark,
-                raw_files,
-                struct,
-                tag_position=False,
-                tag_file=True,
-            ).persist(StorageLevel.MEMORY_AND_DISK)
         # the dirty set is shared verbatim: every family classifies
         # dirt through the same _dirty_split, so one delete-aware read
         # serves them all
@@ -146,8 +133,11 @@ class SharedStatsScan:
         # delete-aware request from the raw cache for exactly those
         # files.  The caller (plan_* helpers) passes the complement of
         # ``_dirty_split``'s might-apply set; None means "unknown" and
-        # current_frame always falls back.
+        # current_frame always falls back.  The clean set and the dirty
+        # frame are only true at the snapshot they were planned at, so
+        # both delete-aware frames are keyed on it.
         self._clean_paths = frozenset(clean_paths or ())
+        self._snapshot_id = table.current_snapshot["snapshot-id"]
         self._count_lock = threading.Lock()
         self.raw_served = 0
         self.raw_fallback = 0
@@ -185,24 +175,27 @@ class SharedStatsScan:
             df = df.where(F.col("__file").isin(sorted(want_paths)))
         return df.select("__file", *sorted(want_cols))
 
-    def current_frame(self, scan_files: list[dict], columns):
-        """Delete-aware CURRENT content served from the raw cache — the
-        r15 verdict's delete-state gate.  A file with no applicable
-        delete has raw rows == current rows, so when EVERY requested
-        file is in the recorded clean set the raw frame answers a
-        current-content request exactly; any delete-dirtied file in the
-        request returns None (caller falls back to its own delete-aware
-        read — correct, never stale)."""
+    def current_frame(self, scan_files: list[dict], columns, snapshot_id):
+        """Delete-aware CURRENT content at ``snapshot_id`` served from the
+        raw cache — the r15 verdict's delete-state gate.  A file with no
+        applicable delete has raw rows == current rows, so when EVERY
+        requested file is in the recorded clean set the raw frame
+        answers a current-content request exactly.  The clean set holds
+        only at the snapshot it was planned at: a caller at any other
+        snapshot (a delete committed after planning), or a request
+        naming a delete-dirtied file, gets None (caller falls back to
+        its own delete-aware read — correct, never stale)."""
+        from pyspark.sql import functions as F
+
         from daskberg_spark.iceberg.scan import _norm_scan_path
 
         want_paths = {
             _norm_scan_path(f["file_path"]) for f in scan_files
         }
-        from pyspark.sql import functions as F
-
         want_cols = set(columns)
         if (
             self._raw is None
+            or snapshot_id != self._snapshot_id
             or not want_paths
             or not want_paths <= self._clean_paths
             or not want_paths <= self._raw_paths
@@ -218,12 +211,14 @@ class SharedStatsScan:
             df = df.where(F.col("__file").isin(sorted(want_paths)))
         return df.select(*sorted(want_cols))
 
-    def dirty_frame(self, paths, columns):
+    def dirty_frame(self, paths, columns, snapshot_id):
         """The cached delete-aware frame projected to ``columns``, or
-        None when the request's file set differs from the planned
-        dirty set or a column is missing (caller falls back)."""
+        None when the caller reads another snapshot than the planned
+        one, the request's file set differs from the planned dirty set,
+        or a column is missing (caller falls back)."""
         if (
             self._dirty is None
+            or snapshot_id != self._snapshot_id
             or set(paths) != self._dirty_paths
             or not set(columns) <= self._dirty_cols
         ):
@@ -263,12 +258,11 @@ def plan_shared_stats_scan(
     spark,
     cache_budget_bytes: int = DEFAULT_CACHE_BUDGET_BYTES,
 ) -> SharedStatsScan | None:
-    """Compose every active family's metadata-only scan plan into one
+    """Compose every open family's metadata-only scan plan into one
     SharedStatsScan, or None when no family needs data IO this
-    ``maintain()`` (steady state: everything already covered).  Gating
-    mirrors ``maintain()``'s per-family opt-in/head-covered checks —
-    a drifted gate only over- or under-provisions the cache (builders
-    fall back to direct reads), never changes results.
+    ``maintain()`` (steady state: everything already covered).  The
+    families and their gates are ``statsblobs.stats_families`` /
+    ``gate_open`` — exactly what ``maintain()`` refreshes.
 
     ``cache_budget_bytes`` (r15) bounds the persist: when the planned
     files' total on-disk bytes (a conservative whole-file upper bound
@@ -276,69 +270,24 @@ def plan_shared_stats_scan(
     scan serves NOTHING — every builder takes its already-tested
     per-family direct read — and the census reports
     ``"cache": "skipped-budget"`` with the planned bytes."""
-    from daskberg_spark.iceberg.bloomindex import plan_bloom_refresh_scan
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.quantiles import (
-        GROUPED_QUANTILE_BLOB_TYPE,
-        QUANTILE_BLOB_TYPE,
+    from daskberg_spark.iceberg.statsblobs import (
         _dirty_split,
         _norm,
-        plan_grouped_quantile_refresh_scan,
-        plan_quantile_refresh_scan,
-    )
-    from daskberg_spark.iceberg.sumstats import plan_sum_refresh_scan
-    from daskberg_spark.iceberg.theta import (
-        GROUPED_THETA_BLOB_TYPE,
-        THETA_BLOB_TYPE,
-        plan_global_ndv_refresh_scan,
-        plan_grouped_ndv_refresh_scan,
+        clean_paths,
+        gate_open,
+        stats_families,
     )
 
     t = IcebergTable(writer.path)
-    head_id = writer.head_snapshot["snapshot-id"]
-
-    def has(blob_type: str) -> bool:
-        return any(
-            b.get("type") == blob_type
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-        )
-
-    def head_covered(blob_type: str) -> bool:
-        return any(
-            e["snapshot-id"] == head_id
-            and any(
-                b.get("type") == blob_type
-                for b in e.get("blob-metadata", [])
-            )
-            for e in writer.statistics
-        )
-
     raw_paths: set[str] = set()
     raw_cols: set[str] = set()
     dirty_cols: set[str] = set()
-    # (helper, opt-in blob type or None, type-level head gate?) —
-    # the GROUPED families head-gate PER CONFIG inside their own plan
-    # helpers (r15), so only the opt-in check applies here
-    plans = [
-        (plan_bloom_refresh_scan, None, False),
-        (plan_sum_refresh_scan, None, False),
-        (plan_global_ndv_refresh_scan, THETA_BLOB_TYPE, True),
-        (plan_grouped_ndv_refresh_scan, GROUPED_THETA_BLOB_TYPE, False),
-        (plan_quantile_refresh_scan, QUANTILE_BLOB_TYPE, True),
-        (
-            plan_grouped_quantile_refresh_scan,
-            GROUPED_QUANTILE_BLOB_TYPE,
-            False,
-        ),
-    ]
-    for helper, gate_type, type_head_gate in plans:
-        if gate_type is not None and not has(gate_type):
-            continue  # family never opted in
-        if type_head_gate and head_covered(gate_type):
+    for fam in stats_families():
+        if not gate_open(writer, fam):
             continue  # maintain() will skip this family's refresh
         try:
-            p, c, dc = helper(writer, t)
+            p, c, dc = fam.plan(writer, t)
         except Exception:
             continue  # planning must never break maintenance
         raw_paths |= p
@@ -366,12 +315,6 @@ def plan_shared_stats_scan(
         scan.cache = "skipped-budget"
         scan.planned_bytes = planned
         return scan
-    clean = {
-        _norm(f["file_path"])
-        for f in files
-        if f["file_path"] not in dirty
-        and _norm(f["file_path"]) not in dirty
-    }
     scan = SharedStatsScan(
         t,
         spark,
@@ -379,7 +322,7 @@ def plan_shared_stats_scan(
         raw_cols,
         dirty_set,
         dirty_cols,
-        clean_paths=clean,
+        clean_paths=clean_paths(files, dirty),
     )
     scan.planned_bytes = planned
     return scan
@@ -402,30 +345,27 @@ def plan_bootstrap_stats_scan(
     partial builders serve from ``raw_frame`` (partials describe
     immutable files), and the grouped full-table writes serve through
     ``current_frame``'s delete-state gate — on a table with live
-    deletes they fall back to their own delete-aware reads, never to a
-    stale answer.  Returns None when the planned bytes exceed the
-    budget (callers direct-read, like ``maintain()``'s degrade)."""
+    deletes, or after a commit since planning, they fall back to their
+    own delete-aware reads, never to a stale answer.  Returns None
+    when the planned bytes exceed the budget (callers direct-read,
+    like ``maintain()``'s degrade)."""
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
+    from daskberg_spark.iceberg.statsblobs import _dirty_split, clean_paths
 
     t = IcebergTable(writer.path)
     files, dirty = _dirty_split(t)
     if not files:
         return None
-    cols = set(columns) if columns else {n for n in t.fields}
+    # top-level names only: ``t.fields`` also holds dotted struct-leaf
+    # paths, which are no columns of the direct read
+    cols = set(columns) if columns else {f["name"] for f in t.schema["fields"]}
     if not cols:
         return None
     planned = sum(int(f.get("file_size_in_bytes") or 0) for f in files)
     if planned > cache_budget_bytes:
         return None
-    clean = {
-        _norm(f["file_path"])
-        for f in files
-        if f["file_path"] not in dirty
-        and _norm(f["file_path"]) not in dirty
-    }
     scan = SharedStatsScan(
-        t, spark, files, cols, set(), set(), clean_paths=clean
+        t, spark, files, cols, set(), set(), clean_paths=clean_paths(files, dirty)
     )
     scan.planned_bytes = planned
     return scan

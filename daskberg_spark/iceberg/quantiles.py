@@ -42,9 +42,10 @@ from __future__ import annotations
 
 import datetime
 import json
-import os
-import uuid
 from typing import Any
+
+# the shared file classifier, re-exported for existing importers
+from daskberg_spark.iceberg.statsblobs import _dirty_split, _norm  # noqa: F401
 
 QUANTILE_BLOB_TYPE = "daskberg-quantiles-v1"
 GROUPED_QUANTILE_BLOB_TYPE = "daskberg-quantiles-grouped-v1"
@@ -116,6 +117,103 @@ def value_to_number(value: Any, ice_type: str) -> float | None:
         return None
 
 
+def _check_columns(columns, types, unknown: bool = True) -> None:
+    for c in columns:
+        if unknown and c not in types:
+            raise ValueError(f"unknown column {c!r}")
+        if types.get(c) not in _NUMERIC_TYPES:
+            raise ValueError(
+                f"column {c!r} has type {types.get(c)!r} — histograms "
+                "cover numeric/temporal columns only"
+            )
+
+
+def _cdf_aggs(columns, types, buckets: int, accuracy: int) -> list:
+    """The one CDF aggregate: the row count plus, per column, its
+    ``buckets+1`` equi-depth knots (Spark's mergeable GK sketch,
+    ``percentile_approx``) and its non-null count."""
+    from pyspark.sql import functions as F
+
+    probs = [i / buckets for i in range(buckets + 1)]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in columns:
+        e = _numeric_expr(c, types[c])
+        aggs.append(
+            F.percentile_approx(
+                e, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
+            ).alias(f"q {c}")
+        )
+        aggs.append(F.count(e).alias(f"n {c}"))
+    return aggs
+
+
+def _cdf_part(r, c: str) -> list:
+    """``[rows, nonnull, bounds]`` of column ``c`` from a ``_cdf_aggs``
+    row — the per-part CDF every partial and merge consumes."""
+    bounds = r[f"q {c}"]
+    return [
+        int(r["__rows"]),
+        int(r[f"n {c}"]),
+        [float(b) for b in bounds] if bounds else [],
+    ]
+
+
+def _hist_blob(writer, c, part, buckets, snapshot_id, merged) -> dict:
+    from daskberg_spark.iceberg.statsblobs import json_blob
+
+    rows, nonnull, bounds = part
+    payload = {
+        "buckets": buckets,
+        "rows": rows,
+        "nonnull": nonnull,
+        "bounds": bounds,
+    }
+    if merged:
+        payload["merged"] = True
+    return json_blob(
+        QUANTILE_BLOB_TYPE,
+        writer,
+        c,
+        payload,
+        snapshot_id,
+        writer._last_sequence_number,
+    )
+
+
+def _publish_hist(writer, discr, snapshot_id, blobs) -> str:
+    from daskberg_spark.iceberg.statsblobs import (
+        publish_blobs,
+        same_snapshot_type,
+    )
+
+    return publish_blobs(
+        writer,
+        "quantiles",
+        snapshot_id,
+        discr,
+        blobs,
+        same_snapshot_type(snapshot_id, QUANTILE_BLOB_TYPE),
+    )
+
+
+def _publish_grouped(writer, t, tag, snapshot_id, columns, group_cols, blobs):
+    """Publish a grouped histogram entry, replacement CONFIG-scoped
+    (r14): writing "p95 by source" never clobbers a same-snapshot "p95
+    by day" entry."""
+    from daskberg_spark.iceberg.statsblobs import publish_grouped
+
+    return publish_grouped(
+        writer,
+        t,
+        GROUPED_QUANTILE_BLOB_TYPE,
+        "quantiles-grouped",
+        f"{tag}{snapshot_id}{sorted(columns)}{group_cols}",
+        snapshot_id,
+        group_cols,
+        blobs,
+    )
+
+
 def write_quantile_statistics(
     writer,
     spark,
@@ -130,10 +228,8 @@ def write_quantile_statistics(
     its quantile entry (other statistics coexist).  Returns the file
     path, or None when no column qualifies."""
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
 
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
@@ -141,167 +237,33 @@ def write_quantile_statistics(
     if columns is None:
         columns = [c for c, t in types.items() if t in _NUMERIC_TYPES]
     else:
-        for c in columns:
-            if c not in types:
-                raise ValueError(f"unknown column {c!r}")
-            if types[c] not in _NUMERIC_TYPES:
-                raise ValueError(
-                    f"column {c!r} has type {types[c]!r} — histograms "
-                    "cover numeric/temporal columns only"
-                )
+        _check_columns(columns, types)
     if not columns:
         return None
     snapshot_id = writer.head_snapshot["snapshot-id"]
     t = IcebergTable(writer.path)
-    df = t.to_df(spark, columns=list(columns))
-    probs = [i / buckets for i in range(buckets + 1)]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in columns:
-        e = _numeric_expr(c, types[c])
-        aggs.append(
-            F.percentile_approx(
-                e, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-            ).alias(f"q_{c}")
-        )
-        aggs.append(F.count(e).alias(f"n_{c}"))
-    row = df.agg(*aggs).collect()[0]
-    rows = int(row["__rows"])
-    seq = writer._last_sequence_number
-    blobs = []
-    for c in columns:
-        bounds = row[f"q_{c}"]
-        payload = {
-            "buckets": buckets,
-            "rows": rows,
-            "nonnull": int(row[f"n_{c}"]),
-            "bounds": [float(b) for b in bounds] if bounds else [],
-        }
-        blobs.append(
-            {
-                "type": QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"quantiles-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'quant{snapshot_id}{sorted(columns)}').hex[:8]}"
-        ".puffin"
+    r = (
+        t.to_df(spark, columns=list(columns))
+        .agg(*_cdf_aggs(columns, types, buckets, accuracy))
+        .collect()[0]
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e
-            for e in writer.statistics
-            if not (
-                e["snapshot-id"] == snapshot_id
-                and any(
-                    b.get("type") == QUANTILE_BLOB_TYPE
-                    for b in e.get("blob-metadata", [])
-                )
-            )
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
-
-
-def _norm(p: str) -> str:
-    from daskberg_spark.iceberg.scan import _norm_scan_path
-
-    return _norm_scan_path(p)
-
-
-def _dirty_split(table) -> tuple[list[dict], set[str]]:
-    """(live planned files, RELOCATED paths of files a delete might
-    apply to) — the same over-approximate metadata-level classifier
-    ``agg_pushdown`` uses: eq deletes hit strictly-older files in
-    scope, path-free position deletes hit ≤-sequence files in scope,
-    DV/position references name their file.  "Might apply" → dirty;
-    a dirty file's stored raw-content CDF describes rows that may no
-    longer be live, so the refresh re-reads it delete-aware."""
-    from daskberg_spark.iceberg.scan import _norm_scan_path, _scope_tuple
-
-    files = table.plan_files(None)
-    deletes = table.plan_deletes()
-    use_seq = table.metadata.get("format-version", 1) >= 2
-
-    def okey(rec):
-        if use_seq:
-            seq = rec.get("_sequence_number")
-            return 0 if seq is None else seq
-        return rec.get("_snapshot_id") or 0
-
-    eq_scopes, pos_scopes, refs = [], [], set()
-    for d in deletes:
-        if d.get("content") == 2:
-            eq_scopes.append((okey(d), _scope_tuple(table, d)))
-        elif d.get("content") == 1:
-            ref = d.get("referenced_data_file")
-            if ref:
-                refs.add(_norm_scan_path(ref))
-            else:
-                pos_scopes.append((okey(d), _scope_tuple(table, d)))
-    dirty: set[str] = set()
-    for f in files:
-        fkey, fscope = okey(f), _scope_tuple(table, f)
-        if (
-            _norm_scan_path(f["file_path"]) in refs
-            or any(
-                fkey < dk and (ds is None or ds == fscope)
-                for dk, ds in eq_scopes
-            )
-            or any(
-                fkey <= dk and (ds is None or ds == fscope)
-                for dk, ds in pos_scopes
-            )
-        ):
-            dirty.add(f["file_path"])
-    return files, dirty
+    blobs = [
+        _hist_blob(writer, c, _cdf_part(r, c), buckets, snapshot_id, False)
+        for c in columns
+    ]
+    return _publish_hist(
+        writer, f"quant{snapshot_id}{sorted(columns)}", snapshot_id, blobs
+    )
 
 
 def column_filecdfs(table, name: str) -> dict[str, list] | None:
     """Merged per-file CDF partials for a column across every
     statistics entry (raw-file blobs are snapshot-independent; later
     entries win per file): ``{normalized_path: [rows, nonnull,
-    bounds]}``, or None when no blob covers the column.  Unreadable
-    blobs are skipped — a missing entry only ever means "re-read that
-    file"."""
-    from daskberg_spark.iceberg.puffin import read_blob
+    bounds]}``, or None when no blob covers the column."""
+    from daskberg_spark.iceberg.statsblobs import file_partials
 
-    fid = table.fields[name].field_id
-    merged: dict[str, list] = {}
-    found = False
-    for e in table.metadata.get("statistics", []):
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != FILE_QUANTILE_BLOB_TYPE or b.get(
-                "fields"
-            ) != [fid]:
-                continue
-            try:
-                payload = json.loads(
-                    read_blob(table._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            found = True
-            for p, part in (payload.get("files") or {}).items():
-                merged[p] = part
-    return merged if found else None
+    return file_partials(table, FILE_QUANTILE_BLOB_TYPE, name)
 
 
 def write_file_quantile_partials(
@@ -314,208 +276,67 @@ def write_file_quantile_partials(
     scan_source=None,
 ) -> str | None:
     """Per-(file, column) compressed CDFs in ONE distributed pass —
-    the mergeable substrate of the quantile family (r12).  Reads RAW
-    file contents (no delete application — the blob describes the
+    the mergeable substrate of the quantile family (r12), written
+    through ``statsblobs.write_file_partials``.  Reads RAW file
+    contents (no delete application — the blob describes the
     immutable file, so it stays valid at every snapshot) grouped by
     ``__file``; per file only ``buckets+1`` doubles and two counts
     reach the driver.  ``file_subset`` (normalized paths) restricts
     the pass — the incremental refresh — and the entry APPENDS (later
     entries win per file); without it the snapshot's partials entry is
     replaced.  Returns the Puffin path or None when nothing scans."""
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from daskberg_spark.iceberg.conversions import schema_to_struct
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import _read_file_groups
+    from daskberg_spark.iceberg.statsblobs import write_file_partials
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
     types = dict(writer.types)
-    for c in columns:
-        if c not in types:
-            raise ValueError(f"unknown column {c!r}")
-        if types[c] not in _NUMERIC_TYPES:
-            raise ValueError(
-                f"column {c!r} has type {types[c]!r} — histograms "
-                "cover numeric/temporal columns only"
-            )
-    if not columns:
-        return None
-    snapshot_id = writer.head_snapshot["snapshot-id"]
-    t = IcebergTable(writer.path)
-    live = t.plan_files(None)
-    if file_subset is None:
-        target = {_norm(f["file_path"]) for f in live}
-    else:
-        target = {_norm(p) for p in file_subset}
-    scan_files = [f for f in live if _norm(f["file_path"]) in target]
-    if not scan_files:
-        return None
-    # one-scan maintenance (r14): a SharedStatsScan serves the already-
-    # read cached frame; None falls back to a direct read
-    df = (
-        scan_source.raw_frame(scan_files, set(columns))
-        if scan_source is not None
-        else None
+    _check_columns(columns, types)
+
+    def kernel(df, _scan_files):
+        got = (
+            df.groupBy("__file")
+            .agg(*_cdf_aggs(columns, types, buckets, accuracy))
+            .collect()
+        )
+        return {c: {r["__file"]: _cdf_part(r, c) for r in got} for c in columns}
+
+    return write_file_partials(
+        writer,
+        spark,
+        FILE_QUANTILE_BLOB_TYPE,
+        "quantiles-files",
+        "fquant",
+        columns,
+        None,
+        file_subset,
+        empty=[0, 0, []],
+        extras=lambda c: {"buckets": buckets},
+        kernel=kernel,
+        scan_source=scan_source,
     )
-    if df is None:
-        scan_struct = T.StructType(
-            [
-                f
-                for f in schema_to_struct(t.schema).fields
-                if f.name in columns
-            ]
-        )
-        df = _read_file_groups(
-            t,
-            spark,
-            scan_files,
-            scan_struct,
-            tag_position=False,
-            tag_file=True,
-        )
-    probs = [i / buckets for i in range(buckets + 1)]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in columns:
-        e = _numeric_expr(c, types[c])
-        aggs.append(
-            F.percentile_approx(
-                e, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-            ).alias(f"q {c}")
-        )
-        aggs.append(F.count(e).alias(f"n {c}"))
-    got = {r["__file"]: r for r in df.groupBy("__file").agg(*aggs).collect()}
-
-    per_col: dict[str, dict[str, list]] = {c: {} for c in columns}
-    for f in scan_files:
-        key = _norm(f["file_path"])
-        r = got.get(key)
-        for c in columns:
-            if r is None:  # zero-row file: no group emitted
-                per_col[c][key] = [0, 0, []]
-                continue
-            bounds = r[f"q {c}"]
-            per_col[c][key] = [
-                int(r["__rows"]),
-                int(r[f"n {c}"]),
-                [float(b) for b in bounds] if bounds else [],
-            ]
-    seq = writer._last_sequence_number
-    blobs = []
-    for c in columns:
-        payload = {"buckets": buckets, "files": per_col[c]}
-        blobs.append(
-            {
-                "type": FILE_QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"quantiles-files-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'fquant{snapshot_id}{sorted(target)}{sorted(columns)}').hex[:8]}"
-        ".puffin"
-    )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        keep = writer.statistics
-        if file_subset is None:
-            keep = [
-                e
-                for e in keep
-                if not (
-                    e["snapshot-id"] == snapshot_id
-                    and any(
-                        b.get("type") == FILE_QUANTILE_BLOB_TYPE
-                        for b in e.get("blob-metadata", [])
-                    )
-                )
-            ]
-        writer.statistics = keep + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
-
-
-# a refresh appends one partials entry per run; past this many the
-# refresh rewrites ONE consolidated entry restricted to live files —
-# bounding both the statistics list and the per-read blob scan at
-# O(live files) instead of O(all refreshes ever)
-FILE_BLOB_CONSOLIDATE_AFTER = 8
 
 
 def _consolidate_file_partials(writer, t, columns: list[str]) -> bool:
-    """Rewrite the accumulated ``daskberg-quantiles-files-v1`` entries
-    as ONE entry covering only LIVE files (later-entry-wins semantics
-    preserved by ``column_filecdfs`` doing the merge first).  The
-    rewrite covers EVERY column any existing entry indexes — not just
-    the caller's — so a grouped refresh consolidating a column subset
-    never silently drops another column's coverage.  Returns True when
-    a rewrite happened; the caller's final metadata write persists
-    it."""
-    from daskberg_spark.iceberg.statsblobs import consolidate_entries
-
-    covered = sorted(
-        {
-            (b.get("properties") or {}).get("column")
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-            if b.get("type") == FILE_QUANTILE_BLOB_TYPE
-        }
-        - {None}
+    """Repack the accumulated ``daskberg-quantiles-files-v1`` entries as
+    ONE live-files entry covering EVERY column any entry indexes — not
+    just the caller's — so a grouped refresh consolidating a column
+    subset never silently drops another column's coverage.  The
+    caller's final metadata write persists it."""
+    from daskberg_spark.iceberg.statsblobs import (
+        consolidate_partials,
+        indexed_columns,
     )
-    cols = [
-        c
-        for c in sorted(set(columns) | set(covered))
-        if c in writer.ids
-    ]
 
-    def build(snapshot_id: int, seq: int) -> list[dict]:
-        live = {_norm(f["file_path"]) for f in t.plan_files(None)}
-        blobs = []
-        for c in cols:
-            m = column_filecdfs(t, c) or {}
-            payload = {
-                "buckets": DEFAULT_BUCKETS,
-                "files": {p: part for p, part in m.items() if p in live},
-            }
-            blobs.append(
-                {
-                    "type": FILE_QUANTILE_BLOB_TYPE,
-                    "fields": [writer.ids[c]],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {"column": c, "encoding": "json"},
-                    "data": json.dumps(payload, sort_keys=True).encode(),
-                }
-            )
-        return blobs
-
-    return consolidate_entries(
+    covered = indexed_columns(writer, FILE_QUANTILE_BLOB_TYPE)
+    cols = [c for c in sorted(set(columns) | set(covered)) if c in writer.ids]
+    return consolidate_partials(
         writer,
-        (FILE_QUANTILE_BLOB_TYPE,),
-        build,
+        t,
+        FILE_QUANTILE_BLOB_TYPE,
         "quantiles-files",
+        lambda: [(None, c) for c in cols],
+        lambda c: {"buckets": DEFAULT_BUCKETS},
         salt=str(cols),
-        threshold=FILE_BLOB_CONSOLIDATE_AFTER,
-        commit=False,
     )
 
 
@@ -532,164 +353,60 @@ def write_file_grouped_quantile_partials(
 ) -> str | None:
     """Per-(file, group, column) compressed CDFs in ONE distributed
     pass (r13) — the grouped twin of ``write_file_quantile_partials``.
-    Reads RAW file contents (no delete application — the blob
-    describes the immutable file, valid at every snapshot) grouped by
-    (``__file``, group tuple); per (file, group) only ``buckets+1``
-    doubles and two counts reach the driver.  ``file_subset``
-    restricts the pass — the incremental refresh — and the entry
-    APPENDS (later entries win per file); without it the snapshot's
-    entry is replaced.  Returns the Puffin path or None when nothing
-    scans."""
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from daskberg_spark.iceberg.conversions import schema_to_struct
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import _read_file_groups
-    from daskberg_spark.iceberg.statsblobs import stats_entry
+    Reads RAW file contents grouped by (``__file``, group tuple); per
+    (file, group) only ``buckets+1`` doubles and two counts reach the
+    driver.  ``file_subset`` restricts the pass — the incremental
+    refresh — and the entry APPENDS (later entries win per file);
+    without it the snapshot's entry is replaced.  Returns the Puffin
+    path or None when nothing scans."""
+    from daskberg_spark.iceberg.groupkeys import gate_group_key, group_key_type
+    from daskberg_spark.iceberg.statsblobs import write_file_partials
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
     types = dict(writer.types)
-    from daskberg_spark.iceberg.groupkeys import (
-        apply_group_keys,
-        gate_group_key,
-        group_key_base,
-        group_key_type,
-    )
-
     for g in group_cols:
         gate_group_key(g, types, _GROUP_KEY_TYPES, "grouped histograms key")
-    for c in columns:
-        if types.get(c) not in _NUMERIC_TYPES:
-            raise ValueError(
-                f"column {c!r} has type {types.get(c)!r} — histograms "
-                "cover numeric/temporal columns only"
-            )
-    if not columns:
-        return None
-    snapshot_id = writer.head_snapshot["snapshot-id"]
-    t = IcebergTable(writer.path)
-    live = t.plan_files(None)
-    if file_subset is None:
-        target = {_norm(f["file_path"]) for f in live}
-    else:
-        target = {_norm(p) for p in file_subset}
-    scan_files = [f for f in live if _norm(f["file_path"]) in target]
-    if not scan_files:
-        return None
-    wanted = {group_key_base(g, types) for g in group_cols} | set(columns)
-    # one-scan maintenance (r14): serve from the shared cached frame
-    # when a SharedStatsScan covers this subset; else direct read
-    df = (
-        scan_source.raw_frame(scan_files, wanted)
-        if scan_source is not None
-        else None
-    )
-    if df is None:
-        scan_struct = T.StructType(
-            [
-                f
-                for f in schema_to_struct(t.schema).fields
-                if f.name in wanted
-            ]
-        )
-        df = _read_file_groups(
-            t,
-            spark,
-            scan_files,
-            scan_struct,
-            tag_position=False,
-            tag_file=True,
-        )
-    df = apply_group_keys(df, group_cols, types)
-    probs = [i / buckets for i in range(buckets + 1)]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in columns:
-        e = _numeric_expr(c, types[c])
-        aggs.append(
-            F.percentile_approx(
-                e, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-            ).alias(f"q {c}")
-        )
-        aggs.append(F.count(e).alias(f"n {c}"))
-    got = (
-        df.groupBy("__file", *group_cols)
-        .agg(*aggs)
-        .limit(max_groups * len(scan_files) + 1)
-        .collect()
-    )
-    if len({tuple(r[g] for g in group_cols) for r in got}) > max_groups:
-        raise ValueError(
-            f"more than {max_groups} distinct {group_cols} tuples — a "
-            "grouped partials blob must stay metadata-sized"
-        )
-    per_col: dict[str, dict[str, dict[str, list]]] = {c: {} for c in columns}
-    for f in scan_files:  # zero-row files record empty coverage too
-        p = _norm(f["file_path"])
-        for c in columns:
-            per_col[c][p] = {}
-    for r in got:
-        gkey = json.dumps(
-            [
-                _encode_group_value(r[g], group_key_type(g, types))
-                for g in group_cols
-            ]
-        )
-        for c in columns:
-            bounds = r[f"q {c}"]
-            per_col[c][r["__file"]][gkey] = [
-                int(r["__rows"]),
-                int(r[f"n {c}"]),
-                [float(b) for b in bounds] if bounds else [],
-            ]
-    seq = writer._last_sequence_number
-    blobs = []
-    for c in columns:
-        payload = {
-            "group_cols": list(group_cols),
-            "buckets": buckets,
-            "files": per_col[c],
-        }
-        blobs.append(
-            {
-                "type": GROUPED_FILE_QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"quantiles-files-grouped-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'fgquant{snapshot_id}{sorted(target)}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
-    )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
+    _check_columns(columns, types, unknown=False)
 
-    with STATS_COMMIT_LOCK:
-        keep = writer.statistics
-        if file_subset is None:
-            keep = [
-                e
-                for e in keep
-                if not (
-                    e["snapshot-id"] == snapshot_id
-                    and any(
-                        b.get("type") == GROUPED_FILE_QUANTILE_BLOB_TYPE
-                        for b in e.get("blob-metadata", [])
-                    )
-                )
-            ]
-        writer.statistics = keep + [stats_entry(path, metas, snapshot_id)]
-        writer.version += 1
-        writer._write_metadata()
-    return path
+    def kernel(df, scan_files):
+        got = (
+            df.groupBy("__file", *group_cols)
+            .agg(*_cdf_aggs(columns, types, buckets, accuracy))
+            .limit(max_groups * len(scan_files) + 1)
+            .collect()
+        )
+        if len({tuple(r[g] for g in group_cols) for r in got}) > max_groups:
+            raise ValueError(
+                f"more than {max_groups} distinct {group_cols} tuples — a "
+                "grouped partials blob must stay metadata-sized"
+            )
+        out: dict[str, dict] = {c: {} for c in columns}
+        for r in got:
+            gkey = json.dumps(
+                [
+                    _encode_group_value(r[g], group_key_type(g, types))
+                    for g in group_cols
+                ]
+            )
+            for c in columns:
+                out[c].setdefault(r["__file"], {})[gkey] = _cdf_part(r, c)
+        return out
+
+    return write_file_partials(
+        writer,
+        spark,
+        GROUPED_FILE_QUANTILE_BLOB_TYPE,
+        "quantiles-files-grouped",
+        "fgquant",
+        columns,
+        group_cols,
+        file_subset,
+        empty={},
+        extras=lambda c: {"buckets": buckets},
+        kernel=kernel,
+        scan_source=scan_source,
+    )
 
 
 def grouped_column_filecdfs(
@@ -699,96 +416,32 @@ def grouped_column_filecdfs(
     every statistics entry (later entries win per file):
     ``{normalized_path: {json_group_key: [rows, nonnull, bounds]}}``,
     or None when no blob covers the column with EXACTLY these group
-    columns.  Unreadable blobs are skipped — a missing entry only
-    ever means "re-scan that file"."""
-    from daskberg_spark.iceberg.puffin import read_blob
+    columns."""
+    from daskberg_spark.iceberg.statsblobs import file_partials
 
-    fid = table.fields[name].field_id
-    merged: dict[str, dict[str, list]] = {}
-    found = False
-    for e in table.metadata.get("statistics", []):
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_FILE_QUANTILE_BLOB_TYPE or b.get(
-                "fields"
-            ) != [fid]:
-                continue
-            try:
-                payload = json.loads(
-                    read_blob(table._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            if payload.get("group_cols") != list(group_cols):
-                continue
-            found = True
-            for p, groups in (payload.get("files") or {}).items():
-                merged[p] = groups
-    return merged if found else None
+    return file_partials(
+        table, GROUPED_FILE_QUANTILE_BLOB_TYPE, name, group_cols
+    )
 
 
 def _consolidate_file_grouped_partials(writer, t, group_cols, columns) -> bool:
     """Repack accumulated per-(file × group) partials entries into ONE
     live-files-only entry covering EVERY (grouping, column) pair any
-    existing entry indexes — not just the caller's — so a superseded
-    grouping's coverage never silently drops (shared consolidation
-    pass; the caller's final metadata write persists it)."""
-    from daskberg_spark.iceberg.puffin import read_blob
-    from daskberg_spark.iceberg.statsblobs import consolidate_entries
+    existing entry indexes, so a superseded grouping's coverage never
+    silently drops (the caller's final metadata write persists it)."""
+    from daskberg_spark.iceberg.statsblobs import (
+        consolidate_partials,
+        partial_pairs,
+    )
 
-    fid_to_name = {i.field_id: n for n, i in t.fields.items()}
-    pairs: list[tuple[tuple, str]] = []
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_FILE_QUANTILE_BLOB_TYPE:
-                continue
-            col = fid_to_name.get((b.get("fields") or [None])[0])
-            if col is None:
-                continue
-            try:
-                payload = json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            gc = payload.get("group_cols")
-            if gc is None:
-                continue
-            key = (tuple(gc), col)
-            if key not in pairs:
-                pairs.append(key)
-
-    def build(snapshot_id: int, seq: int) -> list[dict]:
-        live = {_norm(f["file_path"]) for f in t.plan_files(None)}
-        blobs = []
-        for gc, c in pairs:
-            if c not in writer.ids:
-                continue
-            m = grouped_column_filecdfs(t, c, list(gc)) or {}
-            payload = {
-                "group_cols": list(gc),
-                "buckets": DEFAULT_BUCKETS,
-                "files": {p: g for p, g in m.items() if p in live},
-            }
-            blobs.append(
-                {
-                    "type": GROUPED_FILE_QUANTILE_BLOB_TYPE,
-                    "fields": [writer.ids[c]],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {"column": c, "encoding": "json"},
-                    "data": json.dumps(payload, sort_keys=True).encode(),
-                }
-            )
-        return blobs
-
-    return consolidate_entries(
+    return consolidate_partials(
         writer,
-        (GROUPED_FILE_QUANTILE_BLOB_TYPE,),
-        build,
+        t,
+        GROUPED_FILE_QUANTILE_BLOB_TYPE,
         "quantiles-files-grouped",
+        lambda: partial_pairs(writer, t, GROUPED_FILE_QUANTILE_BLOB_TYPE),
+        lambda c: {"buckets": DEFAULT_BUCKETS},
         salt=str(sorted(columns)) + str(group_cols),
-        threshold=FILE_BLOB_CONSOLIDATE_AFTER,
-        commit=False,
     )
 
 
@@ -864,6 +517,18 @@ def merge_cdf_parts(
     return rows, nn, bounds
 
 
+def _partial_columns(writer) -> list[str]:
+    """The columns per-file CDF partials index — the opt-in shape of the
+    global refresh (a column dropped or retyped since stops refreshing)."""
+    from daskberg_spark.iceberg.statsblobs import indexed_columns
+
+    return [
+        c
+        for c in indexed_columns(writer, FILE_QUANTILE_BLOB_TYPE)
+        if writer.types.get(c) in _NUMERIC_TYPES
+    ]
+
+
 def refresh_quantile_statistics(
     writer,
     spark,
@@ -888,50 +553,24 @@ def refresh_quantile_statistics(
     bootstraps coverage (first call prices like the full one-pass
     build; every later call is incremental)."""
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
 
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import to_df
+    from daskberg_spark.iceberg.statsblobs import catch_up_partials, dirty_read
 
+    types = dict(writer.types)
     if columns is None:
-        columns = sorted(
-            {
-                (b.get("properties") or {}).get("column")
-                for e in writer.statistics
-                for b in e.get("blob-metadata", [])
-                if b.get("type") == FILE_QUANTILE_BLOB_TYPE
-            }
-            - {None}
-        )
-        # a column dropped or retyped since the last run stops refreshing
-        columns = [
-            c for c in columns if writer.types.get(c) in _NUMERIC_TYPES
-        ]
+        columns = _partial_columns(writer)
         if not columns:
             return None
     else:
-        types = dict(writer.types)
-        for c in columns:
-            if types.get(c) not in _NUMERIC_TYPES:
-                raise ValueError(
-                    f"column {c!r} has type {types.get(c)!r} — histograms "
-                    "cover numeric/temporal columns only"
-                )
+        _check_columns(columns, types, unknown=False)
     snapshot_id = writer.head_snapshot["snapshot-id"]
-    t = IcebergTable(writer.path)
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"])
-        for f in files
-        if f["file_path"] not in dirty
-    }
-    maps = {c: (column_filecdfs(t, c) or {}) for c in columns}
-    missing = set()
-    for c in columns:
-        missing |= clean_norm - set(maps[c])
-    if missing:
-        write_file_quantile_partials(
+    cu = catch_up_partials(
+        writer,
+        IcebergTable(writer.path),
+        columns,
+        column_filecdfs,
+        lambda missing: write_file_quantile_partials(
             writer,
             spark,
             columns,
@@ -939,120 +578,64 @@ def refresh_quantile_statistics(
             buckets=buckets,
             accuracy=accuracy,
             scan_source=scan_source,
-        )
-        t = IcebergTable(writer.path)
-        maps = {c: (column_filecdfs(t, c) or {}) for c in columns}
-    _consolidate_file_partials(writer, t, columns)
+        ),
+    )
+    _consolidate_file_partials(writer, cu.t, columns)
     parts = {
-        c: [maps[c][p] for p in clean_norm if p in maps[c]]
+        c: [cu.maps[c][p] for p in sorted(cu.clean) if p in cu.maps[c]]
         for c in columns
     }
-    if dirty:
-        probs = [i / buckets for i in range(buckets + 1)]
-        ftypes = {n: i.type for n, i in t.fields.items()}
-        df = (
-            scan_source.dirty_frame(sorted(dirty), columns)
-            if scan_source is not None
-            else None
+    if cu.dirty:
+        r = (
+            dirty_read(cu.t, spark, cu.dirty, columns, scan_source)
+            .agg(*_cdf_aggs(columns, types, buckets, accuracy))
+            .collect()[0]
         )
-        if df is None:
-            df = to_df(
-                t, spark, columns=list(columns), file_subset=sorted(dirty)
-            )
-        aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in columns:
-            e = _numeric_expr(c, ftypes[c])
-            aggs.append(
-                F.percentile_approx(
-                    e,
-                    F.array(*[F.lit(p) for p in probs]),
-                    F.lit(accuracy),
-                ).alias(f"q {c}")
-            )
-            aggs.append(F.count(e).alias(f"n {c}"))
-        r = df.agg(*aggs).collect()[0]
-        for c in columns:
-            bounds = r[f"q {c}"]
-            parts[c].append(
-                [
-                    int(r["__rows"]),
-                    int(r[f"n {c}"]),
-                    [float(b) for b in bounds] if bounds else [],
-                ]
-            )
-    blobs = []
-    seq = writer._last_sequence_number
-    for c in columns:
-        rows, nonnull, bounds = merge_cdf_parts(parts[c], buckets)
-        payload = {
-            "buckets": buckets,
-            "rows": rows,
-            "nonnull": nonnull,
-            "bounds": bounds,
-            "merged": True,
-        }
-        blobs.append(
-            {
-                "type": QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
+            parts[c].append(_cdf_part(r, c))
+    blobs = [
+        _hist_blob(
+            writer, c, merge_cdf_parts(parts[c], buckets), buckets,
+            snapshot_id, True,
         )
-    name = (
-        f"quantiles-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'mquant{snapshot_id}{sorted(columns)}').hex[:8]}"
-        ".puffin"
+        for c in columns
+    ]
+    path = _publish_hist(
+        writer, f"mquant{snapshot_id}{sorted(columns)}", snapshot_id, blobs
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e
-            for e in writer.statistics
-            if not (
-                e["snapshot-id"] == snapshot_id
-                and any(
-                    b.get("type") == QUANTILE_BLOB_TYPE
-                    for b in e.get("blob-metadata", [])
-                )
-            )
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
     return {
         "path": path,
         "columns": list(columns),
-        "files_total": len(files),
-        "partials_computed": len(missing),
-        "dirty_files": len(dirty),
+        "files_total": len(cu.files),
+        "partials_computed": len(cu.missing),
+        "dirty_files": len(cu.dirty),
     }
 
 
-def grouped_quantile_covered_configs(writer, t) -> set[tuple]:
-    """The groupings whose OWN statistics entry already covers the
-    head snapshot (r15) — per-config head gate; see the theta twin."""
-    head_id = writer.head_snapshot["snapshot-id"]
-    covered: set[tuple] = set()
-    for e in writer.statistics:
-        if e["snapshot-id"] != head_id:
-            continue
-        gc = _entry_statistics_group_cols(t, e, GROUPED_QUANTILE_BLOB_TYPE)
-        if isinstance(gc, list):
-            covered.add(tuple(gc))
-    return covered
+def catch_up_quantile_statistics(writer, spark, scan_source=None):
+    """``maintain()``'s global-histogram step for an opted-in table whose
+    head lacks one: incremental from per-file CDF partials when they
+    exist, else the full one-pass re-run.  Returns the refreshed
+    columns, or None when no histogram column is still numeric — a
+    column dropped or retyped since the last run must not crash the
+    nightly job, it simply stops being refreshed."""
+    from daskberg_spark.iceberg.statsblobs import indexed_columns
+
+    q_cols = [
+        c
+        for c in indexed_columns(writer, QUANTILE_BLOB_TYPE)
+        if writer.types.get(c) in _NUMERIC_TYPES
+    ]
+    if not q_cols:
+        return None
+    if refresh_quantile_statistics(writer, spark, scan_source=scan_source) is None:
+        write_quantile_statistics(writer, spark, q_cols)
+    return q_cols
+
+
+def _quantile_runnable(writer, gc: tuple, cfg: dict):
+    cols = [c for c in cfg["columns"] if writer.types.get(c) in _NUMERIC_TYPES]
+    return (list(gc), cols) if gc and cols else None
 
 
 def refresh_grouped_quantile_statistics(
@@ -1080,104 +663,58 @@ def refresh_grouped_quantile_statistics(
 
     Clean files stay metadata-only; new clean files take one raw
     grouped pass; delete-dirtied files take one delete-aware
-    restricted scan grouped by the group columns.  Opt-in shape: the
-    latest grouped blob defines (group_cols, value columns); None on
-    tables that never wrote one.  Returns ``{"mode", "strategy",
-    "files_total", "partials_computed", "dirty_files", "groups"}``."""
-    from daskberg_spark.iceberg.metadata import IcebergTable
+    restricted scan grouped by the group columns.  EVERY grouping any
+    blob ever defined refreshes (multi-config, r14) — drop one with
+    ``drop_grouped_quantile_statistics``; ``skip_head_covered``
+    (maintain()) skips a grouping whose own entry already covers the
+    head (r15).  None on tables that never wrote a grouped blob.
+    Returns ``{"mode", "strategy", "files_total", "partials_computed",
+    "dirty_files", "groups"}`` (merged with a ``"configs"`` list over
+    several groupings)."""
+    from daskberg_spark.iceberg.statsblobs import refresh_configs
 
-    t = IcebergTable(writer.path)
-    # EVERY grouping any blob ever defined refreshes (multi-config,
-    # r14, mirroring the grouped-NDV family): drop one deliberately
-    # with ``drop_grouped_quantile_statistics``.
-    configs = _grouped_quantile_configs(writer, t)
-    # maintain() gates PER CONFIG (r15): a grouping whose own entry
-    # already covers the head is skipped without starving the others
-    covered = (
-        grouped_quantile_covered_configs(writer, t)
-        if skip_head_covered
-        else set()
+    return refresh_configs(
+        writer,
+        GROUPED_QUANTILE_BLOB_TYPE,
+        skip_head_covered,
+        lambda gc, cfg: _quantile_runnable(writer, gc, cfg),
+        lambda gc, cols: _refresh_grouped_quantile_config(
+            writer, spark, gc, cols, buckets, accuracy, scan_source
+        ),
+        lambda reports: {
+            "mode": "incremental",
+            "strategy": "+".join(sorted({r["strategy"] for r in reports})),
+        },
     )
-    runnable: list[tuple[list, list]] = []
-    for gc, cols in configs.items():
-        if gc in covered:
-            continue
-        cols = [c for c in cols if writer.types.get(c) in _NUMERIC_TYPES]
-        if gc and cols:
-            runnable.append((list(gc), cols))
-    if not runnable:
+
+
+def _identity_keys(writer, t, group_cols, files) -> dict[str, tuple] | None:
+    """``{normalized path: group tuple}`` when every group column is an
+    identity partition source in every file's spec (the identity
+    strategy: a file is exactly one group); None otherwise.  Dates are
+    excluded — manifest partition encoding differs from the blob's ISO
+    keys."""
+    if any(
+        writer.types.get(g) not in ("int", "long", "string", "boolean")
+        for g in group_cols
+    ):
         return None
-    reports = []
-    for group_cols, columns in runnable:
-        reports.append(
-            _refresh_grouped_quantile_config(
-                writer,
-                spark,
-                group_cols,
-                columns,
-                buckets,
-                accuracy,
-                scan_source,
-            )
-        )
-    if len(reports) == 1:
-        return reports[0]
-    return {
-        "configs": reports,
-        "mode": "incremental",
-        "strategy": "+".join(sorted({r["strategy"] for r in reports})),
-        "files_total": reports[0]["files_total"],
-        "partials_computed": sum(r["partials_computed"] for r in reports),
-        "dirty_files": max(r["dirty_files"] for r in reports),
-        "groups": max(r["groups"] for r in reports),
-    }
-
-
-def _grouped_quantile_configs(writer, t) -> dict[tuple, list]:
-    """Every grouping any ``daskberg-quantiles-grouped-v1`` blob
-    defines, with its value columns (later entries win per config) —
-    the multi-config registry the refresh iterates (r14)."""
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    fid_to_name = {i.field_id: n for n, i in t.fields.items()}
-    configs: dict[tuple, list] = {}
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_QUANTILE_BLOB_TYPE:
-                continue
-            col = fid_to_name.get((b.get("fields") or [None])[0])
-            if col is None:
-                continue
-            try:
-                payload = json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            gc = tuple(payload.get("group_cols") or ())
-            cols = configs.setdefault(gc, [])
-            if col not in cols:
-                cols.append(col)
-    return configs
-
-
-def _entry_statistics_group_cols(t, e, blob_type):
-    """The ``group_cols`` an entry's first matching blob carries;
-    ``"__none__"`` when the entry has no such blob, None when
-    unreadable (publish-time replacement then drops it)."""
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    for b in e.get("blob-metadata", []):
-        if b.get("type") != blob_type:
-            continue
-        try:
-            payload = json.loads(
-                read_blob(t._relocate(e["statistics-path"]), b)
-            )
-        except (ValueError, OSError):
-            return None
-        return payload.get("group_cols")
-    return "__none__"
+    keys: dict[str, tuple] = {}
+    for f in files:
+        by_source = {
+            sf["source-id"]: sf
+            for sf in t._spec_fields(f.get("_spec_id", 0))
+            if sf.get("transform") == "identity"
+        }
+        names = []
+        for g in group_cols:
+            sf = by_source.get(t.fields[g].field_id)
+            if sf is None:
+                return None
+            names.append(sf["name"])
+        part = f.get("partition") or {}
+        keys[_norm(f["file_path"])] = tuple(part.get(n) for n in names)
+    return keys
 
 
 def _refresh_grouped_quantile_config(
@@ -1189,159 +726,82 @@ def _refresh_grouped_quantile_config(
     accuracy: int,
     scan_source,
 ) -> dict[str, Any]:
-    """One grouping's incremental refresh — the r13 body, factored so
-    the multi-config loop runs it per grouping."""
+    """One grouping's incremental refresh."""
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
 
-    from daskberg_spark.iceberg.groupkeys import group_key_type
+    from daskberg_spark.iceberg.groupkeys import (
+        apply_group_keys,
+        group_key_base,
+        group_key_type,
+    )
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import to_df
+    from daskberg_spark.iceberg.statsblobs import (
+        catch_up_partials,
+        dirty_read,
+        json_blob,
+    )
 
     t = IcebergTable(writer.path)
     types = dict(writer.types)
     snapshot_id = writer.head_snapshot["snapshot-id"]
-    files, dirty = _dirty_split(t)
+    split = _dirty_split(t)
+    keys = _identity_keys(writer, t, group_cols, split[0])
+    opts = {"buckets": buckets, "accuracy": accuracy, "scan_source": scan_source}
+    if keys is not None:
+        strategy, read_map = "identity-partials", column_filecdfs
 
-    def identity_part_names(f) -> list[str] | None:
-        """Per-file spec field names for the group columns, or None
-        when any group col isn't identity-partitioned in this spec."""
-        sid = f.get("_spec_id", 0)
-        by_source = {
-            sf["source-id"]: sf
-            for sf in t._spec_fields(sid)
-            if sf.get("transform") == "identity"
-        }
-        names = []
-        for g in group_cols:
-            sf = by_source.get(t.fields[g].field_id)
-            if sf is None:
-                return None
-            names.append(sf["name"])
-        return names
-
-    identity = all(
-        writer.types.get(g) in ("int", "long", "string", "boolean")
-        for g in group_cols
-    )
-    file_keys: dict[str, tuple] = {}
-    if identity:
-        for f in files:
-            pnames = identity_part_names(f)
-            if pnames is None:
-                identity = False
-                break
-            part = f.get("partition") or {}
-            file_keys[_norm(f["file_path"])] = tuple(
-                part.get(n) for n in pnames
-            )
-
-    clean_norm = {
-        _norm(f["file_path"])
-        for f in files
-        if f["file_path"] not in dirty
-    }
-    parts: dict[str, dict[tuple, list]] = {c: {} for c in columns}
-    if identity:
-        strategy = "identity-partials"
-        maps = {c: (column_filecdfs(t, c) or {}) for c in columns}
-        missing = set()
-        for c in columns:
-            missing |= clean_norm - set(maps[c])
-        if missing:
+        def write_missing(missing):
             write_file_quantile_partials(
-                writer,
-                spark,
-                columns,
-                file_subset=missing,
-                buckets=buckets,
-                accuracy=accuracy,
-                scan_source=scan_source,
+                writer, spark, columns, file_subset=missing, **opts
             )
-            t = IcebergTable(writer.path)
-            maps = {c: (column_filecdfs(t, c) or {}) for c in columns}
-        _consolidate_file_partials(writer, t, columns)
-        # group the clean partials by each file's identity partition
-        # tuple (its only group)
-        for p in clean_norm:
-            key = file_keys[p]
-            for c in columns:
-                if p in maps[c]:
-                    parts[c].setdefault(key, []).append(maps[c][p])
+
     else:
         strategy = "file-grouped-partials"
-        gmaps = {
-            c: (grouped_column_filecdfs(t, c, group_cols) or {})
-            for c in columns
-        }
-        missing = set()
-        for c in columns:
-            missing |= clean_norm - set(gmaps[c])
-        if missing:
-            write_file_grouped_quantile_partials(
-                writer,
-                spark,
-                group_cols,
-                columns,
-                file_subset=missing,
-                buckets=buckets,
-                accuracy=accuracy,
-                scan_source=scan_source,
-            )
-            t = IcebergTable(writer.path)
-            gmaps = {
-                c: (grouped_column_filecdfs(t, c, group_cols) or {})
-                for c in columns
-            }
-        _consolidate_file_grouped_partials(writer, t, group_cols, columns)
-        for p in clean_norm:
-            for c in columns:
-                for gkey, part in (gmaps[c].get(p) or {}).items():
-                    parts[c].setdefault(tuple(json.loads(gkey)), []).append(
-                        part
-                    )
-    if dirty:
-        from daskberg_spark.iceberg.groupkeys import (
-            apply_group_keys,
-            group_key_base,
-        )
 
-        probs = [i / buckets for i in range(buckets + 1)]
-        ftypes = {n: i.type for n, i in t.fields.items()}
-        wtypes = dict(writer.types)
-        dirty_cols = sorted(
-            {group_key_base(g, wtypes) for g in group_cols} | set(columns)
-        )
-        df = (
-            scan_source.dirty_frame(sorted(dirty), dirty_cols)
-            if scan_source is not None
-            else None
-        )
-        if df is None:
-            df = to_df(
-                t, spark, columns=dirty_cols, file_subset=sorted(dirty)
+        def read_map(t_, c):
+            return grouped_column_filecdfs(t_, c, group_cols)
+
+        def write_missing(missing):
+            write_file_grouped_quantile_partials(
+                writer, spark, group_cols, columns, file_subset=missing, **opts
             )
-        df = apply_group_keys(df, list(group_cols), wtypes)
-        aggs = [F.count(F.lit(1)).alias("__rows")]
+
+    cu = catch_up_partials(writer, t, columns, read_map, write_missing, split)
+    parts: dict[str, dict[tuple, list]] = {c: {} for c in columns}
+    if keys is not None:
+        _consolidate_file_partials(writer, cu.t, columns)
+    else:
+        _consolidate_file_grouped_partials(writer, cu.t, group_cols, columns)
+    for p in sorted(cu.clean):
         for c in columns:
-            e2 = _numeric_expr(c, ftypes[c])
-            aggs.append(
-                F.percentile_approx(
-                    e2,
-                    F.array(*[F.lit(p) for p in probs]),
-                    F.lit(accuracy),
-                ).alias(f"q {c}")
-            )
-            aggs.append(F.count(e2).alias(f"n {c}"))
-        # limit+check mirrors the build path (:1342) — bounded today
-        # only transitively (deletes can't ADD groups; new files take
-        # the guarded partials path), so guard here defensively: a
-        # future refresh path classifying appends as "dirty" must
-        # refuse rather than silently lift the blob's group bound
+            if keys is not None:
+                # the clean file's identity partition tuple is its
+                # only group
+                groups = {keys[p]: cu.maps[c][p]} if p in cu.maps[c] else {}
+            else:
+                groups = {
+                    tuple(json.loads(g)): part
+                    for g, part in (cu.maps[c].get(p) or {}).items()
+                }
+            for key, part in groups.items():
+                parts[c].setdefault(key, []).append(part)
+    if cu.dirty:
+        dirty_cols = sorted(
+            {group_key_base(g, types) for g in group_cols} | set(columns)
+        )
+        df = apply_group_keys(
+            dirty_read(cu.t, spark, cu.dirty, dirty_cols, scan_source),
+            list(group_cols),
+            types,
+        )
+        # limit+check mirrors the build path — bounded today only
+        # transitively (deletes can't ADD groups; new files take the
+        # guarded partials path), so guard here defensively: a future
+        # refresh path classifying appends as "dirty" must refuse
+        # rather than silently lift the blob's group bound
         dirty_rows = (
             df.groupBy(*group_cols)
-            .agg(*aggs)
+            .agg(*_cdf_aggs(columns, types, buckets, accuracy))
             .limit(MAX_BLOB_GROUPS + 1)
             .collect()
         )
@@ -1360,14 +820,7 @@ def _refresh_grouped_quantile_config(
                 for g in group_cols
             )
             for c in columns:
-                bounds = r[f"q {c}"]
-                parts[c].setdefault(key, []).append(
-                    [
-                        int(r["__rows"]),
-                        int(r[f"n {c}"]),
-                        [float(b) for b in bounds] if bounds else [],
-                    ]
-                )
+                parts[c].setdefault(key, []).append(_cdf_part(r, c))
     blobs = []
     seq = writer._last_sequence_number
     n_groups = 0
@@ -1396,55 +849,18 @@ def _refresh_grouped_quantile_config(
             "merged": True,
         }
         blobs.append(
-            {
-                "type": GROUPED_QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
+            json_blob(GROUPED_QUANTILE_BLOB_TYPE, writer, c, payload, snapshot_id, seq)
         )
-    name = (
-        f"quantiles-grouped-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'mgquant{snapshot_id}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
+    _publish_grouped(
+        writer, cu.t, "mgquant", snapshot_id, columns, group_cols, blobs
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    # replacement is CONFIG-scoped (r14): a same-snapshot entry keyed
-    # on a DIFFERENT grouping survives — multiple groupings coexist
-    def _keep(e) -> bool:
-        if e["snapshot-id"] != snapshot_id:
-            return True
-        gc = _entry_statistics_group_cols(t, e, GROUPED_QUANTILE_BLOB_TYPE)
-        if gc == "__none__":
-            return True
-        return gc is not None and gc != list(group_cols)
-
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e for e in writer.statistics if _keep(e)
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
     return {
         "mode": "incremental",
         "strategy": strategy,
         "group_cols": list(group_cols),
-        "files_total": len(files),
-        "partials_computed": len(missing),
-        "dirty_files": len(dirty),
+        "files_total": len(cu.files),
+        "partials_computed": len(cu.missing),
+        "dirty_files": len(cu.dirty),
         "groups": n_groups,
     }
 
@@ -1509,10 +925,9 @@ def write_grouped_quantile_statistics(
     (int/long/string/boolean/date).  Returns the Puffin path, or None
     when no value column qualifies."""
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import functions as F
 
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
+    from daskberg_spark.iceberg.statsblobs import json_blob
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
@@ -1535,14 +950,7 @@ def write_grouped_quantile_statistics(
             if t in _NUMERIC_TYPES and c not in group_cols
         ]
     else:
-        for c in columns:
-            if c not in types:
-                raise ValueError(f"unknown column {c!r}")
-            if types[c] not in _NUMERIC_TYPES:
-                raise ValueError(
-                    f"column {c!r} has type {types[c]!r} — histograms "
-                    "cover numeric/temporal columns only"
-                )
+        _check_columns(columns, types)
     if not columns:
         return None
     snapshot_id = writer.head_snapshot["snapshot-id"]
@@ -1551,27 +959,21 @@ def write_grouped_quantile_statistics(
     need = sorted(bases | set(columns))
     # one-scan bootstrap (r16): current content may serve from a shared
     # cache only through the delete-state gate (raw == current exactly
-    # when no delete applies); else the delete-aware direct read
+    # when no delete applies at the scan's planned snapshot); else the
+    # delete-aware direct read
     src = (
-        scan_source.current_frame(t.plan_files(None), need)
+        scan_source.current_frame(t.plan_files(None), need, snapshot_id)
         if scan_source is not None
         else None
     )
     if src is None:
         src = t.to_df(spark, columns=need)
     df = apply_group_keys(src, group_cols, types)
-    probs = [i / buckets for i in range(buckets + 1)]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in columns:
-        e = _numeric_expr(c, types[c])
-        aggs.append(
-            F.percentile_approx(
-                e, F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
-            ).alias(f"q_{c}")
-        )
-        aggs.append(F.count(e).alias(f"n_{c}"))
     rows = (
-        df.groupBy(*group_cols).agg(*aggs).limit(max_groups + 1).collect()
+        df.groupBy(*group_cols)
+        .agg(*_cdf_aggs(columns, types, buckets, accuracy))
+        .limit(max_groups + 1)
+        .collect()
     )
     if len(rows) > max_groups:
         raise ValueError(
@@ -1584,16 +986,16 @@ def write_grouped_quantile_statistics(
     for c in columns:
         groups = []
         for r in rows:
-            bounds = r[f"q_{c}"]
+            n_rows, nonnull, bounds = _cdf_part(r, c)
             groups.append(
                 {
                     "key": [
                         _encode_group_value(r[g], group_key_type(g, types))
                         for g in group_cols
                     ],
-                    "rows": int(r["__rows"]),
-                    "nonnull": int(r[f"n_{c}"]),
-                    "bounds": [float(b) for b in bounds] if bounds else [],
+                    "rows": n_rows,
+                    "nonnull": nonnull,
+                    "bounds": bounds,
                 }
             )
         payload = {
@@ -1602,49 +1004,11 @@ def write_grouped_quantile_statistics(
             "groups": groups,
         }
         blobs.append(
-            {
-                "type": GROUPED_QUANTILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
+            json_blob(GROUPED_QUANTILE_BLOB_TYPE, writer, c, payload, snapshot_id, seq)
         )
-    name = (
-        f"quantiles-grouped-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'gquant{snapshot_id}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
+    return _publish_grouped(
+        writer, t, "gquant", snapshot_id, columns, group_cols, blobs
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    # replacement is CONFIG-scoped (r14): writing "p95 by source" no
-    # longer clobbers a same-snapshot "p95 by day" entry
-    def _keep(e) -> bool:
-        if e["snapshot-id"] != snapshot_id:
-            return True
-        gc = _entry_statistics_group_cols(t, e, GROUPED_QUANTILE_BLOB_TYPE)
-        if gc == "__none__":
-            return True
-        return gc is not None and gc != list(group_cols)
-
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e for e in writer.statistics if _keep(e)
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
 
 
 def drop_grouped_quantile_statistics(
@@ -1656,42 +1020,11 @@ def drop_grouped_quantile_statistics(
     forgets it — and returns the removed entry count.  Unreadable
     entries are KEPT unless ``drop_unreadable=True`` (r15): a
     transient IO error must not delete a different grouping."""
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
+    from daskberg_spark.iceberg.statsblobs import drop_grouped
 
-    t = IcebergTable(writer.path)
-
-    # classify OUTSIDE the lock — _entry_statistics_group_cols reads
-    # puffin blobs (disk IO), and holding the process-global commit
-    # lock across that blocks every other table's millisecond commits.
-    # The keep list is still rebuilt UNDER the lock from the live
-    # statistics (full replacement must not lose a concurrent family
-    # commit); entries appended concurrently, unseen by the pre-pass,
-    # classify there (normally zero).
-    def _is_dropped(e: dict) -> bool:
-        gc = _entry_statistics_group_cols(
-            t, e, GROUPED_QUANTILE_BLOB_TYPE
-        )
-        return gc != "__none__" and (
-            (gc is None and drop_unreadable) or gc == list(group_cols)
-        )
-
-    pre = {id(e): _is_dropped(e) for e in list(writer.statistics)}
-    with STATS_COMMIT_LOCK:
-        keep, dropped = [], 0
-        for e in writer.statistics:
-            hit = pre.get(id(e))
-            if hit is None:
-                hit = _is_dropped(e)
-            if hit:
-                dropped += 1
-                continue
-            keep.append(e)
-        if dropped:
-            writer.statistics = keep
-            writer.version += 1
-            writer._write_metadata()
-    return dropped
+    return drop_grouped(
+        writer, GROUPED_QUANTILE_BLOB_TYPE, group_cols, drop_unreadable
+    )
 
 
 def range_selectivity(hist: dict, op: str, value: float) -> float | None:
@@ -1734,114 +1067,62 @@ def range_selectivity(hist: dict, op: str, value: float) -> float | None:
 
 def plan_quantile_refresh_scan(writer, t):
     """Metadata-only scan plan for the NEXT global quantile refresh:
-    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the quantile
-    half of ``maintain()``'s one-scan statistics pass (r14,
-    ``onepass.plan_shared_stats_scan``).  Empty sets when the table
-    never opted into per-file CDF partials.  Advisory only: a stale
-    plan changes shared-cache membership, never answers — builders
-    fall back to direct reads for anything the cache can't serve."""
-    columns = sorted(
-        {
-            (b.get("properties") or {}).get("column")
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-            if b.get("type") == FILE_QUANTILE_BLOB_TYPE
-        }
-        - {None}
-    )
-    columns = [c for c in columns if writer.types.get(c) in _NUMERIC_TYPES]
+    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the quantile row
+    of the ``statsblobs.stats_families`` table that
+    ``onepass.plan_shared_stats_scan`` composes.  Empty sets when the
+    table never opted into per-file CDF partials.  Advisory only: a
+    stale plan changes shared-cache membership, never answers —
+    builders fall back to direct reads for anything the cache can't
+    serve."""
+    from daskberg_spark.iceberg.statsblobs import plan_missing
+
+    columns = _partial_columns(writer)
     if not columns:
         return set(), set(), set()
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
-    missing: set[str] = set()
-    for c in columns:
-        missing |= clean_norm - set(column_filecdfs(t, c) or {})
-    return missing, set(columns), (set(columns) if dirty else set())
+    return plan_missing(t, columns, column_filecdfs)
 
 
 def plan_grouped_quantile_refresh_scan(writer, t):
     """Metadata-only scan plan for the NEXT grouped quantile refresh:
-    ``(raw_norm_paths, raw_columns, dirty_columns)`` (r14 one-scan
-    maintenance).  Mirrors ``refresh_grouped_quantile_statistics``'s
-    strategy split: identity groupings reuse the GLOBAL per-file CDF
-    partials (value columns only), any other grouping uses the
-    per-(file x group) partials and reads the group columns too."""
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
+    ``(raw_norm_paths, raw_columns, dirty_columns)`` over exactly the
+    groupings the refresh would run.  Mirrors the refresh's strategy
+    split: identity groupings reuse the GLOBAL per-file CDF partials
+    (value columns only — the group is the file's partition tuple),
+    any other grouping uses the per-(file x group) partials and reads
+    the group columns too; the dirty scan always groups by them."""
     from daskberg_spark.iceberg.groupkeys import group_key_base
+    from daskberg_spark.iceberg.statsblobs import (
+        clean_paths,
+        runnable_configs,
+        uncovered,
+    )
 
-    all_missing: set[str] = set()
-    all_raw: set[str] = set()
-    all_dirty_cols: set[str] = set()
-    any_cfg = False
-    covered = grouped_quantile_covered_configs(writer, t)
-    for gc, cols in _grouped_quantile_configs(writer, t).items():
-        if gc in covered:
-            continue  # this grouping's entry already covers the head
-        group_cols = list(gc)
-        columns = [c for c in cols if writer.types.get(c) in _NUMERIC_TYPES]
-        if not group_cols or not columns:
-            continue
-        any_cfg = True
-        m, r, dc = _plan_one_grouped_quantile(
-            writer, t, group_cols, columns, files, dirty, clean_norm
-        )
-        all_missing |= m
-        all_raw |= r
-        all_dirty_cols |= dc
-    if not any_cfg:
+    runnable = runnable_configs(
+        writer,
+        t,
+        GROUPED_QUANTILE_BLOB_TYPE,
+        lambda gc, cfg: _quantile_runnable(writer, gc, cfg),
+    )
+    if not runnable:
         return set(), set(), set()
-    return all_missing, all_raw, all_dirty_cols
-
-
-def _plan_one_grouped_quantile(
-    writer, t, group_cols, columns, files, dirty, clean_norm
-):
-    from daskberg_spark.iceberg.groupkeys import group_key_base
-
-    def _is_identity() -> bool:
-        # same test the refresh applies (dates excluded — manifest
-        # partition encoding differs from the blob's ISO keys)
-        if any(
-            writer.types.get(g) not in ("int", "long", "string", "boolean")
-            for g in group_cols
-        ):
-            return False
-        for f in files:
-            sid = f.get("_spec_id", 0)
-            by_source = {
-                sf["source-id"]: sf
-                for sf in t._spec_fields(sid)
-                if sf.get("transform") == "identity"
-            }
-            for g in group_cols:
-                if by_source.get(t.fields[g].field_id) is None:
-                    return False
-        return True
-
-    from daskberg_spark.iceberg.groupkeys import group_key_base
-
-    bases = {group_key_base(g, dict(writer.types)) for g in group_cols}
+    files, dirty = _dirty_split(t)
+    clean = clean_paths(files, dirty)
+    types = dict(writer.types)
     missing: set[str] = set()
-    if _is_identity():
-        # identity strategy reuses the GLOBAL per-file partials: the
-        # raw pass reads value columns only (the group is the file's
-        # partition tuple, no data column needed)
-        for c in columns:
-            missing |= clean_norm - set(column_filecdfs(t, c) or {})
-        raw_cols = set(columns)
-    else:
-        for c in columns:
-            missing |= clean_norm - set(
+    raw_cols: set[str] = set()
+    dirty_cols: set[str] = set()
+    for group_cols, columns in runnable:
+        bases = {group_key_base(g, types) for g in group_cols}
+        if _identity_keys(writer, t, group_cols, files) is not None:
+            maps = [column_filecdfs(t, c) or {} for c in columns]
+            raw_cols |= set(columns)
+        else:
+            maps = [
                 grouped_column_filecdfs(t, c, group_cols) or {}
-            )
-        raw_cols = bases | set(columns)
-    # the dirty scan ALWAYS groups by the group columns (both
-    # strategies), so its frame needs the base columns too
-    dirty_cols = (bases | set(columns)) if dirty else set()
+                for c in columns
+            ]
+            raw_cols |= bases | set(columns)
+        missing |= uncovered(clean, maps)
+        if dirty:
+            dirty_cols |= bases | set(columns)
     return missing, raw_cols, dirty_cols

@@ -44,9 +44,6 @@ are its full-scan path like every aggregate.
 from __future__ import annotations
 
 import decimal
-import json
-import os
-import uuid
 from typing import Any
 
 SUM_BLOB_TYPE = "daskberg-colsum-v1"
@@ -65,12 +62,6 @@ def type_scale(type_str: str) -> int:
     return 0
 
 
-def _norm(p: str) -> str:
-    from daskberg_spark.iceberg.scan import _norm_scan_path
-
-    return _norm_scan_path(p)
-
-
 def write_sum_statistics(
     writer,
     spark,
@@ -79,8 +70,9 @@ def write_sum_statistics(
     scan_source=None,
 ) -> str | None:
     """Build per-(file, column) exact sums in ONE distributed pass and
-    commit them as a Puffin statistics file on the current snapshot.
-    Returns the statistics file path (None when nothing qualifies).
+    commit them as a Puffin statistics file on the current snapshot
+    (``statsblobs.write_file_partials``).  Returns the statistics file
+    path (None when nothing qualifies).
 
     The pass reads RAW file contents (``_read_file_groups``, no delete
     application) grouped by ``__file``: one ``decimal(38, s)`` sum and
@@ -94,14 +86,9 @@ def write_sum_statistics(
     and the entry is APPENDED (prior blobs stay live, later entries
     win per file) instead of replacing the snapshot's colsum entry.
     """
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    from daskberg_spark.iceberg.conversions import schema_to_struct
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import _read_file_groups
+    from daskberg_spark.iceberg.statsblobs import write_file_partials
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
@@ -118,206 +105,75 @@ def write_sum_statistics(
                     "statistics cover int/long/decimal only (float "
                     "sums are order-dependent)"
                 )
-    if not columns:
-        return None
-    snapshot_id = writer.head_snapshot["snapshot-id"]
-    t = IcebergTable(writer.path)
-    live = t.plan_files(None)
-    targets: dict[str, set[str]] = {}
-    for c in columns:
-        if file_subset is None:
-            targets[c] = {_norm(f["file_path"]) for f in live}
-        else:
-            targets[c] = {_norm(p) for p in file_subset.get(c, ())}
-    scan_paths = set().union(*targets.values())
-    if not scan_paths:
-        return None
-    scan_files = [f for f in live if _norm(f["file_path"]) in scan_paths]
-    # one-scan maintenance (r14): a SharedStatsScan serves the already-
-    # read cached frame; None falls back to a direct read
-    df = (
-        scan_source.raw_frame(scan_files, set(columns))
-        if scan_source is not None
-        else None
-    )
-    if df is None:
-        scan_struct = T.StructType(
-            [
-                f
-                for f in schema_to_struct(t.schema).fields
-                if f.name in columns
-            ]
-        )
-        df = _read_file_groups(
-            t,
-            spark,
-            scan_files,
-            scan_struct,
-            tag_position=False,
-            tag_file=True,
-        )
     scales = {c: type_scale(types[c]) for c in columns}
-    aggs = []
-    for c in columns:
-        aggs.append(
-            F.sum(F.col(c).cast(f"decimal(38,{scales[c]})")).alias(f"s {c}")
-        )
-        aggs.append(F.count(F.col(c)).alias(f"n {c}"))
-    got = {r["__file"]: r for r in df.groupBy("__file").agg(*aggs).collect()}
 
-    per_col: dict[str, dict[str, list]] = {c: {} for c in columns}
-    for f in scan_files:
-        key = _norm(f["file_path"])
-        r = got.get(key)
+    def kernel(df, _scan_files):
+        aggs = []
         for c in columns:
-            if key not in targets[c]:
-                continue
-            if r is None:  # zero-row file: no group emitted
-                per_col[c][key] = [None, 0]
-                continue
-            v = r[f"s {c}"]
-            n = int(r[f"n {c}"])
-            if v is None:
-                per_col[c][key] = [None, n]
-            else:
-                unscaled = int(
-                    v.scaleb(scales[c]).to_integral_value(
-                        rounding=decimal.ROUND_HALF_EVEN
+            aggs.append(
+                F.sum(F.col(c).cast(f"decimal(38,{scales[c]})")).alias(f"s {c}")
+            )
+            aggs.append(F.count(F.col(c)).alias(f"n {c}"))
+        got = df.groupBy("__file").agg(*aggs).collect()
+        out: dict[str, dict] = {c: {} for c in columns}
+        for r in got:
+            for c in columns:
+                v = r[f"s {c}"]
+                unscaled = (
+                    None
+                    if v is None
+                    else str(
+                        int(
+                            v.scaleb(scales[c]).to_integral_value(
+                                rounding=decimal.ROUND_HALF_EVEN
+                            )
+                        )
                     )
                 )
-                per_col[c][key] = [str(unscaled), n]
+                out[c][r["__file"]] = [unscaled, int(r[f"n {c}"])]
+        return out
 
-    seq = writer._last_sequence_number
-    blobs = []
-    for c in columns:
-        if not per_col[c]:
-            continue
-        payload = {"scale": scales[c], "files": per_col[c]}
-        blobs.append(
-            {
-                "type": SUM_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    if not blobs:
-        return None
-    name = (
-        f"colsums-{snapshot_id}-"
-        f"{uuid.uuid5(uuid.NAMESPACE_URL, f'colsum{snapshot_id}{sorted(scan_paths)}{sorted(columns)}').hex[:8]}"
-        ".puffin"
+    return write_file_partials(
+        writer,
+        spark,
+        SUM_BLOB_TYPE,
+        "colsums",
+        "colsum",
+        columns,
+        None,
+        file_subset,
+        empty=[None, 0],
+        extras=lambda c: {"scale": scales[c]},
+        kernel=kernel,
+        scan_source=scan_source,
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        keep = writer.statistics
-        if file_subset is None:
-            # full rebuild replaces the snapshot's colsum entry
-            # (raw-file blobs on OTHER snapshots stay valid and live)
-            keep = [
-                e
-                for e in keep
-                if not (
-                    e["snapshot-id"] == snapshot_id
-                    and any(
-                        b.get("type") == SUM_BLOB_TYPE
-                        for b in e.get("blob-metadata", [])
-                    )
-                )
-            ]
-        writer.statistics = keep + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
 
 
 def column_filesums(table, name: str) -> dict[str, tuple[int | None, int]] | None:
     """Merged per-file sums for a column across EVERY statistics entry
     (raw-file blobs are snapshot-independent; later entries win per
     file): ``{normalized_path: (unscaled_sum | None, nonnull)}``, or
-    None when no blob covers the column at all.  Unreadable blobs are
-    skipped — a missing map entry only ever means "scan that file"."""
-    from daskberg_spark.iceberg.puffin import read_blob
+    None when no blob covers the column at all."""
+    from daskberg_spark.iceberg.statsblobs import file_partials
 
-    fid = table.fields[name].field_id
-    merged: dict[str, tuple[int | None, int]] = {}
-    found = False
-    for e in table.metadata.get("statistics", []):
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != SUM_BLOB_TYPE or b.get("fields") != [fid]:
-                continue
-            try:
-                payload = json.loads(
-                    read_blob(table._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            found = True
-            for p, (s, n) in (payload.get("files") or {}).items():
-                merged[p] = (None if s is None else int(s), int(n))
-    return merged if found else None
+    m = file_partials(table, SUM_BLOB_TYPE, name)
+    if m is None:
+        return None
+    return {
+        p: (None if s is None else int(s), int(n)) for p, (s, n) in m.items()
+    }
 
 
-# a refresh appends one colsum entry per run; past this many the next
-# refresh rewrites ONE consolidated entry restricted to live files —
-# bounding the statistics list and the per-probe blob scan at O(live
-# files) instead of O(all refreshes ever) (r12, mirroring the quantile
-# partials' consolidation)
-SUM_BLOB_CONSOLIDATE_AFTER = 8
+def _summable_columns(writer) -> list[str]:
+    """The columns colsum blobs index (a column dropped or retyped since
+    the last run stops refreshing)."""
+    from daskberg_spark.iceberg.statsblobs import indexed_columns
 
-
-def consolidate_sum_statistics(writer, t, cols: list[str]) -> bool:
-    """Rewrite the accumulated colsum entries as ONE entry covering
-    only LIVE files (``column_filesums`` applies later-entry-wins
-    before the rewrite).  Returns True when a rewrite happened; the
-    caller (or the next metadata commit) persists it."""
-    from daskberg_spark.iceberg.statsblobs import consolidate_entries
-
-    def build(snapshot_id: int, seq: int) -> list[dict]:
-        live = {_norm(f["file_path"]) for f in t.plan_files(None)}
-        types = dict(writer.types)
-        blobs = []
-        for c in cols:
-            m = column_filesums(t, c) or {}
-            files = {
-                p: [None if s is None else str(s), n]
-                for p, (s, n) in m.items()
-                if p in live
-            }
-            payload = {"scale": type_scale(types[c]), "files": files}
-            blobs.append(
-                {
-                    "type": SUM_BLOB_TYPE,
-                    "fields": [writer.ids[c]],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {"column": c, "encoding": "json"},
-                    "data": json.dumps(payload, sort_keys=True).encode(),
-                }
-            )
-        return blobs
-
-    return consolidate_entries(
-        writer,
-        (SUM_BLOB_TYPE,),
-        build,
-        "colsums",
-        salt=str(sorted(cols)),
-        threshold=SUM_BLOB_CONSOLIDATE_AFTER,
-    )
+    return [
+        c
+        for c in indexed_columns(writer, SUM_BLOB_TYPE)
+        if is_summable(writer.types.get(c, ""))
+    ]
 
 
 def refresh_sum_statistics(writer, spark, scan_source=None) -> str | None:
@@ -325,32 +181,27 @@ def refresh_sum_statistics(writer, spark, scan_source=None) -> str | None:
     covered by any colsum blob, per already-indexed column.  A no-op
     (None) on tables that never ran ``write_sum_statistics`` — the
     ``maintain()`` opt-in shape shared with the Bloom index.  Past
-    ``SUM_BLOB_CONSOLIDATE_AFTER`` accumulated entries the refresh
-    first rewrites one consolidated live-files entry."""
+    ``statsblobs.CONSOLIDATE_AFTER`` accumulated entries the refresh
+    first rewrites one consolidated live-files entry (committed)."""
     from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.statsblobs import consolidate_partials
 
-    cols = sorted(
-        {
-            (b.get("properties") or {}).get("column")
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-            if b.get("type") == SUM_BLOB_TYPE
-        }
-        - {None}
-    )
-    # a column dropped or retyped since the last run stops refreshing
-    cols = [c for c in cols if is_summable(writer.types.get(c, ""))]
+    cols = _summable_columns(writer)
     if not cols:
         return None
     t = IcebergTable(writer.path)
-    consolidate_sum_statistics(writer, t, cols)
-    live = {_norm(f["file_path"]) for f in t.plan_files(None)}
-    subset: dict[str, set] = {}
-    for c in cols:
-        covered = set(column_filesums(t, c) or {})
-        missing = live - covered
-        if missing:
-            subset[c] = missing
+    types = dict(writer.types)
+    consolidate_partials(
+        writer,
+        t,
+        SUM_BLOB_TYPE,
+        "colsums",
+        lambda: [(None, c) for c in cols],
+        lambda c: {"scale": type_scale(types[c])},
+        salt=str(sorted(cols)),
+        commit=True,
+    )
+    subset = _uncovered_live(t, cols)
     if not subset:
         return None
     return write_sum_statistics(
@@ -359,32 +210,27 @@ def refresh_sum_statistics(writer, spark, scan_source=None) -> str | None:
     )
 
 
-def plan_sum_refresh_scan(writer, t):
-    """Metadata-only scan plan for the NEXT ``refresh_sum_statistics``:
-    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the colsum half
-    of ``maintain()``'s one-scan statistics pass (r14,
-    ``onepass.plan_shared_stats_scan``).  Sum blobs describe RAW file
-    contents, so the dirty set is always empty.  Advisory only."""
-    cols = sorted(
-        {
-            (b.get("properties") or {}).get("column")
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-            if b.get("type") == SUM_BLOB_TYPE
-        }
-        - {None}
-    )
-    cols = [c for c in cols if is_summable(writer.types.get(c, ""))]
-    if not cols:
-        return set(), set(), set()
+def _uncovered_live(t, cols: list[str]) -> dict[str, set]:
+    """Per column, the live files no colsum blob covers yet."""
+    from daskberg_spark.iceberg.statsblobs import _norm
+
     live = {_norm(f["file_path"]) for f in t.plan_files(None)}
-    paths: set[str] = set()
-    need: set[str] = set()
+    subset: dict[str, set] = {}
     for c in cols:
         missing = live - set(column_filesums(t, c) or {})
         if missing:
-            paths |= missing
-            need.add(c)
-    # the builder scans every requested column over the union subset,
-    # so the plan carries ALL indexed columns once anything is missing
-    return paths, (set(cols) if need else set()), set()
+            subset[c] = missing
+    return subset
+
+
+def plan_sum_refresh_scan(writer, t):
+    """Metadata-only scan plan for the NEXT ``refresh_sum_statistics``:
+    ``(raw_norm_paths, raw_columns, dirty_columns)`` — the colsum row of
+    the ``statsblobs.stats_families`` table.  Sum blobs describe RAW
+    file contents, so the dirty set is always empty.  Advisory only."""
+    cols = _summable_columns(writer)
+    subset = _uncovered_live(t, cols) if cols else {}
+    if not subset:
+        return set(), set(), set()
+    # the plan carries ALL indexed columns once anything is missing
+    return set().union(*subset.values()), set(cols), set()

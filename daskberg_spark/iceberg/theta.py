@@ -707,14 +707,7 @@ def build_column_sketches(
         partials[r["col"]].append(
             ThetaSketch.deserialize(bytes(r["sketch"]), lg_k)
         )
-    out: dict[str, ThetaSketch] = {}
-    for c in names:
-        parts = partials[c]
-        if not parts:
-            out[c] = ThetaSketch(LONG_MAX, np.empty(0, dtype=np.uint64), lg_k)
-        else:
-            out[c] = parts[0].union(*parts[1:]) if len(parts) > 1 else parts[0]
-    return out
+    return {c: _union_all(partials[c], lg_k) for c in names}
 
 
 # ---------------------------------------------------------------------------
@@ -877,14 +870,10 @@ def build_grouped_column_sketches(
                 f"more than {max_groups} distinct {cap_cols} tuples — "
                 "grouped sketches must stay metadata-sized"
             )
-    out: dict[tuple, dict[str, ThetaSketch]] = {}
-    for key, by_col in partials.items():
-        out[key] = {}
-        for c, parts in by_col.items():
-            out[key][c] = (
-                parts[0].union(*parts[1:]) if len(parts) > 1 else parts[0]
-            )
-    return out
+    return {
+        key: {c: _union_all(parts, lg_k) for c, parts in by_col.items()}
+        for key, by_col in partials.items()
+    }
 
 
 # group-key types whose values round-trip exactly through the
@@ -903,6 +892,73 @@ _THETA_GROUP_KEY_TYPES = {
     "timestamptz",
     "timestampz",
 }
+
+
+def _b64_sketch(sk: ThetaSketch) -> str:
+    import base64 as _b64
+
+    return _b64.b64encode(sk.serialize()).decode()
+
+
+def _from_b64(b64: str, lg_k: int) -> ThetaSketch:
+    import base64 as _b64
+
+    return ThetaSketch.deserialize(_b64.b64decode(b64), lg_k)
+
+
+def _union_all(parts: list[ThetaSketch], lg_k: int) -> ThetaSketch:
+    """One theta union over ``parts`` (the empty sketch for none)."""
+    if not parts:
+        return ThetaSketch(LONG_MAX, np.empty(0, dtype=np.uint64), lg_k)
+    return parts[0].union(*parts[1:]) if len(parts) > 1 else parts[0]
+
+
+def _grouped_blobs(writer, sketches_by_col, group_cols, lg_k, snapshot_id, merged):
+    """One ``daskberg-theta-grouped-v1`` blob per column from ``{column:
+    {group key: sketch}}``, groups in key order ({"key", "ndv", "exact",
+    "sketch": base64})."""
+    from daskberg_spark.iceberg.statsblobs import json_blob
+
+    seq = writer._last_sequence_number
+    blobs = []
+    for c, by_key in sketches_by_col.items():
+        groups = [
+            {
+                "key": list(key),
+                "ndv": int(round(sk.estimate())),
+                "exact": bool(sk.is_exact),
+                "sketch": _b64_sketch(sk),
+            }
+            for key, sk in sorted(
+                by_key.items(),
+                key=lambda kv: tuple((v is None, v) for v in kv[0]),
+            )
+        ]
+        payload = {"group_cols": list(group_cols), "lg_k": lg_k, "groups": groups}
+        if merged:
+            payload["merged"] = True
+        blobs.append(
+            json_blob(GROUPED_THETA_BLOB_TYPE, writer, c, payload, snapshot_id, seq)
+        )
+    return blobs
+
+
+def _publish_grouped(writer, t, tag, snapshot_id, columns, group_cols, blobs):
+    """Publish a grouped NDV entry, replacement CONFIG-scoped (r14):
+    writing "NDV by source" never clobbers a same-snapshot "NDV by day"
+    entry."""
+    from daskberg_spark.iceberg.statsblobs import publish_grouped
+
+    return publish_grouped(
+        writer,
+        t,
+        GROUPED_THETA_BLOB_TYPE,
+        "theta-grouped",
+        f"{tag}{snapshot_id}{sorted(columns)}{group_cols}",
+        snapshot_id,
+        group_cols,
+        blobs,
+    )
 
 
 def write_grouped_theta_statistics(
@@ -926,15 +982,9 @@ def write_grouped_theta_statistics(
     ``max_groups`` distinct tuples (builder state is groups × (k+1)·8
     bytes per task per column) and restricts group columns to
     JSON-round-trippable types."""
-    import base64 as _b64
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
 
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
@@ -973,10 +1023,10 @@ def write_grouped_theta_statistics(
     # one-scan bootstrap (r16): this full-table write needs CURRENT
     # content, so it may only serve from a shared cache through the
     # delete-state gate — raw rows equal current rows exactly when no
-    # delete applies to any live file; otherwise fall back to the
-    # delete-aware direct read below
+    # delete applies to any live file at the scan's planned snapshot;
+    # otherwise fall back to the delete-aware direct read below
     src = (
-        scan_source.current_frame(t.plan_files(None), need)
+        scan_source.current_frame(t.plan_files(None), need, snapshot_id)
         if scan_source is not None
         else None
     )
@@ -1013,82 +1063,13 @@ def write_grouped_theta_statistics(
         cap_cols=list(group_cols),
         group_types=[group_key_type(g, types) for g in group_cols],
     )
-    seq = writer._last_sequence_number
-    blobs = []
-    for c in columns:
-        groups = []
-        for key in sorted(
-            sketches, key=lambda k: tuple((v is None, v) for v in k)
-        ):
-            sk = sketches[key].get(c)
-            if sk is None:
-                continue
-            groups.append(
-                {
-                    "key": list(key),
-                    "ndv": int(round(sk.estimate())),
-                    "exact": bool(sk.is_exact),
-                    "sketch": _b64.b64encode(sk.serialize()).decode(),
-                }
-            )
-        payload = {
-            "group_cols": list(group_cols),
-            "lg_k": lg_k,
-            "groups": groups,
-        }
-        blobs.append(
-            {
-                "type": GROUPED_THETA_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": _json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"theta-grouped-{snapshot_id}-"
-        f"{_uuid.uuid5(_uuid.NAMESPACE_URL, f'gtheta{snapshot_id}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
-    )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = _os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
+    by_col = {
+        c: {k: by[c] for k, by in sketches.items() if c in by} for c in columns
     }
-    # replacement is CONFIG-scoped (r14): writing "NDV by source" no
-    # longer clobbers a same-snapshot "NDV by day" entry
-    def _keep(e) -> bool:
-        if e["snapshot-id"] != snapshot_id:
-            return True
-        gc = _entry_statistics_group_cols(t, e, GROUPED_THETA_BLOB_TYPE)
-        if gc == "__none__":
-            return True
-        return gc is not None and gc != list(group_cols)
-
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e for e in writer.statistics if _keep(e)
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
-
-
-def _file_key(key: tuple) -> str:
-    """The per-file payload's group key encoding: a JSON array string
-    (round-trips int/str/bool/None exactly — the same gate the grouped
-    writer applies to group-column types)."""
-    import json as _json
-
-    return _json.dumps(list(key), sort_keys=True)
+    blobs = _grouped_blobs(writer, by_col, group_cols, lg_k, snapshot_id, False)
+    return _publish_grouped(
+        writer, t, "gtheta", snapshot_id, columns, group_cols, blobs
+    )
 
 
 def write_file_grouped_theta_partials(
@@ -1102,8 +1083,8 @@ def write_file_grouped_theta_partials(
     scan_source=None,
 ) -> str | None:
     """Per-(file, group, column) theta sketches in ONE distributed
-    pass — the mergeable substrate of the grouped-NDV family (r13,
-    mirroring ``quantiles.write_file_quantile_partials``).  Reads RAW
+    pass — the mergeable substrate of the grouped-NDV family (r13),
+    written through ``statsblobs.write_file_partials``.  Reads RAW
     file contents (no delete application — the blob describes the
     immutable file, so it stays valid at every snapshot) tagged by
     ``__file``; per (file, group) only one serialized sketch per
@@ -1114,142 +1095,66 @@ def write_file_grouped_theta_partials(
     refresh — and the entry APPENDS (later entries win per file);
     without it the snapshot's partials entry is replaced.  Returns
     the Puffin path or None when nothing scans."""
-    import base64 as _b64
-    import json as _json
-    import uuid as _uuid
-
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-    from pyspark.sql import types as T
-
-    from daskberg_spark.iceberg.conversions import schema_to_struct
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.scan import _norm_scan_path, _read_file_groups
-    from daskberg_spark.iceberg.statsblobs import stats_entry
+    from daskberg_spark.iceberg.groupkeys import gate_group_key, group_key_type
+    from daskberg_spark.iceberg.statsblobs import write_file_partials
 
     if not writer.snapshots:
         raise ValueError("table has no snapshots")
-    from daskberg_spark.iceberg.groupkeys import (
-        apply_group_keys,
-        gate_group_key,
-        group_key_base,
-        group_key_type,
-    )
-
     types = dict(writer.types)
     for g in group_cols:
         gate_group_key(g, types, _THETA_GROUP_KEY_TYPES, "grouped NDV keys")
     for c in columns:
         if c not in types or not sketchable(types[c]):
             raise ValueError(f"column {c!r} missing or not sketchable")
-    if not columns:
-        return None
-    snapshot_id = writer.head_snapshot["snapshot-id"]
-    t = IcebergTable(writer.path)
-    live = t.plan_files(None)
-    if file_subset is None:
-        target = {_norm_scan_path(f["file_path"]) for f in live}
-    else:
-        target = {_norm_scan_path(p) for p in file_subset}
-    scan_files = [
-        f for f in live if _norm_scan_path(f["file_path"]) in target
-    ]
-    if not scan_files:
-        return None
-    wanted = {group_key_base(g, types) for g in group_cols} | set(columns)
-    # one-scan maintenance (r14): a SharedStatsScan serves the already-
-    # read cached frame; None (subset not covered) falls back to a
-    # direct read — correctness never depends on the cache
-    df = (
-        scan_source.raw_frame(scan_files, wanted)
-        if scan_source is not None
-        else None
-    )
-    if df is None:
-        scan_struct = T.StructType(
-            [
-                f
-                for f in schema_to_struct(t.schema).fields
-                if f.name in wanted
-            ]
-        )
-        df = _read_file_groups(
-            t,
-            spark,
-            scan_files,
-            scan_struct,
-            tag_position=False,
-            tag_file=True,
-        )
-    df = apply_group_keys(df, group_cols, types)
-    # "__file" rides as one more group column: per-(file, group, col)
-    # partials fall out of the existing bounded distributed builder.
-    # The max_groups gate rides INSIDE the same pass (r13 advisor: a
-    # separate distinct().count() read every refreshed file twice) —
-    # cap_cols excludes the __file tag so many files never trip it.
-    sketches = build_grouped_column_sketches(
-        df, ["__file"] + list(group_cols), [(c, types[c]) for c in columns],
-        lg_k,
-        max_groups=max_groups if group_cols else None,
-        cap_cols=list(group_cols) or None,
-        group_types=[None] + [group_key_type(g, types) for g in group_cols],
-    )
-    per_col: dict[str, dict[str, dict[str, str]]] = {c: {} for c in columns}
-    for f in scan_files:  # zero-row files record empty coverage too
-        p = _norm_scan_path(f["file_path"])
-        for c in columns:
-            per_col[c][p] = {}
-    for key, by_col in sketches.items():
-        p, gkey = key[0], _file_key(key[1:])
-        for c in columns:
-            sk = by_col.get(c)
-            if sk is not None:
-                per_col[c][p][gkey] = _b64.b64encode(sk.serialize()).decode()
-    blobs = []
-    seq = writer._last_sequence_number
-    for c in columns:
-        payload = {
-            "group_cols": list(group_cols),
-            "lg_k": lg_k,
-            "files": per_col[c],
-        }
-        blobs.append(
-            {
-                "type": GROUPED_THETA_FILE_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": _json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"theta-files-grouped-{snapshot_id}-"
-        f"{_uuid.uuid5(_uuid.NAMESPACE_URL, f'fgtheta{snapshot_id}{sorted(target)}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
-    )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
 
-    with STATS_COMMIT_LOCK:
-        keep = writer.statistics
-        if file_subset is None:
-            keep = [
-                e
-                for e in keep
-                if not (
-                    e["snapshot-id"] == snapshot_id
-                    and any(
-                        b.get("type") == GROUPED_THETA_FILE_BLOB_TYPE
-                        for b in e.get("blob-metadata", [])
-                    )
-                )
-            ]
-        writer.statistics = keep + [stats_entry(path, metas, snapshot_id)]
-        writer.version += 1
-        writer._write_metadata()
-    return path
+    def kernel(df, _scan_files):
+        # "__file" rides as one more group column: per-(file, group,
+        # col) partials fall out of the existing bounded distributed
+        # builder.  The max_groups gate rides INSIDE the same pass (r13
+        # advisor: a separate distinct().count() read every refreshed
+        # file twice) — cap_cols excludes the __file tag so many files
+        # never trip it.
+        sketches = build_grouped_column_sketches(
+            df,
+            ["__file"] + list(group_cols),
+            [(c, types[c]) for c in columns],
+            lg_k,
+            max_groups=max_groups if group_cols else None,
+            cap_cols=list(group_cols) or None,
+            group_types=[None] + [group_key_type(g, types) for g in group_cols],
+        )
+        out: dict[str, dict] = {c: {} for c in columns}
+        for key, by_col in sketches.items():
+            p, gkey = key[0], _file_key(key[1:])
+            for c in columns:
+                sk = by_col.get(c)
+                if sk is not None:
+                    out[c].setdefault(p, {})[gkey] = _b64_sketch(sk)
+        return out
+
+    return write_file_partials(
+        writer,
+        spark,
+        GROUPED_THETA_FILE_BLOB_TYPE,
+        "theta-files-grouped",
+        "fgtheta",
+        columns,
+        group_cols,
+        file_subset,
+        empty={},
+        extras=lambda c: {"lg_k": lg_k},
+        kernel=kernel,
+        scan_source=scan_source,
+    )
+
+
+def _file_key(key: tuple) -> str:
+    """The per-file payload's group key encoding: a JSON array string
+    (round-trips int/str/bool/None exactly — the same gate the grouped
+    writer applies to group-column types)."""
+    import json as _json
+
+    return _json.dumps(list(key), sort_keys=True)
 
 
 def write_file_theta_partials(
@@ -1268,11 +1173,7 @@ def write_file_theta_partials(
     partials path: EXACT at O(new + dirty files) under any commit
     shape (r13)."""
     if columns is None:
-        columns = sorted(
-            c
-            for c, t in dict(writer.types).items()
-            if isinstance(t, str) and sketchable(t)
-        )
+        columns = _sketchable_columns(writer)
     return write_file_grouped_theta_partials(
         writer,
         spark,
@@ -1281,6 +1182,49 @@ def write_file_theta_partials(
         file_subset=file_subset,
         lg_k=lg_k,
         scan_source=scan_source,
+    )
+
+
+def _sketchable_columns(writer) -> list[str]:
+    return sorted(
+        c
+        for c, t in dict(writer.types).items()
+        if isinstance(t, str) and sketchable(t)
+    )
+
+
+def _ungrouped_partials_lg_k(writer, t) -> int | None:
+    """The global-NDV partials opt-in: the lg_k the LATEST ungrouped
+    per-file partials were built with, None when none exist."""
+    from daskberg_spark.iceberg.statsblobs import blob_payloads
+
+    lg_k = None
+    for _e, _b, payload in blob_payloads(
+        t, writer.statistics, GROUPED_THETA_FILE_BLOB_TYPE
+    ):
+        if payload.get("group_cols") == []:
+            lg_k = int(payload.get("lg_k") or DEFAULT_LG_K)
+    return lg_k
+
+
+def _consolidate_theta_partials(writer, t, group_cols, columns, lg_k) -> bool:
+    """Repack accumulated per-file theta sketch entries into ONE
+    live-files-only entry covering EVERY (grouping, column) pair —
+    grouped and ungrouped flavors share the blob type (the caller's
+    final metadata write persists it)."""
+    from daskberg_spark.iceberg.statsblobs import (
+        consolidate_partials,
+        partial_pairs,
+    )
+
+    return consolidate_partials(
+        writer,
+        t,
+        GROUPED_THETA_FILE_BLOB_TYPE,
+        "theta-files-grouped",
+        lambda: partial_pairs(writer, t, GROUPED_THETA_FILE_BLOB_TYPE),
+        lambda c: {"lg_k": lg_k},
+        salt=str(sorted(columns)) + str(group_cols),
     )
 
 
@@ -1303,54 +1247,25 @@ def refresh_column_sketches_from_partials(
     silently narrow the exact-below-k guarantee the opt-in paid for
     (mirrors ``refresh_grouped_theta_statistics``; r13 advisor).
     Returns (sketches by column, report)."""
-    import base64 as _b64
-    import json as _json
-
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import read_blob
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
-    from daskberg_spark.iceberg.scan import to_df
+    from daskberg_spark.iceberg.statsblobs import catch_up_partials, dirty_read
 
     t = IcebergTable(writer.path)
-    # opt-in check + stored lg_k in one walk: the statistics list is
-    # append-ordered, so the last ungrouped partials payload wins
-    stored_lg_k = None
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_THETA_FILE_BLOB_TYPE:
-                continue
-            try:
-                payload = _json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            if payload.get("group_cols") == []:
-                stored_lg_k = int(payload.get("lg_k") or DEFAULT_LG_K)
+    stored_lg_k = _ungrouped_partials_lg_k(writer, t)
     if stored_lg_k is None:
         return None
     if lg_k is None:
         lg_k = stored_lg_k
     types = dict(writer.types)
-    columns = sorted(
-        c
-        for c, ty in types.items()
-        if isinstance(ty, str) and sketchable(ty)
-    )
+    columns = _sketchable_columns(writer)
     if not columns:
         return None
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
-    maps = {
-        c: (grouped_theta_filesketches(t, c, []) or {}) for c in columns
-    }
-    missing = set()
-    for c in columns:
-        missing |= clean_norm - set(maps[c])
-    if missing:
-        write_file_grouped_theta_partials(
+    cu = catch_up_partials(
+        writer,
+        t,
+        columns,
+        lambda t_, c: grouped_theta_filesketches(t_, c, []),
+        lambda missing: write_file_grouped_theta_partials(
             writer,
             spark,
             [],
@@ -1358,39 +1273,24 @@ def refresh_column_sketches_from_partials(
             file_subset=missing,
             lg_k=lg_k,
             scan_source=scan_source,
+        ),
+    )
+    _consolidate_theta_partials(writer, cu.t, [], columns, lg_k)
+    empty_key = _file_key(())
+    merged = {
+        c: _union_all(
+            [
+                _from_b64(b64, lg_k)
+                for p in sorted(cu.clean)
+                if (b64 := (cu.maps[c].get(p) or {}).get(empty_key))
+                is not None
+            ],
+            lg_k,
         )
-        t = IcebergTable(writer.path)
-        maps = {
-            c: (grouped_theta_filesketches(t, c, []) or {})
-            for c in columns
-        }
-    _consolidate_file_grouped_theta(writer, t, [], columns, lg_k)
-    empty_key = _json.dumps([])
-    merged: dict[str, ThetaSketch] = {}
-    for c in columns:
-        parts = []
-        for p in clean_norm:
-            b64 = (maps[c].get(p) or {}).get(empty_key)
-            if b64 is not None:
-                parts.append(
-                    ThetaSketch.deserialize(_b64.b64decode(b64), lg_k)
-                )
-        if parts:
-            merged[c] = parts[0].union(*parts[1:]) if len(parts) > 1 else parts[0]
-        else:
-            merged[c] = ThetaSketch(
-                LONG_MAX, np.empty(0, dtype=np.uint64), lg_k
-            )
-    if dirty:
-        df = (
-            scan_source.dirty_frame(sorted(dirty), columns)
-            if scan_source is not None
-            else None
-        )
-        if df is None:
-            df = to_df(
-                t, spark, columns=list(columns), file_subset=sorted(dirty)
-            )
+        for c in columns
+    }
+    if cu.dirty:
+        df = dirty_read(cu.t, spark, cu.dirty, columns, scan_source)
         fresh = build_column_sketches(
             df, [(c, types[c]) for c in columns], lg_k
         )
@@ -1398,9 +1298,9 @@ def refresh_column_sketches_from_partials(
             merged[c] = merged[c].union(fresh[c])
     report = {
         "columns": list(columns),
-        "files_total": len(files),
-        "partials_computed": len(missing),
-        "dirty_files": len(dirty),
+        "files_total": len(cu.files),
+        "partials_computed": len(cu.missing),
+        "dirty_files": len(cu.dirty),
     }
     return merged, report
 
@@ -1409,133 +1309,32 @@ def grouped_theta_filesketches(
     table, name: str, group_cols: list[str]
 ) -> dict[str, dict[str, str]] | None:
     """Merged per-file grouped sketch partials for a column across
-    every statistics entry (raw-file blobs are snapshot-independent;
-    later entries win per file): ``{normalized_path: {json_group_key:
-    b64_sketch}}``, or None when no blob covers the column with
-    EXACTLY these group columns.  Unreadable blobs are skipped — a
-    missing entry only ever means "re-scan that file"."""
-    import json as _json
+    every statistics entry (later entries win per file):
+    ``{normalized_path: {json_group_key: b64_sketch}}``, or None when
+    no blob covers the column with EXACTLY these group columns."""
+    from daskberg_spark.iceberg.statsblobs import file_partials
 
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    fid = table.fields[name].field_id
-    merged: dict[str, dict[str, str]] = {}
-    found = False
-    for e in table.metadata.get("statistics", []):
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_THETA_FILE_BLOB_TYPE or b.get(
-                "fields"
-            ) != [fid]:
-                continue
-            try:
-                payload = _json.loads(
-                    read_blob(table._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            if payload.get("group_cols") != list(group_cols):
-                continue
-            found = True
-            for p, groups in (payload.get("files") or {}).items():
-                merged[p] = groups
-    return merged if found else None
-
-
-def _theta_partial_pairs(writer, t) -> list[tuple[tuple, str]]:
-    """Every (group_cols, column) combination any per-file theta
-    partials entry covers — the consolidation must repack ALL of them
-    (grouped and ungrouped flavors coexist on one table), or repacking
-    one flavor would silently drop the other's coverage."""
-    import json as _json
-
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    fid_to_name = {i.field_id: n for n, i in t.fields.items()}
-    pairs: list[tuple[tuple, str]] = []
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_THETA_FILE_BLOB_TYPE:
-                continue
-            col = fid_to_name.get((b.get("fields") or [None])[0])
-            if col is None:
-                continue
-            try:
-                payload = _json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            gc = payload.get("group_cols")
-            if gc is None:
-                continue
-            key = (tuple(gc), col)
-            if key not in pairs:
-                pairs.append(key)
-    return pairs
-
-
-def _consolidate_file_grouped_theta(
-    writer, t, group_cols, columns, lg_k: int = DEFAULT_LG_K
-) -> bool:
-    """Repack accumulated per-file theta sketch entries into ONE
-    live-files-only entry covering EVERY (grouping, column) pair any
-    existing entry indexes — not just the caller's — so consolidating
-    one flavor never drops another's coverage (shared consolidation
-    pass; the caller's final metadata write persists it)."""
-    import json as _json
-
-    from daskberg_spark.iceberg.statsblobs import consolidate_entries
-
-    def build(snapshot_id: int, seq: int) -> list[dict]:
-        from daskberg_spark.iceberg.scan import _norm_scan_path
-
-        live = {_norm_scan_path(f["file_path"]) for f in t.plan_files(None)}
-        blobs = []
-        for gc, c in _theta_partial_pairs(writer, t):
-            if c not in writer.ids:
-                continue
-            m = grouped_theta_filesketches(t, c, list(gc)) or {}
-            payload = {
-                "group_cols": list(gc),
-                "lg_k": lg_k,
-                "files": {p: g for p, g in m.items() if p in live},
-            }
-            blobs.append(
-                {
-                    "type": GROUPED_THETA_FILE_BLOB_TYPE,
-                    "fields": [writer.ids[c]],
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {"column": c, "encoding": "json"},
-                    "data": _json.dumps(payload, sort_keys=True).encode(),
-                }
-            )
-        return blobs
-
-    return consolidate_entries(
-        writer,
-        (GROUPED_THETA_FILE_BLOB_TYPE,),
-        build,
-        "theta-files-grouped",
-        salt=str(sorted(columns)) + str(group_cols),
-        commit=False,
+    return file_partials(
+        table, GROUPED_THETA_FILE_BLOB_TYPE, name, group_cols
     )
 
 
-def grouped_theta_covered_configs(writer, t) -> set[tuple]:
-    """The groupings whose OWN statistics entry already covers the
-    head snapshot (r15) — the per-config form of the old per-blob-TYPE
-    head gate, which let one manually-refreshed grouping silently
-    starve every other grouping until the next append."""
-    head_id = writer.head_snapshot["snapshot-id"]
-    covered: set[tuple] = set()
-    for e in writer.statistics:
-        if e["snapshot-id"] != head_id:
-            continue
-        gc = _entry_statistics_group_cols(t, e, GROUPED_THETA_BLOB_TYPE)
-        if isinstance(gc, list):
-            covered.add(tuple(gc))
-    return covered
+def _theta_runnable(types, gc: tuple, cfg: dict):
+    """(group_cols, value columns, lg_k) of a registered grouping that
+    can still refresh — its value columns sketchable and its keys of a
+    round-trippable type — else None."""
+    from daskberg_spark.iceberg.groupkeys import group_key_type
+
+    def _key_ok(g: str) -> bool:
+        try:
+            return group_key_type(g, types) in _THETA_GROUP_KEY_TYPES
+        except ValueError:
+            return False
+
+    cols = [c for c in cfg["columns"] if c in types and sketchable(types[c])]
+    if not (gc and cols and all(_key_ok(g) for g in gc)):
+        return None
+    return list(gc), cols, int(cfg["payload"].get("lg_k") or DEFAULT_LG_K)
 
 
 def refresh_grouped_theta_statistics(
@@ -1560,139 +1359,31 @@ def refresh_grouped_theta_statistics(
     files' partials re-derive the same hashes, and union is
     idempotent.
 
-    Opt-in shape: the latest grouped blob defines (group_cols, value
-    columns, lg_k); None on tables that never wrote one.  The first
-    call bootstraps partials at one-full-pass cost; every later call
-    is incremental.  Returns ``{"path", "columns", "files_total",
-    "partials_computed", "dirty_files", "groups"}``."""
-    import base64 as _b64
-    import json as _json
-    import uuid as _uuid
-
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
-
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import read_blob, write_puffin
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
-    from daskberg_spark.iceberg.scan import to_df
-    from daskberg_spark.iceberg.statsblobs import stats_entry
-
-    t = IcebergTable(writer.path)
-    from daskberg_spark.iceberg.groupkeys import (
-        apply_group_keys,
-        group_key_base,
-        group_key_type,
-    )
+    EVERY grouping any blob ever defined refreshes (multi-config,
+    r14) — drop one deliberately with
+    ``drop_grouped_theta_statistics``; each takes (value columns,
+    lg_k) from its latest blob.  ``skip_head_covered`` (maintain())
+    skips a grouping whose own entry already covers the head (r15).
+    The first call bootstraps partials at one-full-pass cost; every
+    later call is incremental.  Returns ``{"path", "columns",
+    "files_total", "partials_computed", "dirty_files", "groups"}``
+    (merged with a ``"configs"`` list over several groupings), or
+    None on tables that never wrote a grouped blob."""
+    from daskberg_spark.iceberg.statsblobs import refresh_configs
 
     types = dict(writer.types)
-
-    def _key_ok(g: str) -> bool:
-        try:
-            return group_key_type(g, types) in _THETA_GROUP_KEY_TYPES
-        except ValueError:
-            return False
-
-    # EVERY grouping any blob ever defined refreshes (multi-config,
-    # r14): a pipeline keeps "NDV by day" AND "NDV by source" — the
-    # single-config walk maintained only the most recent grouping and
-    # silently stranded the rest.  Drop a grouping deliberately with
-    # ``drop_grouped_theta_statistics``.
-    configs = _grouped_theta_configs(writer, t)
-    # maintain() gates PER CONFIG (r15): a grouping whose own entry
-    # already covers the head (e.g. a manual write after the append)
-    # is skipped without starving the others
-    covered = (
-        grouped_theta_covered_configs(writer, t)
-        if skip_head_covered
-        else set()
+    return refresh_configs(
+        writer,
+        GROUPED_THETA_BLOB_TYPE,
+        skip_head_covered,
+        lambda gc, cfg: _theta_runnable(types, gc, cfg),
+        lambda gc, cols, lg_k: _refresh_grouped_theta_config(
+            writer, spark, gc, cols, lg_k, max_groups, scan_source
+        ),
+        lambda reports: {
+            "columns": sorted({c for r in reports for c in r["columns"]})
+        },
     )
-    runnable: list[tuple[list, list, int]] = []
-    for gc, cfg in configs.items():
-        if gc in covered:
-            continue
-        cols = [
-            c for c in cfg["columns"] if c in types and sketchable(types[c])
-        ]
-        if gc and cols and all(_key_ok(g) for g in gc):
-            runnable.append((list(gc), cols, cfg["lg_k"]))
-    if not runnable:
-        return None
-    reports = []
-    for group_cols, columns, lg_k in runnable:
-        reports.append(
-            _refresh_grouped_theta_config(
-                writer,
-                spark,
-                group_cols,
-                columns,
-                lg_k,
-                max_groups,
-                scan_source,
-            )
-        )
-    if len(reports) == 1:
-        return reports[0]
-    return {
-        "configs": reports,
-        "columns": sorted({c for r in reports for c in r["columns"]}),
-        "files_total": reports[0]["files_total"],
-        "partials_computed": sum(r["partials_computed"] for r in reports),
-        "dirty_files": max(r["dirty_files"] for r in reports),
-        "groups": max(r["groups"] for r in reports),
-    }
-
-
-def _grouped_theta_configs(writer, t) -> dict[tuple, dict]:
-    """Every grouping any ``daskberg-theta-grouped-v1`` blob defines,
-    with its value columns and lg_k (later entries win per config) —
-    the multi-config registry the refresh iterates (r14)."""
-    import json as _json
-
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    fid_to_name = {i.field_id: n for n, i in t.fields.items()}
-    configs: dict[tuple, dict] = {}
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_THETA_BLOB_TYPE:
-                continue
-            col = fid_to_name.get((b.get("fields") or [None])[0])
-            if col is None:
-                continue
-            try:
-                payload = _json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            gc = tuple(payload.get("group_cols") or ())
-            cfg = configs.setdefault(gc, {"columns": [], "lg_k": DEFAULT_LG_K})
-            cfg["lg_k"] = int(payload.get("lg_k") or DEFAULT_LG_K)
-            if col not in cfg["columns"]:
-                cfg["columns"].append(col)
-    return configs
-
-
-def _entry_statistics_group_cols(t, e, blob_type):
-    """The ``group_cols`` an entry's first matching blob carries;
-    ``"__none__"`` when the entry has no such blob, None when the blob
-    is unreadable (the publish-time replacement then drops it — an
-    unreadable blob can't serve reads anyway)."""
-    import json as _json
-
-    from daskberg_spark.iceberg.puffin import read_blob
-
-    for b in e.get("blob-metadata", []):
-        if b.get("type") != blob_type:
-            continue
-        try:
-            payload = _json.loads(
-                read_blob(t._relocate(e["statistics-path"]), b)
-            )
-        except (ValueError, OSError):
-            return None
-        return payload.get("group_cols")
-    return "__none__"
 
 
 def _refresh_grouped_theta_config(
@@ -1704,11 +1395,8 @@ def _refresh_grouped_theta_config(
     max_groups: int,
     scan_source,
 ) -> dict[str, Any]:
-    """One grouping's incremental refresh — the r13 body, factored so
-    the multi-config loop runs it per grouping."""
-    import base64 as _b64
+    """One grouping's incremental refresh."""
     import json as _json
-    import uuid as _uuid
 
     from daskberg_spark.iceberg.groupkeys import (
         apply_group_keys,
@@ -1716,27 +1404,16 @@ def _refresh_grouped_theta_config(
         group_key_type,
     )
     from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.puffin import write_puffin
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
-    from daskberg_spark.iceberg.scan import to_df
-    from daskberg_spark.iceberg.statsblobs import stats_entry
+    from daskberg_spark.iceberg.statsblobs import catch_up_partials, dirty_read
 
-    t = IcebergTable(writer.path)
     types = dict(writer.types)
     snapshot_id = writer.head_snapshot["snapshot-id"]
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
-    maps = {
-        c: (grouped_theta_filesketches(t, c, group_cols) or {})
-        for c in columns
-    }
-    missing = set()
-    for c in columns:
-        missing |= clean_norm - set(maps[c])
-    if missing:
-        write_file_grouped_theta_partials(
+    cu = catch_up_partials(
+        writer,
+        IcebergTable(writer.path),
+        columns,
+        lambda t_, c: grouped_theta_filesketches(t_, c, group_cols),
+        lambda missing: write_file_grouped_theta_partials(
             writer,
             spark,
             group_cols,
@@ -1745,35 +1422,23 @@ def _refresh_grouped_theta_config(
             lg_k=lg_k,
             max_groups=max_groups,
             scan_source=scan_source,
-        )
-        t = IcebergTable(writer.path)
-        maps = {
-            c: (grouped_theta_filesketches(t, c, group_cols) or {})
-            for c in columns
-        }
-    _consolidate_file_grouped_theta(writer, t, group_cols, columns, lg_k)
+        ),
+    )
+    _consolidate_theta_partials(writer, cu.t, group_cols, columns, lg_k)
     # union the clean partials per (group, column)
     merged: dict[str, dict[tuple, ThetaSketch]] = {c: {} for c in columns}
     for c in columns:
-        for p in clean_norm:
-            for gkey, b64 in (maps[c].get(p) or {}).items():
+        for p in sorted(cu.clean):
+            for gkey, b64 in (cu.maps[c].get(p) or {}).items():
                 key = tuple(_json.loads(gkey))
-                sk = ThetaSketch.deserialize(_b64.b64decode(b64), lg_k)
+                sk = _from_b64(b64, lg_k)
                 prev = merged[c].get(key)
                 merged[c][key] = sk if prev is None else prev.union(sk)
-    if dirty:
+    if cu.dirty:
         dirty_cols = sorted(
             {group_key_base(g, types) for g in group_cols} | set(columns)
         )
-        df = (
-            scan_source.dirty_frame(sorted(dirty), dirty_cols)
-            if scan_source is not None
-            else None
-        )
-        if df is None:
-            df = to_df(
-                t, spark, columns=dirty_cols, file_subset=sorted(dirty)
-            )
+        df = dirty_read(cu.t, spark, cu.dirty, dirty_cols, scan_source)
         df = apply_group_keys(df, list(group_cols), types)
         fresh = build_grouped_column_sketches(
             df,
@@ -1795,73 +1460,20 @@ def _refresh_grouped_theta_config(
             f"{n_groups} merged {group_cols} tuples exceed max_groups="
             f"{max_groups} — grouped sketches must stay metadata-sized"
         )
-    blobs = []
-    seq = writer._last_sequence_number
-    for c in columns:
-        groups = []
-        for key in sorted(
-            merged[c], key=lambda k: tuple((v is None, v) for v in k)
-        ):
-            # ndv-0 groups (all-NULL values) stay in, matching the
-            # fresh builder; fully-deleted groups never reach `merged`
-            # (their files are dead or their rows fail the dirty scan)
-            sk = merged[c][key]
-            groups.append(
-                {
-                    "key": list(key),
-                    "ndv": int(round(sk.estimate())),
-                    "exact": bool(sk.is_exact),
-                    "sketch": _b64.b64encode(sk.serialize()).decode(),
-                }
-            )
-        payload = {
-            "group_cols": list(group_cols),
-            "lg_k": lg_k,
-            "groups": groups,
-            "merged": True,
-        }
-        blobs.append(
-            {
-                "type": GROUPED_THETA_BLOB_TYPE,
-                "fields": [writer.ids[c]],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq,
-                "properties": {"column": c, "encoding": "json"},
-                "data": _json.dumps(payload, sort_keys=True).encode(),
-            }
-        )
-    name = (
-        f"theta-grouped-{snapshot_id}-"
-        f"{_uuid.uuid5(_uuid.NAMESPACE_URL, f'mgtheta{snapshot_id}{sorted(columns)}{group_cols}').hex[:8]}"
-        ".puffin"
+    # ndv-0 groups (all-NULL values) stay in, matching the fresh
+    # builder; fully-deleted groups never reach `merged` (their files
+    # are dead or their rows fail the dirty scan)
+    blobs = _grouped_blobs(writer, merged, group_cols, lg_k, snapshot_id, True)
+    path = _publish_grouped(
+        writer, cu.t, "mgtheta", snapshot_id, columns, group_cols, blobs
     )
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    # replacement is CONFIG-scoped (r14): a same-snapshot entry keyed
-    # on a DIFFERENT grouping survives — multiple groupings coexist
-    def _keep(e) -> bool:
-        if e["snapshot-id"] != snapshot_id:
-            return True
-        gc = _entry_statistics_group_cols(t, e, GROUPED_THETA_BLOB_TYPE)
-        if gc == "__none__":
-            return True
-        return gc is not None and gc != list(group_cols)
-
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
-
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e for e in writer.statistics if _keep(e)
-        ] + [stats_entry(path, metas, snapshot_id)]
-        writer.version += 1
-        writer._write_metadata()
     return {
         "path": path,
         "group_cols": list(group_cols),
         "columns": list(columns),
-        "files_total": len(files),
-        "partials_computed": len(missing),
-        "dirty_files": len(dirty),
+        "files_total": len(cu.files),
+        "partials_computed": len(cu.missing),
+        "dirty_files": len(cu.dirty),
         "groups": n_groups,
     }
 
@@ -1869,99 +1481,54 @@ def _refresh_grouped_theta_config(
 def plan_global_ndv_refresh_scan(writer, t):
     """Metadata-only scan plan for the NEXT global-NDV partials
     refresh: ``(raw_norm_paths, raw_columns, dirty_columns)`` — the
-    theta half of ``maintain()``'s one-scan statistics pass (r14,
-    ``onepass.plan_shared_stats_scan``).  Empty sets when the table
-    never opted in or nothing needs scanning.  Planning is advisory:
-    a stale plan only changes shared-cache membership — the refresh
-    falls back to its own direct read for anything the shared frame
-    can't serve, never to a wrong answer."""
-    import json as _json
+    theta row of the ``statsblobs.stats_families`` table that
+    ``onepass.plan_shared_stats_scan`` composes.  Empty sets when the
+    table never opted in or nothing needs scanning.  Planning is
+    advisory: a stale plan only changes shared-cache membership — the
+    refresh falls back to its own direct read for anything the shared
+    frame can't serve, never to a wrong answer."""
+    from daskberg_spark.iceberg.statsblobs import plan_missing
 
-    from daskberg_spark.iceberg.puffin import read_blob
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
-
-    opted_in = False
-    for e in writer.statistics:
-        for b in e.get("blob-metadata", []):
-            if b.get("type") != GROUPED_THETA_FILE_BLOB_TYPE:
-                continue
-            try:
-                payload = _json.loads(
-                    read_blob(t._relocate(e["statistics-path"]), b)
-                )
-            except (ValueError, OSError):
-                continue
-            if payload.get("group_cols") == []:
-                opted_in = True
-    if not opted_in:
+    columns = _sketchable_columns(writer)
+    if _ungrouped_partials_lg_k(writer, t) is None or not columns:
         return set(), set(), set()
-    columns = sorted(
-        c
-        for c, ty in dict(writer.types).items()
-        if isinstance(ty, str) and sketchable(ty)
+    return plan_missing(
+        t, columns, lambda t_, c: grouped_theta_filesketches(t_, c, [])
     )
-    if not columns:
-        return set(), set(), set()
-    files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
-    missing: set[str] = set()
-    for c in columns:
-        covered = set(grouped_theta_filesketches(t, c, []) or {})
-        missing |= clean_norm - covered
-    return missing, set(columns), (set(columns) if dirty else set())
 
 
 def plan_grouped_ndv_refresh_scan(writer, t):
     """Metadata-only scan plan for the NEXT grouped-NDV refresh:
-    ``(raw_norm_paths, raw_columns, dirty_columns)`` (r14 one-scan
-    maintenance; see ``plan_global_ndv_refresh_scan``).  Raw and dirty
-    columns include the group columns — the partial and dirty passes
-    both group by them."""
-    import json as _json
-
-    from daskberg_spark.iceberg.puffin import read_blob
-    from daskberg_spark.iceberg.quantiles import _dirty_split, _norm
-
-    from daskberg_spark.iceberg.groupkeys import (
-        group_key_base,
-        group_key_type,
+    ``(raw_norm_paths, raw_columns, dirty_columns)`` over exactly the
+    groupings the refresh would run (head-covered ones skipped).  Raw
+    and dirty columns include the group columns — the partial and
+    dirty passes both group by them."""
+    from daskberg_spark.iceberg.groupkeys import group_key_base
+    from daskberg_spark.iceberg.statsblobs import (
+        _dirty_split,
+        clean_paths,
+        runnable_configs,
+        uncovered,
     )
 
     types = dict(writer.types)
-
-    def _key_ok(g: str) -> bool:
-        try:
-            return group_key_type(g, types) in _THETA_GROUP_KEY_TYPES
-        except ValueError:
-            return False
-
+    runnable = runnable_configs(
+        writer,
+        t,
+        GROUPED_THETA_BLOB_TYPE,
+        lambda gc, cfg: _theta_runnable(types, gc, cfg),
+    )
+    if not runnable:
+        return set(), set(), set()
     files, dirty = _dirty_split(t)
-    clean_norm = {
-        _norm(f["file_path"]) for f in files if f["file_path"] not in dirty
-    }
+    clean = clean_paths(files, dirty)
     missing: set[str] = set()
     cols: set[str] = set()
-    any_cfg = False
-    covered = grouped_theta_covered_configs(writer, t)
-    for gc, cfg in _grouped_theta_configs(writer, t).items():
-        if gc in covered:
-            continue  # this grouping's entry already covers the head
-        columns = [
-            c for c in cfg["columns"] if c in types and sketchable(types[c])
-        ]
-        if not gc or not columns or not all(_key_ok(g) for g in gc):
-            continue
-        any_cfg = True
-        for c in columns:
-            covered = set(
-                grouped_theta_filesketches(t, c, list(gc)) or {}
-            )
-            missing |= clean_norm - covered
+    for gc, columns, _lg_k in runnable:
+        missing |= uncovered(
+            clean, [grouped_theta_filesketches(t, c, gc) or {} for c in columns]
+        )
         cols |= {group_key_base(g, types) for g in gc} | set(columns)
-    if not any_cfg:
-        return set(), set(), set()
     return missing, cols, (cols if dirty else set())
 
 
@@ -1977,37 +1544,8 @@ def drop_grouped_theta_statistics(
     (r15): a transient IO error must not delete a healthy DIFFERENT
     grouping's statistics; pass ``drop_unreadable=True`` to sweep
     genuinely corrupt entries deliberately."""
-    from daskberg_spark.iceberg.metadata import IcebergTable
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
+    from daskberg_spark.iceberg.statsblobs import drop_grouped
 
-    t = IcebergTable(writer.path)
-
-    # classify OUTSIDE the lock — _entry_statistics_group_cols reads
-    # puffin blobs (disk IO), and holding the process-global commit
-    # lock across that blocks every other table's millisecond commits.
-    # The keep list is still rebuilt UNDER the lock from the live
-    # statistics (full replacement must not lose a concurrent family
-    # commit); entries appended concurrently, unseen by the pre-pass,
-    # classify there (normally zero).
-    def _is_dropped(e: dict) -> bool:
-        gc = _entry_statistics_group_cols(t, e, GROUPED_THETA_BLOB_TYPE)
-        return gc != "__none__" and (
-            (gc is None and drop_unreadable) or gc == list(group_cols)
-        )
-
-    pre = {id(e): _is_dropped(e) for e in list(writer.statistics)}
-    with STATS_COMMIT_LOCK:
-        keep, dropped = [], 0
-        for e in writer.statistics:
-            hit = pre.get(id(e))
-            if hit is None:
-                hit = _is_dropped(e)
-            if hit:
-                dropped += 1
-                continue
-            keep.append(e)
-        if dropped:
-            writer.statistics = keep
-            writer.version += 1
-            writer._write_metadata()
-    return dropped
+    return drop_grouped(
+        writer, GROUPED_THETA_BLOB_TYPE, group_cols, drop_unreadable
+    )

@@ -3478,7 +3478,7 @@ def _publish_statistics(
     sketches: dict[str, Any],
     ndv: dict[str, int],
 ) -> str:
-    from daskberg_spark.iceberg.puffin import write_puffin
+    from daskberg_spark.iceberg.statsblobs import publish_blobs
     from daskberg_spark.iceberg.theta import THETA_BLOB_TYPE
 
     seq = writer._last_sequence_number
@@ -3493,36 +3493,19 @@ def _publish_statistics(
         }
         for c in sketches
     ]
-    name = f"stats-{snapshot_id}-{uuid.uuid5(uuid.NAMESPACE_URL, f'stats{snapshot_id}').hex[:8]}.puffin"
-    path = f"{writer.path}/metadata/{name}"
-    metas = write_puffin(path, blobs)
-    size = os.path.getsize(path)
-    entry = {
-        "snapshot-id": snapshot_id,
-        "statistics-path": path,
-        "file-size-in-bytes": size,
-        "file-footer-size-in-bytes": size - 4 - sum(m["length"] for m in metas),
-        "blob-metadata": metas,
-    }
-    from daskberg_spark.iceberg.statsblobs import STATS_COMMIT_LOCK
+    def replaces(e: dict[str, Any]) -> bool:
+        # engine-extension statistics files (bloom/token-bloom indexes,
+        # quantile histograms) coexist with the NDV entry on one
+        # snapshot — replacing them here would silently drop them every
+        # time NDV stats re-run
+        return e["snapshot-id"] == snapshot_id and not any(
+            str(b.get("type", "")).startswith("daskberg-")
+            for b in e.get("blob-metadata", [])
+        )
 
-    with STATS_COMMIT_LOCK:
-        writer.statistics = [
-            e
-            for e in writer.statistics
-            if e["snapshot-id"] != snapshot_id
-            # engine-extension statistics files (bloom/token-bloom
-            # indexes, quantile histograms) coexist with the NDV entry
-            # on one snapshot — replacing them here would silently drop
-            # them every time NDV stats re-run
-            or any(
-                str(b.get("type", "")).startswith("daskberg-")
-                for b in e.get("blob-metadata", [])
-            )
-        ] + [entry]
-        writer.version += 1
-        writer._write_metadata()
-    return path
+    return publish_blobs(
+        writer, "stats", snapshot_id, f"stats{snapshot_id}", blobs, replaces
+    )
 
 
 def write_table_statistics(
@@ -6367,36 +6350,9 @@ def maintain(
         report["expire_snapshots"] = report["remove_orphans"] = "dry_run"
         return report
     if spark is not None:
-        # ONE-SCAN statistics refresh (r14): every active family's next
-        # refresh reduces to "per new/dirty file, compute a partial" —
-        # plan the union of (files x columns) they need, read it ONCE
-        # into a persisted columnar frame, and serve each family from
-        # the cache (see onepass.py).  At 100 TB nightly this is the
-        # difference between reading the day's ingest once and once PER
-        # FAMILY (~5x).  Families fall back to direct reads for
-        # anything the cache can't serve — never to a wrong answer.
-        from daskberg_spark.iceberg.onepass import (
-            DEFAULT_CACHE_BUDGET_BYTES,
-            plan_shared_stats_scan,
+        _refresh_statistics_one_scan(
+            writer, spark, report, stats_cache_budget_bytes
         )
-
-        scan_source = plan_shared_stats_scan(
-            writer,
-            spark,
-            cache_budget_bytes=(
-                DEFAULT_CACHE_BUDGET_BYTES
-                if stats_cache_budget_bytes is None
-                else stats_cache_budget_bytes
-            ),
-        )
-        try:
-            _maintain_statistics(writer, spark, report, scan_source)
-        finally:
-            if scan_source is not None:
-                report["stats_scan"] = scan_source.report()
-                scan_source.unpersist()
-            else:
-                report["stats_scan"] = None
     report["expire_snapshots"] = expire_snapshots(
         writer,
         keep_last=keep_last,
@@ -6424,12 +6380,32 @@ def refresh_all_statistics(
     so the call is idempotent: a second run performs zero data IO.
     Returns the per-family report incl. the ``stats_scan`` IO census
     (raw/dirty files read once total, served/fallback counts)."""
+    report: dict[str, Any] = {}
+    _refresh_statistics_one_scan(
+        writer, spark, report, stats_cache_budget_bytes
+    )
+    return report
+
+
+def _refresh_statistics_one_scan(
+    writer: "IcebergWriter",
+    spark: Any,
+    report: dict[str, Any],
+    stats_cache_budget_bytes: int | None,
+) -> None:
+    """ONE-SCAN statistics refresh (r14): every active family's next
+    refresh reduces to "per new/dirty file, compute a partial" — plan
+    the union of (files x columns) they need, read it ONCE into a
+    persisted columnar frame, and serve each family from the cache
+    (see onepass.py).  At 100 TB nightly this is the difference between
+    reading the day's ingest once and once PER FAMILY (~5x).  Families
+    fall back to direct reads for anything the cache can't serve —
+    never to a wrong answer."""
     from daskberg_spark.iceberg.onepass import (
         DEFAULT_CACHE_BUDGET_BYTES,
         plan_shared_stats_scan,
     )
 
-    report: dict[str, Any] = {}
     scan_source = plan_shared_stats_scan(
         writer,
         spark,
@@ -6447,7 +6423,6 @@ def refresh_all_statistics(
             scan_source.unpersist()
         else:
             report["stats_scan"] = None
-    return report
 
 
 def _maintain_statistics(
@@ -6460,9 +6435,11 @@ def _maintain_statistics(
     """The statistics-refresh half of ``maintain()`` — every family
     catch-up, fed from the shared one-scan frame (r14).
 
-    r15: the four independent family CHAINS — bloom index; global +
-    grouped NDV (theta); global + grouped quantiles; column sums —
-    run in a small thread pool (guide §2.6: actions are only
+    Which families run, and in which chain, is the family table
+    (``statsblobs.stats_families`` / ``gate_open``) that also plans
+    the shared scan.  r15: the four independent family CHAINS — bloom
+    index; global + grouped NDV (theta); global + grouped quantiles;
+    column sums — run in a small thread pool (guide §2.6: actions are only
     sequential because the driver calls them sequentially; a chain's
     next job back-fills executors another chain's tail left idle).
     Chain boundaries follow the shared state: the grouped refreshes
@@ -6483,151 +6460,29 @@ def _maintain_statistics(
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
 
-    from daskberg_spark.iceberg.bloomindex import refresh_file_blooms
-    from daskberg_spark.iceberg.quantiles import (
-        GROUPED_QUANTILE_BLOB_TYPE,
-        QUANTILE_BLOB_TYPE,
-        _NUMERIC_TYPES,
-        refresh_grouped_quantile_statistics,
-        refresh_quantile_statistics,
-        write_quantile_statistics,
-    )
-    from daskberg_spark.iceberg.theta import (
-        GROUPED_THETA_BLOB_TYPE,
-        THETA_BLOB_TYPE,
-        refresh_grouped_theta_statistics,
-    )
-    from daskberg_spark.iceberg.sumstats import refresh_sum_statistics
+    from daskberg_spark.iceberg.statsblobs import gate_open, stats_families
 
-    head_id = writer.head_snapshot["snapshot-id"]
-
-    def has(blob_type: str) -> bool:
-        return any(
-            b.get("type") == blob_type
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-        )
-
-    def head_covered(blob_type: str) -> bool:
-        return any(
-            e["snapshot-id"] == head_id
-            and any(
-                b.get("type") == blob_type
-                for b in e.get("blob-metadata", [])
-            )
-            for e in writer.statistics
-        )
-
+    families = stats_families()
     # every gate reads writer state BEFORE any chain runs: the chains
     # only ever ADD entries of their own types, so a gate computed here
     # equals the gate the sequential schedule would have computed
-    has_theta = has(THETA_BLOB_TYPE)
-    theta_covered = head_covered(THETA_BLOB_TYPE)
-    has_gndv = has(GROUPED_THETA_BLOB_TYPE)
-    # quantile-histogram catch-up gates: opt-in shape (an entry on SOME
-    # snapshot), head-gated; a column dropped or retyped since the last
-    # histogram run must not crash the nightly job — it simply stops
-    # being refreshed
-    q_cols = sorted(
-        {
-            (b.get("properties") or {}).get("column")
-            for e in writer.statistics
-            for b in e.get("blob-metadata", [])
-            if b.get("type") == QUANTILE_BLOB_TYPE
-        }
-        - {None}
-    )
-    q_cols = [
-        c
-        for c in q_cols
-        if writer.types.get(c) in _NUMERIC_TYPES
-    ]
-    q_head_covered = head_covered(QUANTILE_BLOB_TYPE)
-    has_grouped_q = has(GROUPED_QUANTILE_BLOB_TYPE)
+    by_chain: dict[str, list] = {}
+    for fam in families:
+        by_chain.setdefault(fam.chain, []).append((fam, gate_open(writer, fam)))
 
-    def chain_blooms() -> dict[str, Any]:
-        # files compaction just rewrote (or recent appends) have no
-        # blobs yet; a no-op (None) on unindexed tables
-        return {
-            "refresh_blooms": refresh_file_blooms(
-                writer, spark, scan_source=scan_source
-            )
-        }
-
-    def chain_theta() -> dict[str, Any]:
+    def run_chain(members: list) -> dict[str, Any]:
+        # a gated-out family reports None; an open one its refresh's
+        # result (None too when it found nothing to do)
         out: dict[str, Any] = {}
-        # NDV-stats catch-up: only for tables that opted into theta
-        # statistics whose current snapshot lacks one — incremental
-        # over the append window when the window allows, full rebuild
-        # otherwise; never a surprise full scan on tables that never
-        # ran stats
-        if has_theta and not theta_covered:
-            _, mode = refresh_table_statistics(
-                writer, spark, scan_source=scan_source
+        for fam, is_open in members:
+            out[fam.report_key] = (
+                fam.refresh(writer, spark, scan_source) if is_open else None
             )
-            out["refresh_statistics"] = mode
-        else:
-            out["refresh_statistics"] = None
-        # grouped-NDV catch-up (r13): head-gated PER CONFIG inside the
-        # refresh (r15); always incremental — per-file grouped sketch
-        # partials union for clean files, one delete-aware restricted
-        # scan for dirty ones.  AFTER the global refresh: identity
-        # groupings read the global partials it may have just advanced
-        if has_gndv:
-            rep = refresh_grouped_theta_statistics(
-                writer, spark, scan_source=scan_source, skip_head_covered=True
-            )
-            out["refresh_grouped_ndv"] = (
-                None if rep is None else rep["partials_computed"]
-            )
-        else:
-            out["refresh_grouped_ndv"] = None
         return out
-
-    def chain_quantiles() -> dict[str, Any]:
-        out: dict[str, Any] = {}
-        # tables with per-file CDF partials refresh INCREMENTALLY —
-        # O(new + dirty files); legacy tables without partials take
-        # the full one-pass re-run
-        if q_cols and not q_head_covered:
-            if (
-                refresh_quantile_statistics(
-                    writer, spark, scan_source=scan_source
-                )
-                is None
-            ):
-                write_quantile_statistics(writer, spark, q_cols)
-            out["refresh_quantiles"] = q_cols
-        else:
-            out["refresh_quantiles"] = None
-        # grouped-histogram catch-up: head-gated PER CONFIG (r15);
-        # identity groupings reuse the global per-file partials the
-        # global refresh above just wrote — same-chain ordering keeps
-        # that reuse race-free
-        if has_grouped_q:
-            rep = refresh_grouped_quantile_statistics(
-                writer, spark, scan_source=scan_source, skip_head_covered=True
-            )
-            out["refresh_grouped_quantiles"] = (rep or {}).get("mode")
-        else:
-            out["refresh_grouped_quantiles"] = None
-        return out
-
-    def chain_sums() -> dict[str, Any]:
-        # per-file sum-blob catch-up: incremental — only files no blob
-        # covers yet; a no-op None on tables that never ran
-        # write_sum_statistics
-        return {
-            "refresh_sums": refresh_sum_statistics(
-                writer, spark, scan_source=scan_source
-            )
-        }
 
     chains = [
-        ("blooms", chain_blooms),
-        ("theta", chain_theta),
-        ("quantiles", chain_quantiles),
-        ("sums", chain_sums),
+        (name, lambda members=members: run_chain(members))
+        for name, members in by_chain.items()
     ]
     if parallelism is None:
         # a malformed env value must not abort the nightly maintenance
@@ -6656,16 +6511,9 @@ def _maintain_statistics(
                 results[name] = fn()
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errors.append((name, e))
-    # the report fills in the CANONICAL (pre-r15 sequential) key order
-    # regardless of chain completion order
-    for key in (
-        "refresh_blooms",
-        "refresh_statistics",
-        "refresh_quantiles",
-        "refresh_grouped_quantiles",
-        "refresh_grouped_ndv",
-        "refresh_sums",
-    ):
+    # the report fills in the family table's key order regardless of
+    # chain completion order
+    for key in (fam.report_key for fam in families):
         for chain_out in results.values():
             if key in chain_out:
                 report[key] = chain_out[key]

@@ -572,3 +572,171 @@ def test_bootstrap_scan_delete_state_gate(spark, tmp_path):
     # the dirty-table blobs really reflect the delete (u=5 removed)
     t = IcebergTable(w_dirty.path)
     assert t.to_df(spark).where(F.col("u") == 5).count() == 0
+
+
+def test_shared_scan_skips_head_covered_grouping(spark, tmp_path):
+    """The grouped-NDV scan plan must skip EVERY grouping whose own
+    entry already covers the head, not just the ones listed before the
+    first runnable grouping: an uncovered grouping first, then one made
+    head-covered by a manual write — the shared raw read carries only
+    the uncovered grouping's columns."""
+    from daskberg_spark.iceberg.theta import write_grouped_theta_statistics
+    from daskberg_spark.iceberg.writer import refresh_all_statistics
+
+    w = IcebergWriter(
+        str(tmp_path / "cov"),
+        [
+            {"id": 1, "name": "seg", "type": "string", "required": False},
+            {"id": 2, "name": "src", "type": "string", "required": False},
+            {"id": 3, "name": "u", "type": "long", "required": False},
+            {"id": 4, "name": "v", "type": "long", "required": False},
+        ],
+    )
+
+    def rows(lo, hi):
+        return [
+            {"seg": f"s{i % 3}", "src": f"w{i % 4}", "u": i % 29, "v": i % 31}
+            for i in range(lo, hi)
+        ]
+
+    w.append(rows(0, 200))
+    write_grouped_theta_statistics(w, spark, ["seg"], ["u"])
+    write_grouped_theta_statistics(w, spark, ["src"], ["v"])
+    w.append(rows(200, 300))
+    # "src" now covers the new head; "seg" does not
+    write_grouped_theta_statistics(w, spark, ["src"], ["v"])
+    rep = refresh_all_statistics(w, spark)
+    ss = rep["stats_scan"]
+    assert ss is not None, rep
+    assert set(ss["raw_columns"]) == {"seg", "u"}, ss
+    assert ss["raw_fallback"] == 0, ss
+
+
+def test_bootstrap_scan_keyed_on_snapshot(spark, tmp_path):
+    """A delete committed AFTER ``plan_bootstrap_stats_scan`` must not be
+    served stale raw rows: the scan records its plan-time snapshot and
+    ``current_frame`` falls back when the caller's head differs, so the
+    grouped blob equals a direct delete-aware write's."""
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.onepass import plan_bootstrap_stats_scan
+    from daskberg_spark.iceberg.puffin import read_blob
+    from daskberg_spark.iceberg.theta import write_grouped_theta_statistics
+
+    def payloads(w):
+        t = IcebergTable(w.path)
+        return [
+            read_blob(t._relocate(e["statistics-path"]), b)
+            for e in w.statistics
+            for b in e.get("blob-metadata", [])
+            if b["type"] == "daskberg-theta-grouped-v1"
+        ]
+
+    def mk(name):
+        w = IcebergWriter(
+            str(tmp_path / name),
+            [
+                {"id": 1, "name": "seg", "type": "string", "required": False},
+                {"id": 2, "name": "u", "type": "long", "required": False},
+            ],
+        )
+        # unique u per row: every deleted row removes a distinct value
+        w.append([{"seg": f"s{i % 3}", "u": i} for i in range(60)])
+        w.append([{"seg": f"s{i % 3}", "u": i} for i in range(60, 120)])
+        return w
+
+    def dv_delete(w):
+        t = IcebergTable(w.path)
+        first = sorted(f["file_path"] for f in t.plan_files(None))[0]
+        w.delete_positions_dv({first: [0, 1, 2, 4]})
+
+    w_cached, w_direct = mk("cached"), mk("direct")
+    boot = plan_bootstrap_stats_scan(w_cached, spark)
+    assert boot is not None
+    for w in (w_cached, w_direct):
+        dv_delete(w)
+    write_grouped_theta_statistics(
+        w_cached, spark, ["seg"], ["u"], scan_source=boot
+    )
+    rep = boot.report()
+    boot.unpersist()
+    assert rep["current_served"] == 0 and rep["current_fallback"] == 1, rep
+    write_grouped_theta_statistics(w_direct, spark, ["seg"], ["u"])
+    assert payloads(w_cached) == payloads(w_direct)
+
+
+def test_bootstrap_columns_are_top_level(spark, tmp_path):
+    """The bootstrap scan's default columns are the schema's TOP-LEVEL
+    names (never dotted struct-leaf paths), so what the cache serves has
+    the direct read's schema."""
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.onepass import plan_bootstrap_stats_scan
+
+    w = IcebergWriter(
+        str(tmp_path / "st"),
+        [
+            {"id": 1, "name": "id", "type": "long", "required": False},
+            {
+                "id": 2,
+                "name": "meta",
+                "type": {
+                    "type": "struct",
+                    "fields": [
+                        {"id": 4, "name": "score", "type": "double", "required": False},
+                        {"id": 5, "name": "tag", "type": "string", "required": False},
+                    ],
+                },
+                "required": False,
+            },
+            {"id": 3, "name": "u", "type": "long", "required": False},
+        ],
+    )
+    w.append(
+        [
+            {"id": i, "meta": {"score": i / 2, "tag": f"t{i % 3}"}, "u": i % 7}
+            for i in range(50)
+        ]
+    )
+    t = IcebergTable(w.path)
+    top = sorted(f["name"] for f in t.schema["fields"])
+    boot = plan_bootstrap_stats_scan(w, spark)
+    assert boot is not None
+    try:
+        assert boot.report()["raw_columns"] == top
+        files = t.plan_files(None)
+        direct = {
+            f.name: f.dataType for f in t.to_df(spark, columns=top).schema
+        }
+        cur = boot.current_frame(files, top, w.head_snapshot["snapshot-id"])
+        raw = boot.raw_frame(files, top)
+        assert cur is not None and raw is not None
+        assert {f.name: f.dataType for f in cur.schema} == direct
+        assert {
+            f.name: f.dataType for f in raw.schema if f.name != "__file"
+        } == direct
+    finally:
+        boot.unpersist()
+
+
+def test_shared_scan_dirty_frame_keyed_on_snapshot(spark, tmp_path):
+    """The shared delete-aware dirty frame is keyed on the planned
+    snapshot too: a delete committed after planning that dirties no NEW
+    file leaves the dirty path set unchanged, yet the cached frame still
+    holds the rows it killed — the refresh must fall back and publish
+    the current row census."""
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.onepass import plan_shared_stats_scan
+    from daskberg_spark.iceberg.quantiles import refresh_quantile_statistics
+
+    w, rows = _all_families_table(spark, tmp_path)
+    w.delete_rows_equality([{"u": i} for i in range(5)])
+    scan = plan_shared_stats_scan(w, spark)
+    assert scan is not None and scan.report()["dirty_files"] == 2
+    w.delete_rows_equality([{"u": 7}])  # the same two files stay dirty
+    try:
+        refresh_quantile_statistics(w, spark, scan_source=scan)
+        rep = scan.report()
+    finally:
+        scan.unpersist()
+    assert rep["dirty_served"] == 0 and rep["dirty_fallback"] == 1, rep
+    t = IcebergTable(w.path)
+    assert t.column_quantiles("v")["rows"] == t.to_df(spark).count()

@@ -20,7 +20,7 @@ import json
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
-from typing import Any
+from typing import Any, TypeVar
 
 from daskberg_spark.iceberg.avro import read_avro_file
 from daskberg_spark.iceberg.planner import FieldInfo, apply_filters, check_summaries
@@ -87,6 +87,28 @@ def _dist_plan_gate() -> int:
     return int(os.environ.get("DASKBERG_DIST_PLAN_GATE", DIST_PLAN_ENTRY_GATE))
 
 
+def _entry_key(status: int, data_file: dict[str, Any]) -> tuple[str, Any]:
+    """Classify one manifest entry for reconciliation: ``("data", path)``
+    live data file, ``("delete", (path, offset))`` live v2/v3 delete file,
+    ``("tomb_data", path)`` / ``("tomb_del_key", (path, offset))`` /
+    ``("tomb_del_path", path)`` DELETED tombstones.  Delete entries are
+    keyed by (path, blob offset): a v3 puffin file packs one DV blob PER
+    target data file at distinct offsets under one file_path, and a
+    writer may supersede a single blob while its siblings stay live —
+    path-wide removal is only for DELETED delete entries that carry no
+    ``content_offset`` (v2 delete parquet).  The one rule shared by the
+    reader (``_entry_events``) and the writer's census."""
+    path = data_file["file_path"]
+    off = data_file.get("content_offset")
+    if data_file.get("content", 0) in (1, 2):
+        if status != STATUS_DELETED:
+            return "delete", (path, off or 0)
+        if off is not None:
+            return "tomb_del_key", (path, off)
+        return "tomb_del_path", path
+    return ("tomb_data" if status == STATUS_DELETED else "data"), path
+
+
 def _entry_events(
     entries: list[dict[str, Any]],
     spec_id: int,
@@ -97,11 +119,10 @@ def _entry_events(
 ) -> list[tuple[str, Any, Any]]:
     """Per-entry manifest processing, shared by the driver and executor
     planning paths (so the two can never diverge).  Returns ordered
-    events: ``("data", path, record)`` live data file, ``("delete",
-    (path, offset), record)`` live v2/v3 delete file, ``("tomb_data",
-    path, None)`` / ``("tomb_del_key", (path, offset), None)`` /
-    ``("tomb_del_path", path, None)`` DELETED tombstones.  Reconciliation
-    (tombstones last, across ALL manifests) happens in ``_merge_events``.
+    ``(kind, key, record)`` events (``_entry_key``), the record being
+    the annotated data_file for live entries and None for tombstones.
+    Reconciliation (tombstones last, across ALL manifests) happens in
+    ``_merge_events``.
     """
     events: list[tuple[str, Any, Any]] = []
     for entry in entries:
@@ -161,46 +182,29 @@ def _entry_events(
                 else manifest_seq
             ),
         )
-        if entry["status"] == STATUS_DELETED:
-            if data_file.get("content", 0) in (1, 2):
-                off = data_file.get("content_offset")
-                if off is not None:
-                    events.append(("tomb_del_key", (fpath, off), None))
-                else:
-                    events.append(("tomb_del_path", fpath, None))
-            else:
-                events.append(("tomb_data", fpath, None))
-        elif data_file.get("content", 0) in (1, 2):
-            # keyed by (path, blob offset): a v3 puffin file packs
-            # one DV blob PER target data file at distinct offsets
-            # under one file_path — path alone would collapse them
-            events.append(
-                ("delete", (fpath, data_file.get("content_offset") or 0), data_file)
-            )
-        else:
-            events.append(("data", fpath, data_file))
+        kind, key = _entry_key(entry["status"], data_file)
+        events.append((kind, key, None if kind.startswith("tomb") else data_file))
     return events
 
 
+R = TypeVar("R")
+
+
 def _merge_events(
-    event_lists: list[list[tuple[str, Any, Any]]],
-) -> tuple[dict[str, dict[str, Any]], dict[tuple[str, int], dict[str, Any]]]:
+    event_lists: list[list[tuple[str, Any, R | None]]],
+) -> tuple[dict[str, R], dict[tuple[str, int], R]]:
     """Cross-manifest reconciliation: dict insert in manifest order
-    (later manifests overwrite same-path records), DELETED tombstones
-    applied LAST across all manifests (``ice.py:165-204``).  A data
-    event whose record is None is a "present but file-level-pruned"
-    marker from the executor path: it participates in overwrite
-    semantics (last record for the path wins) and is dropped at the
-    end — exactly what filtering the merged dict would produce."""
+    (later manifests overwrite same-key records), DELETED tombstones
+    applied LAST across all manifests (``ice.py:165-204``).  Generic
+    over the record: the reader carries annotated data_file dicts, the
+    writer's census (``writer._live_entries``) ``(entry, manifest)``
+    pairs.  A data event whose record is None is a "present but
+    file-level-pruned" marker from the executor path: it participates in
+    overwrite semantics (last record for the path wins) and is dropped
+    at the end — exactly what filtering the merged dict would produce."""
     allfiles: dict[str, Any] = {}
-    delete_files: dict[tuple[str, int], dict[str, Any]] = {}
+    delete_files: dict[tuple[str, int], Any] = {}
     deleted: set[str] = set()
-    # DELETED delete-entries are keyed by (path, content_offset): a
-    # multi-blob puffin file holds one DV per target data file under
-    # ONE path, and a foreign v3 writer may supersede a single blob
-    # (same file_path, one content_offset) while the siblings stay
-    # live.  Path-wide removal is only the fallback for DELETED
-    # entries that carry no content_offset (v2 delete parquet).
     deleted_delete_keys: set[tuple[str, int]] = set()
     deleted_delete_paths: set[str] = set()
     for events in event_lists:

@@ -29,6 +29,7 @@ import pyarrow.parquet as pq
 
 from daskberg_spark.iceberg.avro import write_avro_file
 from daskberg_spark.iceberg.conversions import LINEAGE_COLS, encode_bound
+from daskberg_spark.iceberg.metadata import _entry_key, _merge_events
 from daskberg_spark.iceberg.planner import transform_result_type
 from daskberg_spark.iceberg.transforms import get_transform
 
@@ -306,6 +307,95 @@ def _entry_seq(entry: dict[str, Any], manifest: dict[str, Any]) -> int | None:
     inheritance).  None only for pre-sequence-number (v1-era) metadata."""
     s = entry.get("sequence_number")
     return s if s is not None else manifest.get("sequence_number")
+
+
+def _carry(entry: dict[str, Any], manifest: dict[str, Any]) -> dict[str, Any]:
+    """An entry re-serialized into a manifest written under a NEW
+    snapshot — the one carry rule of every rewrite.  DELETED tombstones
+    stay DELETED (re-serializing them EXISTING would resurrect what they
+    tombstone); every other entry becomes EXISTING.  Sequence number and
+    snapshot id are made explicit: the new manifest's inherited values
+    would mis-sequence the carried entry."""
+    return {
+        "status": 2 if entry["status"] == 2 else 0,
+        "snapshot_id": (
+            entry.get("snapshot_id")
+            if entry.get("snapshot_id") is not None
+            else manifest.get("added_snapshot_id")
+        ),
+        "sequence_number": _entry_seq(entry, manifest),
+        "data_file": entry["data_file"],
+    }
+
+
+def _tombstone(
+    entry: dict[str, Any], manifest: dict[str, Any], snapshot_id: int
+) -> dict[str, Any]:
+    """The DELETED entry with which ``snapshot_id`` removes ``entry``."""
+    return {
+        "status": 2,
+        "snapshot_id": snapshot_id,
+        "sequence_number": _entry_seq(entry, manifest),
+        "data_file": entry["data_file"],
+    }
+
+
+# (manifest entry, manifest-list record carrying it)
+Located = tuple[dict[str, Any], dict[str, Any]]
+
+
+def _live_entries(
+    writer: "IcebergWriter",
+) -> tuple[
+    dict[str, Located],
+    dict[tuple[str, int], Located],
+    list[tuple[dict[str, Any], list[dict[str, Any]]]],
+]:
+    """The writer's live-entry census: the manifests of the writer's
+    in-memory chain reconciled by the reader's rule
+    (``metadata._entry_key``/``_merge_events``: DELETED tombstones last
+    across all manifests, data files keyed by path, delete entries by
+    (path, blob offset) so superseding one blob of a multi-blob puffin
+    leaves its siblings live).
+
+    Planned from ``writer.manifests``, not ``IcebergTable.scan_all()``:
+    while a WAP stage is pinned, current-snapshot-id is the PINNED
+    snapshot, not the staged head this writer commits onto.  Paths are
+    the table's own, so no relocation applies.
+
+    Returns ``(data, deletes, loaded)``: live data entries by path and
+    live delete entries by (path, offset), each as ``(entry,
+    manifest)``, plus every manifest with its raw entries in
+    manifest-list order (for rewrites)."""
+    from daskberg_spark.iceberg.avro import read_avro_file
+
+    loaded = [
+        (mf, read_avro_file(mf["manifest_path"])[1]) for mf in writer.manifests
+    ]
+    data, deletes = _merge_events(
+        [
+            [(*_entry_key(e["status"], e["data_file"]), (e, mf)) for e in entries]
+            for mf, entries in loaded
+        ]
+    )
+    return data, deletes, loaded
+
+
+def _tombstone_manifests(
+    writer: "IcebergWriter",
+    hits_by_spec: dict[int, list[Located]],
+    snapshot_id: int,
+) -> list[dict[str, Any]]:
+    """One manifest of DELETED entries per origin spec — partition
+    records must decode under the spec they were written with."""
+    return [
+        writer._write_manifest(
+            [_tombstone(e, mf, snapshot_id) for e, mf in hits],
+            snapshot_id,
+            spec_id=sid,
+        )
+        for sid, hits in sorted(hits_by_spec.items())
+    ]
 
 
 class CommitConflictError(RuntimeError):
@@ -1301,73 +1391,50 @@ class IcebergWriter:
         ``predicate(data_file_record) -> bool`` (status reconciliation path,
         reference ice.py:191-204)."""
         snapshot_id = self._next_snapshot_id
-        keep_manifests, delete_by_spec = self._tombstone_rewrite(
-            predicate, snapshot_id
+        keep_manifests, hits_by_spec = self._tombstone_rewrite(
+            lambda e, _mf: predicate(e["data_file"]), snapshot_id
         )
-        # one tombstone manifest per origin spec: partition records must
-        # decode under the spec they were written with
-        delete_manifests = [
-            self._write_manifest(entries, snapshot_id, spec_id=sid)
-            for sid, entries in sorted(delete_by_spec.items())
-        ] or [self._write_manifest([], snapshot_id)]
+        delete_manifests = _tombstone_manifests(
+            self, hits_by_spec, snapshot_id
+        ) or [self._write_manifest([], snapshot_id)]
         self._commit(snapshot_id, keep_manifests + delete_manifests, "delete", 0)
         return snapshot_id
 
     def _tombstone_rewrite(
-        self, predicate, snapshot_id: int
-    ) -> tuple[list[dict[str, Any]], dict[int, list[dict[str, Any]]]]:
-        """Plan DELETED tombstones for live entries matching
-        ``predicate(data_file_record)``: returns (surviving manifest
-        list, spec_id → tombstone entries) WITHOUT committing — shared
-        by ``delete_files`` and the metadata-only leg of
-        ``delete_where_fast``, which folds extra manifests (partial-file
-        DVs) into the same snapshot."""
-        from daskberg_spark.iceberg.avro import read_avro_file
-
-        keep_manifests = []
-        delete_by_spec: dict[int, list[dict[str, Any]]] = {}
-        for mf in self.manifests:
-            mf_spec = mf.get("partition_spec_id", 0)
-            _, entries = read_avro_file(mf["manifest_path"])
-            # only LIVE entries are removal candidates: a DELETED
-            # (status 2) tombstone in a mixed manifest must never be
-            # re-tombstoned — and, crucially, never re-serialized as
-            # EXISTING below, which would resurrect the file it
-            # tombstones
-            hit = [
-                e
-                for e in entries
-                if e["status"] != 2 and predicate(e["data_file"])
-            ]
-            if hit:
-                for e in hit:
-                    delete_by_spec.setdefault(mf_spec, []).append(
-                        {
-                            "status": 2,
-                            "snapshot_id": snapshot_id,
-                            "sequence_number": _entry_seq(e, mf),
-                            "data_file": e["data_file"],
-                        }
-                    )
-                survivors = [
-                    {
-                        # tombstones keep status 2 (semantics preserved
-                        # exactly); live entries re-serialize EXISTING
-                        "status": 2 if e["status"] == 2 else 0,
-                        "snapshot_id": e["snapshot_id"],
-                        "sequence_number": _entry_seq(e, mf),
-                        "data_file": e["data_file"],
-                    }
-                    for e in entries
-                    if e["status"] == 2 or not predicate(e["data_file"])
-                ]
-                if survivors:
-                    keep_manifests.append(
-                        self._write_manifest(survivors, snapshot_id, spec_id=mf_spec)
-                    )
-            else:
+        self, hit, snapshot_id: int
+    ) -> tuple[list[dict[str, Any]], dict[int, list[Located]]]:
+        """Plan the removal of the live entries matching ``hit(entry,
+        manifest)`` WITHOUT committing: returns (surviving manifest list,
+        spec_id → hit ``(entry, manifest)`` pairs).  ``hit`` is called
+        exactly once per entry whose key is live under the census
+        (``_live_entries``), so a DELETED tombstone or an entry a later
+        tombstone supersedes is never a hit.  A manifest holding a hit
+        is rewritten with every other entry carried (``_carry``);
+        untouched manifests pass through.  Callers turn the hits into
+        tombstones (``_tombstone_manifests``) or, for a migration, into
+        re-registered entries."""
+        data, deletes, loaded = _live_entries(self)
+        live = {"data": data, "delete": deletes}
+        keep_manifests: list[dict[str, Any]] = []
+        hits_by_spec: dict[int, list[Located]] = {}
+        for mf, entries in loaded:
+            hits, kept = [], []
+            for e in entries:
+                kind, key = _entry_key(e["status"], e["data_file"])
+                is_hit = key in live.get(kind, ()) and hit(e, mf)
+                (hits if is_hit else kept).append(e)
+            if not hits:
                 keep_manifests.append(mf)
-        return keep_manifests, delete_by_spec
+                continue
+            mf_spec = mf.get("partition_spec_id", 0)
+            hits_by_spec.setdefault(mf_spec, []).extend((e, mf) for e in hits)
+            if kept:
+                keep_manifests.append(
+                    self._write_manifest(
+                        [_carry(e, mf) for e in kept], snapshot_id, spec_id=mf_spec
+                    )
+                )
+        return keep_manifests, hits_by_spec
 
     def merge_rows(
         self, updates: list[dict[str, Any]], key_cols: list[str]
@@ -1396,93 +1463,53 @@ class IcebergWriter:
         ups_by_key = {tuple(u[c] for c in key_cols): u for u in updates}
         if len(ups_by_key) != len(updates):
             raise ValueError("duplicate keys in updates")
-        from daskberg_spark.iceberg.avro import read_avro_file
-
         snapshot_id = self._next_snapshot_id
         # Live v2 deletes must be APPLIED to any file being rewritten —
         # the rewritten file commits under the NEW snapshot, after which
         # older equality deletes stop applying to it on read; without
         # this, merging a file holding deleted rows resurrects them.
         eq_deletes, pos_pairs = _live_deletes(self)
-        keep_manifests, new_rows_by_part = [], {}
-        delete_by_spec: dict[int, list[dict[str, Any]]] = {}
+        new_rows_by_part: dict[tuple, list[dict[str, Any]]] = {}
         matched: set[tuple] = set()
-        for mf in self.manifests:
-            mf_spec = mf.get("partition_spec_id", 0)
-            _, entries = read_avro_file(mf["manifest_path"])
-            touched, survivors = [], []
-            for e in entries:
-                df_rec = e["data_file"]
-                if e["status"] == 2 or df_rec.get("content", 0) in (1, 2):
-                    survivors.append(e)
-                    continue
-                rows = _live_file_rows(
-                    e,
-                    eq_deletes,
-                    pos_pairs,
-                    [f["name"] for f in self.fields],
-                    file_key=_order_key(e, mf),
-                    # rewrites must not re-key v3 row identity (the
-                    # spark CoW/MOR twins and compaction all carry it)
-                    carry_lineage=True,
-                    file_seq=_entry_seq(e, mf),
-                    file_part=_part_scope_key(
-                        df_rec, mf, self.specs, self.properties
-                    ),
+
+        def rewrite(e: dict[str, Any], mf: dict[str, Any]) -> bool:
+            # the hit test reads the file's live rows and, on a key
+            # match, stages its rewrite: called once per live entry
+            df_rec = e["data_file"]
+            if df_rec.get("content", 0) in (1, 2):
+                return False
+            rows = _live_file_rows(
+                e,
+                eq_deletes,
+                pos_pairs,
+                [f["name"] for f in self.fields],
+                file_key=_order_key(e, mf),
+                # rewrites must not re-key v3 row identity (the
+                # spark CoW/MOR twins and compaction all carry it)
+                carry_lineage=True,
+                file_seq=_entry_seq(e, mf),
+                file_part=_part_scope_key(df_rec, mf, self.specs, self.properties),
+            )
+            if rows is None:
+                raise NotImplementedError(
+                    "cannot merge a schema-drifted data file "
+                    f"({df_rec['file_path']})"
                 )
-                if rows is None:
-                    raise NotImplementedError(
-                        "cannot merge a schema-drifted data file "
-                        f"({df_rec['file_path']})"
-                    )
-                hits = [
-                    r
-                    for r in rows
-                    if tuple(r.get(c) for c in key_cols) in ups_by_key
-                ]
-                if not hits:
-                    survivors.append(e)
-                    continue
-                touched.append(e)
-                delete_by_spec.setdefault(mf_spec, []).append(
-                    {
-                        "status": 2,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": _entry_seq(e, mf),
-                        "data_file": df_rec,
-                    }
-                )
-                for r in rows:
-                    k = tuple(r.get(c) for c in key_cols)
-                    if k in ups_by_key:
-                        matched.add(k)
-                        # identity (_row_id) survives the update; the
-                        # carried last-updated sequence is dropped so
-                        # the reader inherits THIS commit's sequence
-                        r = {**r, **ups_by_key[k]}
-                        r.pop("_last_updated_sequence_number", None)
-                    new_rows_by_part.setdefault(
-                        self._partition_tuple(r), []
-                    ).append(r)
-            if touched:
-                existing = [
-                    {
-                        # tombstones in a mixed manifest keep status 2 —
-                        # re-serializing them EXISTING would resurrect
-                        # the files they tombstone
-                        "status": 2 if e["status"] == 2 else 0,
-                        "snapshot_id": e["snapshot_id"],
-                        "sequence_number": _entry_seq(e, mf),
-                        "data_file": e["data_file"],
-                    }
-                    for e in survivors
-                ]
-                if existing:
-                    keep_manifests.append(
-                        self._write_manifest(existing, snapshot_id, spec_id=mf_spec)
-                    )
-            else:
-                keep_manifests.append(mf)
+            if not any(tuple(r.get(c) for c in key_cols) in ups_by_key for r in rows):
+                return False
+            for r in rows:
+                k = tuple(r.get(c) for c in key_cols)
+                if k in ups_by_key:
+                    matched.add(k)
+                    # identity (_row_id) survives the update; the
+                    # carried last-updated sequence is dropped so
+                    # the reader inherits THIS commit's sequence
+                    r = {**r, **ups_by_key[k]}
+                    r.pop("_last_updated_sequence_number", None)
+                new_rows_by_part.setdefault(self._partition_tuple(r), []).append(r)
+            return True
+
+        keep_manifests, hits_by_spec = self._tombstone_rewrite(rewrite, snapshot_id)
         # unmatched updates are inserts
         n_inserted = 0
         for k, u in ups_by_key.items():
@@ -1515,10 +1542,7 @@ class IcebergWriter:
                 }
             )
         new_manifests = [self._write_manifest(add_entries, snapshot_id)]
-        for sid, entries in sorted(delete_by_spec.items()):
-            new_manifests.append(
-                self._write_manifest(entries, snapshot_id, spec_id=sid)
-            )
+        new_manifests += _tombstone_manifests(self, hits_by_spec, snapshot_id)
         self._commit(
             snapshot_id,
             keep_manifests + new_manifests,
@@ -2587,6 +2611,11 @@ def _hive_fmt(v: Any, rtype: str) -> str:
     return urllib.parse.quote(str(v), safe="")
 
 
+# Rows an AVRO append task buffers per partition tuple before it spills
+# the group to its own container (bounds task memory on skewed input).
+AVRO_WRITE_FLUSH_ROWS = 500_000
+
+
 def _write_df_avro_tasks(
     writer: "IcebergWriter",
     out: Any,
@@ -2627,9 +2656,7 @@ def _write_df_avro_tasks(
     ddir = data_dir
     seg_names = list(pcols)
 
-    flush_rows = int(
-        os.environ.get("DASKBERG_AVRO_WRITE_FLUSH_ROWS", "500000")
-    )
+    flush_rows = AVRO_WRITE_FLUSH_ROWS
 
     def task(iterator):
         # arrow, NOT pandas, end to end: pandas folds NULL and NaN
@@ -3866,53 +3893,21 @@ def commit_spark_overwrite(
     removed path matching no manifest entry raises — a silent no-match
     would leave the "removed" file live alongside its rewrite,
     duplicating rows."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
     snapshot_id = writer._next_snapshot_id
     add_entries = _entries_from_spark_dir(
         writer, data_dir, snapshot_id, partition_col, path_col
     )
     removed = {_norm_data_path(p) for p in removed_paths}
     found: set[str] = set()
-    keep_manifests = []
-    delete_by_spec: dict[int, list[dict[str, Any]]] = {}
-    for mf in writer.manifests:
-        mf_spec = mf.get("partition_spec_id", 0)
-        _, entries = read_avro_file(mf["manifest_path"])
-        hit = [
-            e
-            for e in entries
-            if e["status"] != 2
-            and _norm_data_path(e["data_file"]["file_path"]) in removed
-        ]
-        if hit:
-            for e in hit:
-                found.add(_norm_data_path(e["data_file"]["file_path"]))
-                delete_by_spec.setdefault(mf_spec, []).append(
-                    {
-                        "status": 2,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": _entry_seq(e, mf),
-                        "data_file": e["data_file"],
-                    }
-                )
-            survivors = [
-                {
-                    "status": 0,
-                    "snapshot_id": e.get("snapshot_id"),
-                    "sequence_number": _entry_seq(e, mf),
-                    "data_file": e["data_file"],
-                }
-                for e in entries
-                if e["status"] != 2
-                and _norm_data_path(e["data_file"]["file_path"]) not in removed
-            ]
-            if survivors:
-                keep_manifests.append(
-                    writer._write_manifest(survivors, snapshot_id, spec_id=mf_spec)
-                )
-        else:
-            keep_manifests.append(mf)
+
+    def is_removed(e: dict[str, Any], _mf: dict[str, Any]) -> bool:
+        norm = _norm_data_path(e["data_file"]["file_path"])
+        if norm in removed:
+            found.add(norm)
+            return True
+        return False
+
+    keep_manifests, hits_by_spec = writer._tombstone_rewrite(is_removed, snapshot_id)
     missing = removed - found
     if missing:
         raise ValueError(
@@ -3924,10 +3919,7 @@ def commit_spark_overwrite(
         add_entries[i : i + 100] for i in range(0, len(add_entries), 100)
     ] or [[]]
     new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    tomb_manifests = [
-        writer._write_manifest(entries, snapshot_id, spec_id=sid)
-        for sid, entries in sorted(delete_by_spec.items())
-    ]
+    tomb_manifests = _tombstone_manifests(writer, hits_by_spec, snapshot_id)
     writer._commit(
         snapshot_id,
         keep_manifests + new_manifests + tomb_manifests,
@@ -4451,17 +4443,16 @@ def delete_where_fast(
     if not full_paths and not dv_entries:
         return None
     if full_paths:
-        keep_manifests, delete_by_spec = writer._tombstone_rewrite(
-            lambda df: df.get("content", 0) == 0
-            and _norm_data_path(df["file_path"]) in full_paths,
+        keep_manifests, hits_by_spec = writer._tombstone_rewrite(
+            lambda e, _mf: e["data_file"].get("content", 0) == 0
+            and _norm_data_path(e["data_file"]["file_path"]) in full_paths,
             snapshot_id,
         )
     else:
-        keep_manifests, delete_by_spec = list(writer.manifests), {}
-    manifests = keep_manifests + [
-        writer._write_manifest(entries, snapshot_id, spec_id=sid)
-        for sid, entries in sorted(delete_by_spec.items())
-    ]
+        keep_manifests, hits_by_spec = list(writer.manifests), {}
+    manifests = keep_manifests + _tombstone_manifests(
+        writer, hits_by_spec, snapshot_id
+    )
     if dv_entries:
         manifests.append(writer._write_manifest(dv_entries, snapshot_id))
     writer._commit(snapshot_id, manifests, "delete", 0)
@@ -4469,89 +4460,109 @@ def delete_where_fast(
 
 
 def _live_dv_records(writer: "IcebergWriter") -> dict[str, dict[str, Any]]:
-    """Live deletion vectors by target data file, planned from the
-    WRITER's in-memory manifest chain — not
-    ``IcebergTable(...).scan_all()``, which resolves
-    current-snapshot-id: while a WAP stage is pinned that is the PINNED
-    snapshot, not the staged head this writer commits onto, so a DV
-    committed earlier in the staged chain would be missed and a second
-    live DV for the same data file committed (breaking the
-    one-DV-per-file invariant for newest-DV-only readers).
-    (path-relocation is identity here: the writer operates on the
-    table's own location)"""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
+    """Live deletion vectors by target data file, from the writer's
+    census (``_live_entries`` — the staged head, not a WAP-pinned
+    snapshot, so a DV committed earlier in the staged chain is merged
+    rather than doubled, which would break the one-DV-per-file
+    invariant for newest-DV-only readers)."""
+    _data, deletes, _ = _live_entries(writer)
     live_dvs: dict[str, dict[str, Any]] = {}
-    deleted_dv_keys: set[tuple[str, Any]] = set()
-    candidates: list[tuple[int | None, dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, mf_entries = read_avro_file(mf["manifest_path"])
-        for e in mf_entries:
-            rec = e["data_file"]
-            if not (
-                (rec.get("file_format") or "").upper() == "PUFFIN"
-                and rec.get("content") == 1
-                and rec.get("referenced_data_file")
-            ):
-                continue
-            if e["status"] == 2:
-                deleted_dv_keys.add(
-                    (rec["file_path"], rec.get("content_offset"))
-                )
-            else:
-                candidates.append((_entry_seq(e, mf), rec))
-    for seq, rec in candidates:
-        if (rec["file_path"], rec.get("content_offset")) in deleted_dv_keys:
-            continue
-        # key by the NORMALIZED target path: callers look up with the
-        # scan's scheme-stripped/realpathed __file, and a verbatim key
-        # (e.g. a file:-prefixed user-supplied target) would miss —
-        # skipping the prior-DV merge and leaving TWO live DVs for one
-        # file (newest-only readers then resurrect rows)
-        live_dvs[_norm_data_path(rec["referenced_data_file"])] = dict(
-            rec, _sequence_number=seq
-        )
+    for e, mf in deletes.values():
+        rec = e["data_file"]
+        if (
+            (rec.get("file_format") or "").upper() == "PUFFIN"
+            and rec.get("content") == 1
+            and rec.get("referenced_data_file")
+        ):
+            # key by the NORMALIZED target path: callers look up with
+            # the scan's scheme-stripped/realpathed __file, and a
+            # verbatim key (e.g. a file:-prefixed user-supplied target)
+            # would miss — skipping the prior-DV merge and leaving TWO
+            # live DVs for one file (newest-only readers then resurrect
+            # rows)
+            live_dvs[_norm_data_path(rec["referenced_data_file"])] = dict(
+                rec, _sequence_number=_entry_seq(e, mf)
+            )
     return live_dvs
 
 
-def _dv_added_entry(
-    snapshot_id: int,
-    target: str,
+def _write_dv_puffin(
     path: str,
-    file_size: int,
-    offset: int,
-    length: int,
-    cardinality: int,
-) -> dict[str, Any]:
-    """One ADDED manifest entry for a deletion-vector blob."""
-    return {
-        "status": 1,
-        "snapshot_id": snapshot_id,
-        "data_file": {
-            "content": 1,
-            "file_path": path,
-            "file_format": "PUFFIN",
-            "partition": {},
-            "record_count": cardinality,
-            "file_size_in_bytes": file_size,
-            "lower_bounds": None,
-            "upper_bounds": None,
-            "equality_ids": None,
-            "referenced_data_file": target,
-            "content_offset": offset,
-            "content_size_in_bytes": length,
-        },
-    }
-
-
-def _dv_superseded_entries(
-    live_dvs: dict[str, dict[str, Any]],
-    targets: list[str],
+    items: list[tuple[str, bytes, int]],
     snapshot_id: int,
-) -> list[dict[str, Any]]:
-    """DELETED entries tombstoning the prior DV of every target that got
-    a new (merged) blob — keeps one live DV per data file."""
+    seq: int,
+) -> list[tuple[str, str, int, int, int, int]]:
+    """Write ``(target, blob bytes, cardinality)`` deletion vectors as
+    the ``deletion-vector-v1`` blobs of ONE puffin file — the one body
+    of the driver-side writer and the executor shard task.  Returns one
+    ``(target, path, file size, offset, length, cardinality)`` row per
+    blob."""
+    from daskberg_spark.iceberg.puffin import write_puffin
+
+    metas = write_puffin(
+        path,
+        [
+            {
+                "type": "deletion-vector-v1",
+                "fields": [],
+                "snapshot-id": snapshot_id,
+                "sequence-number": seq,
+                "properties": {
+                    "referenced-data-file": target,
+                    "cardinality": str(int(cardinality)),
+                },
+                "data": bytes(blob),
+            }
+            for target, blob, cardinality in items
+        ],
+    )
+    size = os.path.getsize(path)
     return [
+        (
+            m["properties"]["referenced-data-file"],
+            path,
+            size,
+            m["offset"],
+            m["length"],
+            int(m["properties"]["cardinality"]),
+        )
+        for m in metas
+    ]
+
+
+def _dv_entries(
+    writer: "IcebergWriter",
+    added: list[tuple[str, str, int, int, int, int]],
+    snapshot_id: int,
+    live_dvs: dict[str, dict[str, Any]],
+) -> list[dict[str, Any]]:
+    """Manifest entries for written DV blobs (``_write_dv_puffin`` rows):
+    one ADDED entry per blob, plus a DELETED entry for the prior live DV
+    of every target that got a new (merged) blob — keeps one live DV per
+    data file."""
+    writer._format_version = 3
+    entries = [
+        {
+            "status": 1,
+            "snapshot_id": snapshot_id,
+            "data_file": {
+                "content": 1,
+                "file_path": path,
+                "file_format": "PUFFIN",
+                "partition": {},
+                "record_count": cardinality,
+                "file_size_in_bytes": file_size,
+                "lower_bounds": None,
+                "upper_bounds": None,
+                "equality_ids": None,
+                "referenced_data_file": target,
+                "content_offset": offset,
+                "content_size_in_bytes": length,
+            },
+        }
+        for target, path, file_size, offset, length, cardinality in added
+    ]
+    return entries + [
         {
             "status": 2,
             "snapshot_id": snapshot_id,
@@ -4560,7 +4571,7 @@ def _dv_superseded_entries(
                 k: v for k, v in old.items() if not k.startswith("_")
             },
         }
-        for old in (live_dvs.get(t) for t in targets)
+        for old in (live_dvs.get(a[0]) for a in added)
         if old is not None
     ]
 
@@ -4581,15 +4592,10 @@ def _dv_manifest_entries(
     merged into the new blob and the superseded DV entry is tombstoned
     in the same batch — a spec-conformant foreign reader that applies
     only the newest DV per file then sees every deleted position."""
-    from daskberg_spark.iceberg.puffin import (
-        dv_blob,
-        dv_decode,
-        dv_decode_file,
-        write_puffin,
-    )
+    from daskberg_spark.iceberg.puffin import dv_blob, dv_decode, dv_decode_file
 
     live_dvs = _live_dv_records(writer)
-    merged: list[tuple[str, bytes, int]] = []
+    rows = []
     for target, blob, cardinality in dvs:
         old = live_dvs.get(target)
         if old is not None:
@@ -4604,48 +4610,8 @@ def _dv_manifest_entries(
                 )
             )
             blob, cardinality = dv_blob(positions), len(positions)
-        merged.append((target, blob, cardinality))
-    dvs = merged
-
-    writer._file_counter += 1
-    path = f"{writer.path}/data/dv-{writer._file_counter:05d}-{writer._instance}.puffin"
-    metas = write_puffin(
-        path,
-        [
-            {
-                "type": "deletion-vector-v1",
-                "fields": [],
-                "snapshot-id": snapshot_id,
-                "sequence-number": writer._last_sequence_number + 1,
-                "properties": {
-                    "referenced-data-file": target,
-                    "cardinality": str(cardinality),
-                },
-                "data": blob,
-            }
-            for target, blob, cardinality in dvs
-        ],
-    )
-    writer._format_version = 3
-    file_size = os.path.getsize(path)
-    entries = [
-        _dv_added_entry(
-            snapshot_id,
-            m["properties"]["referenced-data-file"],
-            path,
-            file_size,
-            m["offset"],
-            m["length"],
-            int(m["properties"]["cardinality"]),
-        )
-        for m in metas
-    ]
-    # tombstone superseded DVs (their positions now live in the merged
-    # blob above) so only one DV per data file survives reconciliation
-    entries += _dv_superseded_entries(
-        live_dvs, [t for t, _, _ in dvs if live_dvs.get(t)], snapshot_id
-    )
-    return entries
+        rows.append({"file": target, "blob": blob, "cardinality": cardinality})
+    return _dv_entries_from_rows(writer, rows, snapshot_id, live_dvs)
 
 
 # Distributed-DV commit shape: at or below the gate the finished blobs
@@ -4655,10 +4621,8 @@ def _dv_manifest_entries(
 # puffin and ships only slim (target, path, offset, length, cardinality)
 # rows, keeping driver heap flat in touched-file count (a merge touching
 # millions of files otherwise puts the sum of all bitmaps on the driver).
-DV_SHARD_FILE_GATE = int(os.environ.get("SPARK_GRAFT_DV_SHARD_GATE", "1000"))
-DV_BLOBS_PER_SHARD = int(
-    os.environ.get("SPARK_GRAFT_DV_BLOBS_PER_SHARD", "1000")
-)
+DV_SHARD_FILE_GATE = 1000
+DV_BLOBS_PER_SHARD = 1000
 
 
 def _dv_entries_from_rows(
@@ -4667,51 +4631,22 @@ def _dv_entries_from_rows(
     snapshot_id: int,
     live_dvs: dict[str, dict[str, Any]],
 ) -> list[dict[str, Any]]:
-    """Driver-side puffin write from collected, already-prior-merged
-    ``(file, blob, cardinality)`` rows — the small-commit tail shared by
-    both gates of ``_dv_manifest_entries_spark``."""
-    from daskberg_spark.iceberg.puffin import write_puffin
-
+    """Driver-side puffin write from already-prior-merged ``(file, blob,
+    cardinality)`` rows — the small-commit tail shared by
+    ``_dv_manifest_entries`` and both gates of
+    ``_dv_manifest_entries_spark``."""
     writer._file_counter += 1
     path = (
         f"{writer.path}/data/"
         f"dv-{writer._file_counter:05d}-{writer._instance}.puffin"
     )
-    metas = write_puffin(
+    added = _write_dv_puffin(
         path,
-        [
-            {
-                "type": "deletion-vector-v1",
-                "fields": [],
-                "snapshot-id": snapshot_id,
-                "sequence-number": writer._last_sequence_number + 1,
-                "properties": {
-                    "referenced-data-file": r["file"],
-                    "cardinality": str(int(r["cardinality"])),
-                },
-                "data": bytes(r["blob"]),
-            }
-            for r in rows
-        ],
+        [(r["file"], r["blob"], r["cardinality"]) for r in rows],
+        snapshot_id,
+        writer._last_sequence_number + 1,
     )
-    writer._format_version = 3
-    file_size = os.path.getsize(path)
-    added = [
-        (
-            m["properties"]["referenced-data-file"],
-            path,
-            file_size,
-            m["offset"],
-            m["length"],
-            int(m["properties"]["cardinality"]),
-        )
-        for m in metas
-    ]
-    entries = [_dv_added_entry(snapshot_id, *a) for a in added]
-    entries += _dv_superseded_entries(
-        live_dvs, [a[0] for a in added], snapshot_id
-    )
-    return entries
+    return _dv_entries(writer, added, snapshot_id, live_dvs)
 
 
 def _dv_manifest_entries_spark(
@@ -4793,12 +4728,11 @@ def _dv_manifest_entries_spark(
             n_shards = max(1, -(-n_files // DV_BLOBS_PER_SHARD))
 
             def write_shard(batches):
-                import os as _os
                 import uuid as _uuid
 
                 import pandas as pd
 
-                from daskberg_spark.iceberg.puffin import write_puffin
+                from daskberg_spark.iceberg.writer import _write_dv_puffin
 
                 items = []
                 for pdf in batches:
@@ -4811,39 +4745,11 @@ def _dv_manifest_entries_spark(
                     f"{table_path}/data/"
                     f"dv-{_uuid.uuid4().hex}-{instance}-shard.puffin"
                 )
-                metas = write_puffin(
-                    shard,
-                    [
-                        {
-                            "type": "deletion-vector-v1",
-                            "fields": [],
-                            "snapshot-id": snapshot_id,
-                            "sequence-number": seq,
-                            "properties": {
-                                "referenced-data-file": t_,
-                                "cardinality": str(c_),
-                            },
-                            "data": b_,
-                        }
-                        for t_, b_, c_ in items
-                    ],
-                )
-                size = _os.path.getsize(shard)
                 yield pd.DataFrame(
-                    {
-                        "file": [
-                            m["properties"]["referenced-data-file"]
-                            for m in metas
-                        ],
-                        "path": shard,
-                        "size": size,
-                        "offset": [m["offset"] for m in metas],
-                        "length": [m["length"] for m in metas],
-                        "cardinality": [
-                            int(m["properties"]["cardinality"])
-                            for m in metas
-                        ],
-                    }
+                    _write_dv_puffin(shard, items, snapshot_id, seq),
+                    columns=[
+                        "file", "path", "size", "offset", "length", "cardinality"
+                    ],
                 )
 
             meta_rows = (
@@ -4868,12 +4774,7 @@ def _dv_manifest_entries_spark(
             ]
     finally:
         blobs.unpersist()
-    writer._format_version = 3
-    entries = [_dv_added_entry(snapshot_id, *a) for a in added]
-    entries += _dv_superseded_entries(
-        live_dvs, [a[0] for a in added], snapshot_id
-    )
-    return entries
+    return _dv_entries(writer, added, snapshot_id, live_dvs)
 
 
 def _commit_dv_snapshot(
@@ -5234,29 +5135,17 @@ def rewrite_position_deletes(writer: "IcebergWriter") -> int | None:
     value-identified, not position-identified — compaction folds them.
     Returns the new snapshot id, or None when no live position-delete
     parquet exists."""
-    from daskberg_spark.iceberg.avro import read_avro_file
     from daskberg_spark.iceberg.puffin import dv_blob
 
-    deleted_paths: set[str] = set()
-    live_entries: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:
-                deleted_paths.add(e["data_file"]["file_path"])
-            else:
-                live_entries.append((e, mf))
-    pos_parquet: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    live_data: dict[str, str] = {}  # normalized → recorded path
-    for e, mf in live_entries:
-        rec = e["data_file"]
-        if rec["file_path"] in deleted_paths:
-            continue
-        content = rec.get("content", 0)
-        if content == 0:
-            live_data[_norm_data_path(rec["file_path"])] = rec["file_path"]
-        elif content == 1 and not rec.get("referenced_data_file"):
-            pos_parquet.append((e, mf))
+    data, deletes, _ = _live_entries(writer)
+    # normalized → recorded path
+    live_data = {_norm_data_path(p): p for p in data}
+    pos_parquet = [
+        (e, mf)
+        for e, mf in deletes.values()
+        if e["data_file"].get("content") == 1
+        and not e["data_file"].get("referenced_data_file")
+    ]
     if not pos_parquet:
         return None
     by_target: dict[str, set[int]] = {}
@@ -5272,15 +5161,7 @@ def rewrite_position_deletes(writer: "IcebergWriter") -> int | None:
     snapshot_id = writer._next_snapshot_id
     entries = _dv_manifest_entries(writer, dvs, snapshot_id) if dvs else []
     # tombstone the consumed parquet files in the same commit
-    entries += [
-        {
-            "status": 2,
-            "snapshot_id": snapshot_id,
-            "sequence_number": _entry_seq(e, mf),
-            "data_file": e["data_file"],
-        }
-        for e, mf in pos_parquet
-    ]
+    entries += [_tombstone(e, mf, snapshot_id) for e, mf in pos_parquet]
     writer._format_version = 3
     manifest = writer._write_manifest(entries, snapshot_id)
     writer._commit(snapshot_id, writer.manifests + [manifest], "replace", 0)
@@ -5311,47 +5192,19 @@ def remove_dangling_deletes(writer: "IcebergWriter") -> int | None:
     (a dangling delete by definition kills nothing), so the changelog
     across it is silent.  Returns the snapshot id, or None if nothing
     dangles."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
-    deleted_keys: set[tuple] = set()
-    live: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            rec = e["data_file"]
-            if e["status"] == 2:
-                deleted_keys.add((rec["file_path"], rec.get("content_offset")))
-            else:
-                live.append((e, mf))
-    live = [
-        (e, mf)
-        for e, mf in live
-        if (
-            e["data_file"]["file_path"],
-            e["data_file"].get("content_offset"),
-        )
-        not in deleted_keys
-    ]
-    live_data_norm: set[str] = set()
-    live_data_seqs: list[int] = []
-    delete_entries: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for e, mf in live:
-        rec = e["data_file"]
-        if rec.get("content", 0) == 0:
-            live_data_norm.add(_norm_data_path(rec["file_path"]))
-            live_data_seqs.append(_order_key(e, mf))
-        else:
-            delete_entries.append((e, mf))
+    data, deletes, _ = _live_entries(writer)
+    live_data_norm = {_norm_data_path(p) for p in data}
+    live_data_seqs = [_order_key(e, mf) for e, mf in data.values()]
     min_live_seq = min(live_data_seqs) if live_data_seqs else None
-    dangling: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for e, mf in delete_entries:
+    dangling: set[tuple[str, int]] = set()
+    for key, (e, mf) in deletes.items():
         rec = e["data_file"]
         if rec.get("referenced_data_file"):
             if _norm_data_path(rec["referenced_data_file"]) not in live_data_norm:
-                dangling.append((e, mf))
+                dangling.add(key)
         elif rec.get("content") == 2:
             if min_live_seq is None or min_live_seq >= _order_key(e, mf):
-                dangling.append((e, mf))
+                dangling.add(key)
         else:  # position-delete parquet: read its target paths
             targets = (
                 pq.read_table(rec["file_path"], columns=["file_path"])
@@ -5362,75 +5215,21 @@ def remove_dangling_deletes(writer: "IcebergWriter") -> int | None:
             if all(
                 _norm_data_path(str(p)) not in live_data_norm for p in targets
             ):
-                dangling.append((e, mf))
+                dangling.add(key)
     if not dangling:
         return None
     # Rewrite every manifest that still CARRIES a dangling entry —
     # committing only tombstones would resurrect the deletes one commit
     # later (_commit drops tombstone-only manifests from prior
     # snapshots while the carried manifests still hold the entries).
-    # Same survivor-rewrite shape as delete_files.
-    dangling_keys = {
-        (
-            e["data_file"]["file_path"],
-            e["data_file"].get("content_offset"),
-        )
-        for e, _mf in dangling
-    }
-
-    def _key(e: dict[str, Any]) -> tuple:
-        return (
-            e["data_file"]["file_path"],
-            e["data_file"].get("content_offset"),
-        )
-
     snapshot_id = writer._next_snapshot_id
-    keep_manifests = []
-    tomb_by_spec: dict[int, list[dict[str, Any]]] = {}
-    for mf in writer.manifests:
-        from daskberg_spark.iceberg.avro import read_avro_file as _read
-
-        mf_spec = mf.get("partition_spec_id", 0)
-        _, entries = _read(mf["manifest_path"])
-        hit = [
-            e for e in entries if e["status"] != 2 and _key(e) in dangling_keys
-        ]
-        if not hit:
-            keep_manifests.append(mf)
-            continue
-        for e in hit:
-            tomb_by_spec.setdefault(mf_spec, []).append(
-                {
-                    "status": 2,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": _entry_seq(e, mf),
-                    "data_file": e["data_file"],
-                }
-            )
-        survivors = [
-            {
-                # tombstones in a mixed manifest keep status 2 — writing
-                # them back as EXISTING would resurrect superseded DVs /
-                # consumed delete files
-                "status": 2 if e["status"] == 2 else 0,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": _entry_seq(e, mf),
-                "data_file": e["data_file"],
-            }
-            for e in entries
-            if not (e["status"] != 2 and _key(e) in dangling_keys)
-        ]
-        if survivors:
-            keep_manifests.append(
-                writer._write_manifest(survivors, snapshot_id, spec_id=mf_spec)
-            )
-    tomb_manifests = [
-        writer._write_manifest(es, snapshot_id, spec_id=sid)
-        for sid, es in sorted(tomb_by_spec.items())
-    ]
+    keep_manifests, hits_by_spec = writer._tombstone_rewrite(
+        lambda e, _mf: _entry_key(e["status"], e["data_file"])[1] in dangling,
+        snapshot_id,
+    )
     writer._commit(
         snapshot_id,
-        keep_manifests + tomb_manifests,
+        keep_manifests + _tombstone_manifests(writer, hits_by_spec, snapshot_id),
         "delete",
         0,
         extra_summary={"removed-delete-files": str(len(dangling))},
@@ -5465,25 +5264,14 @@ def convert_deletes_to_dvs(writer: "IcebergWriter", spark: Any) -> int | None:
     works.  Returns the snapshot id, or None when the table has no live
     non-DV delete files."""
     import daskberg_spark.iceberg.scan as _scan
-    from daskberg_spark.iceberg.avro import read_avro_file
     from daskberg_spark.iceberg.conversions import schema_to_struct
     from daskberg_spark.iceberg.metadata import IcebergTable
 
-    deleted_paths: set[str] = set()
-    live_entries: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:
-                deleted_paths.add(e["data_file"]["file_path"])
-            else:
-                live_entries.append((e, mf))
+    _data, deletes, _ = _live_entries(writer)
     consumed = [
         (e, mf)
-        for e, mf in live_entries
-        if e["data_file"]["file_path"] not in deleted_paths
-        and e["data_file"].get("content", 0) in (1, 2)
-        and not e["data_file"].get("referenced_data_file")
+        for e, mf in deletes.values()
+        if not e["data_file"].get("referenced_data_file")
     ]
     if not consumed:
         return None
@@ -5499,15 +5287,7 @@ def convert_deletes_to_dvs(writer: "IcebergWriter", spark: Any) -> int | None:
         live = t.to_df(spark, keep_pos=True).select("__file", "__pos")
         dead = raw.join(live, ["__file", "__pos"], "left_anti")
         entries = _dv_manifest_entries_spark(writer, spark, dead, snapshot_id)
-    entries += [
-        {
-            "status": 2,
-            "snapshot_id": snapshot_id,
-            "sequence_number": _entry_seq(e, mf),
-            "data_file": e["data_file"],
-        }
-        for e, mf in consumed
-    ]
+    entries += [_tombstone(e, mf, snapshot_id) for e, mf in consumed]
     writer._format_version = 3
     manifest = writer._write_manifest(entries, snapshot_id)
     writer._commit(snapshot_id, writer.manifests + [manifest], "replace", 0)
@@ -5531,30 +5311,13 @@ def rewrite_manifests(
     even though every entry now lives in a manifest committed later
     than all of them.  One ``replace`` snapshot; returns its id, or
     None when consolidation would not reduce the manifest count."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
     snapshot_id = writer._next_snapshot_id
-    deleted: set[str] = set()
-    loaded: list[tuple[int, list[dict[str, Any]], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        loaded.append((mf.get("partition_spec_id", 0), entries, mf))
-        for e in entries:
-            if e["status"] == 2:
-                deleted.add(e["data_file"]["file_path"])
+    data, deletes, _ = _live_entries(writer)
     live_by_spec: dict[int, list[dict[str, Any]]] = {}
-    for spec_id, entries, mf in loaded:
-        for e in entries:
-            if e["status"] == 2 or e["data_file"]["file_path"] in deleted:
-                continue
-            live_by_spec.setdefault(spec_id, []).append(
-                {
-                    "status": 0,
-                    "snapshot_id": e.get("snapshot_id"),
-                    "sequence_number": _entry_seq(e, mf),
-                    "data_file": e["data_file"],
-                }
-            )
+    for e, mf in [*data.values(), *deletes.values()]:
+        live_by_spec.setdefault(mf.get("partition_spec_id", 0), []).append(
+            _carry(e, mf)
+        )
     n_target = sum(
         max(1, -(-len(v) // max_entries_per_manifest))
         for v in live_by_spec.values()
@@ -5600,71 +5363,34 @@ def migrate_legacy_eq_deletes(writer: "IcebergWriter") -> int | None:
     genuine NULL-partition scope (e.g. a Flink upsert on a nullable
     partition source) must NOT be migrated — the default scoped read
     is already correct for it."""
-    from daskberg_spark.iceberg.avro import read_avro_file
 
-    deleted: set[str] = set()
-    loaded: list[tuple[int, list[dict[str, Any]], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        loaded.append((mf.get("partition_spec_id", 0), entries, mf))
-        for e in entries:
-            if e["status"] == 2:
-                deleted.add(e["data_file"]["file_path"])
-
-    def is_legacy(spec_id: int, e: dict[str, Any]) -> bool:
+    def is_legacy(e: dict[str, Any], mf: dict[str, Any]) -> bool:
         rec = e["data_file"]
-        if (
-            e["status"] == 2
-            or rec["file_path"] in deleted
-            or rec.get("content") != 2
-        ):
+        spec_id = mf.get("partition_spec_id", 0)
+        if rec.get("content") != 2:
             return False
         if spec_id >= len(writer.specs) or not writer.specs[spec_id]:
             return False  # already global (unpartitioned spec)
         part = rec.get("partition") or {}
         return bool(part) and all(v is None for v in part.values())
 
-    if not any(
-        is_legacy(sid, e) for sid, entries, _mf in loaded for e in entries
-    ):
-        return None
     snapshot_id = writer._next_snapshot_id
-    gspec = writer._global_delete_spec_id()
-
-    def carry(e: dict[str, Any], mf: dict[str, Any]) -> dict[str, Any]:
-        # ADDED → EXISTING with explicit sequence/snapshot: the rebuilt
-        # manifest is registered under the NEW snapshot, so inherited
-        # values would mis-sequence every carried entry
-        return {
-            "status": 2 if e["status"] == 2 else 0,
-            "snapshot_id": (
-                e.get("snapshot_id")
-                if e.get("snapshot_id") is not None
-                else mf.get("added_snapshot_id")
-            ),
-            "sequence_number": _entry_seq(e, mf),
-            "data_file": e["data_file"],
-        }
-
-    manifests: list[dict[str, Any]] = []
-    migrated: list[dict[str, Any]] = []
-    for spec_id, entries, mf in loaded:
-        hits = [e for e in entries if is_legacy(spec_id, e)]
-        if not hits:
-            manifests.append(mf)  # untouched manifest passes through
-            continue
-        hit_ids = {id(e) for e in hits}
-        kept = [carry(e, mf) for e in entries if id(e) not in hit_ids]
-        if kept:
-            manifests.append(
-                writer._write_manifest(kept, snapshot_id, spec_id=spec_id)
-            )
-        for e in hits:
-            m = carry(e, mf)
+    manifests, hits_by_spec = writer._tombstone_rewrite(is_legacy, snapshot_id)
+    if not hits_by_spec:
+        return None
+    # the delete parquet files are re-registered under the global spec
+    # with the carry rule's explicit sequence/snapshot (the rebuilt
+    # manifest is registered under the NEW snapshot)
+    migrated = []
+    for hits in hits_by_spec.values():
+        for e, mf in hits:
+            m = _carry(e, mf)
             m["data_file"] = dict(m["data_file"], partition={})
             migrated.append(m)
     manifests.append(
-        writer._write_manifest(migrated, snapshot_id, spec_id=gspec)
+        writer._write_manifest(
+            migrated, snapshot_id, spec_id=writer._global_delete_spec_id()
+        )
     )
     # same-commit property drop: after migration the legacy read rule
     # has nothing left to apply to
@@ -5984,23 +5710,11 @@ def _live_deletes(
     ``order_key`` is the delete file's data sequence number (explicit or
     manifest-inherited); pre-sequence-number metadata falls back to the
     adding snapshot id, which this writer allocates monotonically."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
     id_to_name = {f["id"]: f["name"] for f in writer.fields}
-    deleted_paths: set[str] = set()
-    live: list[tuple[dict[str, Any], dict[str, Any]]] = []  # (entry, manifest)
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:
-                deleted_paths.add(e["data_file"]["file_path"])
-            else:
-                live.append((e, mf))
+    _data, deletes, _ = _live_entries(writer)
     eq_deletes, pos_pairs = [], set()
-    for e, mf in live:
+    for e, mf in deletes.values():
         rec = e["data_file"]
-        if rec["file_path"] in deleted_paths:
-            continue
         content = rec.get("content", 0)
         if content == 1:
             if rec.get("referenced_data_file"):
@@ -6256,8 +5970,6 @@ def maintain(
     reports what WOULD run without committing anything.  Returns a
     report dict with one entry per step (snapshot id / expired ids /
     removed count / skipped)."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
     if orphan_older_than_ms == "auto":
         import time as _time
 
@@ -6271,35 +5983,21 @@ def maintain(
             "expire_snapshots": [],
             "remove_orphans": 0,
         }
-    # two passes: tombstones live in LATER manifests than the status-1
-    # entries they kill, so the small-file gate must reconcile across
-    # manifests or it would count already-deleted files as compactable
-    deleted_paths: set[str] = set()
-    live_entries: list[tuple[dict[str, Any], dict[str, Any]]] = []
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:
-                deleted_paths.add(e["data_file"]["file_path"])
-            else:
-                live_entries.append((e, mf))
+    # the small-file gate counts reconciled live files: tombstones live
+    # in LATER manifests than the status-1 entries they kill
+    data, deletes, _ = _live_entries(writer)
     by_group: dict[tuple, int] = {}
-    has_pos_deletes = False
-    for e, mf in live_entries:
+    for e, mf in data.values():
         rec = e["data_file"]
-        if rec.get("content", 0) == 1 and rec["file_path"] not in deleted_paths:
-            has_pos_deletes = True
-        if (
-            rec.get("content", 0) != 0
-            or rec["file_path"] in deleted_paths
-        ):
-            continue
         if int(rec.get("file_size_in_bytes") or 0) < min_file_bytes:
             key = (
                 mf.get("partition_spec_id", 0),
                 str(rec.get("partition")),
             )
             by_group[key] = by_group.get(key, 0) + 1
+    has_pos_deletes = any(
+        e["data_file"].get("content") == 1 for e, _mf in deletes.values()
+    )
     small_groups = sum(1 for n in by_group.values() if n >= 2)
     # DV/position-delete dead weight also triggers the Spark rewrite
     # (real Iceberg's delete-ratio): cheap metadata census — any live
@@ -6568,31 +6266,11 @@ def compact_files(
 
     Driver-side rewrite at test scale; a cluster runs the same per-group
     rewrite as Spark jobs committing through this metadata layer."""
-    from daskberg_spark.iceberg.avro import read_avro_file
-
     snapshot_id = writer._next_snapshot_id
     current_names = [f["name"] for f in writer.fields]
-    # pass 1: reconcile live entries across all manifests
-    deleted_paths: set[str] = set()
-    raw: list[tuple[int, dict[str, Any]]] = []  # (spec_id, entry)
-    for mf in writer.manifests:
-        _, entries = read_avro_file(mf["manifest_path"])
-        for e in entries:
-            if e["status"] == 2:
-                deleted_paths.add(e["data_file"]["file_path"])
-            else:
-                raw.append((mf.get("partition_spec_id", 0), e, mf))
+    # pass 1: the reconciled census
+    data, deletes, _ = _live_entries(writer)
     eq_deletes, pos_pairs = _live_deletes(writer)
-    data_entries = []
-    delete_file_entries: list[tuple[int, dict[str, Any], dict[str, Any]]] = []
-    for spec_id, e, mf in raw:
-        rec = e["data_file"]
-        if rec["file_path"] in deleted_paths:
-            continue
-        if rec.get("content", 0) in (1, 2):
-            delete_file_entries.append((spec_id, e, mf))
-        else:
-            data_entries.append((spec_id, e, mf))
 
     def live_rows(
         entry: dict[str, Any], manifest: dict[str, Any]
@@ -6613,8 +6291,8 @@ def compact_files(
         )
 
     # pass 2: group small files per (spec, partition)
-    groups: dict[tuple[int, tuple], list[dict[str, Any]]] = {}
-    for spec_id, e, mf in data_entries:
+    groups: dict[tuple[int, tuple], list[Located]] = {}
+    for e, mf in data.values():
         rec = e["data_file"]
         if rec.get("file_size_in_bytes", 0) >= min_file_bytes:
             continue
@@ -6629,7 +6307,9 @@ def compact_files(
             # (or even reading) the rest
             continue
         pkey = tuple(sorted(part.items()))
-        groups.setdefault((spec_id, pkey), []).append((e, mf))
+        groups.setdefault((mf.get("partition_spec_id", 0), pkey), []).append(
+            (e, mf)
+        )
 
     compacted_paths: set[str] = set()
     new_entries_by_spec: dict[int, list[dict[str, Any]]] = {}
@@ -6664,12 +6344,7 @@ def compact_files(
         for e, mf in es:
             compacted_paths.add(e["data_file"]["file_path"])
             tombstones_by_spec.setdefault(spec_id, []).append(
-                {
-                    "status": 2,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": _entry_seq(e, mf),
-                    "data_file": e["data_file"],
-                }
+                _tombstone(e, mf, snapshot_id)
             )
     if not compacted_paths:
         return None
@@ -6681,20 +6356,19 @@ def compact_files(
     # rewritten; an equality delete is dead when no SURVIVING data file
     # has a strictly lower sequence (new compacted entries take this
     # commit's higher sequence, so they never re-qualify).  A puffin
-    # path tombstones only when ALL its blobs are superseded — DELETED
-    # reconciliation is per path, and one tombstone kills every blob.
+    # path tombstones only when ALL its blobs are superseded: the file
+    # stays referenced while any blob is live, so dropping single blobs
+    # would free no bytes.
     norm_compacted = {_norm_data_path(p) for p in compacted_paths}
     survivor_data_keys = [
         _order_key(e, mf)
-        for _sid, e, mf in data_entries
-        if e["data_file"]["file_path"] not in compacted_paths
+        for path, (e, mf) in data.items()
+        if path not in compacted_paths
     ]
     superseded: set[tuple[str, int]] = set()  # (path, blob offset)
-    by_path: dict[str, list[tuple[int, dict[str, Any], dict[str, Any]]]] = {}
-    for spec_id, e, mf in delete_file_entries:
-        by_path.setdefault(e["data_file"]["file_path"], []).append(
-            (spec_id, e, mf)
-        )
+    by_path: dict[str, list[tuple[tuple[str, int], Located]]] = {}
+    for key, located in deletes.items():
+        by_path.setdefault(key[0], []).append((key, located))
 
     def _delete_entry_dead(e: dict[str, Any], mf: dict[str, Any]) -> bool:
         rec = e["data_file"]
@@ -6711,38 +6385,22 @@ def compact_files(
         dkey = _order_key(e, mf)
         return all(k >= dkey for k in survivor_data_keys)
 
-    for path, items in by_path.items():
-        if all(_delete_entry_dead(e, mf) for _sid, e, mf in items):
-            for _sid, e, mf in items:
-                superseded.add(
-                    (path, e["data_file"].get("content_offset") or 0)
-                )
-            sid0, e0, mf0 = items[0]
-            tombstones_by_spec.setdefault(sid0, []).append(
-                {
-                    "status": 2,
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": _entry_seq(e0, mf0),
-                    "data_file": e0["data_file"],
-                }
-            )
+    for items in by_path.values():
+        if all(_delete_entry_dead(e, mf) for _key, (e, mf) in items):
+            superseded.update(key for key, _located in items)
+            _key0, (e0, mf0) = items[0]
+            tombstones_by_spec.setdefault(
+                mf0.get("partition_spec_id", 0), []
+            ).append(_tombstone(e0, mf0, snapshot_id))
 
     # pass 3: rebuild the manifest list — survivors as EXISTING, grouped
     # by origin spec so partition records decode correctly
     survivors_by_spec: dict[int, list[dict[str, Any]]] = {}
-    for spec_id, e, mf in data_entries + delete_file_entries:
-        rec = e["data_file"]
-        if rec["file_path"] in compacted_paths:
+    for key, (e, mf) in [*data.items(), *deletes.items()]:
+        if key in compacted_paths or key in superseded:
             continue
-        if (rec["file_path"], rec.get("content_offset") or 0) in superseded:
-            continue
-        survivors_by_spec.setdefault(spec_id, []).append(
-            {
-                "status": 0,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": _entry_seq(e, mf),
-                "data_file": e["data_file"],
-            }
+        survivors_by_spec.setdefault(mf.get("partition_spec_id", 0), []).append(
+            _carry(e, mf)
         )
     manifests = []
     for sid in sorted(

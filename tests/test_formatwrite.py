@@ -218,7 +218,9 @@ def test_avro_task_flush_budget(spark, monkeypatch):
     # review finding: a task buffered its whole input before writing;
     # the flush budget must cap per-group buffering by spilling extra
     # containers (manifest tolerates several files per tuple)
-    monkeypatch.setenv("DASKBERG_AVRO_WRITE_FLUSH_ROWS", "40")
+    import daskberg_spark.iceberg.writer as writer_mod
+
+    monkeypatch.setattr(writer_mod, "AVRO_WRITE_FLUSH_ROWS", 40)
     d, w = _table()
     # small arrow batches so the budget sees MULTIPLE batches per task
     # (a single batch flushes whole — arrow batch size is the floor)

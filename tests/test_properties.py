@@ -383,10 +383,12 @@ def test_nested_leaf_pruning_never_loses_matches(ranges, op, value):
 
 # -- MOR-surface interaction matrix (round 7) --------------------------------
 # Random interleavings of appends, predicate DV deletes, merge-on-read
-# expression UPDATEs, and metadata rollbacks: table content must always
-# equal the Python model, the v3 one-DV-per-file invariant must hold
-# after every commit, and rollback must land exactly on the modeled
-# earlier state (lineage-truncated history).
+# expression UPDATEs, metadata rollbacks, and the content-preserving
+# maintenance rewrites (manifest consolidation, driver-side compaction):
+# table content must always equal the Python model, the v3
+# one-DV-per-file invariant must hold after every commit, and rollback
+# must land exactly on the modeled earlier state (lineage-truncated
+# history).
 
 _mor_ops_st = st.lists(
     st.one_of(
@@ -398,6 +400,8 @@ _mor_ops_st = st.lists(
             lambda t: ("mor_update", t)
         ),
         st.just(("rollback", None)),
+        st.just(("rewrite_manifests", None)),
+        st.just(("compact", None)),
     ),
     min_size=3,
     max_size=6,
@@ -413,7 +417,9 @@ def test_mor_surface_matrix(spark, ops):
     from daskberg_spark.iceberg.metadata import IcebergTable
     from daskberg_spark.iceberg.writer import (
         IcebergWriter,
+        compact_files,
         delete_where_dv_spark,
+        rewrite_manifests,
         rollback_to,
         update_where_mor_spark,
     )
@@ -471,6 +477,12 @@ def test_mor_surface_matrix(spark, ops):
             if hit:
                 for k in hit:
                     model[k] += add
+                committed()
+        elif op == "rewrite_manifests":
+            if rewrite_manifests(w) is not None:
+                committed()
+        elif op == "compact":
+            if compact_files(w, min_file_bytes=1 << 40) is not None:
                 committed()
         else:  # rollback one committed state
             if len(snap_ids) >= 2:

@@ -2413,6 +2413,72 @@ def test_rewrite_manifests_preserves_sequence_applicability(spark, tmp_path):
     assert rewrite_manifests(w) is None
 
 
+def _shared_puffin_table(path: str):
+    """Two data files A and B whose first DVs share ONE puffin file
+    (two blobs under one path), then a second DV for A that merges A's
+    prior blob and tombstones it by (path, offset) — B's blob stays
+    live.  Returns (writer, A path, B path)."""
+    from daskberg_spark.iceberg.writer import IcebergWriter
+
+    w = IcebergWriter(
+        path,
+        [
+            {"id": 1, "name": "id", "type": "long", "required": False},
+            {"id": 2, "name": "v", "type": "string", "required": False},
+        ],
+    )
+    w.append([{"id": i, "v": "a"} for i in range(5)])
+    w.append([{"id": i, "v": "b"} for i in range(5, 10)])
+    a, b = sorted(f["file_path"] for f in IcebergTable(path).plan_files())
+    w.delete_positions_dv({a: [0], b: [0]})
+    w.delete_positions_dv({a: [1]})
+    return w, a, b
+
+
+def test_rewrite_manifests_keeps_sibling_dv_blob(tmp_path):
+    """Superseding one blob of a multi-blob puffin must not drop its
+    siblings: rewrite_manifests reconciles delete entries by (path,
+    blob offset), the reader's rule, so B's DV survives consolidation
+    (a path-keyed tombstone set dropped it and B's deleted row came
+    back for every reader)."""
+    from daskberg_spark.iceberg.writer import rewrite_manifests
+
+    p = str(tmp_path / "t")
+    w, a, b = _shared_puffin_table(p)
+
+    def dv_targets():
+        return sorted(
+            d["referenced_data_file"] for d in IcebergTable(p).plan_deletes()
+        )
+
+    assert dv_targets() == [a, b]
+    assert rewrite_manifests(w) is not None
+    assert dv_targets() == [a, b]
+
+
+def test_driver_rewrites_keep_sibling_dv_deletes(spark, tmp_path):
+    """Driver-side compact_files and merge_rows apply every live DV to
+    the rows they rewrite — including a sibling blob in a puffin file
+    whose other blob was superseded — so the table's row set is
+    unchanged by compaction and changed by a merge only by the update."""
+    from daskberg_spark.iceberg.writer import compact_files
+
+    p = str(tmp_path / "t")
+    w, _a, _b = _shared_puffin_table(p)
+    w.append([{"id": i, "v": "c"} for i in range(10, 20)])
+
+    def rows():
+        return sorted(map(tuple, IcebergTable(p).to_df(spark).collect()))
+
+    before = rows()
+    assert len(before) == 17 and (5, "b") not in before
+    w.merge_rows([{"id": 6, "v": "B"}], ["id"])
+    merged = sorted((i, "B" if i == 6 else v) for i, v in before)
+    assert rows() == merged
+    assert compact_files(w, min_file_bytes=1 << 40) is not None
+    assert rows() == merged
+
+
 def test_table_properties_roundtrip(tmp_path):
     """set_properties emits the spec ``properties`` map and load restores
     it across processes."""

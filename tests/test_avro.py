@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import io
 import json
+import os
 
 import pytest
 
@@ -618,3 +619,175 @@ def test_compiled_encoder_matches_generic():
     bad = io.BytesIO()
     with _pytest.raises(KeyError):
         A.write_avro(schema, [{"a": 1}], bad)
+
+
+# -- per-schema decoder memo --------------------------------------------------
+
+
+def _legacy_records(data: bytes) -> list:
+    """Decode a container through the dispatching ``_decode`` with a
+    header parsed here — the memo-free reference for the compiled path."""
+    from daskberg_spark.iceberg import avro as A
+
+    buf = io.BytesIO(data)
+    assert buf.read(4) == A.MAGIC
+    meta = {}
+    while (n := A._read_long(buf)) != 0:
+        if n < 0:
+            A._read_long(buf)
+            n = -n
+        for _ in range(n):
+            key = A._read_bytes(buf).decode("utf-8")
+            meta[key] = A._read_bytes(buf)
+    sync = buf.read(16)
+    schema = json.loads(meta["avro.schema"])
+    names: dict = {}
+    A._register_names(schema, names)
+    codec = meta.get("avro.codec", b"null").decode()
+    out = []
+    while buf.tell() < len(data):
+        count = A._read_long(buf)
+        block = buf.read(A._read_long(buf))
+        payload = io.BytesIO(A._decompress_block(block, codec))
+        out.extend(A._decode(schema, payload, names) for _ in range(count))
+        assert buf.read(16) == sync
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(_schema_and_records(), st.sampled_from(["null", "deflate", "snappy"]))
+def test_decoder_memo_miss_then_hit_matches_legacy(sr, codec):
+    """The same container decoded twice — first a memo miss that
+    compiles, then a hit that reuses the compiled decoder — yields the
+    legacy ``_decode`` records both times."""
+    from daskberg_spark.iceberg import avro as A
+
+    schema, records = sr
+    buf = io.BytesIO()
+    write_avro(schema, records, buf, codec=codec)
+    data = buf.getvalue()
+    A._memo.clear()
+    meta, first = read_avro(data)
+    key = ("decoder", meta["avro.schema"], None)
+    compiled = A._memo[key]
+    _, second = read_avro(data)
+    assert A._memo[key] is compiled
+    legacy = _legacy_records(data)
+    assert first == legacy
+    assert second == legacy
+    assert legacy == records
+
+
+def test_decoder_memo_same_schema_distinct_payloads(tmp_path):
+    """Files sharing one schema share its compiled decoders, yet each
+    decodes to its own records — through the whole-file reader and both
+    split readers, projected or not (the columnar reader's column lists
+    are per call, never memoised)."""
+    from daskberg_spark.iceberg import avro as A
+
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [
+            {"name": "k", "type": "long"},
+            {"name": "s", "type": ["null", "string"]},
+            {"name": "xs", "type": {"type": "array", "items": "int"}},
+        ],
+    }
+    rows = {
+        "a": [{"k": i, "s": f"a{i}", "xs": [i]} for i in range(30)],
+        "b": [{"k": -i, "s": None, "xs": [i, i]} for i in range(7)],
+    }
+    paths = {}
+    for name, recs in rows.items():
+        paths[name] = str(tmp_path / f"{name}.avro")
+        A.write_avro_file(paths[name], schema, recs)
+    A._memo.clear()
+    for _ in range(2):  # a miss, then a hit
+        for name, recs in rows.items():
+            path = paths[name]
+            end = os.path.getsize(path)
+            assert A.read_avro_file(path)[1] == recs
+            assert A.read_avro_range(path, 0, end)[1] == recs
+            _, proj, _ = A.read_avro_range(path, 0, end, columns=["s"])
+            assert proj == [{"s": r["s"]} for r in recs]
+            cols, n, _ = A.read_avro_range_columns(path, 0, end, columns=["k", "xs"])
+            assert n == len(recs)
+            assert cols == {
+                "k": [r["k"] for r in recs],
+                "xs": [r["xs"] for r in recs],
+            }
+    # one schema parse and three compiled decoders serve all four files
+    assert {(k[0], k[2:]) for k in A._memo} == {
+        ("schema", ()),
+        ("decoder", (None,)),
+        ("decoder", (frozenset({"s"}),)),
+        ("columnar", (frozenset({"k", "xs"}),)),
+    }
+
+
+def test_decoder_memo_is_bounded():
+    """More distinct schemas than the bound never grow the memo past it,
+    and every file still decodes to its own records."""
+    from daskberg_spark.iceberg import avro as A
+
+    A._memo.clear()
+    for i in range(A._MEMO_MAX + 10):
+        schema = {
+            "type": "record",
+            "name": f"r{i}",
+            "fields": [{"name": f"f{i}", "type": "long"}],
+        }
+        buf = io.BytesIO()
+        write_avro(schema, [{f"f{i}": i}], buf)
+        assert read_avro(buf.getvalue())[1] == [{f"f{i}": i}]
+        assert len(A._memo) <= A._MEMO_MAX
+
+
+def test_decoder_memo_shared_by_threads():
+    """Reader threads (the statistics chains decode manifests on a pool)
+    share the lock-free memo: with more threads than cores, a tiny switch
+    interval and more schemas than the bound — so clears race lookups —
+    every decode still returns its own file's records."""
+    import sys
+    import threading
+
+    from daskberg_spark.iceberg import avro as A
+
+    blobs = []
+    for i in range(A._MEMO_MAX + 16):
+        schema = {
+            "type": "record",
+            "name": f"r{i}",
+            "fields": [{"name": "k", "type": "long"}, {"name": f"f{i}", "type": "string"}],
+        }
+        recs = [{"k": i * 100 + j, f"f{i}": f"v{i}.{j}"} for j in range(5)]
+        buf = io.BytesIO()
+        write_avro(schema, recs, buf)
+        blobs.append((buf.getvalue(), recs))
+    errors: list = []
+
+    def work(offset: int) -> None:
+        try:
+            for r in range(3):
+                for j in range(len(blobs)):
+                    data, recs = blobs[(j * 7 + offset + r) % len(blobs)]
+                    if read_avro(data)[1] != recs:
+                        errors.append((offset, j))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    A._memo.clear()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(2 * os.cpu_count() + 2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(A._memo) <= A._MEMO_MAX + len(threads)

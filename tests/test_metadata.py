@@ -636,3 +636,64 @@ def test_forged_fixture_manifest_lengths_consistent():
                 )
                 checked += 1
     assert checked > 0
+
+
+def _dv_day_table(tmp_path):
+    """Pure-Python-written table partitioned by ``day``: two commits
+    span days 0-1, a third holds day 2 only, and a DV delete makes
+    ``plan_deletes`` non-empty."""
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.writer import IcebergWriter
+
+    p = str(tmp_path / "t")
+    w = IcebergWriter(
+        p,
+        [
+            {"id": 1, "name": "id", "type": "long", "required": False},
+            {"id": 2, "name": "day", "type": "int", "required": False},
+        ],
+        [{"name": "day", "transform": "identity", "source": "day"}],
+    )
+    w.append([{"id": i, "day": i % 2} for i in range(6)])
+    w.append([{"id": i, "day": i % 2} for i in range(6, 12)])
+    w.append([{"id": i, "day": 2} for i in range(12, 15)])
+    target = IcebergTable(p).plan_files([("day", "==", 0)])[0]["file_path"]
+    w.delete_positions_dv({target: [0]})
+    return p
+
+
+@pytest.mark.parametrize(
+    "filters, reconciles",
+    [
+        ([("day", ">=", 0), ("id", "<", 9)], 1),  # summaries prune nothing
+        ([("day", "==", 2)], 2),  # the day-0/1 manifests are pruned
+    ],
+)
+def test_plan_then_census_reconciles_once(tmp_path, monkeypatch, filters, reconciles):
+    """to_df's sequence on a fresh handle — ``plan_files(filters)`` then
+    the unfiltered ``scan_all()`` and ``plan_deletes()`` — reconciles the
+    manifests once when the partition summaries prune no manifest (the
+    driver result is keyed on the surviving manifests), and twice when
+    they prune one.  Either way each call returns what a handle calling
+    them in the opposite order returns."""
+    from daskberg_spark.iceberg import metadata as M
+
+    p = _dv_day_table(tmp_path)
+    calls = []
+    merge = M._merge_events
+
+    def counting(event_lists):
+        calls.append(len(event_lists))
+        return merge(event_lists)
+
+    monkeypatch.setattr(M, "_merge_events", counting)
+    t = M.IcebergTable(p)
+    planned = t.plan_files(filters)
+    census = t.scan_all()
+    deletes = t.plan_deletes()
+    assert len(calls) == reconciles
+    assert deletes and planned
+    u = M.IcebergTable(p)
+    assert u.plan_deletes() == deletes
+    assert u.scan_all() == census
+    assert u.plan_files(filters) == planned

@@ -442,28 +442,28 @@ def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
 
 # Every manifest of a table shares one Avro schema, and a compiled
 # decoder is a pure function of its schema: memoised by the raw
-# ``avro.schema`` bytes (plus the projection), the schema parses and
-# compiles once instead of once per file — 150 one-schema manifests
-# decoded in ~61 ms compiling per file, ~26 ms through the memo (4-vCPU
-# host).  This holds code, never decoded data.  Bounded; a full memo is
-# cleared, not iterated, so reader threads share it without a lock.
+# ``avro.schema`` bytes, the schema parses and compiles once instead of
+# once per file — 150 one-schema manifests decoded in ~61 ms compiling
+# per file, ~26 ms through the memo (4-vCPU host).  This holds code,
+# never decoded data.  Bounded; a full memo is cleared, not iterated, so
+# reader threads share it without a lock.
 _MEMO_MAX = 64
-_memo: dict[tuple, Any] = {}
+_memo: dict[bytes, Any] = {}
 
 
-def _memoised(key: tuple, build):
-    """``build()``, cached under ``key`` (kind, schema bytes, ...)."""
-    hit = _memo.get(key)
-    if hit is None:
-        hit = build()
+def _record_decoder(raw: bytes):
+    """The compiled record decoder for schema bytes ``raw``, memoised."""
+    dec = _memo.get(raw)
+    if dec is None:
+        dec = _compile_decoder(*_load_schema(raw))
         if len(_memo) >= _MEMO_MAX:
             _memo.clear()
-        _memo[key] = hit
-    return hit
+        _memo[raw] = dec
+    return dec
 
 
-def _parse_header(buf) -> tuple[dict[str, bytes], Any, str, bytes, dict]:
-    """Container header → (metadata, schema, codec, sync, name registry)."""
+def _parse_header(buf) -> tuple[dict[str, bytes], bytes, str, bytes]:
+    """Container header → (metadata, raw schema bytes, codec, sync)."""
     if buf.read(4) != MAGIC:
         raise ValueError("not an Avro object container file")
     meta: dict[str, bytes] = {}
@@ -479,12 +479,11 @@ def _parse_header(buf) -> tuple[dict[str, bytes], Any, str, bytes, dict]:
             meta[key] = _read_bytes(buf)
     sync = buf.read(16)
     codec = meta.get("avro.codec", b"null").decode()
-    raw = meta["avro.schema"]
-    schema, names = _memoised(("schema", raw), lambda: _load_schema(raw))
-    return meta, schema, codec, sync, names
+    return meta, meta["avro.schema"], codec, sync
 
 
 def _load_schema(raw: bytes) -> tuple[Any, dict[str, Any]]:
+    """Schema bytes → (parsed schema, name registry)."""
     schema = json.loads(raw)
     names: dict[str, Any] = {}
     _register_names(schema, names)
@@ -512,11 +511,8 @@ def _decompress_block(block: bytes, codec: str) -> bytes:
 def read_avro(data: bytes) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
     """Decode an Avro object-container file → (file metadata, records)."""
     buf = io.BytesIO(data)
-    meta, schema, codec, sync, names = _parse_header(buf)
-    dec = _memoised(
-        ("decoder", meta["avro.schema"], None),
-        lambda: _compile_decoder(schema, names),
-    )
+    meta, raw, codec, sync = _parse_header(buf)
+    dec = _record_decoder(raw)
     records: list[dict[str, Any]] = []
     while True:
         try:
@@ -620,45 +616,31 @@ def avro_block_index(path: str) -> list[tuple[int, int]]:
         return out
 
 
-def _columnar_fields(
+def _compile_columnar_decoder(
     schema: Any, names: dict[str, Any], wanted: Any = None
-) -> list[tuple[str | None, Any]]:
-    """Per top-level field of a record schema: ``(name, decoder)`` when
-    kept, ``(None, skipper)`` when projected away — the SAME closures
-    ``_compile_decoder`` / ``_compile_skipper`` emit.  Stateless, so
-    memoisable; :func:`_compile_columnar_decoder` binds them to fresh
-    per-call column lists."""
+) -> tuple[dict[str, list], Any]:
+    """Columnar variant of :func:`_compile_decoder` for a TOP-LEVEL
+    record schema: returns ``(cols, row_fn)`` where ``row_fn(data,
+    pos) -> pos`` decodes one record APPENDING each kept field's value
+    straight into its list in ``cols`` — no per-row dict is ever
+    built, and no second per-column extraction pass runs (the two
+    costs that dominate the row-oriented decode when the consumer is
+    a columnar engine).  Unwanted fields compile to position skippers.
+    Decode semantics are byte-identical by construction: every field
+    decoder/skipper is the SAME closure ``_compile_decoder`` /
+    ``_compile_skipper`` emit."""
     schema = _skip_to_named(schema, names)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("columnar decode requires a top-level record")
-    return [
-        (f["name"], _compile_decoder(f["type"], names))
-        if wanted is None or f["name"] in wanted
-        else (None, _compile_skipper(f["type"], names))
-        for f in schema["fields"]
-    ]
-
-
-def _compile_columnar_decoder(
-    fields: list[tuple[str | None, Any]],
-) -> tuple[dict[str, list], Any]:
-    """Columnar variant of :func:`_compile_decoder` over
-    :func:`_columnar_fields`: returns ``(cols, row_fn)`` where
-    ``row_fn(data, pos) -> pos`` decodes one record APPENDING each kept
-    field's value straight into its list in ``cols`` — no per-row dict
-    is ever built, and no second per-column extraction pass runs (the
-    two costs that dominate the row-oriented decode when the consumer
-    is a columnar engine).  ``cols`` is per-call state: never share it
-    between reads."""
     cols: dict[str, list] = {}
     members: list[tuple[Any, Any]] = []
-    for name, fn in fields:
-        if name is None:
-            members.append((None, fn))
-        else:
+    for f in schema["fields"]:
+        if wanted is None or f["name"] in wanted:
             lst: list = []
-            cols[name] = lst
-            members.append((lst.append, fn))
+            cols[f["name"]] = lst
+            members.append((lst.append, _compile_decoder(f["type"], names)))
+        else:
+            members.append((None, _compile_skipper(f["type"], names)))
 
     def _row(data: bytes, pos: int) -> int:
         for app, fn in members:
@@ -687,13 +669,10 @@ def read_avro_range_columns(
     scan's ``mapInArrow`` leg (fields absent from the file schema are
     simply absent keys; the caller null-fills)."""
     with open(path, "rb") as f:
-        meta, schema, codec, sync, names = _parse_header(f)
-        wanted = frozenset(columns) if columns is not None else None
+        _meta, raw, codec, sync = _parse_header(f)
         cols, row_fn = _compile_columnar_decoder(
-            _memoised(
-                ("columnar", meta["avro.schema"], wanted),
-                lambda: _columnar_fields(schema, names, wanted),
-            )
+            *_load_schema(raw),
+            wanted=set(columns) if columns is not None else None,
         )
         nrows = 0
         first_block, row_offset = _locate_first_block(
@@ -798,11 +777,10 @@ def read_avro_range(
     planning hands every task its own entry so per-task work stays
     O(own range))."""
     with open(path, "rb") as f:
-        meta, schema, codec, sync, names = _parse_header(f)
-        wanted = frozenset(columns) if columns is not None else None
-        dec = _memoised(
-            ("decoder", meta["avro.schema"], wanted),
-            lambda: _compile_decoder(schema, names, wanted),
+        meta, raw, codec, sync = _parse_header(f)
+        dec = _compile_decoder(
+            *_load_schema(raw),
+            wanted=set(columns) if columns is not None else None,
         )
         first_block, row_offset = _locate_first_block(
             f, sync, start, end, want_row_offset, known_block

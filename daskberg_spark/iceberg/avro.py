@@ -96,10 +96,18 @@ def _register_names(schema: Any, names: dict[str, Any]) -> None:
             _register_names(s, names)
 
 
+def _index(kind: str, idx: int, n: int) -> int:
+    """A union branch or enum symbol index, checked against ``[0, n)``:
+    on corrupt input Python's negative indexing would pick one silently."""
+    if 0 <= idx < n:
+        return idx
+    raise ValueError(f"avro {kind} index {idx} outside [0, {n})")
+
+
 def _decode(schema: Any, buf: io.BytesIO, names: dict[str, Any]) -> Any:
     schema = _skip_to_named(schema, names)
     if isinstance(schema, list):  # union: zigzag branch index then value
-        idx = _read_long(buf)
+        idx = _index("union", _read_long(buf), len(schema))
         return _decode(schema[idx], buf, names)
     if isinstance(schema, dict):
         t = schema["type"]
@@ -139,7 +147,8 @@ def _decode(schema: Any, buf: io.BytesIO, names: dict[str, Any]) -> Any:
                 raise EOFError("truncated fixed")
             return data
         if t == "enum":
-            return schema["symbols"][_read_long(buf)]
+            symbols = schema["symbols"]
+            return symbols[_index("enum", _read_long(buf), len(symbols))]
         # {"type": "string", ...} wrapper around a primitive
         return _decode(t, buf, names)
     # primitive
@@ -164,9 +173,8 @@ def _decode(schema: Any, buf: io.BytesIO, names: dict[str, Any]) -> Any:
 
 
 def _rl(data: bytes, pos: int) -> tuple[int, int]:
-    """Zigzag varint from a bytes buffer — the compiled decoder's hot
-    primitive.  One-byte values (the overwhelming majority in manifest
-    metadata) take the branchless fast path."""
+    """Zigzag varint from a bytes buffer: the generated decoder's slow
+    path (it inlines one-byte values, most of manifest metadata)."""
     b = data[pos]
     if b < 0x80:
         return (b >> 1) ^ -(b & 1), pos + 1
@@ -201,7 +209,7 @@ def _compile_skipper(schema: Any, names: dict[str, Any]):
 
         def _skip_union(data, pos):
             idx, pos = _rl(data, pos)
-            return skips[idx](data, pos)
+            return skips[_index("union", idx, len(skips))](data, pos)
 
         return _skip_union
     if isinstance(schema, dict):
@@ -264,189 +272,201 @@ def _compile_skipper(schema: Any, names: dict[str, Any]):
     raise NotImplementedError(f"avro type {schema!r}")
 
 
+_COMPLEX = ("record", "array", "map", "fixed", "enum")
+
+
+def _resolve(schema: Any, names: dict[str, Any]) -> Any:
+    """The schema a value decodes as: named references and wrappers resolved."""
+    while True:
+        schema = _skip_to_named(schema, names)
+        if not isinstance(schema, dict) or schema["type"] in _COMPLEX:
+            return schema
+        schema = schema["type"]
+
+
+# Line templates of the generated decoder.  ``{t}`` is the target local;
+# ``end`` is a scratch local that never outlives its template.  A one-byte
+# varint decodes by table lookup (~15% faster decode than the arithmetic).
+_ZIGZAG = tuple((b >> 1) ^ -(b & 1) for b in range(128))
+_VARINT = """\
+{t} = data[pos]
+if {t} < 128:
+    pos += 1
+    {t} = _zigzag[{t}]
+else:
+    {t}, pos = _rl(data, pos)
+"""
+_SLICE = """\
+if not pos <= end <= len(data):
+    raise EOFError("truncated {what}")
+{t} = data[pos:end]{decode}
+pos = end
+"""
+_BLOB = _VARINT.format(t="end") + "end += pos\n" + _SLICE
+_BLOCK = """\
+    if {n} == 0:
+        break
+    if {n} < 0:
+        _, pos = _rl(data, pos)
+        {n} = -{n}
+    for _ in range({n}):
+"""
+_ENUM = """\
+if not 0 <= {t} < {n}:
+    _index("enum", {t}, {n})
+{t} = {symbols}[{t}]
+"""
+
+
+class _DecoderSource:
+    """Python source for one schema's decoder: one function per record
+    type and per array/map item that loops itself, everything else
+    inline.  Schema text never reaches the source: field names, enum
+    symbols and skippers are namespace constants, and every identifier
+    comes from a counter."""
+
+    def __init__(self, names: dict[str, Any]):
+        self.names = names
+        self.ns: dict[str, Any] = {
+            "_rl": _rl,
+            "_zigzag": _ZIGZAG,
+            "_index": _index,
+            "_float": struct.Struct("<f").unpack_from,
+            "_double": struct.Struct("<d").unpack_from,
+        }
+        self.funcs: dict[str, str] = {}
+        self.records: dict[int, str] = {}
+        self.nvars = 0
+
+    def const(self, value: Any) -> str:
+        self.ns[f"_c{len(self.ns)}"] = value
+        return f"_c{len(self.ns) - 1}"
+
+    def var(self) -> str:
+        self.nvars += 1
+        return f"v{self.nvars}"
+
+    def func(self, schema: Any, wanted: Any = None) -> str:
+        """Emit a ``(data, pos) -> (value, pos)`` function for ``schema``
+        and return its name; ``wanted`` projects a record's fields."""
+        s = _resolve(schema, self.names)
+        record = isinstance(s, dict) and s["type"] == "record"
+        memo = record and wanted is None
+        if memo and id(s) in self.records:
+            return self.records[id(s)]
+        name = f"_f{len(self.funcs)}"
+        self.funcs[name] = ""  # reserve the name: nested functions follow
+        if memo:  # registered first, so a recursive type calls itself
+            self.records[id(s)] = name
+        body: list[str] = []
+        if not record:
+            out = self.var()
+            self.value(s, out, body, "")
+        else:
+            items = []
+            for f in s["fields"]:
+                if wanted is None or f["name"] in wanted:
+                    v = self.var()
+                    self.value(f["type"], v, body, "")
+                    items.append(f"{self.const(f['name'])}: {v}")
+                else:
+                    skip = self.const(_compile_skipper(f["type"], self.names))
+                    body.append(f"pos = {skip}(data, pos)")
+            out = "{" + ", ".join(items) + "}"
+        self.funcs[name] = "\n    ".join(
+            [f"def {name}(data, pos):", *body, f"return {out}, pos"]
+        )
+        return name
+
+    def loops(self, schema: Any) -> bool:
+        """Whether ``schema`` decodes inline with a loop of its own."""
+        s = _resolve(schema, self.names)
+        if isinstance(s, list):
+            return any(self.loops(b) for b in s)
+        return isinstance(s, dict) and s["type"] in ("array", "map")
+
+    def value(self, schema: Any, t: str, out: list[str], ind: str) -> None:
+        """Emit lines at indent ``ind`` decoding one ``schema`` value
+        into local ``t``."""
+        s = _resolve(schema, self.names)
+        kind = s["type"] if isinstance(s, dict) else s
+
+        def emit(template: str, **kw: Any) -> None:
+            out.extend(ind + x for x in template.format(t=t, **kw).splitlines())
+
+        if isinstance(s, list):
+            i = self.var()
+            self.value("long", i, out, ind)
+            for k, branch in enumerate(s):
+                out.append(f"{ind}{'el' if k else ''}if {i} == {k}:")
+                self.value(branch, t, out, ind + "    ")
+            emit('else:\n    _index("union", {i}, {n})', i=i, n=len(s))
+        elif kind == "record":
+            emit("{t}, pos = {f}(data, pos)", f=self.func(s))
+        elif kind in ("array", "map"):
+            item = s["items"] if kind == "array" else s["values"]
+            n, key, x = self.var(), self.var(), self.var()
+            emit("{t} = {empty}\nwhile True:", empty="[]" if kind == "array" else "{}")
+            self.value("long", n, out, ind + "    ")
+            emit(_BLOCK, n=n)
+            inner = ind + "        "
+            if kind == "map":
+                self.value("string", key, out, inner)
+            if self.loops(item):
+                out.append(f"{inner}{x}, pos = {self.func(item)}(data, pos)")
+            else:
+                self.value(item, x, out, inner)
+            store = f"{t}.append({x})" if kind == "array" else f"{t}[{key}] = {x}"
+            out.append(inner + store)
+        elif kind == "fixed":
+            # a short slice would feed wrong bytes into pruning bounds
+            size = int(s["size"])
+            emit("end = pos + {size}\n" + _SLICE, size=size, what="fixed", decode="")
+        elif kind == "enum":
+            symbols = self.const(tuple(s["symbols"]))
+            emit(_VARINT + _ENUM, n=len(s["symbols"]), symbols=symbols)
+        elif kind == "null":
+            emit("{t} = None")
+        elif kind == "boolean":
+            emit("{t} = data[pos] == 1\npos += 1")
+        elif kind in ("int", "long"):
+            emit(_VARINT)
+        elif kind == "float":
+            emit("{t} = _float(data, pos)[0]\npos += 4")
+        elif kind == "double":
+            emit("{t} = _double(data, pos)[0]\npos += 8")
+        elif kind in ("bytes", "string"):
+            emit(_BLOB, what="bytes", decode=".decode()" if kind == "string" else "")
+        else:
+            raise NotImplementedError(f"avro type {s!r}")
+
+
 def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
-    """Compile an Avro schema into a ``(data, pos) -> (value, pos)``
-    closure chain ONCE, instead of re-dispatching on the schema dict for
-    every field of every record (``_decode``'s shape).  Same decode
-    semantics by construction — the differential property test drives
-    both paths — but ~2× faster on manifest-shaped data, which is what
-    bounds driver planning time on huge tables (a 1M-file table's
-    manifests are ~1M record decodes per cold plan).
+    """Compile an Avro schema ONCE into a ``(data, pos) -> (value, pos)``
+    decoder: Python source generated from the schema (one function per
+    record type; varints with an inline one-byte fast path, unions, bytes
+    and strings inline), instead of re-dispatching on the schema dict per
+    field of every record like ``_decode``, the test oracle.  The 150
+    manifests of a 150-commit table decode in ~18 ms through it, ~35 ms
+    through the closure chain it replaced (one call and one tuple per
+    field; 4-vCPU host); compiling the manifest schema costs ~4 ms.
 
     ``wanted`` (a set of field names, or None for all) projects the
-    TOP-LEVEL record: unwanted fields compile to position skippers that
-    never materialize values — byte-exact with the full decode on the
-    fields that remain."""
-    schema = _skip_to_named(schema, names)
-    if (
-        wanted is not None
-        and isinstance(schema, dict)
-        and schema.get("type") == "record"
-    ):
-        members_p: list[tuple[str | None, Any, bool]] = []
-        for f in schema["fields"]:
-            if f["name"] in wanted:
-                members_p.append(
-                    (f["name"], _compile_decoder(f["type"], names), True)
-                )
-            else:
-                members_p.append(
-                    (None, _compile_skipper(f["type"], names), False)
-                )
-
-        def _record_proj(data, pos):
-            out = {}
-            for name, fn, keep in members_p:
-                if keep:
-                    out[name], pos = fn(data, pos)
-                else:
-                    pos = fn(data, pos)
-            return out, pos
-
-        return _record_proj
-    if isinstance(schema, list):
-        # the ubiquitous ["null", X] union gets a two-way fast path
-        if len(schema) == 2 and schema[0] == "null":
-            dec1 = _compile_decoder(schema[1], names)
-
-            def _union_null(data, pos):
-                idx, pos = _rl(data, pos)
-                if idx == 0:
-                    return None, pos
-                return dec1(data, pos)
-
-            return _union_null
-        branches = [_compile_decoder(s, names) for s in schema]
-
-        def _union(data, pos):
-            idx, pos = _rl(data, pos)
-            return branches[idx](data, pos)
-
-        return _union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            members = [
-                (f["name"], _compile_decoder(f["type"], names))
-                for f in schema["fields"]
-            ]
-
-            def _record(data, pos):
-                out = {}
-                for name, dec in members:
-                    out[name], pos = dec(data, pos)
-                return out, pos
-
-            return _record
-        if t == "array":
-            item = _compile_decoder(schema["items"], names)
-
-            def _array(data, pos):
-                out = []
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return out, pos
-                    if n < 0:
-                        _, pos = _rl(data, pos)
-                        n = -n
-                    for _ in range(n):
-                        v, pos = item(data, pos)
-                        out.append(v)
-
-            return _array
-        if t == "map":
-            val = _compile_decoder(schema["values"], names)
-
-            def _map(data, pos):
-                out = {}
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return out, pos
-                    if n < 0:
-                        _, pos = _rl(data, pos)
-                        n = -n
-                    for _ in range(n):
-                        ln, pos = _rl(data, pos)
-                        key = data[pos : pos + ln].decode("utf-8")
-                        pos += ln
-                        out[key], pos = val(data, pos)
-
-            return _map
-        if t == "fixed":
-            size = schema["size"]
-
-            def _fixed(data, pos):
-                end = pos + size
-                if end > len(data):
-                    # mirror _bytes/_string: a short slice silently
-                    # returned as the value feeds wrong bytes into
-                    # pruning bounds — fail loudly like every other
-                    # truncation
-                    raise EOFError("truncated fixed")
-                return data[pos:end], end
-
-            return _fixed
-        if t == "enum":
-            symbols = schema["symbols"]
-
-            def _enum(data, pos):
-                idx, pos = _rl(data, pos)
-                return symbols[idx], pos
-
-            return _enum
-        return _compile_decoder(t, names)
-    if schema == "null":
-        return lambda data, pos: (None, pos)
-    if schema == "boolean":
-        return lambda data, pos: (data[pos] == 1, pos + 1)
-    if schema in ("int", "long"):
-        return _rl
-    if schema == "float":
-        unpack_f = struct.unpack
-
-        def _float(data, pos):
-            return unpack_f("<f", data[pos : pos + 4])[0], pos + 4
-
-        return _float
-    if schema == "double":
-        unpack_d = struct.unpack
-
-        def _double(data, pos):
-            return unpack_d("<d", data[pos : pos + 8])[0], pos + 8
-
-        return _double
-    if schema == "bytes":
-
-        def _bytes(data, pos):
-            n, pos = _rl(data, pos)
-            end = pos + n
-            if end > len(data):
-                raise EOFError("truncated bytes")
-            return data[pos:end], end
-
-        return _bytes
-    if schema == "string":
-
-        def _string(data, pos):
-            n, pos = _rl(data, pos)
-            end = pos + n
-            if end > len(data):
-                raise EOFError("truncated bytes")
-            return data[pos:end].decode("utf-8"), end
-
-        return _string
-    raise NotImplementedError(f"avro type {schema!r}")
+    TOP-LEVEL record: unwanted fields call position skippers that never
+    materialize values."""
+    src = _DecoderSource(names)
+    top = src.func(schema, wanted)
+    exec(compile("\n\n".join(src.funcs.values()), "<avro decoder>", "exec"), src.ns)
+    return src.ns[top]
 
 
 # Every manifest of a table shares one Avro schema, and a compiled
 # decoder is a pure function of its schema: memoised by the raw
 # ``avro.schema`` bytes, the schema parses and compiles once instead of
-# once per file — 150 one-schema manifests decoded in ~61 ms compiling
-# per file, ~26 ms through the memo (4-vCPU host).  This holds code,
-# never decoded data.  Bounded; a full memo is cleared, not iterated, so
-# reader threads share it without a lock.
+# once per file (compiling a manifest schema's decoder takes ~4 ms, the
+# decode of one 8-entry manifest ~0.1 ms; 4-vCPU host).  This holds
+# code, never decoded data.  Bounded; a full memo is cleared, not
+# iterated, so reader threads share it without a lock.
 _MEMO_MAX = 64
 _memo: dict[bytes, Any] = {}
 
@@ -514,24 +534,34 @@ def read_avro(data: bytes) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
     meta, raw, codec, sync = _parse_header(buf)
     dec = _record_decoder(raw)
     records: list[dict[str, Any]] = []
+    append = records.append
+    for count, block in _blocks(buf, codec, sync, buf.tell(), 2**62):
+        pos = 0
+        for _ in range(count):
+            rec, pos = dec(block, pos)
+            append(rec)
+    return meta, records
+
+
+def _blocks(f, codec: str, sync: bytes, first: int, end: int):
+    """``(record count, payload)`` of each block from offset ``first`` to
+    the last one owned by a range ending at ``end`` (:func:`read_avro_range`)."""
+    f.seek(first)
     while True:
         try:
-            count = _read_long(buf)
+            count = _read_long(f)
         except EOFError:
-            break
-        size = _read_long(buf)
-        block = buf.read(size)
+            return
+        size = _read_long(f)
+        block = f.read(size)
         if len(block) != size:
             raise EOFError("truncated block")
-        data = _decompress_block(block, codec)
-        pos = 0
-        append = records.append
-        for _ in range(count):
-            rec, pos = dec(data, pos)
-            append(rec)
-        if buf.read(16) != sync:
+        yield count, _decompress_block(block, codec)
+        t = f.tell()  # this block's trailing sync == next block's owner
+        if f.read(16) != sync:
             raise ValueError("sync marker mismatch")
-    return meta, records
+        if t >= end:
+            return
 
 
 def read_avro_file(path: str) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
@@ -626,9 +656,9 @@ def _compile_columnar_decoder(
     built, and no second per-column extraction pass runs (the two
     costs that dominate the row-oriented decode when the consumer is
     a columnar engine).  Unwanted fields compile to position skippers.
-    Decode semantics are byte-identical by construction: every field
-    decoder/skipper is the SAME closure ``_compile_decoder`` /
-    ``_compile_skipper`` emit."""
+    Decode semantics are byte-identical by construction: every kept
+    field decodes through the function ``_compile_decoder`` generates for
+    its type, every other through ``_compile_skipper``'s skipper."""
     schema = _skip_to_named(schema, names)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("columnar decode requires a top-level record")
@@ -680,26 +710,11 @@ def read_avro_range_columns(
         )
         if first_block is None:
             return cols, 0, 0
-        f.seek(first_block)
-        while True:
-            try:
-                count = _read_long(f)
-            except EOFError:
-                break
-            bsize = _read_long(f)
-            block = f.read(bsize)
-            if len(block) != bsize:
-                raise EOFError("truncated block")
-            data = _decompress_block(block, codec)
+        for count, data in _blocks(f, codec, sync, first_block, end):
             pos = 0
             for _ in range(count):
                 pos = row_fn(data, pos)
             nrows += count
-            t = f.tell()  # this block's trailing sync == next block's owner
-            if f.read(16) != sync:
-                raise ValueError("sync marker mismatch")
-            if t >= end:
-                break
         return cols, nrows, row_offset
 
 
@@ -788,26 +803,11 @@ def read_avro_range(
         records: list[dict[str, Any]] = []
         if first_block is None:
             return meta, records, 0
-        f.seek(first_block)
-        while True:
-            try:
-                count = _read_long(f)
-            except EOFError:
-                break
-            bsize = _read_long(f)
-            block = f.read(bsize)
-            if len(block) != bsize:
-                raise EOFError("truncated block")
-            data = _decompress_block(block, codec)
+        for count, data in _blocks(f, codec, sync, first_block, end):
             pos = 0
             for _ in range(count):
                 rec, pos = dec(data, pos)
                 records.append(rec)
-            t = f.tell()  # this block's trailing sync == next block's owner
-            if f.read(16) != sync:
-                raise ValueError("sync marker mismatch")
-            if t >= end:
-                break
         return meta, records, row_offset
 
 

@@ -133,6 +133,14 @@ def get_spark(app_name: str = "daskberg_spark", cpus: int | None = None) -> Spar
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8388608"),
         )
         .config("spark.sql.files.openCostInBytes", "1048576")
+        # PySpark 4 captures the Python call site on every DataFrame and
+        # Column op for error context: ~10 extra py4j round trips each
+        # (getActiveSession, PySparkCurrentOrigin set/clear, a conf read)
+        # plus a Python stack walk — F.col makes 13 calls where 3 do the
+        # work.  A traced point read made 147 py4j calls with it, 69
+        # without; the site it records is this engine's own line, not
+        # the user's.  Errors still raise with their class and message.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

@@ -771,3 +771,182 @@ def test_decoder_memo_shared_by_threads():
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert len(A._memo) <= A._MEMO_MAX + len(threads)
+
+
+# -- generated decoder: corrupt input and hostile or deep schemas -------------
+
+
+def _both_decoders(schema, data: bytes, names=None):
+    """Decode one value through the generated decoder and the legacy
+    ``_decode``; each result is the value or the exception raised."""
+    from daskberg_spark.iceberg import avro as A
+
+    if names is None:
+        names = {}
+        A._register_names(schema, names)
+    out = []
+    for run in (
+        lambda: A._compile_decoder(schema, names)(data, 0)[0],
+        lambda: A._decode(schema, io.BytesIO(data), names),
+    ):
+        try:
+            out.append(run())
+        except Exception as exc:  # compared by the caller
+            out.append(exc)
+    return out
+
+
+@pytest.mark.parametrize(
+    "schema, data",
+    [
+        (["null", "long"], b"\x01\x02"),  # branch -1
+        (["null", "long"], b"\x04\x02"),  # branch 2 of 2
+        (["long", "null"], b"\x01"),  # branch -1, null second
+        (["null", "long", "string"], b"\x05\x02"),  # branch -3
+        (["null", "long", "string"], b"\x06\x02"),  # branch 3 of 3
+        ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, b"\x01"),  # -1
+        ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, b"\x04"),  # 2
+    ],
+)
+def test_out_of_range_union_and_enum_index_raise(schema, data):
+    """A union or enum index outside ``[0, n)`` raises ValueError in both
+    decoders instead of picking a branch or symbol by negative index."""
+    got = _both_decoders(schema, data)
+    assert all(isinstance(g, ValueError) for g in got), got
+    assert all("outside [0, " in str(g) for g in got)
+
+
+def test_out_of_range_union_index_raises_in_skipper():
+    """A projected-away union field with a corrupt branch index raises
+    too: the skipper checks the index like the decoders."""
+    from daskberg_spark.iceberg.avro import _compile_decoder
+
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "u", "type": ["null", "long"]}, {"name": "k", "type": "long"}],
+    }
+    dec = _compile_decoder(schema, {}, wanted={"k"})
+    assert dec(b"\x02\x04\x06", 0) == ({"k": 3}, 3)
+    with pytest.raises(ValueError, match="union index -1"):
+        dec(b"\x01\x04\x06", 0)
+
+
+def test_truncated_map_key_and_negative_length_raise():
+    """A map key whose length runs past the buffer, and a string with a
+    negative length, raise EOFError in both decoders (the generated one
+    sliced them short, or moved backwards, before)."""
+    schema = {"type": "map", "values": "long"}
+    # one entry: key of length 5 with only 2 bytes present
+    got = _both_decoders(schema, b"\x02\x0aab")
+    assert all(isinstance(g, EOFError) for g in got), got
+    got = _both_decoders("string", b"\x03abc")  # length -2
+    assert all(isinstance(g, EOFError) for g in got), got
+    # the same entry complete decodes equal in both
+    assert _both_decoders(schema, b"\x02\x0aabcde\x08\x00") == [{"abcde": 4}] * 2
+
+
+def test_hostile_names_and_symbols_decode_verbatim():
+    """Field names and enum symbols holding quotes, newlines, braces and
+    Python code decode to exactly those strings, and none of it runs:
+    the generated source never contains schema text."""
+    import builtins
+
+    from daskberg_spark.iceberg import avro as A
+
+    hostile = [
+        "x'); import builtins; builtins.HOSTILE_RAN = 1; ('",
+        'y"); import builtins; builtins.HOSTILE_RAN = 1; ("',
+        "line\n    import builtins; builtins.HOSTILE_RAN = 1\n",
+        '"""\nimport builtins; builtins.HOSTILE_RAN = 1\n"""',
+        "{t} {n} {} __import__('builtins').HOSTILE_RAN",
+        "\\",
+    ]
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [
+            {"name": name, "type": {"type": "enum", "name": f"e{i}", "symbols": hostile}}
+            for i, name in enumerate(hostile)
+        ]
+        + [{"name": "m", "type": {"type": "map", "values": ["null", "string"]}}],
+    }
+    records = [
+        {
+            **{name: hostile[(i + j) % len(hostile)] for j, name in enumerate(hostile)},
+            "m": {h: (None if i % 2 else h) for h in hostile[i % 3 :]},
+        }
+        for i in range(len(hostile))
+    ]
+    buf = io.BytesIO()
+    write_avro(schema, records, buf)
+    A._memo.clear()
+    assert read_avro(buf.getvalue())[1] == records
+    assert read_avro(buf.getvalue())[1] == _legacy_records(buf.getvalue())
+    assert not hasattr(builtins, "HOSTILE_RAN")
+    src = A._DecoderSource({})
+    src.func(schema)
+    text = "\n".join(src.funcs.values())
+    assert "HOSTILE" not in text and "import" not in text
+
+
+def _deep_schema(depth: int):
+    """``depth`` nested levels cycling through an array of records, a
+    null-union and a map, with a leaf record at the bottom."""
+    node = {
+        "type": "record",
+        "name": "leaf",
+        "fields": [{"name": "s", "type": "string"}, {"name": "b", "type": ["null", "bytes"]}],
+    }
+    for level in range(depth):
+        kind = level % 3
+        if kind == 0:
+            inner = {"type": "array", "items": node}
+        elif kind == 1:
+            inner = ["null", node]
+        else:
+            inner = {"type": "map", "values": node}
+        node = {
+            "type": "record",
+            "name": f"lvl{level}",
+            "fields": [{"name": "k", "type": "long"}, {"name": "c", "type": inner}],
+        }
+    return node
+
+
+def _deep_value(schema, rng, names):
+    """A random value of ``schema`` (the subset ``_deep_schema`` uses)."""
+    if isinstance(schema, list):
+        return None if rng.random() < 0.3 else _deep_value(schema[1], rng, names)
+    if isinstance(schema, str):
+        return {"long": lambda: rng.randint(-(2**40), 2**40),
+                "string": lambda: "s" * rng.randint(0, 70),
+                "bytes": lambda: bytes(rng.randint(0, 9))}[schema]()
+    if schema["type"] == "record":
+        return {f["name"]: _deep_value(f["type"], rng, names) for f in schema["fields"]}
+    item = schema.get("items", schema.get("values"))
+    n = rng.randint(0, 2)
+    if schema["type"] == "array":
+        return [_deep_value(item, rng, names) for _ in range(n)]
+    return {f"k{j}": _deep_value(item, rng, names) for j in range(n)}
+
+
+def test_deep_schema_decodes_like_legacy():
+    """A schema nested 25 levels deep (arrays of records, null-unions,
+    maps) compiles without SyntaxError or IndentationError and decodes
+    equal to the legacy ``_decode`` through a container."""
+    import random
+
+    from daskberg_spark.iceberg import avro as A
+
+    schema = _deep_schema(25)
+    names: dict = {}
+    A._register_names(schema, names)
+    rng = random.Random(7)
+    records = [_deep_value(schema, rng, names) for _ in range(40)]
+    buf = io.BytesIO()
+    write_avro(schema, records, buf)
+    A._memo.clear()
+    got = read_avro(buf.getvalue())[1]
+    assert got == records
+    assert got == _legacy_records(buf.getvalue())

@@ -5524,3 +5524,102 @@ def test_avro_split_scan_matches_unsplit(spark, tmp_path, monkeypatch):
         (r["k"], r["s"]) for r in IcebergTable(p).to_df(spark).collect()
     )
     assert split == whole
+
+
+# -- one-split scans and py4j chatter ------------------------------------------
+
+
+def _kv_table(path: str, batches: list[range]) -> IcebergTable:
+    """An unpartitioned (k, v = 2k) table with one data file per batch."""
+    from daskberg_spark.iceberg.writer import IcebergWriter
+
+    w = IcebergWriter(
+        path,
+        [
+            {"id": 1, "name": "k", "type": "long", "required": False},
+            {"id": 2, "name": "v", "type": "long", "required": False},
+        ],
+    )
+    for b in batches:
+        w.append([{"k": i, "v": 2 * i} for i in b])
+    return IcebergTable(path)
+
+
+def _agg_in_group(spark, df, group: str):
+    """``count(*)``, ``sum(v)`` of ``df`` under job group ``group``:
+    (row, Spark jobs the group ran, executed plan text)."""
+    sc = spark.sparkContext
+    agg = df.agg(F.count(F.lit(1)), F.sum("v"))
+    sc.setJobGroup(group, group)
+    try:
+        row = agg.collect()[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return tuple(row), jobs, agg._jdf.queryExecution().executedPlan().toString()
+
+
+def test_one_small_file_point_read_runs_one_job(spark, tmp_path):
+    """A filtered read that prunes to one file smaller than
+    openCostInBytes is one split: its global aggregate plans no Exchange
+    and runs in one Spark job (AQE ran a map stage and a result job)."""
+    t = _kv_table(str(tmp_path / "t"), [range(50)])
+    assert len(t.plan_files()) == 1
+    filters = [("k", ">=", 10), ("k", "<", 45)]
+    row, jobs, plan = _agg_in_group(spark, t.to_df(spark, filters=filters), "one-split")
+    assert row == (35, sum(2 * i for i in range(10, 45)))
+    assert jobs == 1, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_multi_file_and_large_file_scans_keep_their_splits(spark, tmp_path):
+    """Multi-file reads, and a single file larger than openCostInBytes,
+    keep the partitions of the plain native scan, with the same answers
+    as the one-split read."""
+    t = _kv_table(str(tmp_path / "t"), [range(0, 20), range(20, 40), range(40, 60)])
+    paths = [f["file_path"] for f in t.plan_files()]
+    assert len(paths) == 3
+    df = t.to_df(spark)
+    plain = spark.read.parquet(*paths).rdd.getNumPartitions()
+    assert plain > 1
+    assert df.rdd.getNumPartitions() == plain
+    row, _jobs, _plan = _agg_in_group(spark, t.to_df(spark, filters=[("k", "<", 45)]), "multi")
+    assert row == (45, sum(2 * i for i in range(45)))
+    # the same one-file table as above, but openCostInBytes (given with
+    # a unit) below its size: the read is not coalesced
+    one = _kv_table(str(tmp_path / "one"), [range(50)])
+    size = one.plan_files()[0]["file_size_in_bytes"]
+    old = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", f"{size - 1}b")
+    try:
+        df = one.to_df(spark, filters=[("k", ">=", 10), ("k", "<", 45)])
+        assert "Repartition" not in df._jdf.queryExecution().optimizedPlan().toString()
+        row, _jobs, _plan = _agg_in_group(spark, df, "large-file")
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", old)
+    assert row == (35, sum(2 * i for i in range(10, 45)))
+
+
+def test_session_skips_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns PySpark's DataFrame call-site capture off, so
+    a 3-predicate residual costs only the py4j round trips that build it
+    (~23 here; ~103 with the capture's per-op getActiveSession,
+    PySparkCurrentOrigin set/clear and conf reads)."""
+    from daskberg_spark.iceberg.scan import filters_to_column
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    filters = [("day", "==", 3), ("id", ">=", 100), ("id", "<", 200)]
+    filters_to_column(filters)  # warm py4j's class lookups
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    orig = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    col = filters_to_column(filters)
+    monkeypatch.undo()
+    assert col is not None
+    assert len(calls) < 40, len(calls)

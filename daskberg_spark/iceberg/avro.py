@@ -363,20 +363,35 @@ class _DecoderSource:
             out = self.var()
             self.value(s, out, body, "")
         else:
-            items = []
-            for f in s["fields"]:
-                if wanted is None or f["name"] in wanted:
-                    v = self.var()
-                    self.value(f["type"], v, body, "")
-                    items.append(f"{self.const(f['name'])}: {v}")
-                else:
-                    skip = self.const(_compile_skipper(f["type"], self.names))
-                    body.append(f"pos = {skip}(data, pos)")
-            out = "{" + ", ".join(items) + "}"
+            kept = self.fields(s, wanted, body)
+            out = "{" + ", ".join(f"{self.const(n)}: {v}" for n, v in kept) + "}"
         self.funcs[name] = "\n    ".join(
             [f"def {name}(data, pos):", *body, f"return {out}, pos"]
         )
         return name
+
+    def fields(
+        self, record: dict, wanted: Any, body: list[str]
+    ) -> list[tuple[str, str]]:
+        """Emit lines decoding ``record``'s fields in order — kept ones
+        (``wanted`` None keeps all) into fresh locals, the others through
+        skippers — and return the kept (field name, local) pairs."""
+        kept = []
+        for f in record["fields"]:
+            if wanted is None or f["name"] in wanted:
+                v = self.var()
+                self.value(f["type"], v, body, "")
+                kept.append((f["name"], v))
+            else:
+                skip = self.const(_compile_skipper(f["type"], self.names))
+                body.append(f"pos = {skip}(data, pos)")
+        return kept
+
+    def build(self, top: str):
+        """Compile every emitted function with ONE ``compile()``; return
+        the function named ``top``."""
+        exec(compile("\n\n".join(self.funcs.values()), "<avro decoder>", "exec"), self.ns)
+        return self.ns[top]
 
     def loops(self, schema: Any) -> bool:
         """Whether ``schema`` decodes inline with a loop of its own."""
@@ -455,9 +470,7 @@ def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
     TOP-LEVEL record: unwanted fields call position skippers that never
     materialize values."""
     src = _DecoderSource(names)
-    top = src.func(schema, wanted)
-    exec(compile("\n\n".join(src.funcs.values()), "<avro decoder>", "exec"), src.ns)
-    return src.ns[top]
+    return src.build(src.func(schema, wanted))
 
 
 # Every manifest of a table shares one Avro schema, and a compiled
@@ -656,32 +669,22 @@ def _compile_columnar_decoder(
     built, and no second per-column extraction pass runs (the two
     costs that dominate the row-oriented decode when the consumer is
     a columnar engine).  Unwanted fields compile to position skippers.
-    Decode semantics are byte-identical by construction: every kept
-    field decodes through the function ``_compile_decoder`` generates for
-    its type, every other through ``_compile_skipper``'s skipper."""
+    Decode semantics are identical by construction: the row function
+    is generated by the same ``_DecoderSource`` as
+    ``_compile_decoder``'s record functions, with each kept field's
+    local appended to its list instead of stored in a dict, and the
+    whole source compiles once."""
     schema = _skip_to_named(schema, names)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("columnar decode requires a top-level record")
+    src = _DecoderSource(names)
+    body: list[str] = []
     cols: dict[str, list] = {}
-    members: list[tuple[Any, Any]] = []
-    for f in schema["fields"]:
-        if wanted is None or f["name"] in wanted:
-            lst: list = []
-            cols[f["name"]] = lst
-            members.append((lst.append, _compile_decoder(f["type"], names)))
-        else:
-            members.append((None, _compile_skipper(f["type"], names)))
-
-    def _row(data: bytes, pos: int) -> int:
-        for app, fn in members:
-            if app is None:
-                pos = fn(data, pos)
-            else:
-                v, pos = fn(data, pos)
-                app(v)
-        return pos
-
-    return cols, _row
+    for name, v in src.fields(schema, wanted, body):
+        cols[name] = []
+        body.append(f"{src.const(cols[name].append)}({v})")
+    src.funcs["_row"] = "\n    ".join(["def _row(data, pos):", *body, "return pos"])
+    return cols, src.build("_row")
 
 
 def read_avro_range_columns(

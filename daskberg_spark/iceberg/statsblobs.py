@@ -54,8 +54,8 @@ from typing import Any, Callable, Iterable, Iterator, NamedTuple
 CONSOLIDATE_AFTER = 8
 
 # Serializes every statistics commit tail (the read-modify-write of
-# ``writer.statistics`` + ``writer.version`` + ``_write_metadata()``)
-# so ``_maintain_statistics`` can overlap the independent family
+# ``writer.statistics`` + ``writer._publish()``) so
+# ``_maintain_statistics`` can overlap the independent family
 # chains' Spark jobs (r15, guide §2.6) without lost-update races.  A
 # single module-level lock rather than a per-writer attribute: commits
 # are driver-side and millisecond-cheap (contention is irrelevant),
@@ -170,8 +170,7 @@ def publish(
             keep = [e for e in keep if not replaces(e)]
         writer.statistics = keep + entries
         if commit:
-            writer.version += 1
-            writer._write_metadata()
+            writer._publish()
 
 
 def publish_entry(
@@ -761,8 +760,7 @@ def drop_grouped(
         dropped = len(writer.statistics) - len(keep)
         if dropped:
             writer.statistics = keep
-            writer.version += 1
-            writer._write_metadata()
+            writer._publish()
     return dropped
 
 

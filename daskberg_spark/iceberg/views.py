@@ -191,7 +191,7 @@ class IcebergView:
 
 
 # deterministic clock matching the table writer's (fixture builds stay
-# byte-stable; see IcebergWriter._write_metadata)
+# byte-stable; see IcebergWriter._publish)
 _LOG_EPOCH = 1700000000000
 
 

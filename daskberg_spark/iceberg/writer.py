@@ -420,8 +420,10 @@ class Transaction:
     Any exception inside the block aborts the whole group: staged
     metadata files are unlinked (so a reloaded writer can re-commit the
     same version numbers) and no table ever became visible.  Aborted
-    writers are POISONED — their in-memory state is ahead of the
-    published table; reload with ``IcebergWriter.load``.
+    writers are POISONED exactly like a writer that lost the commit race
+    (``IcebergWriter._publish``): their in-memory state is ahead of the
+    published table, every later commit refuses; reload with
+    ``IcebergWriter.load``.
 
     Crash semantics, stated honestly: each hint flip is atomic per
     table, but a PROCESS CRASH between phase-2 flips can leave a
@@ -444,12 +446,12 @@ class Transaction:
 
     def __enter__(self) -> "Transaction":
         for w in self.writers:
-            if getattr(w, "_txn_staged", None) is not None:
+            if w._txn_staged is not None:
                 raise ValueError(f"{w.path} is already in a transaction")
-            if getattr(w, "_txn_poisoned", False):
+            if w._poisoned:
                 raise RuntimeError(
-                    f"{w.path} writer was aborted in a prior transaction; "
-                    "reload it with IcebergWriter.load"
+                    f"{w.path} writer {w._poisoned}; reload it with "
+                    "IcebergWriter.load"
                 )
         for w in self.writers:
             w._txn_staged = []
@@ -464,8 +466,7 @@ class Transaction:
                     except OSError:
                         pass
                 w._txn_staged = None
-                # in-memory snapshots are ahead of the published table
-                w._txn_poisoned = True
+                w._poisoned = "was aborted in a transaction"
             return False
         for w in self.writers:
             staged, w._txn_staged = w._txn_staged, None
@@ -481,6 +482,12 @@ class IcebergWriter:
     "required": bool}, ...]``; partition_spec: ``[{"name": part-col,
     "transform": ..., "source": source-col}, ...]``.
     """
+
+    # (version, path) of metadata linked inside an open Transaction
+    _txn_staged: list[tuple[int, str]] | None = None
+    # why this handle may no longer publish (lost race, aborted
+    # Transaction): its state is ahead of the table; None = healthy
+    _poisoned: str | None = None
 
     def __init__(
         self,
@@ -668,7 +675,7 @@ class IcebergWriter:
         # current != newest commit is either a WAP pin (staged commits
         # chain BEYOND the pin behind a branch ref) or a rollback
         # repoint (head moved BACK).  The distinction is recorded
-        # EXPLICITLY by _write_metadata as the internal property
+        # EXPLICITLY by _publish as the internal property
         # daskberg.wap-pin — a descends-from heuristic over branch refs
         # cannot tell a staging branch from an ordinary user branch
         # created before a rollback, and misreading a rollback as a pin
@@ -786,9 +793,7 @@ class IcebergWriter:
         self.spec = self._build_spec(partition_spec, next_fid)
         self.specs.append(self.spec)
         self.current_spec_id = len(self.specs) - 1
-        self.version += 1
-        if self.snapshots:
-            self._write_metadata()
+        self._publish()
         return self.current_spec_id
 
     def _partition_tuple(self, row: dict[str, Any]) -> tuple:
@@ -1015,12 +1020,10 @@ class IcebergWriter:
             for pf in spec:
                 if pf["_source_name"] == old:
                     pf["_source_name"] = new
-        if self.snapshots:
-            # schema updates emit a metadata version immediately (real
-            # Iceberg updateSchema().commit() semantics): readers between
-            # the rename and the next data commit see the new names
-            self.version += 1
-            self._write_metadata()
+        # schema updates emit a metadata version immediately (real
+        # Iceberg updateSchema().commit() semantics): readers between
+        # the rename and the next data commit see the new names
+        self._publish()
 
     def add_column(
         self, name: str, type_str: str, default: Any = None
@@ -1082,9 +1085,7 @@ class IcebergWriter:
         self.fields = fields
         self.types = {f["name"]: f["type"] for f in fields}
         self.ids = {f["name"]: f["id"] for f in fields}
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
 
     def update_column_type(self, name: str, new_type: str) -> None:
         """Schema evolution: widen a column's type — the spec's legal
@@ -1121,9 +1122,7 @@ class IcebergWriter:
         self.fields = fields
         self.types = {f["name"]: f["type"] for f in fields}
         self.ids = {f["name"]: f["id"] for f in fields}
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
 
     def drop_column(self, name: str) -> None:
         """Schema evolution: drop a top-level column (new schema id; the
@@ -1149,9 +1148,7 @@ class IcebergWriter:
         self.fields = fields
         self.types = {f["name"]: f["type"] for f in fields}
         self.ids = {f["name"]: f["id"] for f in fields}
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
 
     def delete_rows_equality(
         self,
@@ -1585,9 +1582,7 @@ class IcebergWriter:
                 )
             ids.append(f["id"])
         self.identifier_field_ids = ids
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
 
     def set_sort_order(self, cols: list[str | tuple[str, str]]) -> int:
         """Register a sort order over ``cols`` (name, or (name, "asc"/
@@ -1612,9 +1607,7 @@ class IcebergWriter:
         order_id = max(o["order-id"] for o in self.sort_orders) + 1
         self.sort_orders.append({"order-id": order_id, "fields": fields})
         self.default_sort_order_id = order_id
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
         return order_id
 
     def set_properties(self, props: dict[str, str]) -> None:
@@ -1623,9 +1616,7 @@ class IcebergWriter:
         new metadata version immediately when the table has snapshots;
         otherwise the properties ride out with the first commit."""
         self.properties.update({str(k): str(v) for k, v in props.items()})
-        if self.snapshots:
-            self.version += 1
-            self._write_metadata()
+        self._publish()
 
     def set_ref(
         self,
@@ -1671,15 +1662,13 @@ class IcebergWriter:
         if max_snapshot_age_ms is not None:
             ref["max-snapshot-age-ms"] = int(max_snapshot_age_ms)
         self.refs[name] = ref
-        self.version += 1
-        self._write_metadata()
+        self._publish()
 
     def drop_ref(self, name: str) -> None:
         if name not in self.refs:
             raise ValueError(f"no such ref {name!r}")
         del self.refs[name]
-        self.version += 1
-        self._write_metadata()
+        self._publish()
 
     # -- metadata emission --------------------------------------------------
 
@@ -1928,8 +1917,7 @@ class IcebergWriter:
         # a WAP pin, if set, keeps current-snapshot-id at the pin
         self.head_id = None
 
-        self.version += 1
-        self._write_metadata()
+        self._publish()
 
     def _publish_hint(self, version: int) -> None:
         """Atomically point ``version-hint.text`` at ``version`` — the
@@ -1939,15 +1927,26 @@ class IcebergWriter:
             f.write(str(version))
         os.replace(hint_tmp, f"{self.path}/metadata/version-hint.text")
 
-    def _write_metadata(self) -> None:
-        """Emit v{N}.metadata.json + version hint for the current state
-        (single emission path shared by commits and snapshot expiry)."""
-        if getattr(self, "_txn_poisoned", False):
+    def _publish(self) -> None:
+        """Emit the current state as the next metadata version — the one
+        commit seam every metadata change goes through: version bump,
+        v{N}.metadata.json written once and linked, hint flip (or
+        Transaction staging) and metadata-log entry.  With no snapshot
+        yet it emits nothing; the state rides out with the first commit.
+
+        A handle that lost the link race (or was aborted in a
+        Transaction) is POISONED: its in-memory state is ahead of the
+        published table, so every later publish refuses instead of
+        linking the next version over the winner's commit."""
+        if self._poisoned:
             raise RuntimeError(
-                f"{self.path} writer was aborted in a transaction; its "
-                "in-memory state is ahead of the published table — "
-                "reload with IcebergWriter.load"
+                f"{self.path} writer {self._poisoned}; its in-memory state "
+                "is ahead of the published table — reload with "
+                "IcebergWriter.load"
             )
+        if not self.snapshots:
+            return
+        self.version += 1
         last = self.head_snapshot
         # snapshot-log holds only the HEAD's lineage (reference Iceberg
         # truncates entries that leave the current branch on rollback, so
@@ -2070,6 +2069,7 @@ class IcebergWriter:
         try:
             os.link(tmp, target)
         except FileExistsError:
+            self._poisoned = f"lost the commit race for v{self.version}"
             raise CommitConflictError(
                 f"metadata version v{self.version} already committed by a "
                 "concurrent writer; reload and retry"
@@ -2079,7 +2079,7 @@ class IcebergWriter:
         # atomic replace: a concurrent reader (e.g. the streaming
         # source's latestOffset poll) must never observe a truncated or
         # empty hint mid-write
-        if getattr(self, "_txn_staged", None) is not None:
+        if self._txn_staged is not None:
             # inside a Transaction: metadata JSON is durable but the
             # hint flip — the publication act readers discover through —
             # is deferred to Transaction.__exit__'s phase 2
@@ -3343,7 +3343,7 @@ def rollback_to(writer: "IcebergWriter", snapshot_id: int) -> None:
     )
     # Keep the snapshots list in COMMIT order and repoint the head
     # explicitly: the next commit parents on the target, and
-    # _write_metadata truncates the snapshot-log to the head's lineage
+    # _publish truncates the snapshot-log to the head's lineage
     # (reference Iceberg drops log entries that leave the current branch
     # on rollback, so FOR TIMESTAMP AS OF cannot resolve to a
     # rolled-past snapshot).  Rolled-past snapshots stay in ``snapshots``
@@ -3353,8 +3353,7 @@ def rollback_to(writer: "IcebergWriter", snapshot_id: int) -> None:
         if writer.snapshots[-1]["snapshot-id"] == snapshot_id
         else snapshot_id
     )
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
 
 
 def fast_forward(writer: "IcebergWriter", name: str, to: int | str) -> int:
@@ -3412,8 +3411,7 @@ def fast_forward(writer: "IcebergWriter", name: str, to: int | str) -> int:
     moved = dict(cur)
     moved["snapshot-id"] = target
     writer.refs[name] = moved
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
     return target
 
 
@@ -3864,8 +3862,7 @@ def write_partition_statistics(writer: "IcebergWriter") -> str:
         for e in writer.partition_statistics
         if e["snapshot-id"] != snapshot_id
     ] + [entry]
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
     return path
 
 
@@ -4212,8 +4209,7 @@ def publish_branch(writer: "IcebergWriter", branch: str) -> int:
     last = writer.snapshots[-1]["snapshot-id"]
     writer.main_pin = None if head == last else head
     del writer.refs[branch]
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
     return head
 
 
@@ -4267,8 +4263,7 @@ def abort_stage(writer: "IcebergWriter", branch: str) -> list[int]:
         if writer.snapshots[-1]["snapshot-id"] == pin
         else pin
     )
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
     return dropped
 
 
@@ -5107,9 +5102,7 @@ def upgrade_format_version(writer: "IcebergWriter", to_version: int) -> None:
     if to_version == writer._format_version:
         return
     writer._format_version = to_version
-    if writer.snapshots:
-        writer.version += 1
-        writer._write_metadata()
+    writer._publish()
 
 
 def rewrite_position_deletes(writer: "IcebergWriter") -> int | None:
@@ -5419,7 +5412,7 @@ def expire_snapshots(
 
     Snapshots pinned by a named branch/tag ref are RETAINED even when
     older than the keep window (Iceberg's ref-reachability rule):
-    dropping them while ``_write_metadata`` still emits the ref would
+    dropping them while ``_publish`` still emits the ref would
     break ``open_snapshot(ref=...)`` and let ``remove_orphan_files``
     delete the tagged snapshot's data files.
 
@@ -5508,8 +5501,7 @@ def expire_snapshots(
         if refs_dropped:
             # the ref sweep changed metadata even though no snapshot
             # expired — persist it or the drop silently evaporates
-            writer.version += 1
-            writer._write_metadata()
+            writer._publish()
         return []
     survivors = [
         s for s in writer.snapshots if s["snapshot-id"] not in expired_set
@@ -5568,8 +5560,7 @@ def expire_snapshots(
         for e in writer.partition_statistics
         if e["snapshot-id"] not in expired_set
     ]
-    writer.version += 1
-    writer._write_metadata()
+    writer._publish()
     return sorted(expired_set)
 
 

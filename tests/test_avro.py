@@ -5,6 +5,7 @@ from __future__ import annotations
 import glob
 import io
 import json
+import os
 
 import pytest
 
@@ -653,6 +654,21 @@ def _legacy_records(data: bytes) -> list:
     return out
 
 
+def _columnar_records(data: bytes, wanted) -> dict:
+    """Decode a container through the columnar row function."""
+    from daskberg_spark.iceberg import avro as A
+
+    buf = io.BytesIO(data)
+    _meta, raw, codec, sync = A._parse_header(buf)
+    cols, row = A._compile_columnar_decoder(*A._load_schema(raw), wanted=wanted)
+    for count, block in A._blocks(buf, codec, sync, buf.tell(), 2**62):
+        pos = 0
+        for _ in range(count):
+            pos = row(block, pos)
+        assert pos == len(block)
+    return cols
+
+
 @settings(max_examples=60, deadline=None)
 @given(_schema_and_records(), st.sampled_from(["null", "deflate", "snappy"]))
 def test_decoder_memo_miss_then_hit_matches_legacy(sr, codec):
@@ -674,6 +690,11 @@ def test_decoder_memo_miss_then_hit_matches_legacy(sr, codec):
     assert first == legacy
     assert second == legacy
     assert legacy == records
+    names = [f["name"] for f in schema["fields"]]
+    for keep in (names, names[::2]):
+        assert _columnar_records(data, set(keep)) == {
+            n: [r[n] for r in legacy] for n in keep
+        }
 
 
 def test_decoder_memo_same_schema_distinct_payloads(tmp_path):
@@ -950,3 +971,38 @@ def test_deep_schema_decodes_like_legacy():
     got = read_avro(buf.getvalue())[1]
     assert got == records
     assert got == _legacy_records(buf.getvalue())
+
+
+def test_columnar_reader_compiles_once(tmp_path, monkeypatch):
+    """A columnar reader over a wide record generates one source and
+    compiles it once, not once per kept field."""
+    from daskberg_spark.iceberg import avro as A
+
+    schema = {
+        "type": "record",
+        "name": "wide",
+        "fields": [{"name": f"c{i}", "type": ["null", "long"]} for i in range(40)],
+    }
+    rows = [
+        {f"c{i}": None if (i + j) % 3 == 0 else i * j for i in range(40)}
+        for j in range(5)
+    ]
+    path = str(tmp_path / "wide.avro")
+    with open(path, "wb") as f:
+        write_avro(schema, rows, f)
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args[1])
+        return compile(*args, **kwargs)
+
+    monkeypatch.setattr(A, "compile", counting, raising=False)
+    for columns in (None, ["c0", "c7", "c39"]):
+        calls.clear()
+        cols, nrows, _ = A.read_avro_range_columns(
+            path, 0, os.path.getsize(path), columns=columns
+        )
+        assert calls == ["<avro decoder>"]
+        assert nrows == 5
+        keep = columns or [f"c{i}" for i in range(40)]
+        assert cols == {c: [r[c] for r in rows] for c in keep}

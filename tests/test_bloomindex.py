@@ -569,8 +569,7 @@ def test_token_bloom_tokenizer_revision_guard(spark):
         for m in e.get("blob-metadata", []):
             if "tokenizer" in (m.get("properties") or {}):
                 m["properties"]["tokenizer"] = "whitespace-lower-v99"
-    w.version += 1
-    w._write_metadata()
+    w._publish()
     t = IcebergTable(path)
     df = t.to_df(spark, token_filters=[("text", "zeta")])
     assert df.count() == 1  # residual still exact

@@ -746,6 +746,82 @@ def test_commit_conflict_detection(tmp_path):
     assert len(t.snapshots) == 2
 
 
+def _stats_publish(w):
+    from daskberg_spark.iceberg.statsblobs import publish
+
+    entry = {
+        "snapshot-id": w.head_snapshot["snapshot-id"],
+        "statistics-path": f"{w.path}/metadata/dummy.stats",
+        "file-size-in-bytes": 0,
+        "file-footer-size-in-bytes": 0,
+        "blob-metadata": [],
+    }
+    publish(w, [entry])
+
+
+@pytest.mark.parametrize(
+    "lose",
+    [
+        lambda w: w.append([{"x": 2}]),
+        lambda w: w.set_properties({"k": "v"}),
+        lambda w: w.set_ref("t1"),
+        _stats_publish,
+    ],
+    ids=["append", "set_properties", "set_ref", "stats_publish"],
+)
+def test_lost_race_handle_refuses_to_publish(spark, tmp_path, lose):
+    """A writer that loses the metadata-version race is poisoned: its
+    state is ahead of the table, so its next commit refuses instead of
+    linking the next version over the winner's acknowledged commit."""
+    from daskberg_spark.iceberg.writer import CommitConflictError, IcebergWriter
+
+    path = str(tmp_path / "t")
+    fields = [{"id": 1, "name": "x", "type": "long", "required": False}]
+    IcebergWriter(path, fields).append([{"x": 0}])
+    a, b = IcebergWriter.load(path), IcebergWriter.load(path)
+    a.append([{"x": 1}])
+    with pytest.raises(CommitConflictError):
+        lose(b)
+    with pytest.raises(RuntimeError, match="reload") as refused:
+        b.append([{"x": 3}])
+    assert not isinstance(refused.value, CommitConflictError)
+
+    def rows():
+        return sorted(r.x for r in IcebergTable(path).to_df(spark).collect())
+
+    assert rows() == [0, 1]
+    IcebergWriter.load(path).append([{"x": 3}])
+    assert rows() == [0, 1, 3]
+
+
+def test_spec_evolution_before_first_commit_leaves_no_version_gap(tmp_path):
+    """Evolving the partition spec on an empty table emits nothing; the
+    first commit then writes v1, not v2 over a missing v1."""
+    import os
+
+    from daskberg_spark.iceberg.writer import IcebergWriter
+
+    path = str(tmp_path / "t")
+    w = IcebergWriter(
+        path,
+        [
+            {"id": 1, "name": "x", "type": "long", "required": False},
+            {"id": 2, "name": "p", "type": "long", "required": False},
+        ],
+    )
+    w.update_partition_spec([{"name": "p", "transform": "identity", "source": "p"}])
+    w.append([{"x": 1, "p": 0}])
+    meta = sorted(
+        f for f in os.listdir(f"{path}/metadata") if f.endswith(".metadata.json")
+    )
+    assert meta == ["v1.metadata.json"]
+    with open(f"{path}/metadata/version-hint.text") as f:
+        assert f.read() == "1"
+    t = IcebergTable(path)
+    assert t.metadata["default-spec-id"] == 1
+    assert t.plan_files([("p", "==", 0)]) and not t.plan_files([("p", "==", 1)])
+
+
 def test_merge_rows_applies_live_deletes(spark, tmp_path):
     """Merging a file that carries v2-deleted rows must not resurrect
     them: live position/equality deletes are applied to the rewrite

@@ -1,14 +1,11 @@
-"""Minimal Apache Avro object-container-file reader (and writer), pure Python.
+"""Apache Avro object-container-file codec, pure Python.
 
-Implements exactly the subset of the Avro 1.x spec that Iceberg v1
-manifest-list and manifest files use: records, unions, arrays, maps, and
-the primitive types, with ``null``, ``deflate``, ``snappy`` (pure-Python
-raw codec + CRC) and ``zstd`` (via the Spark JVM's bundled zstd-jni —
-no Python zstd exists in this env) block codecs.  The
-reference reads these files with fastavro
-(``/root/reference/daskberg/ice.py:148-151,186-188``); that dependency is
-not available here, and the format is simple enough that a from-scratch
-decoder is ~200 lines.
+Implements the subset of the Avro 1.x spec that Iceberg manifest lists,
+manifests and AVRO data files use: records, unions, enums, fixed,
+arrays, maps and the primitive types, with ``null``, ``deflate``,
+``snappy`` (pure-Python raw codec + CRC) and ``zstd`` (through the Spark
+JVM's bundled zstd-jni) block codecs.  The reference implementation
+reads manifests with fastavro; this package has no such dependency.
 
 Container layout (Avro spec "Object Container Files"):
 
@@ -20,14 +17,18 @@ Container layout (Avro spec "Object Container Files"):
 All integers are zigzag varints.  ``deflate`` blocks are raw-DEFLATE
 (zlib with no header, wbits=-15).
 
-The writer exists to generate our own partitioned test fixtures (the
-reference ships none — SURVEY.md §5) and to support catalog-free table
-writes; it emits the same subset.
+One generator, :class:`_CodecSource`, turns a schema into Python source
+for its decoder, its skippers (projected-away fields) and its encoder;
+manifest decoders and all encoders compile once per distinct schema.  The reader decodes every
+manifest the planner opens and the writer encodes every commit's
+manifest, manifest list and AVRO data file through it.  ``_decode`` and
+``_encode`` dispatch on the schema per value and stay as test oracles.
 """
 
 from __future__ import annotations
 
 import io
+import itertools
 import json
 import struct
 import zlib
@@ -191,87 +192,6 @@ def _rl(data: bytes, pos: int) -> tuple[int, int]:
     return (accum >> 1) ^ -(accum & 1), pos
 
 
-def _sl(data: bytes, pos: int) -> int:
-    """Skip one varint: advance past continuation bytes, decode nothing."""
-    while data[pos] & 0x80:
-        pos += 1
-    return pos + 1
-
-
-def _compile_skipper(schema: Any, names: dict[str, Any]):
-    """Compile a ``(data, pos) -> pos`` SKIPPER: advance past one value
-    of this schema without materializing it — what column projection
-    uses to not pay for unwanted fields (an executor projecting 2 of 40
-    AVRO columns otherwise decodes and discards 95% of its work)."""
-    schema = _skip_to_named(schema, names)
-    if isinstance(schema, list):
-        skips = [_compile_skipper(s, names) for s in schema]
-
-        def _skip_union(data, pos):
-            idx, pos = _rl(data, pos)
-            return skips[_index("union", idx, len(skips))](data, pos)
-
-        return _skip_union
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            members = [_compile_skipper(f["type"], names) for f in schema["fields"]]
-
-            def _skip_record(data, pos):
-                for m in members:
-                    pos = m(data, pos)
-                return pos
-
-            return _skip_record
-        if t in ("array", "map"):
-            item = _compile_skipper(
-                schema["items"] if t == "array" else schema["values"], names
-            )
-            is_map = t == "map"
-
-            def _skip_blocks(data, pos):
-                while True:
-                    n, pos = _rl(data, pos)
-                    if n == 0:
-                        return pos
-                    if n < 0:
-                        # negative count carries a byte size → O(1) skip
-                        size, pos = _rl(data, pos)
-                        pos += size
-                        continue
-                    for _ in range(n):
-                        if is_map:
-                            ln, pos = _rl(data, pos)
-                            pos += ln
-                        pos = item(data, pos)
-
-            return _skip_blocks
-        if t == "fixed":
-            size = schema["size"]
-            return lambda data, pos: pos + size
-        if t == "enum":
-            return _sl
-        return _compile_skipper(t, names)
-    if schema == "null":
-        return lambda data, pos: pos
-    if schema == "boolean":
-        return lambda data, pos: pos + 1
-    if schema in ("int", "long"):
-        return _sl
-    if schema == "float":
-        return lambda data, pos: pos + 4
-    if schema == "double":
-        return lambda data, pos: pos + 8
-    if schema in ("bytes", "string"):
-
-        def _skip_len(data, pos):
-            n, pos = _rl(data, pos)
-            return pos + n
-
-        return _skip_len
-    raise NotImplementedError(f"avro type {schema!r}")
-
-
 _COMPLEX = ("record", "array", "map", "fixed", "enum")
 
 
@@ -284,9 +204,10 @@ def _resolve(schema: Any, names: dict[str, Any]) -> Any:
         schema = schema["type"]
 
 
-# Line templates of the generated decoder.  ``{t}`` is the target local;
-# ``end`` is a scratch local that never outlives its template.  A one-byte
-# varint decodes by table lookup (~15% faster decode than the arithmetic).
+# Line templates of the generated code.  ``{t}`` is the target local and
+# ``{x}`` the source local; ``end`` is a scratch local that never outlives
+# its template.  A one-byte varint decodes by table lookup (~15% faster
+# decode than the arithmetic) and encodes as one ``append``.
 _ZIGZAG = tuple((b >> 1) ^ -(b & 1) for b in range(128))
 _VARINT = """\
 {t} = data[pos]
@@ -311,19 +232,62 @@ _BLOCK = """\
         {n} = -{n}
     for _ in range({n}):
 """
-_ENUM = """\
+_IN_RANGE = """\
 if not 0 <= {t} < {n}:
-    _index("enum", {t}, {n})
-{t} = {symbols}[{t}]
+    _index("{kind}", {t}, {n})
+"""
+_SKIP_VARINT = """\
+while data[pos] & 128:
+    pos += 1
+pos += 1
+"""
+# a negative count carries the block's byte size: skipped in O(1)
+_SKIP_BLOCK = """\
+    if {n} == 0:
+        break
+    if {n} < 0:
+        {n}, pos = _rl(data, pos)
+        pos += {n}
+        continue
+    for _ in range({n}):
+"""
+_PUT_LONG = """\
+{z} = (({x} << 1) ^ ({x} >> 63)) & 0xFFFFFFFFFFFFFFFF
+while {z} > 127:
+    out.append({z} & 127 | 128)
+    {z} >>= 7
+out.append({z})
+"""
+_PUT_FIXED = """\
+if len({x}) != {size}:
+    raise ValueError("fixed({size}) value has %d bytes" % len({x}))
+out.extend({x})
+"""
+# ``table`` maps each exact Python type to ``_union_branch``'s choice for
+# it; any other type (a subclass, or one no branch takes) asks it directly
+_PUT_UNION = """\
+{b} = {table}.get(type({x}))
+if {b} is None:
+    {b} = _union_branch({schemas}, {x}, _names)
 """
 
+# bytes a fixed-width primitive occupies (the skipper's ``pos += n``)
+_WIDTHS = {"null": 0, "boolean": 1, "float": 4, "double": 8}
 
-class _DecoderSource:
-    """Python source for one schema's decoder: one function per record
-    type and per array/map item that loops itself, everything else
+
+def _emit(out: list[str], ind: str, template: str, **kw: Any) -> None:
+    out.extend(ind + line for line in template.format(**kw).splitlines())
+
+
+class _CodecSource:
+    """Python source for one schema's codec: decoders, skippers and
+    encoders, compiled together by :meth:`build`.  A decoder or encoder
+    is one function per record type (a recursive type calls itself) and
+    a decoder also one per array/map item that loops itself; a skipper
+    is one function per distinct resolved type; everything else is
     inline.  Schema text never reaches the source: field names, enum
-    symbols and skippers are namespace constants, and every identifier
-    comes from a counter."""
+    symbols, defaults and union tables are namespace constants, and
+    every identifier comes from a counter."""
 
     def __init__(self, names: dict[str, Any]):
         self.names = names
@@ -333,9 +297,16 @@ class _DecoderSource:
             "_index": _index,
             "_float": struct.Struct("<f").unpack_from,
             "_double": struct.Struct("<d").unpack_from,
+            "_wl": _write_long,
+            "_pf": struct.Struct("<f").pack,
+            "_pd": struct.Struct("<d").pack,
+            "_union_branch": _union_branch,
+            "_names": names,
         }
         self.funcs: dict[str, str] = {}
         self.records: dict[int, str] = {}
+        self.encoders: dict[int, str] = {}
+        self.skippers: dict[str, str] = {}
         self.nvars = 0
 
     def const(self, value: Any) -> str:
@@ -346,6 +317,21 @@ class _DecoderSource:
         self.nvars += 1
         return f"v{self.nvars}"
 
+    def reserve(self, prefix: str) -> str:
+        """A fresh function name, reserved before its body is emitted
+        (nested functions follow it)."""
+        name = f"{prefix}{len(self.funcs)}"
+        self.funcs[name] = ""
+        return name
+
+    def build(self, top: str):
+        """Compile every emitted function with ONE ``compile()``; return
+        the function named ``top``."""
+        exec(compile("\n\n".join(self.funcs.values()), "<avro codec>", "exec"), self.ns)
+        return self.ns[top]
+
+    # -- decode -------------------------------------------------------------
+
     def func(self, schema: Any, wanted: Any = None) -> str:
         """Emit a ``(data, pos) -> (value, pos)`` function for ``schema``
         and return its name; ``wanted`` projects a record's fields."""
@@ -354,8 +340,7 @@ class _DecoderSource:
         memo = record and wanted is None
         if memo and id(s) in self.records:
             return self.records[id(s)]
-        name = f"_f{len(self.funcs)}"
-        self.funcs[name] = ""  # reserve the name: nested functions follow
+        name = self.reserve("_f")
         if memo:  # registered first, so a recursive type calls itself
             self.records[id(s)] = name
         body: list[str] = []
@@ -377,21 +362,29 @@ class _DecoderSource:
         (``wanted`` None keeps all) into fresh locals, the others through
         skippers — and return the kept (field name, local) pairs."""
         kept = []
+        skipped: list[str] = []  # skippers since the last kept field
         for f in record["fields"]:
             if wanted is None or f["name"] in wanted:
+                self.skips(skipped, body)
                 v = self.var()
                 self.value(f["type"], v, body, "")
                 kept.append((f["name"], v))
             else:
-                skip = self.const(_compile_skipper(f["type"], self.names))
-                body.append(f"pos = {skip}(data, pos)")
+                skipped.append(self.skipper(f["type"]))
+        self.skips(skipped, body)
         return kept
 
-    def build(self, top: str):
-        """Compile every emitted function with ONE ``compile()``; return
-        the function named ``top``."""
-        exec(compile("\n\n".join(self.funcs.values()), "<avro decoder>", "exec"), self.ns)
-        return self.ns[top]
+    @staticmethod
+    def skips(skipped: list[str], body: list[str]) -> None:
+        """Emit the calls for a run of skipped fields and empty the run:
+        consecutive fields of one type share a loop (each emitted line
+        costs ``compile()`` ~12 us on a 4-vCPU host; 38 of 40 fields
+        skipped is common)."""
+        for name, group in itertools.groupby(skipped):
+            call = f"pos = {name}(data, pos)"
+            n = len(list(group))
+            body.extend([f"for _ in range({n}):", "    " + call] if n > 1 else [call])
+        skipped.clear()
 
     def loops(self, schema: Any) -> bool:
         """Whether ``schema`` decodes inline with a loop of its own."""
@@ -407,7 +400,7 @@ class _DecoderSource:
         kind = s["type"] if isinstance(s, dict) else s
 
         def emit(template: str, **kw: Any) -> None:
-            out.extend(ind + x for x in template.format(t=t, **kw).splitlines())
+            _emit(out, ind, template, t=t, **kw)
 
         if isinstance(s, list):
             i = self.var()
@@ -439,7 +432,8 @@ class _DecoderSource:
             emit("end = pos + {size}\n" + _SLICE, size=size, what="fixed", decode="")
         elif kind == "enum":
             symbols = self.const(tuple(s["symbols"]))
-            emit(_VARINT + _ENUM, n=len(s["symbols"]), symbols=symbols)
+            emit(_VARINT + _IN_RANGE + "{t} = {symbols}[{t}]",
+                 kind="enum", n=len(s["symbols"]), symbols=symbols)
         elif kind == "null":
             emit("{t} = None")
         elif kind == "boolean":
@@ -455,6 +449,168 @@ class _DecoderSource:
         else:
             raise NotImplementedError(f"avro type {s!r}")
 
+    # -- skip ---------------------------------------------------------------
+
+    def skipper(self, schema: Any) -> str:
+        """Emit a ``(data, pos) -> pos`` function that advances past one
+        ``schema`` value without building it — what column projection
+        uses so unwanted fields cost no decode — and return its name.
+        One function per distinct resolved type: 38 projected-away
+        fields of one type share it."""
+        s = _resolve(schema, self.names)
+        key = repr(s)  # equal text, equal type
+        if key in self.skippers:
+            return self.skippers[key]
+        name = self.skippers[key] = self.reserve("_s")
+        body: list[str] = []
+        if isinstance(s, dict) and s["type"] == "record":
+            for f in s["fields"]:
+                self.skip(f["type"], body, "")
+        else:
+            self.skip(s, body, "")
+        self.funcs[name] = "\n    ".join([f"def {name}(data, pos):", *body, "return pos"])
+        return name
+
+    def skip(self, schema: Any, out: list[str], ind: str) -> None:
+        """Emit lines at indent ``ind`` advancing ``pos`` past one
+        ``schema`` value; union and enum indexes are range-checked like
+        the decoder's."""
+        s = _resolve(schema, self.names)
+        kind = s["type"] if isinstance(s, dict) else s
+        if isinstance(s, list):
+            i = self.var()
+            self.value("long", i, out, ind)
+            _emit(out, ind, _IN_RANGE, t=i, kind="union", n=len(s))
+            el = ""
+            for k, branch in enumerate(s):
+                body: list[str] = []
+                self.skip(branch, body, ind + "    ")
+                if body:
+                    out.append(f"{ind}{el}if {i} == {k}:")
+                    out.extend(body)
+                    el = "el"
+        elif kind == "record":
+            out.append(f"{ind}pos = {self.skipper(s)}(data, pos)")
+        elif kind in ("array", "map"):
+            n = self.var()
+            out.append(f"{ind}while True:")
+            self.value("long", n, out, ind + "    ")
+            _emit(out, ind, _SKIP_BLOCK, n=n)
+            inner = ind + "        "
+            body = []
+            if kind == "map":
+                self.skip("string", body, inner)
+            self.skip(s["items"] if kind == "array" else s["values"], body, inner)
+            out.extend(body or [inner + "pass"])
+        elif kind == "enum":
+            i = self.var()
+            self.value("long", i, out, ind)
+            _emit(out, ind, _IN_RANGE, t=i, kind="enum", n=len(s["symbols"]))
+        elif kind in ("int", "long"):
+            _emit(out, ind, _SKIP_VARINT)
+        elif kind in ("bytes", "string"):
+            n = self.var()
+            self.value("long", n, out, ind)
+            out.append(f"{ind}pos += {n}")
+        elif kind in _WIDTHS:
+            if _WIDTHS[kind]:
+                out.append(f"{ind}pos += {_WIDTHS[kind]}")
+        elif kind == "fixed":
+            out.append(f"{ind}pos += {int(s['size'])}")
+        else:
+            raise NotImplementedError(f"avro type {s!r}")
+
+    # -- encode -------------------------------------------------------------
+
+    def encoder(self, schema: Any) -> str:
+        """Emit a ``(v, out) -> None`` function appending the encoding of
+        one ``schema`` value ``v`` to bytearray ``out``; return its name."""
+        s = _resolve(schema, self.names)
+        record = isinstance(s, dict) and s["type"] == "record"
+        if record and id(s) in self.encoders:
+            return self.encoders[id(s)]
+        name = self.reserve("_e")
+        body: list[str] = []
+        if not record:
+            self.put(s, "v", body, "")
+        else:
+            self.encoders[id(s)] = name  # before the fields: recursion
+            for f in s["fields"]:
+                x, key = self.var(), self.const(f["name"])
+                get = f"v[{key}]"  # KeyError if absent: schema demands it
+                if "default" in f:
+                    get += f" if {key} in v else {self.const(f['default'])}"
+                body.append(f"{x} = {get}")
+                self.put(f["type"], x, body, "")
+        self.funcs[name] = "\n    ".join([f"def {name}(v, out):", *(body or ["pass"])])
+        return name
+
+    def put(self, schema: Any, x: str, out: list[str], ind: str) -> None:
+        """Emit lines at indent ``ind`` appending local ``x`` encoded as
+        ``schema`` to ``out`` — the bytes and errors of ``_encode``."""
+        s = _resolve(schema, self.names)
+        kind = s["type"] if isinstance(s, dict) else s
+
+        def emit(template: str, **kw: Any) -> None:
+            _emit(out, ind, template, x=x, **kw)
+
+        if isinstance(s, list):
+            table = {}
+            for py in (type(None), *_UNION_TYPE_MATCH):
+                try:  # the choice depends on the value's type alone
+                    table[py] = _union_branch(s, py(), self.names)
+                except ValueError:  # raised again, with the value, at run time
+                    pass
+            b = self.var()
+            emit(_PUT_UNION, b=b, table=self.const(table), schemas=self.const(s))
+            for k, branch in enumerate(s):
+                out.append(f"{ind}{'el' if k else ''}if {b} == {k}:")
+                index = f"out.append({2 * k})" if k < 64 else f"_wl(out, {k})"
+                out.append(f"{ind}    {index}")
+                self.put(branch, x, out, ind + "    ")
+        elif kind == "record":
+            emit("{f}({x}, out)", f=self.encoder(s))
+        elif kind in ("array", "map"):
+            n, k, v = self.var(), self.var(), self.var()
+            emit("if {x}:\n    {n} = len({x})", n=n)
+            self.put("long", n, out, ind + "    ")
+            inner = ind + "        "
+            if kind == "array":
+                emit("    for {v} in {x}:", v=v)
+                body: list[str] = []
+                self.put(s["items"], v, body, inner)
+                out.extend(body or [inner + "pass"])
+            else:
+                emit("    for {k}, {v} in {x}.items():", k=k, v=v)
+                self.put("string", k, out, inner)
+                self.put(s["values"], v, out, inner)
+            emit("out.append(0)")
+        elif kind == "fixed":
+            emit(_PUT_FIXED, size=int(s["size"]))
+        elif kind == "enum":
+            emit("_wl(out, {symbols}.index({x}))", symbols=self.const(list(s["symbols"])))
+        elif kind == "null":
+            pass
+        elif kind == "boolean":
+            emit("out.append(1 if {x} else 0)")
+        elif kind in ("int", "long"):
+            emit(_PUT_LONG, z=self.var())
+        elif kind == "float":
+            emit("out.extend(_pf({x}))")
+        elif kind == "double":
+            emit("out.extend(_pd({x}))")
+        elif kind == "bytes":
+            n = self.var()
+            emit("{n} = len({x})", n=n)
+            self.put("long", n, out, ind)
+            emit("out.extend({x})")
+        elif kind == "string":
+            y = self.var()
+            emit("{y} = {x}.encode()", y=y)
+            self.put("bytes", y, out, ind)
+        else:
+            raise NotImplementedError(f"avro type {s!r}")
+
 
 def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
     """Compile an Avro schema ONCE into a ``(data, pos) -> (value, pos)``
@@ -467,32 +623,43 @@ def _compile_decoder(schema: Any, names: dict[str, Any], wanted: Any = None):
     field; 4-vCPU host); compiling the manifest schema costs ~4 ms.
 
     ``wanted`` (a set of field names, or None for all) projects the
-    TOP-LEVEL record: unwanted fields call position skippers that never
+    TOP-LEVEL record: unwanted fields call generated skippers that never
     materialize values."""
-    src = _DecoderSource(names)
+    src = _CodecSource(names)
     return src.build(src.func(schema, wanted))
 
 
-# Every manifest of a table shares one Avro schema, and a compiled
-# decoder is a pure function of its schema: memoised by the raw
-# ``avro.schema`` bytes, the schema parses and compiles once instead of
-# once per file (compiling a manifest schema's decoder takes ~4 ms, the
-# decode of one 8-entry manifest ~0.1 ms; 4-vCPU host).  This holds
-# code, never decoded data.  Bounded; a full memo is cleared, not
-# iterated, so reader threads share it without a lock.
+def _compile_encoder(schema: Any, names: dict[str, Any]):
+    """Compile an Avro schema ONCE into a ``(value, out) -> None``
+    encoder that appends to a bytearray: the generated counterpart of
+    ``_encode``, the test oracle, with the same bytes and the same
+    errors (``ValueError`` for a wrong-length fixed value or an unknown
+    enum symbol, ``KeyError`` for a missing field with no default)."""
+    src = _CodecSource(names)
+    return src.build(src.encoder(schema))
+
+
+# Every manifest of a table shares one Avro schema, and a compiled codec
+# is a pure function of its schema: memoised by the raw ``avro.schema``
+# bytes, the schema parses and compiles once instead of once per file
+# (compiling a manifest schema's decoder takes ~4 ms, the decode of one
+# 8-entry manifest ~0.1 ms; 4-vCPU host).  A memo holds code, never
+# data.  Bounded; a full memo is cleared, not iterated, so threads share
+# it without a lock.  ``_memo`` holds decoders, ``_encoders`` encoders.
 _MEMO_MAX = 64
 _memo: dict[bytes, Any] = {}
+_encoders: dict[bytes, Any] = {}
 
 
-def _record_decoder(raw: bytes):
-    """The compiled record decoder for schema bytes ``raw``, memoised."""
-    dec = _memo.get(raw)
-    if dec is None:
-        dec = _compile_decoder(*_load_schema(raw))
-        if len(_memo) >= _MEMO_MAX:
-            _memo.clear()
-        _memo[raw] = dec
-    return dec
+def _memoised(memo: dict[bytes, Any], raw: bytes, compile_schema):
+    """``compile_schema``'s function for schema bytes ``raw``, memoised."""
+    fn = memo.get(raw)
+    if fn is None:
+        fn = compile_schema(*_load_schema(raw))
+        if len(memo) >= _MEMO_MAX:
+            memo.clear()
+        memo[raw] = fn
+    return fn
 
 
 def _parse_header(buf) -> tuple[dict[str, bytes], bytes, str, bytes]:
@@ -545,7 +712,7 @@ def read_avro(data: bytes) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
     """Decode an Avro object-container file → (file metadata, records)."""
     buf = io.BytesIO(data)
     meta, raw, codec, sync = _parse_header(buf)
-    dec = _record_decoder(raw)
+    dec = _memoised(_memo, raw, _compile_decoder)
     records: list[dict[str, Any]] = []
     append = records.append
     for count, block in _blocks(buf, codec, sync, buf.tell(), 2**62):
@@ -558,7 +725,8 @@ def read_avro(data: bytes) -> tuple[dict[str, bytes], list[dict[str, Any]]]:
 
 def _blocks(f, codec: str, sync: bytes, first: int, end: int):
     """``(record count, payload)`` of each block from offset ``first`` to
-    the last one owned by a range ending at ``end`` (:func:`read_avro_range`)."""
+    the last one owned by a range ending at ``end`` (the split rule of
+    :func:`read_avro_range_columns`)."""
     f.seek(first)
     while True:
         try:
@@ -668,16 +836,16 @@ def _compile_columnar_decoder(
     straight into its list in ``cols`` — no per-row dict is ever
     built, and no second per-column extraction pass runs (the two
     costs that dominate the row-oriented decode when the consumer is
-    a columnar engine).  Unwanted fields compile to position skippers.
+    a columnar engine).  Unwanted fields compile to generated skippers.
     Decode semantics are identical by construction: the row function
-    is generated by the same ``_DecoderSource`` as
+    is generated by the same ``_CodecSource`` as
     ``_compile_decoder``'s record functions, with each kept field's
     local appended to its list instead of stored in a dict, and the
     whole source compiles once."""
     schema = _skip_to_named(schema, names)
     if not (isinstance(schema, dict) and schema.get("type") == "record"):
         raise ValueError("columnar decode requires a top-level record")
-    src = _DecoderSource(names)
+    src = _CodecSource(names)
     body: list[str] = []
     cols: dict[str, list] = {}
     for name, v in src.fields(schema, wanted, body):
@@ -695,12 +863,33 @@ def read_avro_range_columns(
     known_block: tuple[int, int] | None = None,
     columns: Any = None,
 ) -> tuple[dict[str, list], int, int]:
-    """Columnar :func:`read_avro_range`: same block-ownership rule and
-    arguments, but returns ``(cols, nrows, row_offset)`` where ``cols``
-    maps each present+wanted field name to a Python list of values —
-    ready for zero-copy-ish ``pyarrow.array`` construction in the data
-    scan's ``mapInArrow`` leg (fields absent from the file schema are
-    simply absent keys; the caller null-fills)."""
+    """Decode the container blocks OWNED by byte range ``[start, end)``
+    into columns.
+
+    A block is owned iff the 16-byte sync marker that precedes it begins
+    at a position ``q`` with ``start <= q < end`` — the Hadoop split
+    rule, so any partition of ``[0, file_size)`` decodes every record
+    exactly once with no cross-task coordination.  Returns ``(cols,
+    nrows, row_offset)``: ``cols`` maps each present and wanted field
+    name (``columns``, None for all) to a Python list of values, ready
+    for ``pyarrow.array`` construction in the data scan's ``mapInArrow``
+    leg (fields absent from the file schema are absent keys; the caller
+    null-fills); ``row_offset`` is the number of records in earlier
+    blocks (0 unless ``want_row_offset`` or ``known_block``).
+
+    ``want_row_offset`` — needed when rows must carry their whole-file
+    position (delete alignment) — walks the preceding block HEADERS
+    (seek per block, no decode/decompress), which is also an exact,
+    collision-proof block chain; the positionless path instead does one
+    sequential sync search from ``start`` (object-store friendly), with
+    candidates validated against the block chain so record bytes that
+    contain the marker cannot derail the scan.
+
+    ``known_block=(block_offset, row_offset)`` — from a prior
+    :func:`avro_block_index` pass — skips both the walk and the search:
+    decoding starts at that exact block with that row offset (split
+    planning hands every task its own entry so per-task work stays
+    O(own range))."""
     with open(path, "rb") as f:
         _meta, raw, codec, sync = _parse_header(f)
         cols, row_fn = _compile_columnar_decoder(
@@ -729,8 +918,8 @@ def _locate_first_block(
     want_row_offset: bool,
     known_block: tuple[int, int] | None,
 ) -> tuple[int | None, int]:
-    """Shared range-entry logic for the row and columnar range readers:
-    returns ``(first_block_offset_or_None, row_offset)``.  ``f`` must be
+    """Where :func:`read_avro_range_columns` starts: returns
+    ``(first_block_offset_or_None, row_offset)``.  ``f`` must be
     positioned just past the header."""
     header_end = f.tell()
     f.seek(0, 2)
@@ -762,56 +951,6 @@ def _locate_first_block(
     else:
         first_block = _find_first_block(f, sync, start, end, size)
     return first_block, row_offset
-
-
-def read_avro_range(
-    path: str,
-    start: int,
-    end: int,
-    want_row_offset: bool = False,
-    known_block: tuple[int, int] | None = None,
-    columns: Any = None,
-) -> tuple[dict[str, bytes], list[dict[str, Any]], int]:
-    """Decode the container blocks OWNED by byte range ``[start, end)``.
-
-    A block is owned iff the 16-byte sync marker that precedes it begins
-    at a position ``q`` with ``start <= q < end`` — the Hadoop split
-    rule, so any partition of ``[0, file_size)`` decodes every record
-    exactly once with no cross-task coordination.  Returns
-    ``(metadata, records, row_offset)`` where ``row_offset`` is the
-    number of records in earlier blocks (0 unless ``want_row_offset``).
-
-    ``want_row_offset`` — needed when rows must carry their whole-file
-    position (delete alignment) — walks the preceding block HEADERS
-    (seek per block, no decode/decompress), which is also an exact,
-    collision-proof block chain; the positionless path instead does one
-    sequential sync search from ``start`` (object-store friendly), with
-    candidates validated against the block chain so record bytes that
-    contain the marker cannot derail the scan.
-
-    ``known_block=(block_offset, row_offset)`` — from a prior
-    :func:`avro_block_index` pass — skips both the walk and the search:
-    decoding starts at that exact block with that row offset (split
-    planning hands every task its own entry so per-task work stays
-    O(own range))."""
-    with open(path, "rb") as f:
-        meta, raw, codec, sync = _parse_header(f)
-        dec = _compile_decoder(
-            *_load_schema(raw),
-            wanted=set(columns) if columns is not None else None,
-        )
-        first_block, row_offset = _locate_first_block(
-            f, sync, start, end, want_row_offset, known_block
-        )
-        records: list[dict[str, Any]] = []
-        if first_block is None:
-            return meta, records, 0
-        for count, data in _blocks(f, codec, sync, first_block, end):
-            pos = 0
-            for _ in range(count):
-                rec, pos = dec(data, pos)
-                records.append(rec)
-        return meta, records, row_offset
 
 
 # ---------------------------------------------------------------------------
@@ -956,20 +1095,15 @@ def _snappy_compress(data: bytes) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# encode (for fixture generation / table writes)
+# encode: the test oracle ``_encode`` and the container writer
 
 
 def _write_long(out: bytearray, value: int) -> None:
-    value = (value << 1) ^ (value >> 63)  # zigzag
-    value &= (1 << 64) - 1
-    while True:
-        b = value & 0x7F
+    value = ((value << 1) ^ (value >> 63)) & 0xFFFFFFFFFFFFFFFF  # zigzag
+    while value > 127:
+        out.append(value & 0x7F | 0x80)
         value >>= 7
-        if value:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
+    out.append(value)
 
 
 def _write_bytes(out: bytearray, data: bytes) -> None:
@@ -1041,142 +1175,6 @@ def _encode(schema: Any, value: Any, out: bytearray, names: dict[str, Any]) -> N
         raise NotImplementedError(f"avro type {schema!r}")
 
 
-def _compile_type_encoder(schema: Any, names: dict[str, Any]):
-    """Once-per-schema encoder closure for the flat subset data-file
-    schemas use (primitives, logical-type wrappers, 2-branch null
-    unions).  Returns None outside that subset — the caller keeps the
-    generic recursive ``_encode`` (manifest schemas with nested
-    records/arrays/maps take that path unchanged).  Mirrors the
-    compiled DECODER closures: the win is skipping per-value schema
-    dispatch and union type-matching, measured ~3× on the distributed
-    AVRO write leg."""
-    schema = _skip_to_named(schema, names)
-    if isinstance(schema, list):
-        if len(schema) != 2:
-            return None
-        branch_types = []
-        for s in schema:
-            s = _skip_to_named(s, names)
-            branch_types.append(s["type"] if isinstance(s, dict) else s)
-        if "null" not in branch_types:
-            return None
-        null_idx = branch_types.index("null")
-        other = schema[1 - null_idx]
-        inner = _compile_type_encoder(other, names)
-        if inner is None:
-            return None
-        null_byte = null_idx * 2  # zigzag varint of 0/1 is one byte
-        val_byte = (1 - null_idx) * 2
-
-        def enc_opt(v, out, _inner=inner, _nb=null_byte, _vb=val_byte):
-            if v is None:
-                out.append(_nb)
-            else:
-                out.append(_vb)
-                _inner(v, out)
-
-        return enc_opt
-    if isinstance(schema, dict):
-        # logical-type wrapper ({"type": "long", "logicalType": ...}):
-        # encodes as its underlying primitive
-        t = schema.get("type")
-        if isinstance(t, str) and t in (
-            "int", "long", "float", "double", "boolean", "string", "bytes"
-        ):
-            return _compile_type_encoder(t, names)
-        return None
-    if schema in ("int", "long"):
-
-        def enc_long(v, out):
-            v = (v << 1) ^ (v >> 63)
-            v &= 0xFFFFFFFFFFFFFFFF
-            while True:
-                b = v & 0x7F
-                v >>= 7
-                if v:
-                    out.append(b | 0x80)
-                else:
-                    out.append(b)
-                    break
-
-        return enc_long
-    if schema == "double":
-
-        def enc_double(v, out):
-            out.extend(struct.pack("<d", v))
-
-        return enc_double
-    if schema == "float":
-
-        def enc_float(v, out):
-            out.extend(struct.pack("<f", v))
-
-        return enc_float
-    if schema == "boolean":
-
-        def enc_bool(v, out):
-            out.append(1 if v else 0)
-
-        return enc_bool
-    if schema == "string":
-
-        def enc_str(v, out):
-            b = v.encode("utf-8")
-            n = len(b) << 1  # zigzag of a non-negative length
-            while True:
-                byt = n & 0x7F
-                n >>= 7
-                if n:
-                    out.append(byt | 0x80)
-                else:
-                    out.append(byt)
-                    break
-            out.extend(b)
-
-        return enc_str
-    if schema == "bytes":
-
-        def enc_bytes(v, out):
-            n = len(v) << 1
-            while True:
-                byt = n & 0x7F
-                n >>= 7
-                if n:
-                    out.append(byt | 0x80)
-                else:
-                    out.append(byt)
-                    break
-            out.extend(v)
-
-        return enc_bytes
-    return None
-
-
-def compile_record_encoder(schema: Any, names: dict[str, Any]):
-    """Compiled encoder for a flat record schema, or None (caller falls
-    back to the generic ``_encode``).  Byte-identical output is pinned
-    by a differential test across every compilable shape."""
-    if not isinstance(schema, dict) or schema.get("type") != "record":
-        return None
-    encs = []
-    for f in schema["fields"]:
-        enc = _compile_type_encoder(f["type"], names)
-        if enc is None:
-            return None
-        encs.append((f["name"], enc, "default" in f, f.get("default")))
-
-    def encode_record(value, out, _encs=tuple(encs)):
-        for name, enc, has_default, default in _encs:
-            if name in value:
-                enc(value[name], out)
-            elif has_default:
-                enc(default, out)
-            else:
-                raise KeyError(name)  # schema demands the field
-
-    return encode_record
-
-
 _UNION_TYPE_MATCH = {
     bool: ("boolean",),
     int: ("int", "long"),
@@ -1242,16 +1240,19 @@ def write_avro(
     metadata: dict[str, bytes] | None = None,
     codec: str = "deflate",
 ) -> None:
-    """Encode records into an Avro object container file.
+    """Encode records into an Avro object container file through the
+    schema's generated encoder (:func:`_compile_encoder`, memoised by the
+    ``avro.schema`` bytes, so a commit pays no ``compile()`` after its
+    first manifest).
 
     Records chunk into blocks of ~``AVRO_BLOCK_BYTES`` raw payload (one
-    block when smaller, as before): a single-block container cannot be
-    byte-range split, so a large data file would decode on ONE core —
-    block boundaries are what :func:`read_avro_range` parallelizes over
-    (and what any Hadoop-style Avro reader splits on)."""
-    names: dict[str, Any] = {}
-    _register_names(schema, names)
-    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec.encode()}
+    block when smaller): a single-block container cannot be byte-range
+    split, so a large data file would decode on ONE core — block
+    boundaries are what :func:`read_avro_range_columns` parallelizes
+    over (and what any Hadoop-style Avro reader splits on)."""
+    raw = json.dumps(schema).encode()
+    encode_one = _memoised(_encoders, raw, _compile_encoder)
+    meta = {"avro.schema": raw, "avro.codec": codec.encode()}
     if metadata:
         meta.update(metadata)
 
@@ -1272,12 +1273,6 @@ def write_avro(
     blocks: list[tuple[int, bytes]] = []
     body = bytearray()
     count = 0
-    # flat record schemas (the data-file shape) take the compiled
-    # encoder; anything nested keeps the generic recursive path
-    compiled = compile_record_encoder(schema, names)
-    encode_one = compiled if compiled is not None else (
-        lambda rec, out: _encode(schema, rec, out, names)
-    )
     for rec in records:
         encode_one(rec, body)
         count += 1

@@ -27,8 +27,7 @@ Soundness:
   (``xxhash.py``: int/long/date/timestamp/string/boolean).
 - The build hashes with the built-in ``F.xxhash64`` on executors
   (codegen, no Python); per-file state is capped at ``m_bits/64``
-  words.  Below ``DASKBERG_BLOOM_SHARD_FILE_GATE`` (default 1000
-  files) the driver collects the occupied words and packs one puffin;
+  words.  Below ``BLOOM_SHARD_FILE_GATE`` (1000 files) the driver collects the occupied words and packs one puffin;
   above it, executors write sharded puffin files directly (the DV
   commit path's pattern) and the driver collects only (file, column,
   path, offset, length) rows — million-file builds never move bitmap
@@ -43,7 +42,6 @@ the current snapshot.
 
 from __future__ import annotations
 
-import os
 import struct
 from typing import Any
 
@@ -74,6 +72,11 @@ DEFAULT_SEEDS = BLOOM_SEEDS
 # blob properties so a future tokenizer revision can coexist.
 TOKENIZER_ID = "whitespace-lower-v1"
 TOKEN_SPLIT_RE = r"\s+"
+# Above this many scanned files the build shards: executors write the
+# puffin files, BLOOM_SHARD_PAIRS (file, column) pairs each, and the
+# driver collects only their (path, offset, length) rows.
+BLOOM_SHARD_FILE_GATE = 1000
+BLOOM_SHARD_PAIRS = 256
 
 _PROBE_TYPES = {
     "int",
@@ -286,10 +289,7 @@ def write_file_blooms(
     seq = writer._last_sequence_number
     seeds_prop = ",".join(str(int(s)) for s in seeds)
     fid_by_col = {c: writer.ids[c] for c in columns}
-    shard_gate = int(
-        os.environ.get("DASKBERG_BLOOM_SHARD_FILE_GATE", "1000")
-    )
-    if len(scan_paths) > shard_gate:
+    if len(scan_paths) > BLOOM_SHARD_FILE_GATE:
         entries = _sharded_blob_commit(
             spark,
             word_frame,
@@ -366,7 +366,7 @@ def _sharded_blob_commit(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    per_shard = int(os.environ.get("DASKBERG_BLOOM_SHARD_PAIRS", "256"))
+    per_shard = BLOOM_SHARD_PAIRS
     n_shards = max(1, (len(pair_list) + per_shard - 1) // per_shard)
     markers = spark.createDataFrame(
         pd.DataFrame(

@@ -81,12 +81,8 @@ def _relocate_path(path: str, original_url: str, url: str) -> str:
 # decodes one manifest Avro, runs the per-entry logic, and (when filters
 # are given) file-level-prunes before anything is shipped to the driver.
 # Below the gate the zero-Spark driver path runs — small tables must not
-# pay job-launch latency.  Override with DASKBERG_DIST_PLAN_GATE.
+# pay job-launch latency.
 DIST_PLAN_ENTRY_GATE = 50_000
-
-
-def _dist_plan_gate() -> int:
-    return int(os.environ.get("DASKBERG_DIST_PLAN_GATE", DIST_PLAN_ENTRY_GATE))
 
 
 def _entry_key(status: int, data_file: dict[str, Any]) -> tuple[str, Any]:
@@ -658,7 +654,7 @@ class IcebergTable:
         pruned no manifest — and per (snapshot, filters) on the
         executor path.
 
-        Above ``DASKBERG_DIST_PLAN_GATE`` estimated entries (manifest-
+        Above ``DIST_PLAN_ENTRY_GATE`` estimated entries (manifest-
         list counters, zero IO) and with an active SparkSession, the
         load + per-entry step runs on EXECUTORS (one task decodes a
         batch of manifests; with filters, live data files are pruned
@@ -668,7 +664,7 @@ class IcebergTable:
         records.  Both paths share ``_entry_events``/``_merge_events``,
         so plans are identical by construction.
         """
-        distributed = self._dist_plan_spark() if self._entry_estimate() >= _dist_plan_gate() else None
+        distributed = self._dist_plan_spark() if self._entry_estimate() >= DIST_PLAN_ENTRY_GATE else None
         snapshot_id = self.current_snapshot["snapshot-id"]
         fields = self.fields
         surviving: list[tuple[str, int, Any, Any]] = []

@@ -999,7 +999,8 @@ _DATA_FILE_FORMATS = ("PARQUET", "AVRO", "ORC")
 
 # byte-range task size for AVRO data files: a single huge container no
 # longer serializes on one core — tasks own the blocks whose preceding
-# sync marker falls in their range (read_avro_range's Hadoop split rule)
+# sync marker falls in their range (read_avro_range_columns' Hadoop
+# split rule)
 AVRO_SPLIT_BYTES = 32 * 1024 * 1024
 
 

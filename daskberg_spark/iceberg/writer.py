@@ -448,11 +448,7 @@ class Transaction:
         for w in self.writers:
             if w._txn_staged is not None:
                 raise ValueError(f"{w.path} is already in a transaction")
-            if w._poisoned:
-                raise RuntimeError(
-                    f"{w.path} writer {w._poisoned}; reload it with "
-                    "IcebergWriter.load"
-                )
+            w._refuse_if_poisoned()
         for w in self.writers:
             w._txn_staged = []
         return self
@@ -827,6 +823,7 @@ class IcebergWriter:
         from-scratch container writer per the Iceberg Avro spec
         (timestamps as long microseconds, dates as int epoch-days,
         field ids on every field); ORC via ``pyarrow.orc``."""
+        self._refuse_if_poisoned()
         fmt = file_format.lower()
         if fmt not in ("parquet", "avro", "orc"):
             raise NotImplementedError(f"data file format {file_format}")
@@ -1682,6 +1679,7 @@ class IcebergWriter:
         records follow — rewrites of pre-evolution manifests (delete_files
         / merge survivors) must keep their ORIGINAL spec, not the current
         one, or partition values decode under the wrong fields."""
+        self._refuse_if_poisoned()
         if spec_id is None:
             spec_id = self.current_spec_id
         spec = self.specs[spec_id]
@@ -1927,23 +1925,28 @@ class IcebergWriter:
             f.write(str(version))
         os.replace(hint_tmp, f"{self.path}/metadata/version-hint.text")
 
-    def _publish(self) -> None:
-        """Emit the current state as the next metadata version — the one
-        commit seam every metadata change goes through: version bump,
-        v{N}.metadata.json written once and linked, hint flip (or
-        Transaction staging) and metadata-log entry.  With no snapshot
-        yet it emits nothing; the state rides out with the first commit.
-
-        A handle that lost the link race (or was aborted in a
-        Transaction) is POISONED: its in-memory state is ahead of the
-        published table, so every later publish refuses instead of
-        linking the next version over the winner's commit."""
+    def _refuse_if_poisoned(self) -> None:
+        """Raise ``RuntimeError`` if this handle is POISONED: it lost the
+        link race (or was aborted in a Transaction), so its in-memory
+        state is ahead of the published table.  ``_publish`` calls it so
+        no later version links over the winner's commit, and the data
+        file and manifest writers call it first so a refused driver-side
+        commit writes nothing."""
         if self._poisoned:
             raise RuntimeError(
                 f"{self.path} writer {self._poisoned}; its in-memory state "
                 "is ahead of the published table — reload with "
                 "IcebergWriter.load"
             )
+
+    def _publish(self) -> None:
+        """Emit the current state as the next metadata version — the one
+        commit seam every metadata change goes through: version bump,
+        v{N}.metadata.json written once and linked, hint flip (or
+        Transaction staging) and metadata-log entry.  With no snapshot
+        yet it emits nothing; the state rides out with the first commit.
+        A poisoned handle refuses (:meth:`_refuse_if_poisoned`)."""
+        self._refuse_if_poisoned()
         if not self.snapshots:
             return
         self.version += 1

@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import collections
 import glob
 import io
 import json
 import os
+import re
 
 import pytest
 
@@ -309,7 +311,7 @@ def test_split_read_survives_embedded_container(tmp_path):
 
     from daskberg_spark.iceberg.avro import (
         read_avro_file,
-        read_avro_range,
+        read_avro_range_columns,
         write_avro,
         write_avro_file,
     )
@@ -349,16 +351,16 @@ def test_split_read_survives_embedded_container(tmp_path):
         step = size // n_splits + 1
         got = []
         for s in range(0, size, step):
-            _, recs, _ = read_avro_range(path, s, min(s + step, size))
-            got.extend(r["k"] for r in recs)
+            cols, _, _ = read_avro_range_columns(path, s, min(s + step, size))
+            got.extend(cols["k"])
         assert sorted(got) == list(range(400)), n_splits
         # positional variant must agree too
         got_pos = []
         for s in range(0, size, step):
-            _, recs, off = read_avro_range(
+            cols, _, off = read_avro_range_columns(
                 path, s, min(s + step, size), want_row_offset=True
             )
-            got_pos.extend((off + i, r["k"]) for i, r in enumerate(recs))
+            got_pos.extend((off + i, k) for i, k in enumerate(cols["k"]))
         assert sorted(p for p, _ in got_pos) == list(range(400))
         assert all(p == k for p, k in got_pos)
 
@@ -371,7 +373,7 @@ def test_block_index_known_block_exact(tmp_path):
     import daskberg_spark.iceberg.avro as avro_mod
     from daskberg_spark.iceberg.avro import (
         avro_block_index,
-        read_avro_range,
+        read_avro_range_columns,
         write_avro_file,
     )
 
@@ -397,11 +399,11 @@ def test_block_index_known_block_exact(tmp_path):
         for j in range(0, len(index), group):
             boff, roff = index[j]
             end = size if j + group >= len(index) else index[j + group][0] - 16
-            _, recs, off = read_avro_range(
+            cols, _, off = read_avro_range_columns(
                 path, boff, end, known_block=(boff, roff)
             )
             assert off == roff
-            got.extend((off + i, r["k"]) for i, r in enumerate(recs))
+            got.extend((off + i, k) for i, k in enumerate(cols["k"]))
         assert sorted(p for p, _ in got) == list(range(5000)), group
         assert all(p == k for p, k in got)
 
@@ -541,84 +543,161 @@ def test_namespace_fullname_references_resolve(tmp_path):
     assert recs == [{"a": {"x": 1}, "b": {"x": 2}}]
 
 
-def test_compiled_encoder_matches_generic():
-    """The compiled flat-record encoder (the distributed AVRO write
-    leg's fast path) must produce BYTE-IDENTICAL containers to the
-    generic recursive ``_encode`` across every compilable shape —
-    null unions on both branch orders, logical wrappers, all
-    primitives — and nested schemas must fall back (compile → None)."""
-    import io
-    import random
+def _generated_and_oracle(schema, value):
+    """Encode one value through the generated encoder and through
+    ``_encode``; each result is the bytes or the exception raised."""
+    from daskberg_spark.iceberg import avro as A
 
-    import daskberg_spark.iceberg.avro as A
+    names: dict = {}
+    A._register_names(schema, names)
+    out = []
+    for run in (
+        lambda buf: A._compile_encoder(schema, names)(value, buf),
+        lambda buf: A._encode(schema, value, buf, names),
+    ):
+        buf = bytearray()
+        try:
+            run(buf)
+            out.append(bytes(buf))
+        except Exception as exc:  # compared by the caller
+            out.append(exc)
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(_schema_and_records())
+def test_generated_encoder_matches_encode(sr):
+    """Each record's generated encoding is byte-identical to the
+    dispatching ``_encode`` into a bytearray."""
+    from daskberg_spark.iceberg import avro as A
+
+    schema, records = sr
+    names: dict = {}
+    A._register_names(schema, names)
+    enc = A._compile_encoder(schema, names)
+    for r in records:
+        fast, slow = bytearray(), bytearray()
+        enc(r, fast)
+        A._encode(schema, r, slow, names)
+        assert fast == slow
+
+
+_NODE = {
+    "type": "record",
+    "name": "node",
+    "fields": [{"name": "v", "type": "long"}, {"name": "next", "type": ["null", "node"]}],
+}
+_DEFAULTS = {
+    "type": "record",
+    "name": "d",
+    "fields": [
+        {"name": "a", "type": ["null", "long"], "default": None},
+        {"name": "b", "type": "long", "default": 7},
+        {"name": "c", "type": "string", "default": "x"},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "schema, value",
+    [
+        (["null", "int", "double"], 1.5),  # several non-null branches
+        (["null", "int", "double"], 7),
+        (["null", "double", "long"], 5),
+        (["null", "int", "boolean"], True),  # bool is an int subclass
+        (["int", "boolean"], False),
+        (["string", "null"], None),  # null second
+        (["string", "null"], "s"),
+        (["null", _NODE], collections.OrderedDict(v=1, next=None)),  # no exact type
+        ({"type": "map", "values": ["null", "long"]}, {"a": None, "b": 300}),
+        ({"type": "array", "items": "string"}, ["x", "é" * 70]),
+        ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, "B"),
+        ({"type": "fixed", "name": "f", "size": 3}, b"abc"),
+        (_DEFAULTS, {"b": 9}),
+        (_NODE, {"v": 1, "next": {"v": -2, "next": {"v": 2**40, "next": None}}}),
+        ("long", 2**63 - 1),
+        ("long", -(2**63)),
+        ("long", 64),
+        ("long", -65),
+        ("bytes", bytearray(b"\x00" * 64)),
+    ],
+)
+def test_generated_encoder_fixed_cases(schema, value):
+    fast, slow = _generated_and_oracle(schema, value)
+    assert isinstance(fast, bytes), fast
+    assert fast == slow
+
+
+@pytest.mark.parametrize(
+    "schema, value, exc, match",
+    [
+        ({"type": "fixed", "name": "f", "size": 3}, b"ab", ValueError, "fixed\\(3\\) value has 2"),
+        ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, "Z", ValueError, ""),
+        ({"type": "record", "name": "r", "fields": [{"name": "a", "type": "long"}]}, {}, KeyError, ""),
+        (["long", "string"], None, ValueError, "no null branch"),
+    ],
+)
+def test_generated_encoder_errors_match_encode(schema, value, exc, match):
+    """A wrong-length fixed value, an unknown enum symbol, a missing
+    field with no default and a None with no null branch raise the same
+    exception type from both encoders."""
+    got = _generated_and_oracle(schema, value)
+    assert all(isinstance(g, exc) for g in got), got
+    assert all(re.search(match, str(g)) for g in got)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_schema_and_records(), st.data())
+def test_projected_decoders_match_decode(sr, data):
+    """Over random schemas, ``_compile_decoder(wanted=…)`` and
+    ``_compile_columnar_decoder(wanted=…)`` equal ``_decode``'s records
+    restricted to the kept fields, and end where it ends."""
+    from daskberg_spark.iceberg import avro as A
+
+    schema, records = sr
+    fields = [f["name"] for f in schema["fields"]]
+    keep = data.draw(st.sets(st.sampled_from(fields)))
+    names: dict = {}
+    A._register_names(schema, names)
+    buf = bytearray()
+    for r in records:
+        A._encode(schema, r, buf, names)
+    blob = bytes(buf)
+    bio = io.BytesIO(blob)
+    full = [A._decode(schema, bio, names) for _ in records]
+    dec = A._compile_decoder(schema, names, wanted=keep)
+    cols, row = A._compile_columnar_decoder(schema, names, wanted=keep)
+    got, pos, cpos = [], 0, 0
+    for _ in records:
+        rec, pos = dec(blob, pos)
+        got.append(rec)
+        cpos = row(blob, cpos)
+    assert pos == cpos == len(blob)
+    assert got == [{k: r[k] for k in fields if k in keep} for r in full]
+    assert cols == {k: [r[k] for r in full] for k in fields if k in keep}
+
+
+def test_skipper_negative_count_block_and_enum_index():
+    """A projected-away array written as a negative-count block (count,
+    then byte size) is skipped by its size; a projected-away enum with
+    an index outside its symbols raises like the decoders."""
+    from daskberg_spark.iceberg.avro import _compile_decoder, _decode
 
     schema = {
         "type": "record",
         "name": "r",
         "fields": [
-            {"name": "a", "type": ["null", "long"], "default": None},
-            {
-                "name": "b",
-                "type": [
-                    "null",
-                    {"type": "long", "logicalType": "timestamp-micros"},
-                ],
-                "default": None,
-            },
-            {"name": "rev", "type": ["string", "null"]},  # null second
-            {"name": "c", "type": ["null", "double"], "default": None},
-            {"name": "e", "type": "boolean"},
-            {"name": "f", "type": ["null", "bytes"], "default": None},
-            {"name": "g", "type": "int"},
-            {"name": "h", "type": "float"},
+            {"name": "a", "type": {"type": "array", "items": "long"}},
+            {"name": "e", "type": {"type": "enum", "name": "e", "symbols": ["A", "B"]}},
+            {"name": "k", "type": "long"},
         ],
     }
-    rng = random.Random(3)
-    recs = [
-        {
-            "a": None if i % 7 == 0 else rng.randint(-(2**62), 2**62),
-            "b": rng.randint(0, 2**50),
-            "rev": None if i % 11 == 0 else f"r{i}",
-            "c": None if i % 5 == 0 else rng.random(),
-            "e": i % 2 == 0,
-            "f": None if i % 4 == 0 else bytes([i % 256]) * (i % 9),
-            "g": i - 500,
-            "h": float(i) / 3,
-        }
-        for i in range(2000)
-    ]
-    fast, slow = io.BytesIO(), io.BytesIO()
-    assert A.compile_record_encoder(schema, {}) is not None
-    A.write_avro(schema, recs, fast)
-    orig = A.compile_record_encoder
-    A.compile_record_encoder = lambda s, n: None
-    try:
-        A.write_avro(schema, recs, slow)
-    finally:
-        A.compile_record_encoder = orig
-    assert fast.getvalue() == slow.getvalue()
-    # nested shapes (manifest schemas) must NOT compile
-    nested = {
-        "type": "record",
-        "name": "m",
-        "fields": [
-            {
-                "name": "part",
-                "type": {
-                    "type": "record",
-                    "name": "inner",
-                    "fields": [{"name": "x", "type": "int"}],
-                },
-            }
-        ],
-    }
-    assert A.compile_record_encoder(nested, {}) is None
-    # missing required field still raises through the fast path
-    import pytest as _pytest
-
-    bad = io.BytesIO()
-    with _pytest.raises(KeyError):
-        A.write_avro(schema, [{"a": 1}], bad)
+    data = b"\x03\x04\x02\x04\x00\x02\x06"  # a=[1, 2] in one -2 block, e=B, k=3
+    assert _decode(schema, io.BytesIO(data), {}) == {"a": [1, 2], "e": "B", "k": 3}
+    dec = _compile_decoder(schema, {}, wanted={"k"})
+    assert dec(data, 0) == ({"k": 3}, len(data))
+    with pytest.raises(ValueError, match="enum index 2"):
+        dec(data[:5] + b"\x04\x06", 0)
 
 
 # -- per-schema decoder memo --------------------------------------------------
@@ -905,8 +984,14 @@ def test_hostile_names_and_symbols_decode_verbatim():
     assert read_avro(buf.getvalue())[1] == records
     assert read_avro(buf.getvalue())[1] == _legacy_records(buf.getvalue())
     assert not hasattr(builtins, "HOSTILE_RAN")
-    src = A._DecoderSource({})
+    src = A._CodecSource({})
     src.func(schema)
+    text = "\n".join(src.funcs.values())
+    assert "HOSTILE" not in text and "import" not in text
+    # nor the encoder's, and every projection's skippers
+    src = A._CodecSource({})
+    src.encoder(schema)
+    src.func(schema, wanted={"m"})
     text = "\n".join(src.funcs.values())
     assert "HOSTILE" not in text and "import" not in text
 
@@ -1002,7 +1087,7 @@ def test_columnar_reader_compiles_once(tmp_path, monkeypatch):
         cols, nrows, _ = A.read_avro_range_columns(
             path, 0, os.path.getsize(path), columns=columns
         )
-        assert calls == ["<avro decoder>"]
+        assert calls == ["<avro codec>"]
         assert nrows == 5
         keep = columns or [f"c{i}" for i in range(40)]
         assert cols == {c: [r[c] for r in rows] for c in keep}

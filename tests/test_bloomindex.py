@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
+from daskberg_spark.iceberg import bloomindex
 from daskberg_spark.iceberg.bloomindex import write_file_blooms
 from daskberg_spark.iceberg.metadata import IcebergTable
 from daskberg_spark.iceberg.writer import IcebergWriter
@@ -330,8 +331,8 @@ def test_sharded_build_identical_to_driver_build(spark, monkeypatch):
     """Above the shard gate, executors write the puffin shards and the
     driver never sees bitmap words — probing must behave identically to
     the driver-side build."""
-    monkeypatch.setenv("DASKBERG_BLOOM_SHARD_FILE_GATE", "1")
-    monkeypatch.setenv("DASKBERG_BLOOM_SHARD_PAIRS", "3")
+    monkeypatch.setattr(bloomindex, "BLOOM_SHARD_FILE_GATE", 1)
+    monkeypatch.setattr(bloomindex, "BLOOM_SHARD_PAIRS", 3)
     # 12 files, not 4: shard assignment is pmod(xxhash64(path), 3), and
     # 4 files collapse into ONE shard with P ≈ 3^-3 ≈ 4% — flaking the
     # >= 2-entries assertion (the same class the token twin hit in r12)
@@ -585,8 +586,8 @@ def test_token_sharded_build_identical(spark, monkeypatch):
         write_token_blooms,
     )
 
-    monkeypatch.setenv("DASKBERG_BLOOM_SHARD_FILE_GATE", "1")
-    monkeypatch.setenv("DASKBERG_BLOOM_SHARD_PAIRS", "2")
+    monkeypatch.setattr(bloomindex, "BLOOM_SHARD_FILE_GATE", 1)
+    monkeypatch.setattr(bloomindex, "BLOOM_SHARD_PAIRS", 2)
     path, w, corpus = _token_table(spark)
     # shard assignment is pmod(xxhash64(file_path), n_shards) — with
     # only 3 files and 2 shards, all three can hash into ONE shard 25%

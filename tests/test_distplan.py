@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from daskberg_spark.iceberg import metadata as M
 from tests.conftest import GOLDEN, GOLDEN_ORIG
 
 
@@ -23,9 +24,9 @@ def _fresh(path, **kw):
 def _plan_pair(spark, path, filters=None, monkeypatch=None, **kw):
     """plan_files via the driver path and via the forced-distributed
     path (gate=0), each on a FRESH table (no shared scan cache)."""
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", str(10**9))
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 10**9)
     driver = _fresh(path, **kw).plan_files(filters)
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", "0")
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 0)
     dist = _fresh(path, **kw).plan_files(filters)
     return driver, dist
 
@@ -60,9 +61,9 @@ def test_distributed_scan_all_delete_files(spark, monkeypatch):
     from daskberg_spark.iceberg.fixtures import ensure_dv_fixture
 
     path = ensure_dv_fixture(spark)
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", str(10**9))
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 10**9)
     d_data, d_del = _fresh(path).scan_all()
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", "0")
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 0)
     x_data, x_del = _fresh(path).scan_all()
     assert x_data == d_data
     assert x_del == d_del and len(x_del) > 0
@@ -88,21 +89,19 @@ def test_distributed_read_end_to_end(spark, monkeypatch):
     from daskberg_spark.iceberg.scan import to_df
 
     path = ensure_deletes_fixture()
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", str(10**9))
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 10**9)
     expect = sorted(
         to_df(_fresh(path), spark).collect(), key=lambda r: r["id"]
     )
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", "0")
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 0)
     got = sorted(to_df(_fresh(path), spark).collect(), key=lambda r: r["id"])
     assert got == expect and len(got) > 0
 
 
 def test_gate_keeps_small_tables_on_driver_path(spark, monkeypatch):
     """Below the gate the zero-Spark path runs — no job launch."""
-    from daskberg_spark.iceberg import metadata as M
-
     t = _fresh(GOLDEN, original_url=GOLDEN_ORIG)
-    assert 0 < t._entry_estimate() < M._dist_plan_gate()
+    assert 0 < t._entry_estimate() < M.DIST_PLAN_ENTRY_GATE
 
     def boom(*a, **k):  # pragma: no cover - called means the gate failed
         raise AssertionError("distributed planner invoked below the gate")
@@ -118,7 +117,7 @@ def test_no_jvm_still_works(monkeypatch):
     path (metadata stays JVM-free for unit use)."""
     from pyspark.sql import SparkSession
 
-    monkeypatch.setenv("DASKBERG_DIST_PLAN_GATE", "0")
+    monkeypatch.setattr(M, "DIST_PLAN_ENTRY_GATE", 0)
     t = _fresh(GOLDEN, original_url=GOLDEN_ORIG)
     if SparkSession.getActiveSession() is not None:
         pytest.skip("a session is active in this process")

@@ -797,9 +797,10 @@ def test_projected_avro_decode_matches_full(rows, proj):
     p = tempfile.mktemp(suffix=".avro")
     with open(p, "wb") as f:
         f.write(data)
-    from daskberg_spark.iceberg.avro import read_avro_range
+    from daskberg_spark.iceberg.avro import read_avro_range_columns
 
-    _, got, _ = read_avro_range(p, 0, 2**62, columns=proj)
+    cols, nrows, _ = read_avro_range_columns(p, 0, 2**62, columns=proj)
+    got = [{k: v[i] for k, v in cols.items()} for i in range(nrows)]
     assert got == [{k: r[k] for k in r if k in proj} for r in full]
 
 

@@ -794,6 +794,34 @@ def test_lost_race_handle_refuses_to_publish(spark, tmp_path, lose):
     assert rows() == [0, 1, 3]
 
 
+def test_poisoned_handle_refuses_before_writing(tmp_path):
+    """A poisoned handle's next append raises before it writes anything:
+    no data file, manifest or manifest list is left under the table."""
+    import os
+
+    from daskberg_spark.iceberg.writer import CommitConflictError, IcebergWriter
+
+    path = str(tmp_path / "t")
+    fields = [{"id": 1, "name": "x", "type": "long", "required": False}]
+    IcebergWriter(path, fields).append([{"x": 0}])
+    a, b = IcebergWriter.load(path), IcebergWriter.load(path)
+    a.append([{"x": 1}])
+    with pytest.raises(CommitConflictError):
+        b.append([{"x": 2}])
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), path)
+            for d, _, names in os.walk(path)
+            for f in names
+        )
+
+    before = files()
+    with pytest.raises(RuntimeError, match="reload"):
+        b.append([{"x": 3}])
+    assert files() == before
+
+
 def test_spec_evolution_before_first_commit_leaves_no_version_gap(tmp_path):
     """Evolving the partition spec on an empty table emits nothing; the
     first commit then writes v1, not v2 over a missing v1."""

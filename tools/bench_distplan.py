@@ -75,9 +75,10 @@ def forge_table(root: str) -> str:
 
 
 def timed_plan(path: str, gate: int, filters) -> tuple[float, list]:
+    from daskberg_spark.iceberg import metadata
     from daskberg_spark.iceberg.metadata import IcebergTable
 
-    os.environ["DASKBERG_DIST_PLAN_GATE"] = str(gate)
+    metadata.DIST_PLAN_ENTRY_GATE = gate
     t = IcebergTable(path)
     t0 = time.perf_counter()
     files = t.plan_files(filters)
@@ -111,7 +112,6 @@ def main() -> None:
         print(json.dumps(out))
     finally:
         shutil.rmtree(root, ignore_errors=True)
-        os.environ.pop("DASKBERG_DIST_PLAN_GATE", None)
 
 
 if __name__ == "__main__":

@@ -252,7 +252,9 @@ _SKIP_BLOCK = """\
     for _ in range({n}):
 """
 _PUT_LONG = """\
-{z} = (({x} << 1) ^ ({x} >> 63)) & 0xFFFFFFFFFFFFFFFF
+{z} = ({x} << 1) ^ ({x} >> 63)
+if {z} >> 64:
+    raise ValueError("long out of range: %d" % {x})
 while {z} > 127:
     out.append({z} & 127 | 128)
     {z} >>= 7
@@ -1099,11 +1101,15 @@ def _snappy_compress(data: bytes) -> bytes:
 
 
 def _write_long(out: bytearray, value: int) -> None:
-    value = ((value << 1) ^ (value >> 63)) & 0xFFFFFFFFFFFFFFFF  # zigzag
-    while value > 127:
-        out.append(value & 0x7F | 0x80)
-        value >>= 7
-    out.append(value)
+    # zigzag lands in [0, 2**64) exactly for values in the signed 64-bit
+    # range; anything outside would wrap to another long on decode
+    z = (value << 1) ^ (value >> 63)
+    if z >> 64:
+        raise ValueError(f"long out of range: {value}")
+    while z > 127:
+        out.append(z & 0x7F | 0x80)
+        z >>= 7
+    out.append(z)
 
 
 def _write_bytes(out: bytearray, data: bytes) -> None:

@@ -107,25 +107,18 @@ class SharedStatsScan:
                 columns=sorted(self._dirty_cols),
                 file_subset=sorted(dirty_paths),
             ).persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the caches EAGERLY (r15): the family chains now
-        # run concurrently (writer._maintain_statistics thread pool),
-        # and two first consumers racing an unmaterialized persist
-        # would each re-read the parquet — the one-scan contract is
-        # "read ONCE", so pay the read here, before any consumer.
-        # The two counts are independent jobs over disjoint reads, so
-        # they overlap in a two-worker pool (guide §2.6).  Known cost:
-        # if the advisory plan is stale and every consumer falls back,
-        # this eager read is paid and thrown away — acceptable for the
-        # read-once contract (the census reports fallbacks loudly).
-        frames = [df for df in (self._raw, self._dirty) if df is not None]
-        if len(frames) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for f in [pool.submit(df.count) for df in frames]:
-                    f.result()
-        elif frames:
-            frames[0].count()
+        # materialize the caches EAGERLY: the one-scan contract is
+        # "read ONCE", and two first consumers racing an unmaterialized
+        # persist would each re-read the parquet.  ``maintain()``
+        # refreshes its families one at a time, but the registry's
+        # ``iceberg_maintain_stats_onepass`` bootstrap and user threads
+        # still overlap consumers of one scan, so pay the read here,
+        # before any consumer.  Known cost: if the advisory plan is
+        # stale and every consumer falls back, this eager read is paid
+        # and thrown away (the census reports fallbacks loudly).
+        for df in (self._raw, self._dirty):
+            if df is not None:
+                df.count()
         import threading
 
         # delete-state gate (r16): raw rows of a file with NO applicable

@@ -222,8 +222,8 @@ def write_puffin(
     The write is ATOMIC (temp file + ``os.replace``): statistics file
     names are deterministic (uuid5 of snapshot/columns/grouping), so
     two concurrent family refreshes that derive the same file — e.g.
-    the global and grouped quantile chains both backfilling the shared
-    per-file CDF partials (r15 parallel maintenance) — each publish a
+    global and grouped quantile refreshes on two threads both
+    backfilling the shared per-file CDF partials — each publish a
     complete file and last-rename-wins; a reader can never observe
     interleaved bytes."""
     import os

@@ -54,14 +54,13 @@ from typing import Any, Callable, Iterable, Iterator, NamedTuple
 CONSOLIDATE_AFTER = 8
 
 # Serializes every statistics commit tail (the read-modify-write of
-# ``writer.statistics`` + ``writer._publish()``) so
-# ``_maintain_statistics`` can overlap the independent family
-# chains' Spark jobs (r15, guide §2.6) without lost-update races.  A
+# ``writer.statistics`` + ``writer._publish()``) for refreshes that
+# still overlap — the registry's ``iceberg_maintain_stats_onepass``
+# bootstrap and user threads; ``maintain()`` runs one at a time.  A
 # single module-level lock rather than a per-writer attribute: commits
 # are driver-side and millisecond-cheap (contention is irrelevant),
 # and IcebergWriter stays pickle-clean.  Table DATA commits (append/
-# delete/compact) never run concurrently with statistics refreshes —
-# only the statistics families overlap — so they stay unlocked.
+# delete/compact) never overlap a refresh, so they stay unlocked.
 STATS_COMMIT_LOCK = threading.RLock()
 
 
@@ -769,7 +768,6 @@ def drop_grouped(
 
 class StatsFamily(NamedTuple):
     report_key: str  # maintain()'s report entry
-    chain: str  # families of one chain run in table order
     opt_in: str | None  # blob type whose presence opts in; None: always
     # "type": skip while an ``opt_in`` entry covers the head; "config":
     # the refresh gates per grouping; None: the refresh self-gates
@@ -779,11 +777,11 @@ class StatsFamily(NamedTuple):
 
 
 def stats_families() -> tuple[StatsFamily, ...]:
-    """THE family table.  Order is the report's key order; chains run
-    concurrently in ``_maintain_statistics``, families of one chain in
-    this order (the grouped refreshes reuse their family's global
-    per-file partials).  Entry points resolve through their modules at
-    call time."""
+    """THE family table.  ``_maintain_statistics`` refreshes the open
+    families in this order (the report's key order), each global
+    refresh before the grouped one reusing its per-file partials;
+    other callers may overlap refreshes (see ``STATS_COMMIT_LOCK``).
+    Entry points resolve through their modules at call time."""
     from daskberg_spark.iceberg import bloomindex, quantiles, sumstats, theta
     from daskberg_spark.iceberg import writer as wr
 
@@ -795,28 +793,28 @@ def stats_families() -> tuple[StatsFamily, ...]:
 
     return (
         StatsFamily(
-            "refresh_blooms", "blooms", None, None,
+            "refresh_blooms", None, None,
             bloomindex.plan_bloom_refresh_scan,
             lambda w, s, src: bloomindex.refresh_file_blooms(
                 w, s, scan_source=src
             ),
         ),
         StatsFamily(
-            "refresh_statistics", "theta", theta.THETA_BLOB_TYPE, "type",
+            "refresh_statistics", theta.THETA_BLOB_TYPE, "type",
             theta.plan_global_ndv_refresh_scan,
             lambda w, s, src: wr.refresh_table_statistics(
                 w, s, scan_source=src
             )[1],
         ),
         StatsFamily(
-            "refresh_quantiles", "quantiles", quantiles.QUANTILE_BLOB_TYPE,
+            "refresh_quantiles", quantiles.QUANTILE_BLOB_TYPE,
             "type", quantiles.plan_quantile_refresh_scan,
             lambda w, s, src: quantiles.catch_up_quantile_statistics(
                 w, s, scan_source=src
             ),
         ),
         StatsFamily(
-            "refresh_grouped_quantiles", "quantiles",
+            "refresh_grouped_quantiles",
             quantiles.GROUPED_QUANTILE_BLOB_TYPE, "config",
             quantiles.plan_grouped_quantile_refresh_scan,
             lambda w, s, src: (
@@ -827,11 +825,11 @@ def stats_families() -> tuple[StatsFamily, ...]:
             ).get("mode"),
         ),
         StatsFamily(
-            "refresh_grouped_ndv", "theta", theta.GROUPED_THETA_BLOB_TYPE,
+            "refresh_grouped_ndv", theta.GROUPED_THETA_BLOB_TYPE,
             "config", theta.plan_grouped_ndv_refresh_scan, grouped_ndv,
         ),
         StatsFamily(
-            "refresh_sums", "sums", None, None,
+            "refresh_sums", None, None,
             sumstats.plan_sum_refresh_scan,
             lambda w, s, src: sumstats.refresh_sum_statistics(
                 w, s, scan_source=src

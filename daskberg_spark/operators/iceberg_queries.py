@@ -4303,8 +4303,9 @@ def iceberg_maintain_stats_onepass(
     with phase("iceberg_maintain_stats_onepass", "bootstrap"):
         # the five family bootstraps are mutually independent (within-
         # family order preserved per chain); their commits serialize
-        # through statsblobs.STATS_COMMIT_LOCK, so they overlap the
-        # same way maintain()'s refresh chains do (r15, guide §2.6).
+        # through statsblobs.STATS_COMMIT_LOCK, so the four chains
+        # overlap in a thread pool (maintain() itself refreshes the
+        # families one after another).
         # r16: they also SHARE ONE persisted read — per-file partial
         # builders serve raw rows, and the two grouped full-table
         # writes serve current content through the delete-state gate
@@ -4328,7 +4329,7 @@ def iceberg_maintain_stats_onepass(
             # global partials BEFORE the grouped family: both spell
             # their per-file partials in the same blob TYPE, whose
             # full-write replacement is same-snapshot type-scoped —
-            # they must not race (same chain boundary as maintain())
+            # they must not race (the family table's order, too)
             write_file_theta_partials(w, spark, scan_source=boot)
             refresh_table_statistics(w, spark, scan_source=boot)
             write_grouped_theta_statistics(

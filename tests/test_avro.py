@@ -628,6 +628,10 @@ def test_generated_encoder_fixed_cases(schema, value):
     assert fast == slow
 
 
+# one past either end of the signed 64-bit range, and further out
+_LONG_OUT_OF_RANGE = [2**63, 2**64 + 1, -(2**63) - 1, -(2**64) - 5]
+
+
 @pytest.mark.parametrize(
     "schema, value, exc, match",
     [
@@ -635,15 +639,33 @@ def test_generated_encoder_fixed_cases(schema, value):
         ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, "Z", ValueError, ""),
         ({"type": "record", "name": "r", "fields": [{"name": "a", "type": "long"}]}, {}, KeyError, ""),
         (["long", "string"], None, ValueError, "no null branch"),
+        *[("long", v, ValueError, "long out of range") for v in _LONG_OUT_OF_RANGE],
     ],
 )
 def test_generated_encoder_errors_match_encode(schema, value, exc, match):
     """A wrong-length fixed value, an unknown enum symbol, a missing
-    field with no default and a None with no null branch raise the same
-    exception type from both encoders."""
+    field with no default, a None with no null branch and a long outside
+    the signed 64-bit range raise the same exception type from both
+    encoders."""
     got = _generated_and_oracle(schema, value)
     assert all(isinstance(g, exc) for g in got), got
     assert all(re.search(match, str(g)) for g in got)
+
+
+def test_write_avro_long_range():
+    """Both ends of the signed 64-bit range round-trip; a long outside
+    it raises instead of wrapping to another long (unchecked, ``2**63``
+    reads back as -1 and ``2**64 + 1`` as 0)."""
+    from daskberg_spark.iceberg.avro import read_avro, write_avro
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "x", "type": "long"}]}
+    records = [{"x": 2**63 - 1}, {"x": -(2**63)}]
+    buf = io.BytesIO()
+    write_avro(schema, records, buf)
+    assert read_avro(buf.getvalue())[1] == records
+    for value in _LONG_OUT_OF_RANGE:
+        with pytest.raises(ValueError, match="long out of range"):
+            write_avro(schema, [{"x": 1}, {"x": value}], io.BytesIO())
 
 
 @settings(max_examples=60, deadline=None)

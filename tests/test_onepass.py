@@ -9,6 +9,7 @@ per-family direct-read paths would have produced.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from daskberg_spark.iceberg.writer import IcebergWriter
@@ -426,80 +427,135 @@ def test_cache_budget_zero_skips_persist_not_results(spark, tmp_path):
     assert rep2["stats_scan"] is None, rep2["stats_scan"]
 
 
-def test_maintain_parallel_matches_sequential(spark, tmp_path, monkeypatch):
-    """r15 parallel family chains (``_maintain_statistics`` thread
-    pool): the pooled schedule must publish bit-identical blobs, the
-    same per-family report, the same one-scan census, and the same
-    metadata version as the sequential schedule — chain order is an
-    implementation detail, never a result."""
-    import os
+# the six family refresh entry points, (module, name), in family-table order
+_REFRESH_ENTRY_POINTS = (
+    ("bloomindex", "refresh_file_blooms"),
+    ("writer", "refresh_table_statistics"),
+    ("quantiles", "catch_up_quantile_statistics"),
+    ("quantiles", "refresh_grouped_quantile_statistics"),
+    ("theta", "refresh_grouped_theta_statistics"),
+    ("sumstats", "refresh_sum_statistics"),
+)
+_MAINTAIN_KW = dict(min_file_bytes=1, keep_last=100, compact_dead_fraction=None)
 
+
+def _dirtied_all_families_table(spark, tmp_path):
+    """``_all_families_table`` after a delete (dirties the two files) and
+    an append (one new uncovered file): every family has work to do."""
+    w, rows = _all_families_table(spark, tmp_path)
+    w.delete_rows_equality([{"u": i} for i in range(5)])
+    w.append(rows(300, 400))
+    return w
+
+
+def _record_refreshes(monkeypatch, fail: str | None = None) -> list:
+    """Wrap every family refresh entry point on its module; each call
+    appends (name, thread id).  The entry point named ``fail`` raises
+    instead of running."""
+    import importlib
+    import threading
+
+    calls: list[tuple[str, int]] = []
+    for mod_name, name in _REFRESH_ENTRY_POINTS:
+        mod = importlib.import_module(f"daskberg_spark.iceberg.{mod_name}")
+
+        def wrapped(*a, _real=getattr(mod, name), _name=name, **kw):
+            calls.append((_name, threading.get_ident()))
+            if _name == fail:
+                raise RuntimeError(f"injected failure in {_name}")
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+    return calls
+
+
+def _blob_fingerprint(w):
+    """(type, fields, payload) of every published blob, data file paths
+    mapped to stable ids so two independently-written tables compare."""
     from daskberg_spark.iceberg.metadata import IcebergTable
     from daskberg_spark.iceberg.puffin import read_blob
+
+    t = IcebergTable(w.path)
+    data_files, _ = t.scan_all()
+    norm = {
+        path.encode(): b"file%d" % i for i, path in enumerate(sorted(data_files))
+    }
+    out = []
+    for e in w.statistics:
+        for b in e.get("blob-metadata", []):
+            blob = read_blob(t._relocate(e["statistics-path"]), b)
+            for raw, stable in norm.items():
+                blob = blob.replace(raw, stable)
+            out.append((b.get("type"), tuple(b.get("fields") or ()), blob))
+    return sorted(out)
+
+
+def test_maintain_refreshes_families_in_order_on_caller_thread(
+    spark, tmp_path, monkeypatch
+):
+    """``maintain()`` refreshes every open statistics family on the
+    calling thread, one after another in family-table order, from the
+    shared scan with no fallback read; the report lists the families in
+    that same order."""
+    import threading
+
+    from daskberg_spark.iceberg.statsblobs import gate_open, stats_families
     from daskberg_spark.iceberg.writer import maintain
 
-    def blob_fingerprint(w):
-        t = IcebergTable(w.path)
-        data_files, _ = t.scan_all()
-        norm = {
-            path.encode(): b"file%d" % i
-            for i, path in enumerate(sorted(data_files))
-        }
-        out = []
-        for e in w.statistics:
-            for b in e.get("blob-metadata", []):
-                blob = read_blob(t._relocate(e["statistics-path"]), b)
-                for raw, stable in norm.items():
-                    blob = blob.replace(raw, stable)
-                out.append(
-                    (b.get("type"), tuple(b.get("fields") or ()), blob)
-                )
-        return sorted(out)
+    w = _dirtied_all_families_table(spark, tmp_path)
+    families = stats_families()
+    assert all(gate_open(w, fam) for fam in families)
+    calls = _record_refreshes(monkeypatch)
+    rep = maintain(w, spark, **_MAINTAIN_KW)
 
-    def run(mode, par):
-        monkeypatch.setenv("SPARK_GRAFT_STATS_PARALLELISM", str(par))
-        w, rows = _all_families_table(spark, tmp_path / mode)
-        w.delete_rows_equality([{"u": i} for i in range(5)])
-        w.append(rows(300, 400))
-        rep = maintain(
-            w,
-            spark,
-            min_file_bytes=1,
-            keep_last=100,
-            compact_dead_fraction=None,
-        )
-        return w, rep
+    assert [name for name, _tid in calls] == [
+        name for _mod, name in _REFRESH_ENTRY_POINTS
+    ]
+    assert {tid for _name, tid in calls} == {threading.get_ident()}
+    keys = [fam.report_key for fam in families]
+    assert [k for k in rep if k in keys] == keys, list(rep)
+    assert rep["stats_scan"]["raw_fallback"] == 0, rep["stats_scan"]
+    assert rep["stats_scan"]["dirty_fallback"] == 0, rep["stats_scan"]
+    for key in keys:
+        assert rep[key] is not None, (key, rep)
+    assert rep["refresh_statistics"] == "partials", rep
+    assert rep["refresh_quantiles"] == ["v"], rep
+    assert rep["refresh_rollup"] is None, rep
 
-    w_seq, rep_seq = run("seq", 1)
-    w_par, rep_par = run("par", 4)
 
-    # same one-scan census: both schedules plan the same shared scan
-    # and serve every family from it
-    assert rep_par["stats_scan"] == rep_seq["stats_scan"], (
-        rep_seq["stats_scan"],
-        rep_par["stats_scan"],
-    )
-    assert rep_par["stats_scan"]["raw_fallback"] == 0, rep_par
-    # same per-family outcomes (path-valued entries compare by kind:
-    # written vs None — the absolute path embeds the tmp dir)
-    for key in (
-        "refresh_blooms",
-        "refresh_statistics",
-        "refresh_quantiles",
-        "refresh_grouped_quantiles",
-        "refresh_grouped_ndv",
-        "refresh_sums",
-        "refresh_rollup",
-    ):
-        a, b = rep_seq[key], rep_par[key]
-        if isinstance(a, str) and os.path.sep in a:
-            assert isinstance(b, str) and os.path.sep in b, (key, a, b)
-        else:
-            assert a == b, (key, a, b)
-    # same commit count (the version counter advances once per family
-    # commit regardless of schedule) and bit-identical published blobs
-    assert w_par.version == w_seq.version
-    assert blob_fingerprint(w_par) == blob_fingerprint(w_seq)
+def test_maintain_first_family_failure_propagates(spark, tmp_path, monkeypatch):
+    """The first statistics family that raises ends ``maintain()`` with
+    its exception: the families before it keep their commits, the ones
+    after it never run, and the next ``maintain()`` catches them up to
+    the blobs of a run that never failed."""
+    from daskberg_spark.iceberg.bloomindex import BLOOM_BLOB_TYPE
+    from daskberg_spark.iceberg.theta import THETA_BLOB_TYPE
+    from daskberg_spark.iceberg.writer import maintain
+
+    clean = _dirtied_all_families_table(spark, tmp_path / "clean")
+    maintain(clean, spark, **_MAINTAIN_KW)
+
+    w = _dirtied_all_families_table(spark, tmp_path / "failed")
+    before = {id(e) for e in w.statistics}
+    calls = _record_refreshes(monkeypatch, fail="catch_up_quantile_statistics")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        maintain(w, spark, **_MAINTAIN_KW)
+    assert [name for name, _tid in calls] == [
+        "refresh_file_blooms",
+        "refresh_table_statistics",
+        "catch_up_quantile_statistics",
+    ]
+    committed = {
+        b["type"]
+        for e in w.statistics
+        if id(e) not in before
+        for b in e.get("blob-metadata", [])
+    }
+    assert {BLOOM_BLOB_TYPE, THETA_BLOB_TYPE} <= committed, committed
+
+    monkeypatch.undo()
+    maintain(w, spark, **_MAINTAIN_KW)
+    assert _blob_fingerprint(w) == _blob_fingerprint(clean)
 
 
 def test_bootstrap_scan_delete_state_gate(spark, tmp_path):

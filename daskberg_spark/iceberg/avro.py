@@ -260,6 +260,10 @@ while {z} > 127:
     {z} >>= 7
 out.append({z})
 """
+_PUT_INT = """\
+if not -2147483648 <= {x} <= 2147483647:
+    raise ValueError("int out of range: %d" % {x})
+""" + _PUT_LONG
 _PUT_FIXED = """\
 if len({x}) != {size}:
     raise ValueError("fixed({size}) value has %d bytes" % len({x}))
@@ -563,6 +567,8 @@ class _CodecSource:
                     table[py] = _union_branch(s, py(), self.names)
                 except ValueError:  # raised again, with the value, at run time
                     pass
+            if {"int", "long"} <= set(_branch_kinds(s, self.names)):
+                del table[int]  # ...but an int's on its range too
             b = self.var()
             emit(_PUT_UNION, b=b, table=self.const(table), schemas=self.const(s))
             for k, branch in enumerate(s):
@@ -595,7 +601,9 @@ class _CodecSource:
             pass
         elif kind == "boolean":
             emit("out.append(1 if {x} else 0)")
-        elif kind in ("int", "long"):
+        elif kind == "int":
+            emit(_PUT_INT, z=self.var())
+        elif kind == "long":
             emit(_PUT_LONG, z=self.var())
         elif kind == "float":
             emit("out.extend(_pf({x}))")
@@ -1100,6 +1108,9 @@ def _snappy_compress(data: bytes) -> bytes:
 # encode: the test oracle ``_encode`` and the container writer
 
 
+_INT_MIN, _INT_MAX = -(2**31), 2**31 - 1
+
+
 def _write_long(out: bytearray, value: int) -> None:
     # zigzag lands in [0, 2**64) exactly for values in the signed 64-bit
     # range; anything outside would wrap to another long on decode
@@ -1167,7 +1178,11 @@ def _encode(schema: Any, value: Any, out: bytearray, names: dict[str, Any]) -> N
         return
     if schema == "boolean":
         out.append(1 if value else 0)
-    elif schema in ("int", "long"):
+    elif schema == "int":
+        if not _INT_MIN <= value <= _INT_MAX:
+            raise ValueError(f"int out of range: {value}")
+        _write_long(out, value)
+    elif schema == "long":
         _write_long(out, value)
     elif schema == "float":
         out.extend(struct.pack("<f", value))
@@ -1193,21 +1208,36 @@ _UNION_TYPE_MATCH = {
 }
 
 
+def _branch_kinds(schemas: list[Any], names: dict[str, Any]) -> list[str]:
+    """The type name of each union branch, named types resolved."""
+    kinds = []
+    for s in schemas:
+        s = _skip_to_named(s, names)
+        kinds.append(s["type"] if isinstance(s, dict) else s)
+    return kinds
+
+
 def _union_branch(schemas: list[Any], value: Any, names: dict[str, Any]) -> int:
     """Pick the union branch MATCHING the value's type — first-non-null
     would mis-encode (or corrupt) any union with several non-null
     branches (e.g. ["null","int","double"] with 1.5 written through the
-    int branch).  Falls back to the first non-null branch only when no
-    type matches (logical-type wrappers)."""
-    branch_types = []
-    for s in schemas:
-        s = _skip_to_named(s, names)
-        branch_types.append(s["type"] if isinstance(s, dict) else s)
+    int branch).  An int outside the signed 32-bit range skips an
+    ``int`` branch when the union also has a ``long`` one.  Falls back
+    to the first non-null branch only when no type matches
+    (logical-type wrappers)."""
+    branch_types = _branch_kinds(schemas, names)
     if value is None:
         for i, t in enumerate(branch_types):
             if t == "null":
                 return i
         raise ValueError(f"no null branch in {schemas!r}")
+    if (
+        isinstance(value, int)
+        and type(value) is not bool
+        and not _INT_MIN <= value <= _INT_MAX
+        and "long" in branch_types
+    ):
+        branch_types = ["" if t == "int" else t for t in branch_types]
     # bool before int: bool is an int subclass in Python
     for py, avro_types in _UNION_TYPE_MATCH.items():
         if type(value) is py or (py is not bool and isinstance(value, py)):

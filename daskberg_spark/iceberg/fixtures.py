@@ -328,6 +328,8 @@ def remap_snapshot_ids(path: str, remap: dict[int, int]) -> None:
     import glob as _glob
     import json as _json
 
+    from daskberg_spark.iceberg.metadata import metadata_json
+
     def m(s):
         return remap.get(s, s) if s is not None else None
 
@@ -345,7 +347,7 @@ def remap_snapshot_ids(path: str, remap: dict[int, int]) -> None:
         for ref in meta.get("refs", {}).values():
             ref["snapshot-id"] = m(ref["snapshot-id"])
         with open(jf, "w") as f:
-            _json.dump(meta, f, indent=1, default=str)
+            f.write(metadata_json(meta))
 
     def edit(records: list[dict]) -> bool:
         changed = False
@@ -769,13 +771,15 @@ def strip_schema_ids(path: str) -> None:
     import glob as _glob
     import json as _json
 
+    from daskberg_spark.iceberg.metadata import metadata_json
+
     for jf in _glob.glob(os.path.join(path, "metadata", "v*.metadata.json")):
         with open(jf) as f:
             meta = _json.load(f)
         for s in meta.get("snapshots", []):
             s.pop("schema-id", None)
         with open(jf, "w") as f:
-            _json.dump(meta, f, indent=1, default=str)
+            f.write(metadata_json(meta))
 
 
 NAME_MAPPING_FIXTURE_DIR = os.path.join(

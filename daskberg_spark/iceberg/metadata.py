@@ -34,6 +34,15 @@ STATUS_DELETED = 2
 _VERSION_FILE_RE = re.compile(r"v(\d+)\.metadata\.json$")
 
 
+def metadata_json(meta: dict[str, Any]) -> str:
+    """The one encoder of ``v{N}.metadata.json`` content (tables and
+    views): compact separators and no indent, so ``json.dumps`` runs
+    CPython's C encoder.  Values JSON cannot encode are written as
+    ``str``.  Every reader parses the JSON, so the pre-compact indented
+    files stay readable."""
+    return json.dumps(meta, separators=(",", ":"), default=str)
+
+
 def resolve_latest_version(base_url: str) -> int:
     """Latest ``v{N}.metadata.json`` version under ``base_url/metadata``
     — hint file first, falling back to a directory scan on a MISSING or

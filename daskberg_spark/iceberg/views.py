@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 
 from daskberg_spark.iceberg.metadata import (
     _strip_scheme,
+    metadata_json,
     resolve_latest_version,
 )
 
@@ -288,8 +289,9 @@ def create_view(
     }
     target = os.path.join(meta_dir, f"v{file_version}.metadata.json")
     tmp = target + f".{uuid.uuid4().hex[:8]}.tmp"
+    text = metadata_json(meta_out)
     with open(tmp, "w") as f:
-        json.dump(meta_out, f, indent=1)
+        f.write(text)
     # same atomic publish + exclusive-create race check as table commits
     try:
         os.link(tmp, target)

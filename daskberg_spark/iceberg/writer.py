@@ -29,7 +29,7 @@ import pyarrow.parquet as pq
 
 from daskberg_spark.iceberg.avro import write_avro_file
 from daskberg_spark.iceberg.conversions import LINEAGE_COLS, encode_bound
-from daskberg_spark.iceberg.metadata import _entry_key, _merge_events
+from daskberg_spark.iceberg.metadata import _entry_key, _merge_events, metadata_json
 from daskberg_spark.iceberg.planner import transform_result_type
 from daskberg_spark.iceberg.transforms import get_transform
 
@@ -2065,10 +2065,11 @@ class IcebergWriter:
         # the exclusive-create conflict check — link fails with
         # FileExistsError if a concurrent writer committed this version
         # first.
+        text = metadata_json(meta)
         target = f"{self.path}/metadata/v{self.version}.metadata.json"
         tmp = f"{self.path}/metadata/.v{self.version}.{uuid.uuid4().hex[:8]}.tmp"
         with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1, default=str)
+            f.write(text)
         try:
             os.link(tmp, target)
         except FileExistsError:

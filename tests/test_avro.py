@@ -619,6 +619,13 @@ _DEFAULTS = {
         ("long", -(2**63)),
         ("long", 64),
         ("long", -65),
+        ("int", 2**31 - 1),
+        ("int", -(2**31)),
+        (["null", "int", "long"], 2**31 - 1),  # in range: the int branch
+        (["null", "int", "long"], 2**31),  # out of range: the long branch
+        (["null", "int", "long"], -(2**40)),
+        (["long", "int"], 3),
+        ({"type": "array", "items": ["int", "long"]}, [1, 2**40, -(2**31) - 1]),
         ("bytes", bytearray(b"\x00" * 64)),
     ],
 )
@@ -630,6 +637,8 @@ def test_generated_encoder_fixed_cases(schema, value):
 
 # one past either end of the signed 64-bit range, and further out
 _LONG_OUT_OF_RANGE = [2**63, 2**64 + 1, -(2**63) - 1, -(2**64) - 5]
+# the same for the signed 32-bit range of an ``int``
+_INT_OUT_OF_RANGE = [2**31, 2**40, -(2**31) - 1, -(2**63)]
 
 
 @pytest.mark.parametrize(
@@ -640,13 +649,17 @@ _LONG_OUT_OF_RANGE = [2**63, 2**64 + 1, -(2**63) - 1, -(2**64) - 5]
         ({"type": "record", "name": "r", "fields": [{"name": "a", "type": "long"}]}, {}, KeyError, ""),
         (["long", "string"], None, ValueError, "no null branch"),
         *[("long", v, ValueError, "long out of range") for v in _LONG_OUT_OF_RANGE],
+        *[("int", v, ValueError, "int out of range") for v in _INT_OUT_OF_RANGE],
+        (["null", "int"], 2**31, ValueError, "int out of range"),  # no long branch
+        (["null", "string", "int"], 2**40, ValueError, "int out of range"),
     ],
 )
 def test_generated_encoder_errors_match_encode(schema, value, exc, match):
     """A wrong-length fixed value, an unknown enum symbol, a missing
-    field with no default, a None with no null branch and a long outside
-    the signed 64-bit range raise the same exception type from both
-    encoders."""
+    field with no default, a None with no null branch, a long outside
+    the signed 64-bit range and an int outside the signed 32-bit range
+    (also through a union with no long branch) raise the same exception
+    type from both encoders."""
     got = _generated_and_oracle(schema, value)
     assert all(isinstance(g, exc) for g in got), got
     assert all(re.search(match, str(g)) for g in got)
@@ -666,6 +679,31 @@ def test_write_avro_long_range():
     for value in _LONG_OUT_OF_RANGE:
         with pytest.raises(ValueError, match="long out of range"):
             write_avro(schema, [{"x": 1}, {"x": value}], io.BytesIO())
+
+
+def test_write_avro_int_range():
+    """Both ends of the signed 32-bit range round-trip through an
+    ``int`` field; an int outside it raises instead of being written
+    (a spec reader of an ``int`` rejects or truncates it), and in a
+    union with a ``long`` branch it is written through that branch."""
+    from daskberg_spark.iceberg.avro import read_avro, write_avro
+
+    schema = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "x", "type": "int"}, {"name": "u", "type": ["null", "int", "long"]}],
+    }
+    records = [{"x": 2**31 - 1, "u": 2**31}, {"x": -(2**31), "u": -(2**31) - 1}]
+    buf = io.BytesIO()
+    write_avro(schema, records, buf)
+    assert read_avro(buf.getvalue())[1] == records
+    for value in _INT_OUT_OF_RANGE:
+        with pytest.raises(ValueError, match="int out of range"):
+            write_avro(schema, [{"x": 1, "u": None}, {"x": value, "u": None}], io.BytesIO())
+    union = ["null", "int", "long"]
+    for value, branch in [(2**31 - 1, 1), (2**31, 2), (-(2**31) - 1, 2)]:
+        for encoded in _generated_and_oracle(union, value):
+            assert encoded[0] == 2 * branch, (value, encoded)  # zigzag index
 
 
 @settings(max_examples=60, deadline=None)

@@ -107,7 +107,9 @@ def test_catalog_register_view(spark, tmp_path):
 
 
 def test_view_metadata_json_shape(spark, tmp_path):
-    """The emitted JSON carries every spec-required field."""
+    """The emitted JSON carries every spec-required field, written
+    compact through the table metadata encoder; a replace adds a
+    compact v2."""
     from daskberg_spark.iceberg.views import create_view
 
     _mk_table(spark)
@@ -120,7 +122,9 @@ def test_view_metadata_json_shape(spark, tmp_path):
         properties={"comment": "test view"},
     )
     with open(os.path.join(path, "metadata", "v1.metadata.json")) as f:
-        m = json.load(f)
+        text = f.read()
+    assert "\n" not in text and '": ' not in text
+    m = json.loads(text)
     for key in (
         "view-uuid",
         "format-version",
@@ -140,6 +144,11 @@ def test_view_metadata_json_shape(spark, tmp_path):
         "dialect": "spark",
     }
     assert m["properties"]["comment"] == "test view"
+    create_view(path, "SELECT grp FROM vt_src WHERE grp > 0", spark, replace=True)
+    with open(os.path.join(path, "metadata", "v2.metadata.json")) as f:
+        text = f.read()
+    assert "\n" not in text and '": ' not in text
+    assert [v["version-id"] for v in json.loads(text)["versions"]] == [1, 2]
 
 
 def test_create_view_accepts_file_url(tmp_path, spark):

@@ -619,6 +619,7 @@ _DEFAULTS = {
         ("long", -(2**63)),
         ("long", 64),
         ("long", -65),
+        ("bytes", bytearray(b"\x00" * 64)),
         ("int", 2**31 - 1),
         ("int", -(2**31)),
         (["null", "int", "long"], 2**31 - 1),  # in range: the int branch
@@ -626,7 +627,6 @@ _DEFAULTS = {
         (["null", "int", "long"], -(2**40)),
         (["long", "int"], 3),
         ({"type": "array", "items": ["int", "long"]}, [1, 2**40, -(2**31) - 1]),
-        ("bytes", bytearray(b"\x00" * 64)),
     ],
 )
 def test_generated_encoder_fixed_cases(schema, value):

@@ -45,8 +45,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
-import uuid
 from functools import reduce
 from typing import Any
 
@@ -732,7 +730,7 @@ def refresh_rollup(spark, writer) -> dict[str, Any]:
         _changelog_plan,
         changelog_rows_df,
     )
-    from daskberg_spark.iceberg.writer import commit_spark_overwrite
+    from daskberg_spark.iceberg.writer import _stage_dir, commit_spark_overwrite
 
     props = writer.properties
     source = IcebergTable(props[PROP_SOURCE])
@@ -903,9 +901,9 @@ def refresh_rollup(spark, writer) -> dict[str, Any]:
             files_read += recompute_read
 
     # materialize BEFORE the metadata swap (merged reads the old files)
-    staging = tempfile.mkdtemp(prefix=f"rollup-{uuid.uuid4().hex[:8]}-")
-    merged.write.mode("overwrite").parquet(staging)
-    commit_spark_overwrite(writer, staging, old_paths)
+    stage = _stage_dir(writer, "rollup_")
+    merged.write.mode("overwrite").parquet(stage)
+    commit_spark_overwrite(writer, stage, old_paths)
     new_props = {PROP_SNAPSHOT: str(head_sid)}
     if dim_sid is not None:
         new_props[PROP_DIM_SNAPSHOT] = str(dim_sid)

@@ -2101,6 +2101,138 @@ class IcebergWriter:
         )
 
 
+# -- the staged-output path every Spark writer shares ----------------------
+# Executors write files into a stage directory under ``{path}/data``
+# (``_stage_dir``; hive-partitioned on ``_with_partition_columns``'
+# spec-field columns), the driver lifts manifest entries from the files
+# (``_entries_from_spark_dir`` for data, ``_delete_manifest`` for delete
+# files) and ``_commit_files`` writes the new-files manifests and commits
+# one snapshot through ``_publish``.
+
+
+def _stage_dir(writer: "IcebergWriter", prefix: str) -> str:
+    """A fresh stage directory for one Spark write, under the table's
+    ``data/`` so the files it ends up committing (and those of a failed
+    job) stay inside the table — ``remove_orphan_files`` walks only
+    the table directory."""
+    import tempfile
+
+    data = os.path.join(writer.path, "data")
+    os.makedirs(data, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=data)
+
+
+def _with_partition_columns(
+    writer: "IcebergWriter", df: Any
+) -> tuple[Any, list[str], list[str]]:
+    """Attach one hive column ``__p_<spec field>`` per spec field,
+    holding the TRANSFORMED value (identity passes through; the other
+    transforms run the spec-exact Python implementation —
+    ``spark_partition_value``, Iceberg murmur3 for bucket, never Spark's
+    ``hash()``), so data files keep their partition source columns and
+    the commit lifts prunable partition values from the hive segments.
+    Returns (df, spec field names, hive column names): the lift keys on
+    spec FIELD names, which stay unambiguous when a spec carries several
+    transforms of one source column (``bucket[4](k)`` + ``identity(k)``)."""
+    names: list[str] = []
+    cols: list[str] = []
+    for pf in writer.spec:
+        src = pf["_source_name"]
+        rtype = transform_result_type(pf["transform"], writer.types[src])
+        # the UDF's Spark result type: the hive segment is text either
+        # way, so a type Spark DDL cannot spell travels as a string
+        ddl = (
+            rtype
+            if rtype in ("int", "long", "string", "date")
+            or rtype.startswith("decimal")
+            else "string"
+        )
+        col = f"__p_{pf['name']}"
+        df = df.withColumn(col, spark_partition_value(src, pf["transform"], ddl))
+        names.append(pf["name"])
+        cols.append(col)
+    return df, names, cols
+
+
+def _delete_manifest(
+    writer: "IcebergWriter",
+    stage: str,
+    snapshot_id: int,
+    content: int,
+    equality_ids: list[int] | None = None,
+) -> dict[str, Any] | None:
+    """Lift a stage directory of executor-written delete parquet into
+    one ADDED delete manifest — position deletes (``content=1``) or
+    equality deletes on ``equality_ids`` (``content=2``); None when no
+    file holds a row (empty task outputs are removed).  Equality deletes
+    are GLOBAL: they go through the unpartitioned spec
+    (``_global_delete_spec_id``), because a delete under a partitioned
+    spec with an all-NULL partition tuple is scoped to the NULL
+    partition.  Position deletes keep the current spec (this reader
+    applies them by path)."""
+    import glob as _glob
+
+    entries = []
+    for path in sorted(
+        _glob.glob(os.path.join(stage, "**", "*.parquet"), recursive=True)
+    ):
+        rows = pq.read_metadata(path).num_rows
+        if rows == 0:
+            os.remove(path)
+            continue
+        entries.append(
+            {
+                "status": 1,
+                "snapshot_id": snapshot_id,
+                "data_file": {
+                    "content": content,
+                    "file_path": path,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": rows,
+                    "file_size_in_bytes": os.path.getsize(path),
+                    "lower_bounds": None,
+                    "upper_bounds": None,
+                    "equality_ids": equality_ids,
+                },
+            }
+        )
+    if not entries:
+        return None
+    writer._format_version = max(writer._format_version, 2)
+    spec_id = writer._global_delete_spec_id() if content == 2 else None
+    return writer._write_manifest(entries, snapshot_id, spec_id=spec_id)
+
+
+def _commit_files(
+    writer: "IcebergWriter",
+    snapshot_id: int,
+    entries: list[dict[str, Any]],
+    operation: str,
+    base: list[dict[str, Any]] | None = None,
+    tail: list[dict[str, Any]] | None = None,
+    extra_summary: dict[str, str] | None = None,
+) -> int:
+    """The new-files manifest tail of a staged write: ``entries`` (ADDED
+    data files) go into manifests of at most 100 entries — one empty
+    manifest when there are none — listed after ``base`` (default: the
+    live manifests) and before ``tail``, and one ``operation`` snapshot
+    commits them with the entries' record-count sum.  Returns the
+    snapshot id."""
+    chunks = [entries[i : i + 100] for i in range(0, len(entries), 100)] or [[]]
+    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
+    writer._commit(
+        snapshot_id,
+        (writer.manifests if base is None else base)
+        + new_manifests
+        + (tail or []),
+        operation,
+        sum(e["data_file"]["record_count"] for e in entries),
+        extra_summary=extra_summary,
+    )
+    return snapshot_id
+
+
 def commit_spark_output(
     writer: "IcebergWriter",
     data_dir: str,
@@ -2134,16 +2266,9 @@ def commit_spark_output(
         file_format=file_format,
         spark=spark,
     )
-    chunks = [entries[i : i + 100] for i in range(0, len(entries), 100)] or [[]]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    writer._commit(
-        snapshot_id,
-        writer.manifests + new_manifests,
-        "append",
-        sum(e["data_file"]["record_count"] for e in entries),
-        extra_summary=extra_summary,
+    return _commit_files(
+        writer, snapshot_id, entries, "append", extra_summary=extra_summary
     )
-    return snapshot_id
 
 
 def write_df(
@@ -2188,37 +2313,11 @@ def write_df(
     witness (SCALING.md, 2M rows fixed, local[32]) scales 13.5 s → 3.3 s
     → 1.8 s at 1/8/32 tasks — near-linear to 8, Amdahl-flattened by the
     fixed shuffle+commit beyond.  Returns the snapshot id."""
-    import tempfile
-
     from pyspark.sql import functions as F
-
-    from daskberg_spark.iceberg.planner import transform_result_type
 
     if mode not in ("none", "hash", "range"):
         raise ValueError(f"unknown write distribution mode {mode!r}")
-    spark_types = {
-        "int": "int",
-        "long": "long",
-        "string": "string",
-        "date": "date",
-    }
-    types = dict(writer.types)
-    pcols: list[str] = []  # duplicate hive columns (transformed values)
-    spec_names: list[str] = []  # spec FIELD names (unambiguous under
-    # multi-transform specs sharing one source column)
-    out = df
-    for pf in writer.spec:
-        src = pf["_source_name"]
-        rtype = transform_result_type(pf["transform"], types[src])
-        dup = f"__p_{pf['name']}"
-        out = out.withColumn(
-            dup,
-            spark_partition_value(
-                src, pf["transform"], spark_types.get(rtype, "string")
-            ),
-        )
-        pcols.append(dup)
-        spec_names.append(pf["name"])
+    out, spec_names, pcols = _with_partition_columns(writer, df)
     if mode == "hash" and pcols:
         hash_cols = [F.col(c) for c in pcols]
         out = (
@@ -2253,9 +2352,7 @@ def write_df(
     fmt = file_format.lower()
     if fmt not in ("parquet", "orc", "avro"):
         raise ValueError(f"unknown data file format {file_format!r}")
-    data_dir = staging_dir or tempfile.mkdtemp(
-        prefix="write_df_", dir=f"{writer.path}/data"
-    )
+    data_dir = staging_dir or _stage_dir(writer, "write_df_")
     if fmt == "avro":
         # no native Spark Avro writer in this environment: executor
         # tasks encode containers with the from-scratch writer and ship
@@ -2264,15 +2361,12 @@ def write_df(
         return _write_df_avro_tasks(
             writer, out, data_dir, pcols, spec_names, extra_summary
         )
-    w = out.write.mode("overwrite")
-    if pcols:
-        w = w.partitionBy(*pcols)
-    getattr(w, fmt)(data_dir)
+    getattr(out.write.mode("overwrite").partitionBy(*pcols), fmt)(data_dir)
     return commit_spark_output(
         writer,
         data_dir,
-        partition_col=spec_names or None,
-        path_col=pcols or None,
+        partition_col=spec_names,
+        path_col=pcols,
         extra_summary=extra_summary,
         file_format=fmt.upper(),
         spark=df.sparkSession,
@@ -2355,68 +2449,28 @@ def upsert_spark_output(
             # null-safe-match and delete NULL-keyed rows table-wide
             raise ValueError(f"null key value in upsert batch (key={key})")
         data_dir = os.path.join(writer.path, "data", f"upsert-{dir_token}")
-        dw = deduped.write.mode("overwrite")
-        if path_col is not None:
-            segs = [path_col] if isinstance(path_col, str) else list(path_col)
-            dw = dw.partitionBy(*segs)
-        dw.parquet(data_dir)
+        segs = [path_col] if isinstance(path_col, str) else path_col or []
+        deduped.write.mode("overwrite").partitionBy(*segs).parquet(data_dir)
         del_dir = os.path.join(writer.path, "data", f"upsert-del-{dir_token}")
         deduped.select(*key).write.mode("overwrite").parquet(del_dir)
     finally:
         deduped.unpersist()
 
-    import glob as _glob
-
     snapshot_id = writer._next_snapshot_id
     data_entries = _entries_from_spark_dir(
         writer, data_dir, snapshot_id, partition_col, path_col
     )
-    eq_ids = [writer.ids[c] for c in key]
-    delete_entries = []
-    for path in sorted(
-        _glob.glob(os.path.join(del_dir, "**", "*.parquet"), recursive=True)
-    ):
-        meta = pq.read_metadata(path)
-        if meta.num_rows == 0:
-            continue
-        delete_entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,
-                    "file_path": path,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(path),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": eq_ids,
-                },
-            }
-        )
-    writer._format_version = max(writer._format_version, 2)
-    new_manifests = []
-    if delete_entries:
-        new_manifests.append(
-            writer._write_manifest(
-                delete_entries, snapshot_id,
-                spec_id=writer._global_delete_spec_id(),
-            )
-        )
-    chunks = [
-        data_entries[i : i + 100] for i in range(0, len(data_entries), 100)
-    ] or [[]]
-    new_manifests += [writer._write_manifest(c, snapshot_id) for c in chunks]
-    writer._commit(
+    del_manifest = _delete_manifest(
+        writer, del_dir, snapshot_id, 2, [writer.ids[c] for c in key]
+    )
+    return _commit_files(
+        writer,
         snapshot_id,
-        writer.manifests + new_manifests,
+        data_entries,
         "overwrite",
-        sum(e["data_file"]["record_count"] for e in data_entries),
+        base=writer.manifests + ([del_manifest] if del_manifest else []),
         extra_summary={"upsert-keys": ",".join(key), **(extra_summary or {})},
     )
-    return snapshot_id
 
 
 def rows_bounds(
@@ -2759,10 +2813,7 @@ def _write_df_avro_tasks(
     for r in sorted(res, key=lambda r: r["path"]):
         data_file = pickle.loads(bytes(r["blob"]))
         data_file["partition"] = _partition_from_path(
-            writer,
-            data_file["file_path"],
-            spec_names or None,
-            seg_names or None,
+            writer, data_file["file_path"], spec_names, seg_names
         )
         entries.append(
             {
@@ -2771,18 +2822,9 @@ def _write_df_avro_tasks(
                 "data_file": data_file,
             }
         )
-    chunks = [entries[i : i + 100] for i in range(0, len(entries), 100)] or [
-        []
-    ]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    writer._commit(
-        snapshot_id,
-        writer.manifests + new_manifests,
-        "append",
-        sum(e["data_file"]["record_count"] for e in entries),
-        extra_summary=extra_summary,
+    return _commit_files(
+        writer, snapshot_id, entries, "append", extra_summary=extra_summary
     )
-    return snapshot_id
 
 
 def _partition_from_path(
@@ -2800,7 +2842,7 @@ def _partition_from_path(
     import urllib.parse
 
     partition: dict[str, Any] = {}
-    if partition_col is None:
+    if not partition_col:
         return partition
     pcols = (
         [partition_col]
@@ -2820,7 +2862,8 @@ def _partition_from_path(
         # column: a spec may carry several transforms of ONE
         # source (bucket(id) + identity(id)), and source-name
         # lookup alone would key every segment to the first
-        # (write_df passes spec-field names for exactly this)
+        # (``_with_partition_columns`` returns spec-field names
+        # for exactly this)
         spec_field = next(
             (pf for pf in writer.spec if pf["name"] == pcol),
             None,
@@ -3073,8 +3116,9 @@ def _footer_entry(
 ) -> dict[str, Any]:
     """ADDED manifest entry for one existing parquet file: record count
     and per-column bounds lifted from footer row-group statistics —
-    zero data IO.  Stat lifting is shared with ``add_files_spark``'s
-    executor path (``conversions.lift_footer_stats``)."""
+    zero data IO.  Stat lifting (``conversions.lift_footer_stats``) and
+    the entry shape (``_parquet_entry``) are shared with
+    ``add_files_spark``'s executor path."""
     import json as _json
 
     from daskberg_spark.iceberg.conversions import lift_footer_stats
@@ -3090,6 +3134,36 @@ def _footer_entry(
         vb = shredded_footer_bounds(path, vcols)
         if vb:
             variant_bounds = _json.dumps(vb, sort_keys=True)
+    return _parquet_entry(
+        writer,
+        snapshot_id,
+        path,
+        partition,
+        num_rows,
+        file_size,
+        {n: encode_bound(v, writer.types[n]) for n, v in lowers.items()},
+        {n: encode_bound(v, writer.types[n]) for n, v in uppers.items()},
+        nulls,
+        nans,
+        variant_bounds,
+    )
+
+
+def _parquet_entry(
+    writer: "IcebergWriter",
+    snapshot_id: int,
+    path: str,
+    partition: dict[str, Any],
+    num_rows: int,
+    file_size: int,
+    lowers: dict[str, bytes],
+    uppers: dict[str, bytes],
+    nulls: dict[str, int],
+    nans: dict[str, int],
+    variant_bounds: str | None = None,
+) -> dict[str, Any]:
+    """ADDED manifest entry for one parquet data file from its footer
+    stats, keyed by column name (bounds already spec-encoded)."""
     return {
         "status": 1,
         "snapshot_id": snapshot_id,
@@ -3097,16 +3171,14 @@ def _footer_entry(
             "file_path": path,
             "file_format": "PARQUET",
             "partition": partition,
-            "record_count": num_rows,
-            "file_size_in_bytes": file_size,
+            "record_count": int(num_rows),
+            "file_size_in_bytes": int(file_size),
             **({"variant_bounds": variant_bounds} if variant_bounds else {}),
             "lower_bounds": [
-                {"key": writer.ids[n], "value": encode_bound(v, writer.types[n])}
-                for n, v in lowers.items()
+                {"key": writer.ids[n], "value": v} for n, v in lowers.items()
             ],
             "upper_bounds": [
-                {"key": writer.ids[n], "value": encode_bound(v, writer.types[n])}
-                for n, v in uppers.items()
+                {"key": writer.ids[n], "value": v} for n, v in uppers.items()
             ],
             "null_value_counts": [
                 {"key": writer.ids[n], "value": int(v)}
@@ -3145,7 +3217,7 @@ def add_files(
             raise FileNotFoundError(p)
         part = (partition_values or {}).get(p, {})
         entries.append(_footer_entry(writer, p, snapshot_id, part))
-    return _commit_added_entries(writer, snapshot_id, entries)
+    return _commit_files(writer, snapshot_id, entries, "append")
 
 
 def _record_name_mapping(writer: "IcebergWriter") -> None:
@@ -3171,20 +3243,6 @@ def _record_name_mapping(writer: "IcebergWriter") -> None:
         elif f["name"] not in e.get("names", []):
             e.setdefault("names", []).append(f["name"])
     writer.properties["schema.name-mapping.default"] = json.dumps(mapping)
-
-
-def _commit_added_entries(
-    writer: "IcebergWriter", snapshot_id: int, entries: list[dict[str, Any]]
-) -> int:
-    chunks = [entries[i : i + 100] for i in range(0, len(entries), 100)]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    writer._commit(
-        snapshot_id,
-        writer.manifests + new_manifests,
-        "append",
-        sum(e["data_file"]["record_count"] for e in entries),
-    )
-    return snapshot_id
 
 
 def add_files_spark(
@@ -3274,45 +3332,21 @@ def add_files_spark(
     entries = []
     for r in sorted(stats_rows, key=lambda r: r["path"]):
         bounds = json.loads(r["bounds"])
-        nulls = json.loads(r["nulls"])
-        nans = json.loads(r["nans"])
-        part = (partition_values or {}).get(r["path"], {})
         entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "file_path": r["path"],
-                    "file_format": "PARQUET",
-                    "partition": part,
-                    "record_count": int(r["num_rows"]),
-                    "file_size_in_bytes": int(r["size"]),
-                    "lower_bounds": [
-                        {
-                            "key": writer.ids[n],
-                            "value": base64.b64decode(v[0]),
-                        }
-                        for n, v in bounds.items()
-                    ],
-                    "upper_bounds": [
-                        {
-                            "key": writer.ids[n],
-                            "value": base64.b64decode(v[1]),
-                        }
-                        for n, v in bounds.items()
-                    ],
-                    "null_value_counts": [
-                        {"key": writer.ids[n], "value": int(v)}
-                        for n, v in nulls.items()
-                    ],
-                    "nan_value_counts": [
-                        {"key": writer.ids[n], "value": int(v)}
-                        for n, v in nans.items()
-                    ],
-                },
-            }
+            _parquet_entry(
+                writer,
+                snapshot_id,
+                r["path"],
+                (partition_values or {}).get(r["path"], {}),
+                r["num_rows"],
+                r["size"],
+                {n: base64.b64decode(v[0]) for n, v in bounds.items()},
+                {n: base64.b64decode(v[1]) for n, v in bounds.items()},
+                json.loads(r["nulls"]),
+                json.loads(r["nans"]),
+            )
         )
-    return _commit_added_entries(writer, snapshot_id, entries)
+    return _commit_files(writer, snapshot_id, entries, "append")
 
 
 def rollback_to(writer: "IcebergWriter", snapshot_id: int) -> None:
@@ -3916,18 +3950,14 @@ def commit_spark_overwrite(
             f"(first: {sorted(missing)[0]!r}); refusing a commit that would "
             "leave rewritten files' originals live"
         )
-    chunks = [
-        add_entries[i : i + 100] for i in range(0, len(add_entries), 100)
-    ] or [[]]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    tomb_manifests = _tombstone_manifests(writer, hits_by_spec, snapshot_id)
-    writer._commit(
+    return _commit_files(
+        writer,
         snapshot_id,
-        keep_manifests + new_manifests + tomb_manifests,
+        add_entries,
         "overwrite",
-        sum(e["data_file"]["record_count"] for e in add_entries),
+        base=keep_manifests,
+        tail=_tombstone_manifests(writer, hits_by_spec, snapshot_id),
     )
-    return snapshot_id
 
 
 # Catalyst size estimate above which the update side of a distributed
@@ -3952,23 +3982,6 @@ def _maybe_broadcast_updates(u: Any) -> Any:
     return F.broadcast(u) if est <= BROADCAST_UPDATES_MAX_BYTES else u
 
 
-def _with_partition_columns(writer: "IcebergWriter", out: Any) -> tuple[Any, list[str], list[str]]:
-    """Attach one hive dup-column per spec field (transformed value —
-    identity passes through, bucket via spec-exact murmur3) so the
-    commit's footer lift records prunable partition values.  Returns
-    (df, source column names, dup column names)."""
-    src_cols, dup_cols = [], []
-    for i, pf in enumerate(writer.spec):
-        src = pf["_source_name"]
-        rtype = transform_result_type(pf["transform"], writer.types[src])
-        out = out.withColumn(
-            f"__part{i}", spark_partition_value(src, pf["transform"], rtype)
-        )
-        src_cols.append(src)
-        dup_cols.append(f"__part{i}")
-    return out, src_cols, dup_cols
-
-
 def overwrite_partitions_spark(
     writer: "IcebergWriter",
     spark: Any,
@@ -3989,14 +4002,12 @@ def overwrite_partitions_spark(
     compared on the spec fields ``partition_col`` names — pass every
     partition source of the spec for full-tuple replacement.  Returns
     the snapshot id, or None for an empty frame."""
-    import tempfile
-
     from daskberg_spark.iceberg.metadata import IcebergTable
 
     pcols = [partition_col] if isinstance(partition_col, str) else list(partition_col)
     seg = path_col or partition_col
     segs = [seg] if isinstance(seg, str) else list(seg)
-    stage = tempfile.mkdtemp(prefix="dpo_", dir=f"{writer.path}/data")
+    stage = _stage_dir(writer, "dpo_")
     df.write.mode("overwrite").partitionBy(*segs).parquet(stage)
     probe = _entries_from_spark_dir(writer, stage, 0, pcols, segs)
     if not probe:
@@ -4044,8 +4055,6 @@ def merge_rows_spark(
     partition the rewrite on the transformed values; updates that move
     rows across partitions land correctly because the dup columns are
     computed from the FINAL row values."""
-    import tempfile
-
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
     from daskberg_spark.iceberg.metadata import IcebergTable
     from pyspark.sql import functions as F
@@ -4111,20 +4120,14 @@ def merge_rows_spark(
         F.lit(None).cast("long").alias("_row_id"),
         F.lit(None).cast("long").alias("_last_updated_sequence_number"),
     )
-    out = applied.unionByName(inserts)
-    data_dir = tempfile.mkdtemp(prefix="merge_rw_", dir=f"{writer.path}/data")
-    if writer.spec:
-        out, src_cols, dup_cols = _with_partition_columns(writer, out)
-        out.write.mode("overwrite").partitionBy(*dup_cols).parquet(data_dir)
-        return commit_spark_overwrite(
-            writer,
-            data_dir,
-            matched_files,
-            partition_col=src_cols,
-            path_col=dup_cols,
-        )
-    out.write.mode("overwrite").parquet(data_dir)
-    return commit_spark_overwrite(writer, data_dir, matched_files)
+    out, spec_names, hive_cols = _with_partition_columns(
+        writer, applied.unionByName(inserts)
+    )
+    stage = _stage_dir(writer, "merge_rw_")
+    out.write.mode("overwrite").partitionBy(*hive_cols).parquet(stage)
+    return commit_spark_overwrite(
+        writer, stage, matched_files, spec_names, hive_cols
+    )
 
 
 def commit_with_retries(
@@ -4285,9 +4288,6 @@ def delete_where_spark(
     ``compact_files`` folding the deletes in later.  Driver state is
     O(delete files), never O(rows).  Returns the snapshot id, or None
     when nothing matches."""
-    import glob as _glob
-    import tempfile
-
     import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
     from pyspark.sql import functions as F
     from daskberg_spark.iceberg.metadata import IcebergTable
@@ -4297,40 +4297,16 @@ def delete_where_spark(
     hits = tagged.filter(predicate).select(
         F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
     )
-    out_dir = tempfile.mkdtemp(prefix="pos_del_", dir=f"{writer.path}/data")
     # spec recommends position deletes sorted by (file_path, pos); sorting
     # within tasks keeps the write fully parallel
+    stage = _stage_dir(writer, "pos_del_")
     hits.sortWithinPartitions("file_path", "pos").write.mode(
         "overwrite"
-    ).parquet(out_dir)
-    entries = []
+    ).parquet(stage)
     snapshot_id = writer._next_snapshot_id
-    for p in sorted(_glob.glob(os.path.join(out_dir, "*.parquet"))):
-        meta = pq.ParquetFile(p).metadata
-        if meta.num_rows == 0:
-            os.remove(p)
-            continue
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": None,
-                },
-            }
-        )
-    if not entries:
+    manifest = _delete_manifest(writer, stage, snapshot_id, 1)
+    if manifest is None:
         return None
-    writer._format_version = 2
-    manifest = writer._write_manifest(entries, snapshot_id)
     writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
     return snapshot_id
 
@@ -4913,16 +4889,9 @@ def upsert_spark(
     matched rows DV-tombstone and re-append with the new values, new
     keys insert — write amplification O(upserted rows), the CDC-apply
     shape at 100 TB.  Returns the snapshot id."""
-    key = on
-    if key is None:
-        by_id = {f["id"]: f["name"] for f in writer.fields}
-        key = [by_id[i] for i in writer.identifier_field_ids if i in by_id]
-    if not key:
-        raise ValueError(
-            "table declares no identifier fields; pass on=[...] or call "
-            "set_identifier_fields first"
-        )
-    return merge_rows_mor_spark(writer, spark, rows, key)
+    return merge_rows_mor_spark(
+        writer, spark, rows, _resolve_merge_key(writer, on)
+    )
 
 
 def update_where_mor_spark(
@@ -4994,37 +4963,22 @@ def _commit_mor_changes(
     blob per touched file — position lists never reach the driver as
     rows) and append ``out``'s rows written in parallel, all in ONE
     ``overwrite`` snapshot under one sequence number."""
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix=stage_prefix, dir=f"{writer.path}/data")
-    if writer.spec:
-        out, src_cols, dup_cols = _with_partition_columns(writer, out)
-        out.write.mode("overwrite").partitionBy(*dup_cols).parquet(stage)
-        pcols, segs = src_cols, dup_cols
-    else:
-        out.write.mode("overwrite").parquet(stage)
-        pcols = segs = None
-
+    out, spec_names, hive_cols = _with_partition_columns(writer, out)
+    stage = _stage_dir(writer, stage_prefix)
+    out.write.mode("overwrite").partitionBy(*hive_cols).parquet(stage)
     snapshot_id = writer._next_snapshot_id
     data_entries = _entries_from_spark_dir(
-        writer, stage, snapshot_id, pcols, segs
+        writer, stage, snapshot_id, spec_names, hive_cols
     )
     dv_entries = _dv_manifest_entries_spark(
         writer, matched_pos.sparkSession, matched_pos, snapshot_id
     )
-    chunks = [
-        data_entries[i : i + 100] for i in range(0, len(data_entries), 100)
-    ] or [[]]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    if dv_entries:
-        new_manifests.append(writer._write_manifest(dv_entries, snapshot_id))
-    writer._commit(
-        snapshot_id,
-        writer.manifests + new_manifests,
-        "overwrite",
-        sum(e["data_file"]["record_count"] for e in data_entries),
+    dv_manifests = (
+        [writer._write_manifest(dv_entries, snapshot_id)] if dv_entries else []
     )
-    return snapshot_id
+    return _commit_files(
+        writer, snapshot_id, data_entries, "overwrite", tail=dv_manifests
+    )
 
 
 def delete_keys_spark(
@@ -5043,43 +4997,18 @@ def delete_keys_spark(
     ``delete_where_spark`` (predicate → position deletes): this is the
     path when the key set itself is data-sized.  Returns the snapshot id,
     or None for an empty key frame."""
-    import glob as _glob
-    import tempfile
-
     cols = sorted(keys_df.columns)
     for c in cols:
         if c not in writer.types:
             raise ValueError(f"unknown key column {c!r}")
-    out_dir = tempfile.mkdtemp(prefix="eq_del_", dir=f"{writer.path}/data")
-    keys_df.select(*cols).distinct().write.mode("overwrite").parquet(out_dir)
-    entries = []
+    stage = _stage_dir(writer, "eq_del_")
+    keys_df.select(*cols).distinct().write.mode("overwrite").parquet(stage)
     snapshot_id = writer._next_snapshot_id
-    for p in sorted(_glob.glob(os.path.join(out_dir, "*.parquet"))):
-        meta = pq.ParquetFile(p).metadata
-        if meta.num_rows == 0:
-            os.remove(p)
-            continue
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": meta.num_rows,
-                    "file_size_in_bytes": os.path.getsize(p),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": [writer.ids[c] for c in cols],
-                },
-            }
-        )
-    if not entries:
+    manifest = _delete_manifest(
+        writer, stage, snapshot_id, 2, [writer.ids[c] for c in cols]
+    )
+    if manifest is None:
         return None
-    writer._format_version = 2
-    manifest = writer._write_manifest(entries, snapshot_id)
     writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
     return snapshot_id
 
@@ -6506,8 +6435,6 @@ def compact_files_spark(
     DV manifest cardinalities plus one delta-sized read of path-named
     position-delete parquet; equality deletes don't count (run
     ``convert_deletes_to_dvs`` first)."""
-    import tempfile
-
     import daskberg_spark.iceberg.scan  # noqa: F401
     from daskberg_spark.iceberg.metadata import IcebergTable
 
@@ -6668,12 +6595,7 @@ def compact_files_spark(
         writer.set_sort_order(list(sort_by))
     else:
         rows = rows.coalesce(target_partitions)
-    data_dir = tempfile.mkdtemp(prefix="compact_rw_", dir=f"{writer.path}/data")
-    if writer.spec:
-        rows, src_cols, dup_cols = _with_partition_columns(writer, rows)
-        rows.write.mode("overwrite").partitionBy(*dup_cols).parquet(data_dir)
-        return commit_spark_overwrite(
-            writer, data_dir, small, partition_col=src_cols, path_col=dup_cols
-        )
-    rows.write.mode("overwrite").parquet(data_dir)
-    return commit_spark_overwrite(writer, data_dir, small)
+    rows, spec_names, hive_cols = _with_partition_columns(writer, rows)
+    stage = _stage_dir(writer, "compact_rw_")
+    rows.write.mode("overwrite").partitionBy(*hive_cols).parquet(stage)
+    return commit_spark_overwrite(writer, stage, small, spec_names, hive_cols)

@@ -439,18 +439,10 @@ def test_maintain_preserves_content(spark):
     assert before == after and len(after) == 5
 
 
-def test_write_df_multi_transform_single_source(spark):
-    """A spec with TWO transforms of one source column (bucket + identity)
-    keys each hive segment to its own spec FIELD — source-name
-    resolution alone would collapse both onto the first field and
-    silently mis-prune (review finding)."""
-    import tempfile
-
-    from daskberg_spark.iceberg.writer import IcebergWriter, write_df
-
-    src = spark.range(0, 400).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
-    path = tempfile.mkdtemp(prefix="wd_multi_")
-    w = IcebergWriter(
+def _multi_transform_writer(path):
+    """Two transforms of ONE source column: ``bucket[4](k)`` and
+    ``identity(k)``."""
+    return IcebergWriter(
         path,
         [
             {"id": 1, "name": "k", "type": "long", "required": False},
@@ -461,15 +453,96 @@ def test_write_df_multi_transform_single_source(spark):
             {"name": "k", "transform": "identity", "source": "k"},
         ],
     )
+
+
+def _assert_partitions_match_rows(t):
+    """Every live file carries BOTH spec fields, each equal to the
+    transform of the file's own rows."""
+    import pyarrow.parquet as pq
+
+    from daskberg_spark.iceberg.transforms import bucket
+
+    files = t.plan_files(None)
+    assert files
+    for f in files:
+        part = f["partition"]
+        assert {"k_bucket", "k"} <= set(part), part
+        ks = set(pq.read_table(f["file_path"], columns=["k"])["k"].to_pylist())
+        assert ks == {part["k"]}, (f["file_path"], part, ks)
+        assert bucket(part["k"], 4) == part["k_bucket"], part
+
+
+def test_write_df_multi_transform_single_source(spark):
+    """A spec with TWO transforms of one source column (bucket + identity)
+    keys each hive segment to its own spec FIELD — source-name
+    resolution alone would collapse both onto the first field and
+    silently mis-prune (review finding)."""
+    import tempfile
+
+    from daskberg_spark.iceberg.writer import write_df
+
+    src = spark.range(0, 400).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    path = tempfile.mkdtemp(prefix="wd_multi_")
+    w = _multi_transform_writer(path)
     write_df(w, src, mode="hash")
     t = IcebergTable(path)
-    files = t.plan_files(None)
-    # every file's partition tuple carries BOTH spec fields
-    assert all({"k_bucket", "k"} <= set(f["partition"]) for f in files)
+    _assert_partitions_match_rows(t)
     # identity prune must hit exactly one file per key
     assert len(t.plan_files([("k", "==", 5)])) == 1
     got = sorted(r.k for r in t.to_df(spark).collect())
     assert got == list(range(400))
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "merge_rows_spark",
+        "merge_rows_mor_spark",
+        "update_where_mor_spark",
+        "compact_files_spark",
+    ],
+)
+def test_spark_rewrites_multi_transform_single_source(spark, op):
+    """The Spark rewrite paths stage through write_df's partition-column
+    builder: files they commit under a bucket + identity spec of one
+    source column carry both spec fields, each matching the file's rows
+    (keying the hive segments by source column resolved both onto the
+    field named ``k`` and committed ``k_bucket`` as NULL)."""
+    from daskberg_spark.iceberg import writer as W
+
+    path = tempfile.mkdtemp(prefix="wd_multi_rw_")
+    w = _multi_transform_writer(path)
+    model = {k: float(k) for k in range(12)}
+    W.write_df(w, spark.createDataFrame(list(model.items()), "k long, v double"))
+    upd = spark.createDataFrame([(3, -3.0), (20, 20.0)], "k long, v double")
+    if op == "merge_rows_spark":
+        W.merge_rows_spark(w, spark, upd, ["k"])
+        model.update({3: -3.0, 20: 20.0})
+    elif op == "merge_rows_mor_spark":
+        W.merge_rows_mor_spark(w, spark, upd, ["k"])
+        model.update({3: -3.0, 20: 20.0})
+    elif op == "update_where_mor_spark":
+        W.update_where_mor_spark(w, spark, "k < 4", {"v": "v + 100"})
+        model.update({k: model[k] + 100 for k in range(4)})
+    else:
+        # a second append puts two small files in every partition
+        again = [(k, 0.5) for k in model]
+        W.write_df(w, spark.createDataFrame(again, "k long, v double"))
+        assert W.compact_files_spark(w, spark, min_file_bytes=1 << 40)
+        model = {k: sorted([v, 0.5]) for k, v in model.items()}
+    t = IcebergTable(path)
+    _assert_partitions_match_rows(t)
+    got = [(r.k, r.v) for r in t.to_df(spark).collect()]
+    if op == "compact_files_spark":
+        grouped = {}
+        for k, v in got:
+            grouped.setdefault(k, []).append(v)
+        assert {k: sorted(v) for k, v in grouped.items()} == model
+    else:
+        assert sorted(got) == sorted(model.items())
+    assert len(t.plan_files([("k", "==", 3)])) == (
+        2 if op.endswith("mor_spark") else 1
+    )
 
 
 def test_fast_delete_composes_with_commit_retries(spark):

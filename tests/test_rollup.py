@@ -163,6 +163,34 @@ def test_rollup_compaction_churn_cancels(spark, tmp_path):
     assert _state(spark, rw.path) == before == _recompute(spark, w.path)
 
 
+def test_rollup_refresh_stages_inside_table(spark, tmp_path):
+    """A refresh stages its rewrite under the rollup's own ``data/``:
+    files staged in the system temp dir would sit outside the table,
+    where ``remove_orphan_files`` (which walks only the table directory)
+    can never reclaim them once a later refresh replaces them."""
+    import os
+
+    from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.rollup import create_rollup, refresh_rollup
+
+    w = _source(tmp_path / "src")
+    w.append([{"id": i, "grp": "ab"[i % 2], "v": i} for i in range(20)])
+    rw = create_rollup(
+        spark, IcebergTable(w.path), str(tmp_path / "ru"), ["grp"], ["v"]
+    )
+    data = os.path.join(os.path.realpath(rw.path), "data") + os.sep
+    for lo in (20, 40):
+        w.append(
+            [{"id": i, "grp": "abc"[i % 3], "v": i} for i in range(lo, lo + 10)]
+        )
+        assert refresh_rollup(spark, rw)["mode"] == "incremental"
+        files = IcebergTable(rw.path).plan_files(None)
+        assert files
+        for f in files:
+            assert os.path.realpath(f["file_path"]).startswith(data), f
+    assert _state(spark, rw.path) == _recompute(spark, w.path)
+
+
 def test_rollup_empty_at_create_then_grows(spark, tmp_path):
     """A filtered view matching NOTHING at create time materializes an
     empty rollup; the first refresh over matching appends populates it

@@ -2768,6 +2768,34 @@ def test_delete_keys_spark_cdc_batch(spark, tmp_path):
     assert delete_keys_spark(w, spark, keys.where("id < 0")) is None
 
 
+def test_delete_keys_spark_partitioned_table(spark, tmp_path):
+    """On a partitioned table the executor-written equality delete is
+    GLOBAL (committed through the unpartitioned spec): committed under
+    the partitioned spec with a NULL partition tuple it would be scoped
+    to the NULL partition and delete nothing."""
+    import warnings
+
+    from daskberg_spark.iceberg.writer import IcebergWriter, delete_keys_spark
+
+    p = str(tmp_path / "t")
+    w = IcebergWriter(
+        p,
+        [
+            {"id": 1, "name": "id", "type": "long", "required": False},
+            {"id": 2, "name": "d", "type": "int", "required": False},
+        ],
+        [{"name": "d", "transform": "identity", "source": "d"}],
+    )
+    w.append([{"id": i, "d": i % 4} for i in range(20)])
+    keys = spark.createDataFrame([(3,), (8,)], "id long")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", UserWarning)
+        assert delete_keys_spark(w, spark, keys) is not None
+        rows = sorted(r["id"] for r in IcebergTable(p).to_df(spark).collect())
+    assert rows == [i for i in range(20) if i not in (3, 8)]
+    assert not [c for c in caught if issubclass(c.category, UserWarning)]
+
+
 def test_mor_maintenance_interaction(spark, tmp_path):
     """Maintenance on a merge-on-read table with LIVE position AND
     equality delete files: expire_snapshots + remove_orphan_files must
@@ -4478,6 +4506,9 @@ def test_identifier_fields_and_upsert(spark, tmp_path):
     w3.append([{"k": 1}])
     with _pytest.raises(ValueError, match="identifier fields"):
         upsert_spark(w3, spark, spark.createDataFrame([(1,)], "k long"))
+    # an unknown on= column is refused like every other upsert entry point
+    with _pytest.raises(ValueError, match="unknown key column 'nope'"):
+        upsert_spark(w3, spark, spark.createDataFrame([(1,)], "k long"), on=["nope"])
 
 
 def test_changelog_silent_across_pos_delete_rewrite(spark, tmp_path):

@@ -1303,10 +1303,7 @@ def ensure_legacy_eq_fixture(path: str = LEGACY_EQ_FIXTURE_DIR) -> str:
     entry = writer._build_eq_delete_entry(
         [{"id": i} for i in range(0, 60, 7)], snapshot_id, None
     )
-    manifest = writer._write_manifest(
-        [entry], snapshot_id, spec_id=writer.current_spec_id
-    )
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
+    writer._commit(snapshot_id, [(writer.current_spec_id, [entry])], "delete")
     writer.set_properties({"daskberg.legacy-global-eq-deletes": "true"})
     writer.append([{"id": 0, "cat": "a", "val": -1.0}])  # reborn id 0
     migrate_legacy_eq_deletes(writer)

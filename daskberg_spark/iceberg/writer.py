@@ -381,19 +381,22 @@ def _live_entries(
     return data, deletes, loaded
 
 
-def _tombstone_manifests(
-    writer: "IcebergWriter",
-    hits_by_spec: dict[int, list[Located]],
-    snapshot_id: int,
-) -> list[dict[str, Any]]:
-    """One manifest of DELETED entries per origin spec — partition
-    records must decode under the spec they were written with."""
+# Entries per manifest: ``IcebergWriter._commit`` lays every group of a
+# commit's entries out in manifests of at most this many entries.
+MANIFEST_ENTRIES = 100
+
+# (partition spec id, manifest entries written under that spec)
+Group = tuple[int, list[dict[str, Any]]]
+
+
+def _tombstones(
+    hits_by_spec: dict[int, list[Located]], snapshot_id: int
+) -> list[Group]:
+    """The DELETED entries removing ``_tombstone_rewrite``'s hits, one
+    group per origin spec — partition records must decode under the
+    spec they were written with."""
     return [
-        writer._write_manifest(
-            [_tombstone(e, mf, snapshot_id) for e, mf in hits],
-            snapshot_id,
-            spec_id=sid,
-        )
+        (sid, [_tombstone(e, mf, snapshot_id) for e, mf in hits])
         for sid, hits in sorted(hits_by_spec.items())
     ]
 
@@ -942,7 +945,8 @@ class IcebergWriter:
     ) -> list[dict[str, Any]]:
         """Write ``rows`` as data files in ``file_format`` (one per
         partition tuple) and return their ADDED manifest entries — the
-        shared half of ``append`` and ``upsert_rows_equality``."""
+        shared half of ``append``, ``upsert_rows_equality`` and
+        ``merge_rows``."""
         groups: dict[tuple, list[dict[str, Any]]] = {}
         for row in rows:
             groups.setdefault(self._partition_tuple(row), []).append(row)
@@ -973,7 +977,6 @@ class IcebergWriter:
     def append(
         self,
         rows: list[dict[str, Any]],
-        max_files_per_manifest: int = 100,
         file_format: str = "parquet",
     ) -> int:
         """Append rows as a new snapshot; one data file per partition
@@ -983,12 +986,7 @@ class IcebergWriter:
         format-independent."""
         snapshot_id = self._next_snapshot_id
         entries = self._build_data_entries(rows, snapshot_id, file_format)
-        chunks = [
-            entries[i : i + max_files_per_manifest]
-            for i in range(0, len(entries), max_files_per_manifest)
-        ] or [[]]
-        new_manifests = [self._write_manifest(c, snapshot_id) for c in chunks]
-        self._commit(snapshot_id, self.manifests + new_manifests, "append", len(rows))
+        self._commit(snapshot_id, [(self.current_spec_id, entries)], "append")
         return snapshot_id
 
     def rename_column(self, old: str, new: str) -> None:
@@ -1166,16 +1164,10 @@ class IcebergWriter:
         Default (None/empty) stays a global delete."""
         snapshot_id = self._next_snapshot_id
         entry = self._build_eq_delete_entry(keys, snapshot_id, partition)
-        manifest = self._write_manifest(
-            [entry],
-            snapshot_id,
-            spec_id=(
-                self.current_spec_id
-                if partition
-                else self._global_delete_spec_id()
-            ),
+        spec_id = (
+            self.current_spec_id if partition else self._global_delete_spec_id()
         )
-        self._commit(snapshot_id, self.manifests + [manifest], "delete", 0)
+        self._commit(snapshot_id, [(spec_id, [entry])], "delete")
         return snapshot_id
 
     def _global_delete_spec_id(self) -> int:
@@ -1260,7 +1252,6 @@ class IcebergWriter:
         self,
         rows: list[dict[str, Any]],
         on: list[str] | None = None,
-        max_files_per_manifest: int = 100,
     ) -> int:
         """Blind equality-delete UPSERT — the Flink-CDC write shape
         (one ``overwrite`` snapshot carrying an equality-delete file on
@@ -1300,23 +1291,13 @@ class IcebergWriter:
         data_entries = self._build_data_entries(
             list(deduped.values()), snapshot_id
         )
-        chunks = [
-            data_entries[i : i + max_files_per_manifest]
-            for i in range(0, len(data_entries), max_files_per_manifest)
-        ] or [[]]
-        new_manifests = [
-            self._write_manifest(
-                [delete_entry], snapshot_id,
-                spec_id=self._global_delete_spec_id(),
-            )
-        ] + [
-            self._write_manifest(c, snapshot_id) for c in chunks
-        ]
         self._commit(
             snapshot_id,
-            self.manifests + new_manifests,
+            [
+                (self._global_delete_spec_id(), [delete_entry]),
+                (self.current_spec_id, data_entries),
+            ],
             "overwrite",
-            len(deduped),
             extra_summary={"upsert-keys": ",".join(key)},
         )
         return snapshot_id
@@ -1356,8 +1337,7 @@ class IcebergWriter:
                 "equality_ids": None,
             },
         }
-        manifest = self._write_manifest([entry], snapshot_id)
-        self._commit(snapshot_id, self.manifests + [manifest], "delete", 0)
+        self._commit(snapshot_id, [(self.current_spec_id, [entry])], "delete")
         return snapshot_id
 
     def delete_positions_dv(self, positions_by_file: dict[str, list[int]]) -> int:
@@ -1378,38 +1358,59 @@ class IcebergWriter:
         for target in sorted(positions_by_file):
             positions = sorted(set(positions_by_file[target]))
             dvs.append((target, dv_blob(positions), len(positions)))
-        return _commit_dv_snapshot(self, dvs)
+        snapshot_id = self._next_snapshot_id
+        entries = _dv_manifest_entries(self, dvs, snapshot_id)
+        return _commit_dv_snapshot(self, snapshot_id, entries)
 
     def delete_files(self, predicate) -> int:
         """New snapshot with DELETED entries for files whose *entry* matches
         ``predicate(data_file_record) -> bool`` (status reconciliation path,
         reference ice.py:191-204)."""
         snapshot_id = self._next_snapshot_id
-        keep_manifests, hits_by_spec = self._tombstone_rewrite(
-            lambda e, _mf: predicate(e["data_file"]), snapshot_id
+        self._commit_removing(
+            snapshot_id, lambda e, _mf: predicate(e["data_file"]), [], "delete"
         )
-        delete_manifests = _tombstone_manifests(
-            self, hits_by_spec, snapshot_id
-        ) or [self._write_manifest([], snapshot_id)]
-        self._commit(snapshot_id, keep_manifests + delete_manifests, "delete", 0)
         return snapshot_id
+
+    def _commit_removing(
+        self,
+        snapshot_id: int,
+        hit,
+        groups: list[Group],
+        operation: str,
+        extra_summary: dict[str, str] | None = None,
+    ) -> None:
+        """``_commit`` the new ``groups`` and remove the live entries
+        matching ``hit`` (``_tombstone_rewrite``); the tombstones follow
+        ``groups``."""
+        carried, hits_by_spec = self._tombstone_rewrite(hit, snapshot_id)
+        self._commit(
+            snapshot_id,
+            groups + _tombstones(hits_by_spec, snapshot_id),
+            operation,
+            carried,
+            extra_summary,
+        )
 
     def _tombstone_rewrite(
         self, hit, snapshot_id: int
-    ) -> tuple[list[dict[str, Any]], dict[int, list[Located]]]:
+    ) -> tuple[list[dict[str, Any] | Group], dict[int, list[Located]]]:
         """Plan the removal of the live entries matching ``hit(entry,
-        manifest)`` WITHOUT committing: returns (surviving manifest list,
+        manifest)`` WITHOUT committing — the one removal path of every
+        writer commit: returns (carried manifests for ``_commit``,
         spec_id → hit ``(entry, manifest)`` pairs).  ``hit`` is called
         exactly once per entry whose key is live under the census
         (``_live_entries``), so a DELETED tombstone or an entry a later
         tombstone supersedes is never a hit.  A manifest holding a hit
-        is rewritten with every other entry carried (``_carry``);
-        untouched manifests pass through.  Callers turn the hits into
-        tombstones (``_tombstone_manifests``) or, for a migration, into
+        is carried as a group of its other entries (``_carry``), which
+        ``_commit`` rewrites in its place; untouched manifests pass
+        through, so the tombstone-only manifest ``_commit`` drops one
+        snapshot later cannot resurrect a hit.  Callers turn the hits
+        into tombstones (``_tombstones``) or, for a migration, into
         re-registered entries."""
         data, deletes, loaded = _live_entries(self)
         live = {"data": data, "delete": deletes}
-        keep_manifests: list[dict[str, Any]] = []
+        carried: list[dict[str, Any] | Group] = []
         hits_by_spec: dict[int, list[Located]] = {}
         for mf, entries in loaded:
             hits, kept = [], []
@@ -1418,17 +1419,13 @@ class IcebergWriter:
                 is_hit = key in live.get(kind, ()) and hit(e, mf)
                 (hits if is_hit else kept).append(e)
             if not hits:
-                keep_manifests.append(mf)
+                carried.append(mf)
                 continue
             mf_spec = mf.get("partition_spec_id", 0)
             hits_by_spec.setdefault(mf_spec, []).extend((e, mf) for e in hits)
             if kept:
-                keep_manifests.append(
-                    self._write_manifest(
-                        [_carry(e, mf) for e in kept], snapshot_id, spec_id=mf_spec
-                    )
-                )
-        return keep_manifests, hits_by_spec
+                carried.append((mf_spec, [_carry(e, mf) for e in kept]))
+        return carried, hits_by_spec
 
     def merge_rows(
         self, updates: list[dict[str, Any]], key_cols: list[str]
@@ -1463,7 +1460,7 @@ class IcebergWriter:
         # older equality deletes stop applying to it on read; without
         # this, merging a file holding deleted rows resurrects them.
         eq_deletes, pos_pairs = _live_deletes(self)
-        new_rows_by_part: dict[tuple, list[dict[str, Any]]] = {}
+        new_rows: list[dict[str, Any]] = []
         matched: set[tuple] = set()
 
         def rewrite(e: dict[str, Any], mf: dict[str, Any]) -> bool:
@@ -1500,48 +1497,23 @@ class IcebergWriter:
                     # the reader inherits THIS commit's sequence
                     r = {**r, **ups_by_key[k]}
                     r.pop("_last_updated_sequence_number", None)
-                new_rows_by_part.setdefault(self._partition_tuple(r), []).append(r)
+                new_rows.append(r)
             return True
 
-        keep_manifests, hits_by_spec = self._tombstone_rewrite(rewrite, snapshot_id)
+        carried, hits_by_spec = self._tombstone_rewrite(rewrite, snapshot_id)
         # unmatched updates are inserts
-        n_inserted = 0
         for k, u in ups_by_key.items():
             if k not in matched:
                 missing = [c for c in self.types if c not in u]
-                row = {**{c: None for c in missing}, **u}
-                new_rows_by_part.setdefault(self._partition_tuple(row), []).append(row)
-                n_inserted += 1
-        add_entries = []
-        for ptuple, grows in sorted(new_rows_by_part.items(), key=lambda kv: str(kv[0])):
-            fpath, fsize = self._write_parquet(grows)
-            lowers, uppers, nulls, nans = self._bounds(grows)
-            add_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "file_path": fpath,
-                        "file_format": "PARQUET",
-                        "partition": {
-                            pf["name"]: v for pf, v in zip(self.spec, ptuple)
-                        },
-                        "record_count": len(grows),
-                        "file_size_in_bytes": fsize,
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                        "null_value_counts": nulls,
-                        "nan_value_counts": nans,
-                    },
-                }
-            )
-        new_manifests = [self._write_manifest(add_entries, snapshot_id)]
-        new_manifests += _tombstone_manifests(self, hits_by_spec, snapshot_id)
+                new_rows.append({**{c: None for c in missing}, **u})
         self._commit(
             snapshot_id,
-            keep_manifests + new_manifests,
+            [
+                (self.current_spec_id, self._build_data_entries(new_rows, snapshot_id)),
+                *_tombstones(hits_by_spec, snapshot_id),
+            ],
             "overwrite",
-            n_inserted,
+            carried,
         )
         return snapshot_id
 
@@ -1670,18 +1642,14 @@ class IcebergWriter:
     # -- metadata emission --------------------------------------------------
 
     def _write_manifest(
-        self,
-        entries: list[dict[str, Any]],
-        snapshot_id: int,
-        spec_id: int | None = None,
+        self, entries: list[dict[str, Any]], snapshot_id: int, spec_id: int
     ) -> dict[str, Any]:
-        """``spec_id`` selects which partition spec the entries' partition
-        records follow — rewrites of pre-evolution manifests (delete_files
-        / merge survivors) must keep their ORIGINAL spec, not the current
-        one, or partition values decode under the wrong fields."""
+        """Write one manifest of ``entries`` (``_commit``'s layout is the
+        only caller).  ``spec_id`` is the partition spec the entries'
+        partition records follow — rewrites of pre-evolution manifests
+        keep their ORIGINAL spec, or partition values decode under the
+        wrong fields."""
         self._refuse_if_poisoned()
-        if spec_id is None:
-            spec_id = self.current_spec_id
         spec = self.specs[spec_id]
         # v3 row lineage: every ADDED data file claims the next
         # [_next_row_id, +record_count) id block.  EXISTING/DELETED
@@ -1729,18 +1697,11 @@ class IcebergWriter:
             # THIS snapshot are commit deltas
             return e.get("snapshot_id") in (None, snapshot_id)
 
-        def _agg(status: int, contents: tuple, field: str) -> int:
+        def _agg(status: int, contents: tuple, field: str | None = None) -> int:
+            # sum of ``field`` (the entry count when None) over this
+            # commit's entries of ``status`` and content kind
             return sum(
-                int(e["data_file"].get(field) or 0)
-                for e in entries
-                if e["status"] == status
-                and _this_commit(e)
-                and e["data_file"].get("content", 0) in contents
-            )
-
-        def _cnt(status: int, contents: tuple) -> int:
-            return sum(
-                1
+                int(e["data_file"].get(field) or 0) if field else 1
                 for e in entries
                 if e["status"] == status
                 and _this_commit(e)
@@ -1751,10 +1712,10 @@ class IcebergWriter:
         # Iceberg's SnapshotSummary fields) — private keys, never
         # serialized (the Avro writer emits schema fields only)
         summary_delta = {
-            "added-data-files": _cnt(1, (0,)),
-            "added-delete-files": _cnt(1, (1, 2)),
-            "deleted-data-files": _cnt(2, (0,)),
-            "removed-delete-files": _cnt(2, (1, 2)),
+            "added-data-files": _agg(1, (0,)),
+            "added-delete-files": _agg(1, (1, 2)),
+            "deleted-data-files": _agg(2, (0,)),
+            "removed-delete-files": _agg(2, (1, 2)),
             "added-records": _agg(1, (0,), "record_count"),
             "deleted-records": _agg(2, (0,), "record_count"),
             # real Iceberg's SnapshotSummary row censuses for delete
@@ -1809,11 +1770,32 @@ class IcebergWriter:
     def _commit(
         self,
         snapshot_id: int,
-        manifests: list[dict[str, Any]],
+        groups: list[Group],
         operation: str,
-        added: int,
+        manifests: list[dict[str, Any] | Group] | None = None,
         extra_summary: dict[str, str] | None = None,
     ) -> None:
+        """Commit one ``operation`` snapshot — the one manifest layout of
+        every writer commit.  Each ``(spec id, entries)`` group of new
+        entries becomes manifests of at most ``MANIFEST_ENTRIES`` entries
+        under its own spec, listed after the carried ``manifests``
+        (default ``self.manifests``), whose groups — manifests that
+        ``_tombstone_rewrite`` rewrote — are written in place the same
+        way.  A commit adding no entry writes one empty manifest."""
+        carried = self.manifests if manifests is None else manifests
+        groups = [g for g in groups if g[1]] or [(self.current_spec_id, [])]
+        manifests = []
+        for item in [*carried, *groups]:
+            if isinstance(item, dict):
+                manifests.append(item)
+                continue
+            spec_id, entries = item
+            manifests += [
+                self._write_manifest(
+                    entries[i : i + MANIFEST_ENTRIES], snapshot_id, spec_id=spec_id
+                )
+                for i in range(0, max(len(entries), 1), MANIFEST_ENTRIES)
+            ]
         # Drop DELETED-tombstone-only manifests created by PRIOR snapshots:
         # real Iceberg keeps delete tombstones for exactly one snapshot
         # (incremental consumers read them there), after which they are
@@ -1903,7 +1885,6 @@ class IcebergWriter:
             "schema-id": self.current_schema_id,
             "summary": {
                 "operation": operation,
-                "added-records": str(added),
                 **commit_summary,
                 **(extra_summary or {}),
             },
@@ -2105,9 +2086,9 @@ class IcebergWriter:
 # Executors write files into a stage directory under ``{path}/data``
 # (``_stage_dir``; hive-partitioned on ``_with_partition_columns``'
 # spec-field columns), the driver lifts manifest entries from the files
-# (``_entries_from_spark_dir`` for data, ``_delete_manifest`` for delete
-# files) and ``_commit_files`` writes the new-files manifests and commits
-# one snapshot through ``_publish``.
+# (``_entries_from_spark_dir`` for data, ``_delete_entries`` for delete
+# files) and ``IcebergWriter._commit`` lays them out in manifests and
+# commits one snapshot.
 
 
 def _stage_dir(writer: "IcebergWriter", prefix: str) -> str:
@@ -2154,22 +2135,21 @@ def _with_partition_columns(
     return df, names, cols
 
 
-def _delete_manifest(
+def _delete_entries(
     writer: "IcebergWriter",
     stage: str,
     snapshot_id: int,
     content: int,
     equality_ids: list[int] | None = None,
-) -> dict[str, Any] | None:
+) -> list[dict[str, Any]]:
     """Lift a stage directory of executor-written delete parquet into
-    one ADDED delete manifest — position deletes (``content=1``) or
-    equality deletes on ``equality_ids`` (``content=2``); None when no
-    file holds a row (empty task outputs are removed).  Equality deletes
-    are GLOBAL: they go through the unpartitioned spec
-    (``_global_delete_spec_id``), because a delete under a partitioned
-    spec with an all-NULL partition tuple is scoped to the NULL
-    partition.  Position deletes keep the current spec (this reader
-    applies them by path)."""
+    ADDED delete entries with an empty partition tuple — position
+    deletes (``content=1``) or equality deletes on ``equality_ids``
+    (``content=2``); [] when no file holds a row (empty task outputs are
+    removed).  Equality deletes are GLOBAL: callers commit them under
+    the unpartitioned spec (``_global_delete_spec_id``), because a
+    delete under a partitioned spec with an all-NULL partition tuple is
+    scoped to the NULL partition."""
     import glob as _glob
 
     entries = []
@@ -2197,40 +2177,9 @@ def _delete_manifest(
                 },
             }
         )
-    if not entries:
-        return None
-    writer._format_version = max(writer._format_version, 2)
-    spec_id = writer._global_delete_spec_id() if content == 2 else None
-    return writer._write_manifest(entries, snapshot_id, spec_id=spec_id)
-
-
-def _commit_files(
-    writer: "IcebergWriter",
-    snapshot_id: int,
-    entries: list[dict[str, Any]],
-    operation: str,
-    base: list[dict[str, Any]] | None = None,
-    tail: list[dict[str, Any]] | None = None,
-    extra_summary: dict[str, str] | None = None,
-) -> int:
-    """The new-files manifest tail of a staged write: ``entries`` (ADDED
-    data files) go into manifests of at most 100 entries — one empty
-    manifest when there are none — listed after ``base`` (default: the
-    live manifests) and before ``tail``, and one ``operation`` snapshot
-    commits them with the entries' record-count sum.  Returns the
-    snapshot id."""
-    chunks = [entries[i : i + 100] for i in range(0, len(entries), 100)] or [[]]
-    new_manifests = [writer._write_manifest(c, snapshot_id) for c in chunks]
-    writer._commit(
-        snapshot_id,
-        (writer.manifests if base is None else base)
-        + new_manifests
-        + (tail or []),
-        operation,
-        sum(e["data_file"]["record_count"] for e in entries),
-        extra_summary=extra_summary,
-    )
-    return snapshot_id
+    if entries:
+        writer._format_version = max(writer._format_version, 2)
+    return entries
 
 
 def commit_spark_output(
@@ -2266,9 +2215,13 @@ def commit_spark_output(
         file_format=file_format,
         spark=spark,
     )
-    return _commit_files(
-        writer, snapshot_id, entries, "append", extra_summary=extra_summary
+    writer._commit(
+        snapshot_id,
+        [(writer.current_spec_id, entries)],
+        "append",
+        extra_summary=extra_summary,
     )
+    return snapshot_id
 
 
 def write_df(
@@ -2425,11 +2378,13 @@ def upsert_spark_output(
     commit lifts the transformed values; the eq-delete half stays a
     GLOBAL delete (empty partition tuple — spec-legal, applies
     everywhere), so the key need not determine the partition."""
-    if writer.spec and partition_col is None:
+    if writer.spec and (partition_col is None or path_col is None):
+        missing = "partition_col" if partition_col is None else "path_col"
         raise ValueError(
-            "partitioned table: pass partition_col/path_col (the "
-            "commit_spark_output convention) so the data half lands "
-            "with prunable partition values"
+            f"partitioned table: pass {missing} (partition_col/path_col, "
+            "the commit_spark_output convention) so the data half is "
+            "written hive-partitioned and lands with prunable partition "
+            "values"
         )
     key = _resolve_merge_key(writer, on)
     if dir_token is None:
@@ -2460,17 +2415,19 @@ def upsert_spark_output(
     data_entries = _entries_from_spark_dir(
         writer, data_dir, snapshot_id, partition_col, path_col
     )
-    del_manifest = _delete_manifest(
+    del_entries = _delete_entries(
         writer, del_dir, snapshot_id, 2, [writer.ids[c] for c in key]
     )
-    return _commit_files(
-        writer,
+    groups = [(writer.current_spec_id, data_entries)]
+    if del_entries:
+        groups.insert(0, (writer._global_delete_spec_id(), del_entries))
+    writer._commit(
         snapshot_id,
-        data_entries,
+        groups,
         "overwrite",
-        base=writer.manifests + ([del_manifest] if del_manifest else []),
         extra_summary={"upsert-keys": ",".join(key), **(extra_summary or {})},
     )
+    return snapshot_id
 
 
 def rows_bounds(
@@ -2822,9 +2779,13 @@ def _write_df_avro_tasks(
                 "data_file": data_file,
             }
         )
-    return _commit_files(
-        writer, snapshot_id, entries, "append", extra_summary=extra_summary
+    writer._commit(
+        snapshot_id,
+        [(writer.current_spec_id, entries)],
+        "append",
+        extra_summary=extra_summary,
     )
+    return snapshot_id
 
 
 def _partition_from_path(
@@ -3217,7 +3178,8 @@ def add_files(
             raise FileNotFoundError(p)
         part = (partition_values or {}).get(p, {})
         entries.append(_footer_entry(writer, p, snapshot_id, part))
-    return _commit_files(writer, snapshot_id, entries, "append")
+    writer._commit(snapshot_id, [(writer.current_spec_id, entries)], "append")
+    return snapshot_id
 
 
 def _record_name_mapping(writer: "IcebergWriter") -> None:
@@ -3346,7 +3308,8 @@ def add_files_spark(
                 json.loads(r["nans"]),
             )
         )
-    return _commit_files(writer, snapshot_id, entries, "append")
+    writer._commit(snapshot_id, [(writer.current_spec_id, entries)], "append")
+    return snapshot_id
 
 
 def rollback_to(writer: "IcebergWriter", snapshot_id: int) -> None:
@@ -3491,10 +3454,12 @@ def cherrypick_snapshot(writer: "IcebergWriter", snapshot_id: int) -> int:
 
     _, src_manifests = read_avro_file(src["manifest-list"])
     new_id = writer._next_snapshot_id
-    entries = []
+    # the files keep the spec their partition records were written with
+    by_spec: dict[int, list[dict[str, Any]]] = {}
     for mf in src_manifests:
         if mf.get("added_snapshot_id") != snapshot_id:
             continue
+        entries = by_spec.setdefault(mf.get("partition_spec_id", 0), [])
         _, mf_entries = read_avro_file(mf["manifest_path"])
         for e in mf_entries:
             entry_snap = (
@@ -3511,15 +3476,12 @@ def cherrypick_snapshot(writer: "IcebergWriter", snapshot_id: int) -> int:
                         "data_file": e["data_file"],
                     }
                 )
-    if not entries:
+    if not any(by_spec.values()):
         raise ValueError(f"snapshot {snapshot_id} added no data files")
-    added = sum(e["data_file"]["record_count"] for e in entries)
-    manifest = writer._write_manifest(entries, new_id)
     writer._commit(
         new_id,
-        writer.manifests + [manifest],
+        list(by_spec.items()),
         "append",
-        added,
         extra_summary={"cherry-picked-snapshot-id": str(snapshot_id)},
     )
     return new_id
@@ -3942,7 +3904,7 @@ def commit_spark_overwrite(
             return True
         return False
 
-    keep_manifests, hits_by_spec = writer._tombstone_rewrite(is_removed, snapshot_id)
+    carried, hits_by_spec = writer._tombstone_rewrite(is_removed, snapshot_id)
     missing = removed - found
     if missing:
         raise ValueError(
@@ -3950,14 +3912,16 @@ def commit_spark_overwrite(
             f"(first: {sorted(missing)[0]!r}); refusing a commit that would "
             "leave rewritten files' originals live"
         )
-    return _commit_files(
-        writer,
+    writer._commit(
         snapshot_id,
-        add_entries,
+        [
+            (writer.current_spec_id, add_entries),
+            *_tombstones(hits_by_spec, snapshot_id),
+        ],
         "overwrite",
-        base=keep_manifests,
-        tail=_tombstone_manifests(writer, hits_by_spec, snapshot_id),
+        carried,
     )
+    return snapshot_id
 
 
 # Catalyst size estimate above which the update side of a distributed
@@ -4286,28 +4250,52 @@ def delete_where_spark(
     O(matches) + metadata, the read-time cost one anti-join — the
     standard trade for frequent small deletes on a 100 TB table, with
     ``compact_files`` folding the deletes in later.  Driver state is
-    O(delete files), never O(rows).  Returns the snapshot id, or None
-    when nothing matches."""
-    import daskberg_spark.iceberg.scan  # noqa: F401  (attaches .to_df)
+    O(delete files), never O(rows).  Each delete file commits under its
+    targets' spec and partition (staged hive-partitioned by a scope id
+    attached like ``to_df``'s ``__seq``): Iceberg v2 planning applies a
+    position delete only to files of the delete's spec and partition.
+    Returns the snapshot id, or None when nothing matches."""
     from pyspark.sql import functions as F
+
     from daskberg_spark.iceberg.metadata import IcebergTable
+    from daskberg_spark.iceberg.scan import _attach_path_value
 
     t = IcebergTable(writer.path)
+    scopes: dict[tuple[int, tuple], int] = {}  # (spec id, partition) → id
+    pairs = [
+        (
+            f["file_path"],
+            scopes.setdefault(
+                (f.get("_spec_id", 0), tuple((f.get("partition") or {}).items())),
+                len(scopes),
+            ),
+        )
+        for f in t.plan_files()
+    ]
     tagged = t.to_df(spark, keep_pos=True)
-    hits = tagged.filter(predicate).select(
-        F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+    hits = _attach_path_value(
+        tagged.filter(predicate), spark, "__file", "__scope", pairs
+    ).select(
+        F.col("__file").alias("file_path"), F.col("__pos").alias("pos"), "__scope"
     )
     # spec recommends position deletes sorted by (file_path, pos); sorting
     # within tasks keeps the write fully parallel
     stage = _stage_dir(writer, "pos_del_")
-    hits.sortWithinPartitions("file_path", "pos").write.mode(
+    hits.sortWithinPartitions("__scope", "file_path", "pos").write.mode(
         "overwrite"
-    ).parquet(stage)
+    ).partitionBy("__scope").parquet(stage)
     snapshot_id = writer._next_snapshot_id
-    manifest = _delete_manifest(writer, stage, snapshot_id, 1)
-    if manifest is None:
+    entries = _delete_entries(writer, stage, snapshot_id, 1)
+    if not entries:
         return None
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
+    by_id = {i: scope for scope, i in scopes.items()}
+    groups: dict[int, list[dict[str, Any]]] = {}
+    for e in entries:
+        m = re.search(r"/__scope=(\d+)/", e["data_file"]["file_path"])
+        spec_id, partition = by_id[int(m.group(1))]
+        e["data_file"]["partition"] = dict(partition)
+        groups.setdefault(spec_id, []).append(e)
+    writer._commit(snapshot_id, sorted(groups.items()), "delete")
     return snapshot_id
 
 
@@ -4335,9 +4323,7 @@ def delete_where_dv_spark(
     entries = _dv_manifest_entries_spark(writer, spark, hits, snapshot_id)
     if not entries:
         return None
-    manifest = writer._write_manifest(entries, snapshot_id)
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
-    return snapshot_id
+    return _commit_dv_snapshot(writer, snapshot_id, entries)
 
 
 def delete_where_fast(
@@ -4417,20 +4403,24 @@ def delete_where_fast(
         )
     if not full_paths and not dv_entries:
         return None
-    if full_paths:
-        keep_manifests, hits_by_spec = writer._tombstone_rewrite(
-            lambda e, _mf: e["data_file"].get("content", 0) == 0
-            and _norm_data_path(e["data_file"]["file_path"]) in full_paths,
-            snapshot_id,
-        )
-    else:
-        keep_manifests, hits_by_spec = list(writer.manifests), {}
-    manifests = keep_manifests + _tombstone_manifests(
-        writer, hits_by_spec, snapshot_id
+    superseded = _superseded_by(dv_entries)
+    # one rewrite for both removals: two would each start from
+    # writer.manifests and the second would undo the first's rewrite
+    carried, hits_by_spec = writer._tombstone_rewrite(
+        lambda e, mf: superseded(e, mf)
+        or e["data_file"].get("content", 0) == 0
+        and _norm_data_path(e["data_file"]["file_path"]) in full_paths,
+        snapshot_id,
     )
-    if dv_entries:
-        manifests.append(writer._write_manifest(dv_entries, snapshot_id))
-    writer._commit(snapshot_id, manifests, "delete", 0)
+    writer._commit(
+        snapshot_id,
+        [
+            *_tombstones(hits_by_spec, snapshot_id),
+            (writer.current_spec_id, dv_entries),
+        ],
+        "delete",
+        carried,
+    )
     return snapshot_id
 
 
@@ -4509,14 +4499,12 @@ def _dv_entries(
     writer: "IcebergWriter",
     added: list[tuple[str, str, int, int, int, int]],
     snapshot_id: int,
-    live_dvs: dict[str, dict[str, Any]],
 ) -> list[dict[str, Any]]:
     """Manifest entries for written DV blobs (``_write_dv_puffin`` rows):
-    one ADDED entry per blob, plus a DELETED entry for the prior live DV
-    of every target that got a new (merged) blob — keeps one live DV per
-    data file."""
+    one ADDED entry per blob.  The prior live DVs they supersede are
+    removed by the committing writer (``_superseded_by``)."""
     writer._format_version = 3
-    entries = [
+    return [
         {
             "status": 1,
             "snapshot_id": snapshot_id,
@@ -4537,18 +4525,25 @@ def _dv_entries(
         }
         for target, path, file_size, offset, length, cardinality in added
     ]
-    return entries + [
-        {
-            "status": 2,
-            "snapshot_id": snapshot_id,
-            "sequence_number": old.get("_sequence_number"),
-            "data_file": {
-                k: v for k, v in old.items() if not k.startswith("_")
-            },
-        }
-        for old in (live_dvs.get(a[0]) for a in added)
-        if old is not None
-    ]
+
+
+def _superseded_by(dv_entries: list[dict[str, Any]]):
+    """``_tombstone_rewrite`` hit test for the live DVs that the new
+    ``dv_entries`` supersede: each new blob holds its target's prior
+    positions (``_live_dv_records``), so the target's live DV goes —
+    at most one live DV per data file, as the v3 spec requires."""
+    targets = {e["data_file"]["referenced_data_file"] for e in dv_entries}
+
+    def hit(e: dict[str, Any], _mf: dict[str, Any]) -> bool:
+        rec = e["data_file"]
+        return (
+            rec.get("content") == 1
+            and bool(rec.get("referenced_data_file"))
+            and (rec.get("file_format") or "").upper() == "PUFFIN"
+            and _norm_data_path(rec["referenced_data_file"]) in targets
+        )
+
+    return hit
 
 
 def _dv_manifest_entries(
@@ -4564,9 +4559,10 @@ def _dv_manifest_entries(
 
     Maintains the v3 invariant of AT MOST ONE deletion vector per data
     file: when a target already carries a live DV, its positions are
-    merged into the new blob and the superseded DV entry is tombstoned
-    in the same batch — a spec-conformant foreign reader that applies
-    only the newest DV per file then sees every deleted position."""
+    merged into the new blob, and the committing writer removes the
+    superseded DV (``_superseded_by``) — a spec-conformant foreign
+    reader that applies only the newest DV per file then sees every
+    deleted position."""
     from daskberg_spark.iceberg.puffin import dv_blob, dv_decode, dv_decode_file
 
     live_dvs = _live_dv_records(writer)
@@ -4586,7 +4582,7 @@ def _dv_manifest_entries(
             )
             blob, cardinality = dv_blob(positions), len(positions)
         rows.append({"file": target, "blob": blob, "cardinality": cardinality})
-    return _dv_entries_from_rows(writer, rows, snapshot_id, live_dvs)
+    return _dv_entries_from_rows(writer, rows, snapshot_id)
 
 
 # Distributed-DV commit shape: at or below the gate the finished blobs
@@ -4601,10 +4597,7 @@ DV_BLOBS_PER_SHARD = 1000
 
 
 def _dv_entries_from_rows(
-    writer: "IcebergWriter",
-    rows: list,
-    snapshot_id: int,
-    live_dvs: dict[str, dict[str, Any]],
+    writer: "IcebergWriter", rows: list, snapshot_id: int
 ) -> list[dict[str, Any]]:
     """Driver-side puffin write from already-prior-merged ``(file, blob,
     cardinality)`` rows — the small-commit tail shared by
@@ -4621,7 +4614,7 @@ def _dv_entries_from_rows(
         snapshot_id,
         writer._last_sequence_number + 1,
     )
-    return _dv_entries(writer, added, snapshot_id, live_dvs)
+    return _dv_entries(writer, added, snapshot_id)
 
 
 def _dv_manifest_entries_spark(
@@ -4688,7 +4681,7 @@ def _dv_manifest_entries_spark(
         rows = sorted(blobs.collect(), key=lambda r: r["file"])
         if not rows:
             return []
-        return _dv_entries_from_rows(writer, rows, snapshot_id, live_dvs)
+        return _dv_entries_from_rows(writer, rows, snapshot_id)
     blobs = blobs.persist()
     try:
         n_files = blobs.count()
@@ -4697,7 +4690,7 @@ def _dv_manifest_entries_spark(
         seq = writer._last_sequence_number + 1
         if n_files <= DV_SHARD_FILE_GATE:
             rows = sorted(blobs.collect(), key=lambda r: r["file"])
-            return _dv_entries_from_rows(writer, rows, snapshot_id, live_dvs)
+            return _dv_entries_from_rows(writer, rows, snapshot_id)
         else:
             table_path, instance = writer.path, writer._instance
             n_shards = max(1, -(-n_files // DV_BLOBS_PER_SHARD))
@@ -4749,18 +4742,21 @@ def _dv_manifest_entries_spark(
             ]
     finally:
         blobs.unpersist()
-    return _dv_entries(writer, added, snapshot_id, live_dvs)
+    return _dv_entries(writer, added, snapshot_id)
 
 
 def _commit_dv_snapshot(
-    writer: "IcebergWriter", dvs: list[tuple[str, bytes, int]]
+    writer: "IcebergWriter", snapshot_id: int, dv_entries: list[dict[str, Any]]
 ) -> int:
-    """Commit ``(target, blob, cardinality)`` DVs as one v3 ``delete``
-    snapshot — shared by the driver-side and distributed DV writers."""
-    snapshot_id = writer._next_snapshot_id
-    entries = _dv_manifest_entries(writer, dvs, snapshot_id)
-    manifest = writer._write_manifest(entries, snapshot_id)
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
+    """Commit new DV entries as one v3 ``delete`` snapshot that also
+    removes the DVs they supersede — shared by the driver-side and
+    distributed DV writers."""
+    writer._commit_removing(
+        snapshot_id,
+        _superseded_by(dv_entries),
+        [(writer.current_spec_id, dv_entries)],
+        "delete",
+    )
     return snapshot_id
 
 
@@ -4973,12 +4969,16 @@ def _commit_mor_changes(
     dv_entries = _dv_manifest_entries_spark(
         writer, matched_pos.sparkSession, matched_pos, snapshot_id
     )
-    dv_manifests = (
-        [writer._write_manifest(dv_entries, snapshot_id)] if dv_entries else []
+    writer._commit_removing(
+        snapshot_id,
+        _superseded_by(dv_entries),
+        [
+            (writer.current_spec_id, data_entries),
+            (writer.current_spec_id, dv_entries),
+        ],
+        "overwrite",
     )
-    return _commit_files(
-        writer, snapshot_id, data_entries, "overwrite", tail=dv_manifests
-    )
+    return snapshot_id
 
 
 def delete_keys_spark(
@@ -5004,12 +5004,14 @@ def delete_keys_spark(
     stage = _stage_dir(writer, "eq_del_")
     keys_df.select(*cols).distinct().write.mode("overwrite").parquet(stage)
     snapshot_id = writer._next_snapshot_id
-    manifest = _delete_manifest(
+    entries = _delete_entries(
         writer, stage, snapshot_id, 2, [writer.ids[c] for c in cols]
     )
-    if manifest is None:
+    if not entries:
         return None
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
+    writer._commit(
+        snapshot_id, [(writer._global_delete_spec_id(), entries)], "delete"
+    )
     return snapshot_id
 
 
@@ -5066,16 +5068,16 @@ def rewrite_position_deletes(writer: "IcebergWriter") -> int | None:
     data, deletes, _ = _live_entries(writer)
     # normalized → recorded path
     live_data = {_norm_data_path(p): p for p in data}
-    pos_parquet = [
-        (e, mf)
-        for e, mf in deletes.values()
+    pos_parquet = {
+        key: e
+        for key, (e, _mf) in deletes.items()
         if e["data_file"].get("content") == 1
         and not e["data_file"].get("referenced_data_file")
-    ]
+    }
     if not pos_parquet:
         return None
     by_target: dict[str, set[int]] = {}
-    for e, _mf in pos_parquet:
+    for e in pos_parquet.values():
         for r in pq.read_table(e["data_file"]["file_path"]).to_pylist():
             norm = _norm_data_path(r["file_path"])
             if norm in live_data:
@@ -5086,11 +5088,16 @@ def rewrite_position_deletes(writer: "IcebergWriter") -> int | None:
     ]
     snapshot_id = writer._next_snapshot_id
     entries = _dv_manifest_entries(writer, dvs, snapshot_id) if dvs else []
-    # tombstone the consumed parquet files in the same commit
-    entries += [_tombstone(e, mf, snapshot_id) for e, mf in pos_parquet]
+    # remove the consumed parquet files in the same commit
+    superseded = _superseded_by(entries)
     writer._format_version = 3
-    manifest = writer._write_manifest(entries, snapshot_id)
-    writer._commit(snapshot_id, writer.manifests + [manifest], "replace", 0)
+    writer._commit_removing(
+        snapshot_id,
+        lambda e, mf: superseded(e, mf)
+        or _entry_key(e["status"], e["data_file"])[1] in pos_parquet,
+        [(writer.current_spec_id, entries)],
+        "replace",
+    )
     return snapshot_id
 
 
@@ -5149,15 +5156,11 @@ def remove_dangling_deletes(writer: "IcebergWriter") -> int | None:
     # later (_commit drops tombstone-only manifests from prior
     # snapshots while the carried manifests still hold the entries).
     snapshot_id = writer._next_snapshot_id
-    keep_manifests, hits_by_spec = writer._tombstone_rewrite(
+    writer._commit_removing(
+        snapshot_id,
         lambda e, _mf: _entry_key(e["status"], e["data_file"])[1] in dangling,
-        snapshot_id,
-    )
-    writer._commit(
-        snapshot_id,
-        keep_manifests + _tombstone_manifests(writer, hits_by_spec, snapshot_id),
+        [],
         "delete",
-        0,
         extra_summary={"removed-delete-files": str(len(dangling))},
     )
     return snapshot_id
@@ -5194,11 +5197,11 @@ def convert_deletes_to_dvs(writer: "IcebergWriter", spark: Any) -> int | None:
     from daskberg_spark.iceberg.metadata import IcebergTable
 
     _data, deletes, _ = _live_entries(writer)
-    consumed = [
-        (e, mf)
-        for e, mf in deletes.values()
+    consumed = {
+        key
+        for key, (e, _mf) in deletes.items()
         if not e["data_file"].get("referenced_data_file")
-    ]
+    }
     if not consumed:
         return None
     t = IcebergTable(writer.path)
@@ -5213,19 +5216,22 @@ def convert_deletes_to_dvs(writer: "IcebergWriter", spark: Any) -> int | None:
         live = t.to_df(spark, keep_pos=True).select("__file", "__pos")
         dead = raw.join(live, ["__file", "__pos"], "left_anti")
         entries = _dv_manifest_entries_spark(writer, spark, dead, snapshot_id)
-    entries += [_tombstone(e, mf, snapshot_id) for e, mf in consumed]
+    superseded = _superseded_by(entries)
     writer._format_version = 3
-    manifest = writer._write_manifest(entries, snapshot_id)
-    writer._commit(snapshot_id, writer.manifests + [manifest], "replace", 0)
+    writer._commit_removing(
+        snapshot_id,
+        lambda e, mf: superseded(e, mf)
+        or _entry_key(e["status"], e["data_file"])[1] in consumed,
+        [(writer.current_spec_id, entries)],
+        "replace",
+    )
     return snapshot_id
 
 
-def rewrite_manifests(
-    writer: "IcebergWriter", max_entries_per_manifest: int = 100
-) -> int | None:
+def rewrite_manifests(writer: "IcebergWriter") -> int | None:
     """Maintenance: consolidate the manifest LIST — reconcile DELETED
     tombstones, then rewrite every live entry as EXISTING into one
-    manifest per (spec, ≤max_entries chunk).  A frequently-committed
+    manifest per (spec, ≤``MANIFEST_ENTRIES`` chunk).  A frequently-committed
     table accumulates O(commits) manifests and every scan plans across
     all of them; after rewrite, planning reads O(files/chunk) manifests.
     (The real-Iceberg ``rewrite_manifests`` action; metadata-only — zero
@@ -5244,26 +5250,14 @@ def rewrite_manifests(
         live_by_spec.setdefault(mf.get("partition_spec_id", 0), []).append(
             _carry(e, mf)
         )
-    n_target = sum(
-        max(1, -(-len(v) // max_entries_per_manifest))
-        for v in live_by_spec.values()
-    ) or 1
+    n_target = sum(-(-len(v) // MANIFEST_ENTRIES) for v in live_by_spec.values()) or 1
     if n_target >= len(writer.manifests):
         return None
-    manifests = []
-    for sid in sorted(live_by_spec):
-        entries = sorted(
-            live_by_spec[sid], key=lambda e: e["data_file"]["file_path"]
-        )
-        for i in range(0, len(entries), max_entries_per_manifest):
-            manifests.append(
-                writer._write_manifest(
-                    entries[i : i + max_entries_per_manifest],
-                    snapshot_id,
-                    spec_id=sid,
-                )
-            )
-    writer._commit(snapshot_id, manifests or [writer._write_manifest([], snapshot_id)], "replace", 0)
+    groups = [
+        (sid, sorted(live_by_spec[sid], key=lambda e: e["data_file"]["file_path"]))
+        for sid in sorted(live_by_spec)
+    ]
+    writer._commit(snapshot_id, groups, "replace", [])
     return snapshot_id
 
 
@@ -5301,7 +5295,7 @@ def migrate_legacy_eq_deletes(writer: "IcebergWriter") -> int | None:
         return bool(part) and all(v is None for v in part.values())
 
     snapshot_id = writer._next_snapshot_id
-    manifests, hits_by_spec = writer._tombstone_rewrite(is_legacy, snapshot_id)
+    carried, hits_by_spec = writer._tombstone_rewrite(is_legacy, snapshot_id)
     if not hits_by_spec:
         return None
     # the delete parquet files are re-registered under the global spec
@@ -5313,15 +5307,15 @@ def migrate_legacy_eq_deletes(writer: "IcebergWriter") -> int | None:
             m = _carry(e, mf)
             m["data_file"] = dict(m["data_file"], partition={})
             migrated.append(m)
-    manifests.append(
-        writer._write_manifest(
-            migrated, snapshot_id, spec_id=writer._global_delete_spec_id()
-        )
-    )
     # same-commit property drop: after migration the legacy read rule
     # has nothing left to apply to
     writer.properties.pop("daskberg.legacy-global-eq-deletes", None)
-    writer._commit(snapshot_id, manifests, "replace", 0)
+    writer._commit(
+        snapshot_id,
+        [(writer._global_delete_spec_id(), migrated)],
+        "replace",
+        carried,
+    )
     return snapshot_id
 
 
@@ -6267,18 +6261,16 @@ def compact_files(
         survivors_by_spec.setdefault(mf.get("partition_spec_id", 0), []).append(
             _carry(e, mf)
         )
-    manifests = []
-    for sid in sorted(
-        set(survivors_by_spec) | set(new_entries_by_spec) | set(tombstones_by_spec)
-    ):
-        entries = survivors_by_spec.get(sid, []) + new_entries_by_spec.get(sid, [])
-        if entries:
-            manifests.append(writer._write_manifest(entries, snapshot_id, spec_id=sid))
-        if tombstones_by_spec.get(sid):
-            manifests.append(
-                writer._write_manifest(tombstones_by_spec[sid], snapshot_id, spec_id=sid)
-            )
-    writer._commit(snapshot_id, manifests, "replace", 0)
+    specs = set(survivors_by_spec) | set(new_entries_by_spec) | set(tombstones_by_spec)
+    groups = [
+        group
+        for sid in sorted(specs)
+        for group in (
+            (sid, survivors_by_spec.get(sid, []) + new_entries_by_spec.get(sid, [])),
+            (sid, tombstones_by_spec.get(sid, [])),
+        )
+    ]
+    writer._commit(snapshot_id, groups, "replace", [])
     return snapshot_id
 
 

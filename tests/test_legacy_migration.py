@@ -30,10 +30,7 @@ def _build_legacy_table(path: str):
     entry = writer._build_eq_delete_entry(
         [{"id": i} for i in range(0, 60, 7)], snapshot_id, None
     )
-    manifest = writer._write_manifest(
-        [entry], snapshot_id, spec_id=writer.current_spec_id
-    )
-    writer._commit(snapshot_id, writer.manifests + [manifest], "delete", 0)
+    writer._commit(snapshot_id, [(writer.current_spec_id, [entry])], "delete")
     writer.set_properties({"daskberg.legacy-global-eq-deletes": "true"})
     writer.append([{"id": 0, "cat": "a", "val": -1.0}])
     return writer

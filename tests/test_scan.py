@@ -2517,6 +2517,100 @@ def test_rewrite_manifests_preserves_sequence_applicability(spark, tmp_path):
     assert rewrite_manifests(w) is None
 
 
+def test_commit_layout_is_one_rule(spark, tmp_path):
+    """Every commit lays its entries out in manifests of at most
+    ``MANIFEST_ENTRIES`` (100) entries, each under its own spec: an
+    append over 250 partition tuples, a DV commit that supersedes 110
+    prior DVs, ``rewrite_manifests`` and ``compact_files`` on a two-spec
+    table.  Superseded DVs stay dead after the following commit (their
+    carrying manifests were rewritten, not just tombstoned), and the
+    row set is the model's throughout."""
+    from daskberg_spark.iceberg.avro import read_avro_file
+    from daskberg_spark.iceberg.writer import (
+        IcebergWriter,
+        compact_files,
+        rewrite_manifests,
+    )
+
+    p = str(tmp_path / "t")
+    w = IcebergWriter(
+        p,
+        [
+            {"id": 1, "name": "k", "type": "long", "required": False},
+            {"id": 2, "name": "d", "type": "long", "required": False},
+        ],
+        [{"name": "d", "transform": "identity", "source": "d"}],
+    )
+    model: set[tuple[int, int]] = set()
+    spec_of: dict[str, int] = {}  # data file → spec it was written under
+
+    def append(rows):
+        sid = w.append([{"k": k, "d": d} for k, d in rows])
+        model.update(rows)
+        for f in IcebergTable(p).plan_files():
+            spec_of.setdefault(f["file_path"], w.current_spec_id)
+        return sid
+
+    def check_layout():
+        for mf in w.manifests:
+            entries = read_avro_file(mf["manifest_path"])[1]
+            assert len(entries) <= 100  # writer.MANIFEST_ENTRIES
+            names = {pf["name"] for pf in w.specs[mf["partition_spec_id"]]}
+            for e in entries:
+                rec = e["data_file"]
+                assert set(rec["partition"] or {}) == names
+                if rec.get("content", 0) == 0 and e["status"] != 2:
+                    assert spec_of[rec["file_path"]] == mf["partition_spec_id"]
+
+    def check_rows():
+        got = {(r["k"], r["d"]) for r in IcebergTable(p).to_df(spark).collect()}
+        assert got == model
+
+    # 250 partition tuples, 2 rows each: 100 + 100 + 50 entries
+    sid = append([(k, k // 2) for k in range(500)])
+    assert [
+        mf["added_data_files_count"]
+        for mf in w.manifests
+        if mf["added_snapshot_id"] == sid
+    ] == [100, 100, 50]
+    check_layout()
+    append([(1000 + k, k // 2) for k in range(500)])
+    by_d = {
+        f["partition"]["d"]: f["file_path"]
+        for f in IcebergTable(p).plan_files([("k", "<", 500)])
+    }
+    # 110 DVs, then 110 more that supersede them (positions merge)
+    w.delete_positions_dv({by_d[d]: [0] for d in range(110)})
+    blob = lambda f: (f["file_path"], f["content_offset"])  # noqa: E731
+    first = {blob(f) for f in IcebergTable(p).plan_deletes()}
+    w.delete_positions_dv({by_d[d]: [1] for d in range(110)})
+    model.difference_update((k, k // 2) for k in range(220))
+    check_layout()
+    w.update_partition_spec(
+        [
+            {"name": "d", "transform": "identity", "source": "d"},
+            {"name": "k_b", "transform": "bucket[4]", "source": "k"},
+        ]
+    )
+    append([(2000 + k, k % 60) for k in range(120)])  # the following commit
+    live = IcebergTable(p).plan_deletes()
+    assert len(live) == 110 and not first & {blob(f) for f in live}
+    assert all(f["record_count"] == 2 for f in live)
+    check_layout()
+    check_rows()
+    append([(3000 + k, k % 60) for k in range(120)])
+    assert rewrite_manifests(w) is not None
+    check_layout()
+    assert compact_files(w, min_file_bytes=1 << 40) is not None
+    for f in IcebergTable(p).plan_files():
+        spec_of.setdefault(f["file_path"], 1 if "k_b" in f["partition"] else 0)
+    check_layout()
+    assert max(len(read_avro_file(m["manifest_path"])[1]) for m in w.manifests) == 100
+    append([(4000, 0)])
+    check_layout()
+    check_rows()
+
+
 def _shared_puffin_table(path: str):
     """Two data files A and B whose first DVs share ONE puffin file
     (two blobs under one path), then a second DV for A that merges A's
@@ -2736,6 +2830,61 @@ def test_delete_where_spark_merge_on_read(spark, tmp_path):
     ).count(0) == 1
     # no-match predicate → no snapshot
     assert delete_where_spark(w, spark, "id > 999") is None
+
+
+def test_delete_where_spark_scopes_deletes_to_targets(spark, tmp_path):
+    """Each position-delete file commits under its targets' spec id and
+    partition — Iceberg v2 scan planning applies a position delete only
+    to data files whose spec and partition equal the delete file's — on
+    a table whose files span two specs; the row set is unchanged."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from daskberg_spark.iceberg.avro import read_avro_file
+    from daskberg_spark.iceberg.writer import IcebergWriter, delete_where_spark
+
+    p = str(tmp_path / "t")
+    w = IcebergWriter(
+        p,
+        [
+            {"id": 1, "name": "k", "type": "long", "required": False},
+            {"id": 2, "name": "d", "type": "long", "required": False},
+        ],
+        [{"name": "d", "transform": "identity", "source": "d"}],
+    )
+    w.append([{"k": k, "d": k % 3} for k in range(12)])
+    w.update_partition_spec(
+        [
+            {"name": "d", "transform": "identity", "source": "d"},
+            {"name": "k_b", "transform": "bucket[2]", "source": "k"},
+        ]
+    )
+    w.append([{"k": k, "d": k % 3} for k in range(12, 24)])
+    scope, want = {}, set()
+    for f in IcebergTable(p).plan_files():
+        own = (f["_spec_id"], tuple(sorted(f["partition"].items())))
+        scope[os.path.realpath(f["file_path"])] = own
+        if any(k % 4 == 1 for k in pq.read_table(f["file_path"])["k"].to_pylist()):
+            want.add(own)
+    sid = delete_where_spark(w, spark, "k % 4 = 1")  # hits under both specs
+    got = sorted(r["k"] for r in IcebergTable(p).to_df(spark).collect())
+    assert got == [k for k in range(24) if k % 4 != 1]
+    scopes_hit = set()
+    for mf in w.manifests:
+        if mf["added_snapshot_id"] != sid:
+            continue
+        for e in read_avro_file(mf["manifest_path"])[1]:
+            rec = e["data_file"]
+            assert rec["content"] == 1
+            targets = pq.read_table(rec["file_path"], columns=["file_path"])
+            own = (mf["partition_spec_id"], tuple(sorted(rec["partition"].items())))
+            assert {
+                scope[os.path.realpath(t)]
+                for t in targets.column("file_path").to_pylist()
+            } == {own}
+            scopes_hit.add(own)
+    assert scopes_hit == want and {spec for spec, _part in want} == {0, 1}
 
 
 def test_delete_keys_spark_cdc_batch(spark, tmp_path):
@@ -4694,6 +4843,15 @@ def test_upsert_spark_output_partitioned(spark, tmp_path):
             w, spark, spark.createDataFrame([(1, "a", 0.0)], "k long, grp string, v double"),
             on=["k"],
         )
+    # ... and so is path_col: without it the data half is written
+    # without partitionBy and its rows commit under partition {grp: None}
+    n_snapshots = len(w.snapshots)
+    with _pytest.raises(ValueError, match="pass path_col"):
+        upsert_spark_output(
+            w, spark, spark.createDataFrame([(1, "a", 0.0)], "k long, grp string, v double"),
+            on=["k"], partition_col="grp",
+        )
+    assert len(w.snapshots) == n_snapshots
     # k=3 moves from grp 'b' to 'a'; k=4 updates in place; k=20 inserts
     batch = spark.createDataFrame(
         [(3, "a", -3.0), (4, "a", -4.0), (20, "b", 20.0)],

@@ -1088,8 +1088,7 @@ def test_streaming_cdc_same_commit_pos_delete(spark, tmp_path):
             "equality_ids": None,
         },
     }
-    m = w._write_manifest(data_entries + [pos_entry], sid)
-    w._commit(sid, w.manifests + [m], "overwrite", 5)
+    w._commit(sid, [(w.current_spec_id, data_entries + [pos_entry])], "overwrite")
     # batch read: rows 11 and 13 are dead on arrival
     batch = sorted(r["id"] for r in IcebergTable(p).to_df(spark).collect())
     assert batch == [0, 1, 10, 12, 14]
